@@ -41,6 +41,11 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl",
         "org.apache.hadoop.fs.RawLocalFileSystem")
       .config("spark.hadoop.parquet.page.verify-checksum.enabled", "true")
+      // BucketStore's rename-swap seam relies on committer algorithm v1:
+      // task output stays under _temporary until the job commits, so an
+      // aborted job leaves nothing visible. Spark defaults it to 1, but
+      // the bundled Hadoop's own default is 2 — pin it, don't assume it.
+      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "1")
       // >100 live query shapes otherwise thrash the generated-class cache
       .config("spark.sql.codegen.cache.maxEntries",
         CodegenCacheEntries.toString)

@@ -290,11 +290,6 @@ final class BucketStore(val spark: SparkSession, val root: String,
     dirtyEntrySet.clear()
   }
 
-  /** Message prefix of the in-job duplicate-key raise on the empty-store
-    * write path — matched when re-shaping the job failure back to the
-    * admission contract's IllegalArgumentException. */
-  private val InBatchDupMarker = "duplicate timestamp within batch:"
-
   private def dtCol = to_date(timestamp_micros(col("ts")))
 
   /** The whole store as one logical table (records schema + dt), with
@@ -847,11 +842,15 @@ final class BucketStore(val spark: SparkSession, val root: String,
     n
   }
 
-  /** Append a batch of records.
-    * @param onConflict Error → reject batch if any (bucket,entry,ts)
-    *        already exists (the reference's 409, entry.rs conflict);
-    *        Skip → drop conflicting rows; Overwrite is intentionally not
-    *        offered (records are immutable, only labels update).
+  /** Append a batch of records. Keys are admitted before any byte is
+    * written, one rule per mode:
+    * @param onConflict Error → reject the batch if any (bucket,entry,ts)
+    *        repeats within it or already exists (the reference's 409,
+    *        entry.rs conflict): a key-only stats aggregate, then a clash
+    *        join unless the store has no `bucket=` dir yet;
+    *        Skip → drop conflicting rows (keep-first dedup + anti-join);
+    *        Overwrite is intentionally not offered (records are
+    *        immutable, only labels update).
     */
   def write(records: DataFrame, onConflict: Conflict = Conflict.Error,
       maxRecordsPerFile: Long = 1000000L,
@@ -886,36 +885,15 @@ final class BucketStore(val spark: SparkSession, val root: String,
     // idempotent replay, e.g. re-delivered streaming micro-batches)
     val deduped = onConflict match {
       case Conflict.Preadmitted =>
-        // caller vouches: keys are in-batch unique and checked against
-        // the store INSIDE the same mutation section (the HTTP batched
-        // write's per-record admission). Skipping the stats-agg and
-        // clash-join jobs here saves ~2 Spark jobs per serving-layer
-        // write — the per-mutation job cost is the measured serving
-        // bottleneck (SCALE.md r17).
+        // the serving writers (writeFolded, writeStagedSlices) admitted
+        // every key with existingKeys INSIDE this mutation section.
+        // Skipping the stats-agg and clash-join jobs here saves ~2 Spark
+        // jobs per serving-layer write — the per-mutation job cost is the
+        // measured serving bottleneck (SCALE.md r17).
         batch0
       case Conflict.Skip =>
         antiExisting(batch0.dropDuplicates("bucket", "entry", "ts"),
           knownTsBounds)
-      case Conflict.Error if !baseHasBucketDirs() =>
-        // fresh/empty store — the bulk-initial-ingest shape: no existing
-        // record can clash, so the only admission left is the in-batch
-        // duplicate check, and it rides INSIDE the write job as a window
-        // flag + raise_error instead of a separate stats-agg pass over
-        // the whole batch (guide §5: don't pay an extra pass for a check
-        // the one required pass can carry). Reject-before-write holds:
-        // a raised duplicate aborts the write JOB, and the committer's
-        // staging dirs (_temporary) are invisible to partition discovery
-        // — no row of a rejected batch is ever readable. The wrapped
-        // SparkException is re-shaped to the contract's
-        // IllegalArgumentException below (see the write action).
-        val dupW = org.apache.spark.sql.expressions.Window
-          .partitionBy("bucket", "entry", "ts")
-        batch0.withColumn("payload",
-          when(count(lit(1)).over(dupW) > 1,
-            raise_error(concat(lit(InBatchDupMarker + " "),
-              col("bucket"), lit("/"), col("entry"), lit("@"),
-              col("ts").cast("string"))).cast("binary"))
-            .otherwise(col("payload")))
       case Conflict.Error =>
         // one aggregation pass yields BOTH the in-batch-duplicate flag and
         // the ts bounds for the overlap check (was two scans)
@@ -928,17 +906,15 @@ final class BucketStore(val spark: SparkSession, val root: String,
           throw new IllegalArgumentException(
             s"duplicate timestamp within batch: $dup")
         }
-        if (!stats.isNullAt(1)) {
-          val existing = baseTableOrEmpty() // keys only
-            .filter(col("ts").between(stats.getLong(1), stats.getLong(2)))
-            .select("bucket", "entry", "ts")
-          val clash = ptimed("write:clash-check")(
-            batch0.join(existing, Seq("bucket", "entry", "ts"))
-              .limit(1).collect())
-          if (clash.nonEmpty)
-            throw new IllegalArgumentException(
-              s"record already exists: ${clash(0)}")
-        }
+        if (!stats.isNullAt(1))
+          existingInRange(stats.getLong(1), stats.getLong(2)).foreach { existing =>
+            val clash = ptimed("write:clash-check")(
+              batch0.join(existing, Seq("bucket", "entry", "ts"))
+                .limit(1).collect())
+            if (clash.nonEmpty)
+              throw new IllegalArgumentException(
+                s"record already exists: ${clash(0)}")
+          }
         batch0
     }
     // co-locate each output partition in one task before the partitioned
@@ -957,25 +933,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
       .mode(SaveMode.Append)
     // per-write codec override (replication transfer compression); None
     // keeps the session default (zstd, set above)
-    try ptimed("write:partitioned-write")(
+    ptimed("write:partitioned-write")(
       codec.fold(writer)(c => writer.option("compression", c)).parquet(root))
-    catch { case NonFatal(e) =>
-      // the empty-store duplicate check raises inside the job: re-shape
-      // the SparkException wrapping back to the admission contract's
-      // IllegalArgumentException, carrying the offending key
-      var t: Throwable = e
-      var depth = 0
-      while (t != null && depth < 12) {
-        val m = t.getMessage
-        if (m != null && m.contains(InBatchDupMarker)) {
-          val i = m.indexOf(InBatchDupMarker)
-          throw new IllegalArgumentException(m.substring(i).takeWhile(_ != '\n'))
-        }
-        t = t.getCause
-        depth += 1
-      }
-      throw e
-    }
     touchedEntries match {
       case Some(pairs) => markEntriesDirty(pairs)
       case None => markAllEntriesDirty()
@@ -989,12 +948,19 @@ final class BucketStore(val spark: SparkSession, val root: String,
       if (r.isNullAt(0)) return batch
       (r.getLong(0), r.getLong(1))
     }
-    if (!baseHasBucketDirs()) return batch
-    val existing = baseTableOrEmpty() // keys only
-      .filter(col("ts").between(bounds._1, bounds._2))
-      .select("bucket", "entry", "ts")
-    batch.join(existing, Seq("bucket", "entry", "ts"), "left_anti")
+    existingInRange(bounds._1, bounds._2).fold(batch)(existing =>
+      batch.join(existing, Seq("bucket", "entry", "ts"), "left_anti"))
   }
+
+  /** Stored (bucket, entry, ts) keys with ts in [lo, hi] — the store side
+    * of both DataFrame admission rules (Error's clash join, Skip's
+    * anti-join). None on a store with no `bucket=` directory yet: nothing
+    * can clash, so the caller skips the join job entirely. */
+  private def existingInRange(lo: Long, hi: Long): Option[DataFrame] =
+    if (!baseHasBucketDirs()) None
+    else Some(baseTableOrEmpty() // keys only
+      .filter(col("ts").between(lo, hi))
+      .select("bucket", "entry", "ts"))
 
   /** Batch-write convenience (the wire batch-protocol analog,
     * reduct_base/src/batch/v1.rs): records as (ts, labels, payload)
@@ -1003,8 +969,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * via [[writeWithSettings]]. */
   def writeBatch(bucket: String, entry: String,
       records: Seq[(Long, Map[String, String], Array[Byte])],
-      contentType: String = "application/octet-stream",
-      onConflict: Conflict = Conflict.Error): Unit = {
+      contentType: String = "application/octet-stream"): Unit = {
     import scala.jdk.CollectionConverters._
     val rows = records.map { case (ts, labels, payload) =>
       org.apache.spark.sql.Row(bucket, entry, ts, labels,
@@ -1012,8 +977,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     }.asJava
     val bytes = records.map(_._3.length.toLong).sum
     writeWithSettings(bucket, spark.createDataFrame(rows, Records.schema),
-      onConflict, incomingBytes = bytes,
-      touchedEntries = Some(Seq((bucket, entry))))
+      incomingBytes = bytes, touchedEntries = Some(Seq((bucket, entry))))
     usage.countWrite(bucket, entry, records.size.toLong, bytes)
   }
 
@@ -1426,27 +1390,14 @@ final class BucketStore(val spark: SparkSession, val root: String,
     } finally patched.unpersist()
   }
 
-  /** Remove records by explicit (entry, ts) keys (remove_records.rs:34-60,
-    * the ts-list form); returns per-key found/not-found. */
-  /** Which of `ts` already exist for (bucket, entry) — the per-record
-    * admission check behind the batched write/update endpoints' error
-    * maps (write_batched.rs / update_batched.rs report per-record
-    * 409/404 instead of failing the batch). Bounded: `ts` comes from
-    * HTTP headers, so the isin list and the collect stay small. */
-  def existingTimestamps(bucket: String, entry: String,
-      ts: Seq[Long]): Set[Long] = {
-    if (ts.isEmpty) return Set.empty
-    baseTableOrEmpty()
-      .filter(col("bucket") === bucket && col("entry") === entry &&
-        col("ts").between(ts.min, ts.max) && col("ts").isin(ts: _*))
-      .select("ts").collect().map(_.getLong(0)).toSet
-  }
-
-  /** Multi-entry variant of [[existingTimestamps]] — ONE scan admits a
-    * whole coalesced fold (every request's conflict check) instead of
-    * one Spark job per request. Keys are (entry, ts) within `bucket`;
-    * the ts `isin` bounds the collect exactly like the single-entry
-    * form (entry partition pruning + ts dictionary filter). */
+  /** Which (entry, ts) keys of `bucket` are already stored — the
+    * driver-side admission behind every serving write (the coalesced
+    * [[writeFolded]] and the spooled [[writeStagedSlices]]) and their
+    * per-record 409 error maps (write_batched.rs / io/write.rs report per
+    * record instead of failing the batch). ONE scan admits a whole batch
+    * or fold. Bounded: keys come from HTTP headers, so the isin lists and
+    * the collect stay small (entry partition pruning + ts dictionary
+    * filter). */
   def existingKeys(bucket: String,
       keys: Seq[(String, Long)]): Set[(String, Long)] = {
     if (keys.isEmpty) return Set.empty
@@ -1460,6 +1411,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
     hits.intersect(keys.toSet)
   }
 
+  /** Remove records by explicit (entry, ts) keys (remove_records.rs:34-60,
+    * the ts-list form); returns per-key found/not-found. */
   def removeRecords(bucket: String,
       keys: Seq[(String, Long)]): Map[(String, Long), Boolean] = mutating {
     if (keys.isEmpty) return Map.empty
@@ -1968,81 +1921,64 @@ final class BucketStore(val spark: SparkSession, val root: String,
     new org.apache.hadoop.fs.Path(
       s"$root/$StagingDir/${java.util.UUID.randomUUID}")
 
-  /** Write one record whose payload was spooled to a staging file
-    * (HttpApi streams request bodies there in fixed-size chunks — the
-    * analog of the reference's streamed bodies,
-    * api/http/entry/write_single.rs). The bytes flow staging file →
-    * executor task → parquet writer via a `binaryFile` scan; the serving
-    * layer never materializes the payload. The staging file is deleted
-    * whether the write succeeds or not. */
-  def writeStaged(bucket: String, entry: String, ts: Long,
-      labels: Map[String, String], contentType: String,
-      staged: org.apache.hadoop.fs.Path,
-      onConflict: Conflict = Conflict.Error): Unit = {
-    val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val len = fs.getFileStatus(staged).getLen
-      val df = spark.read.format("binaryFile").load(staged.toString)
-        .select(
-          lit(bucket).as("bucket"), lit(entry).as("entry"),
-          lit(ts).as("ts"),
-          typedLit(labels).as("labels"),
-          typedLit(Map.empty[String, String]).as("computed_labels"),
-          lit(contentType).as("content_type"),
-          lit(Records.State.Finished).as("state"),
-          col("content").as("payload"))
-      writeWithSettings(bucket, df, onConflict, incomingBytes = len,
-        touchedEntries = Some(Seq((bucket, entry))))
-      usage.countWrite(bucket, entry, 1L, len)
-    } finally fs.delete(staged, false)
-  }
-
-  /** Write a multi-record batch whose concatenated payloads were spooled
-    * to one staging file (the io-v2 wire path for large batches). Each
-    * record's bytes are sliced out executor-side with positioned reads —
-    * one payload in memory per task at a time, nothing buffered by the
-    * serving layer. Slices are keyed by entry so the read parallelism
-    * follows the write partitioning. */
+  /** Write records whose payloads were spooled to one staging file —
+    * every spooled HTTP upload (a single-record POST is one slice at
+    * offset 0; v1 `/batch` and v2 `/io/write` bodies are the payloads
+    * concatenated). Admission is per record with [[existingKeys]] inside
+    * this call's own mutation section: a stored key is rejected and its
+    * bytes are never read, the survivors are written, and the rejected
+    * keys are returned for the caller's 409s (write_batched.rs error
+    * map). Slice keys must be unique — callers drop in-request repeats
+    * into their own error maps first.
+    *
+    * Each survivor's bytes are sliced out executor-side with positioned
+    * reads — one payload in memory per task at a time, nothing buffered
+    * by the serving layer — through the session's Hadoop configuration
+    * (broadcast once per write), so `spark.hadoop.*` filesystem settings
+    * reach the readers. Slices are keyed by entry so the read parallelism
+    * follows the write partitioning. The staging file is deleted whether
+    * the write succeeds or not. */
   def writeStagedSlices(bucket: String, staged: org.apache.hadoop.fs.Path,
-      slices: Seq[BucketStore.StagedSlice],
-      onConflict: Conflict = Conflict.Error): Unit = {
-    val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val total = slices.map(_.len).sum
-      val pathStr = staged.toString
-      val b = bucket
-      import spark.implicits._
-      val df = graft.core.Partitioning.pinned(
-          spark.createDataset(slices), col("entry"))
-        .mapPartitions { it =>
-          if (!it.hasNext) Iterator.empty[Records.Record]
-          else {
-            val p = new org.apache.hadoop.fs.Path(pathStr)
-            val pfs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            val in = pfs.open(p)
-            Option(org.apache.spark.TaskContext.get())
-              .foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-            it.map { s =>
-              val buf = new Array[Byte](s.len.toInt)
-              in.readFully(s.offset, buf) // positioned read — thread-safe
-              Records.Record(b, s.entry, s.ts, s.labels,
-                Map.empty[String, String], s.contentType,
-                Records.State.Finished, buf)
+      slices: Seq[BucketStore.StagedSlice]): Set[(String, Long)] = {
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    try mutating {
+      val keys = slices.map(s => (s.entry, s.ts))
+      require(keys.distinct.size == keys.size,
+        s"duplicate (entry, ts) within staged batch for '$bucket'")
+      val rejected = existingKeys(bucket, keys)
+      val survivors = slices.filterNot(s => rejected((s.entry, s.ts)))
+      if (survivors.nonEmpty) {
+        val pathStr = staged.toString
+        val conf = spark.sparkContext.broadcast(
+          new org.apache.spark.util.SerializableConfiguration(hadoopConf))
+        import spark.implicits._
+        val df = graft.core.Partitioning.pinned(
+            spark.createDataset(survivors), col("entry"))
+          .mapPartitions { it =>
+            if (!it.hasNext) Iterator.empty[Records.Record]
+            else {
+              val p = new org.apache.hadoop.fs.Path(pathStr)
+              val in = p.getFileSystem(conf.value.value).open(p)
+              Option(org.apache.spark.TaskContext.get())
+                .foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
+              it.map { s =>
+                val buf = new Array[Byte](s.len.toInt)
+                in.readFully(s.offset, buf) // positioned read — thread-safe
+                Records.Record(bucket, s.entry, s.ts, s.labels,
+                  Map.empty[String, String], s.contentType,
+                  Records.State.Finished, buf)
+              }
             }
-          }
-        }.toDF()
-      writeWithSettings(bucket, df, onConflict, incomingBytes = total,
-        touchedEntries = Some(slices.map(s => (bucket, s.entry)).distinct))
-      for ((entry, es) <- slices.groupBy(_.entry))
-        usage.countWrite(bucket, entry, es.size.toLong, es.map(_.len).sum)
-    } finally fs.delete(staged, false)
-  }
-
-  /** HARD quota (quotas.rs:53-66): reject writes that would exceed it. */
-  def writeWithHardQuota(records: DataFrame, bucket: String, maxBytes: Long): Unit = {
-    if (bucketSizeBytes(bucket) >= maxBytes)
-      throw new IllegalStateException(s"bucket '$bucket' over hard quota")
-    write(records)
+          }.toDF()
+        try writeWithSettings(bucket, df, Conflict.Preadmitted,
+          incomingBytes = survivors.map(_.len).sum,
+          touchedEntries = Some(survivors.map(s => (bucket, s.entry)).distinct))
+        finally conf.destroy()
+        for ((entry, es) <- survivors.groupBy(_.entry))
+          usage.countWrite(bucket, entry, es.size.toLong, es.map(_.len).sum)
+      }
+      rejected
+    } finally staged.getFileSystem(hadoopConf).delete(staged, false)
   }
 
   // ----------------------------------------------------- bucket settings
@@ -2193,13 +2129,13 @@ object BucketStore {
   object Conflict {
     case object Error extends Conflict
     case object Skip extends Conflict
-    /** Admission already happened: the caller verified in-batch key
-      * uniqueness and absence-from-store inside the SAME [[mutating]]
-      * section this write runs in, so the write skips its own dedup and
-      * clash jobs. NEVER use outside a mutation-section admission — an
-      * unchecked duplicate key would land two records on one (bucket,
-      * entry, ts). */
-    case object Preadmitted extends Conflict
+    /** Admission already happened: a BucketStore serving writer
+      * ([[BucketStore.writeFolded]], [[BucketStore.writeStagedSlices]])
+      * verified in-batch key uniqueness and absence-from-store inside the
+      * SAME [[mutating]] section this write runs in, so the write skips
+      * its own dedup and clash jobs. Engine-private: an unchecked
+      * duplicate key would land two records on one (bucket, entry, ts). */
+    private[engine] case object Preadmitted extends Conflict
   }
 
   /** Settings JSON file inside the bucket's partition directory — the

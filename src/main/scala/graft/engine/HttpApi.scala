@@ -1028,25 +1028,24 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
         throw ApiError(400,
           "Content is shorter than expected: no more data to read")
     }
-    try {
+    val rejected =
       if (head.length < spoolThresholdBytes) {
         checkDeclared(head.length.toLong)
         // coalesced: concurrent single writes share one store mutation
-        val rejected = writeCoalescer.submit(BucketStore.FoldReq(bucket,
+        writeCoalescer.submit(BucketStore.FoldReq(bucket,
           Seq(BucketStore.FoldRec(entry, ts, labelHeaders(ex), ct, head))))
-        if (rejected.nonEmpty)
-          throw conflict(s"A record with timestamp $ts already exists")
       } else {
         val staged = spoolToStaging(head, in)
         val fs = staged.getFileSystem(store.spark.sparkContext.hadoopConfiguration)
-        try checkDeclared(fs.getFileStatus(staged).getLen)
+        val len = fs.getFileStatus(staged).getLen
+        try checkDeclared(len)
         catch { case e: ApiError => fs.delete(staged, false); throw e }
         spooledWrites.incrementAndGet()
-        store.writeStaged(bucket, entry, ts, labelHeaders(ex), ct, staged)
+        store.writeStagedSlices(bucket, staged, Seq(BucketStore.StagedSlice(
+          entry, ts, labelHeaders(ex), ct, 0L, len)))
       }
-    } catch { case e: IllegalArgumentException if
-        Option(e.getMessage).exists(_.contains("already exists")) =>
-      throw conflict(s"A record with timestamp $ts already exists") }
+    if (rejected.nonEmpty)
+      throw conflict(s"A record with timestamp $ts already exists")
     createdBuckets.add(bucket)
     json(ex, 200, JObject())
   }
@@ -1978,7 +1977,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     for (i <- dupIdx) rejectHeader(decoded(i).entry, decoded(i).timestamp)
     val in = requestBody(ex)
     val head = in.readNBytes(spoolThresholdBytes)
-    if (head.length < spoolThresholdBytes) {
+    val rejected = if (head.length < spoolThresholdBytes) {
       val body = head
       var offset = 0
       val rows = decoded.zipWithIndex.map { case (rec, i) =>
@@ -1996,12 +1995,11 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
       // with the REST written — the reference's io/write.rs error map
       // (start_writing fails into error_map per record), which the old
       // whole-request 409 here diverged from
-      val rejected = writeCoalescer.submit(BucketStore.FoldReq(bucket,
+      writeCoalescer.submit(BucketStore.FoldReq(bucket,
         rows.collect { case (rec, payload, i) if !dupIdx(i) =>
           BucketStore.FoldRec(rec.entry, rec.timestamp, rec.header.labels,
             rec.header.contentType, payload)
         }))
-      for ((entry, ts) <- rejected) rejectHeader(entry, ts)
     } else {
       val staged = spoolToStaging(head, in)
       val fs = staged.getFileSystem(store.spark.sparkContext.hadoopConfiguration)
@@ -2010,29 +2008,17 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
         throw unprocessable("Content length mismatch with record headers")
       }
       // spooled batches keep their own mutation section (the body is on
-      // disk, not foldable without re-spooling) — per-record admission
-      // runs inside it, same semantics as the coalesced path
-      store.mutating {
-        val existing = store.existingKeys(bucket,
-          decoded.zipWithIndex.collect { case (r, i) if !dupIdx(i) =>
-            (r.entry, r.timestamp) })
-        for ((entry, ts) <- existing) rejectHeader(entry, ts)
-        val slices = decoded.zipWithIndex
-          .foldLeft((0L, Vector.empty[BucketStore.StagedSlice])) {
-          case ((off, acc), (rec, i)) =>
-            (off + rec.header.contentLength,
-              if (dupIdx(i) || existing((rec.entry, rec.timestamp))) acc
-              else acc :+ BucketStore.StagedSlice(rec.entry, rec.timestamp,
-                rec.header.labels, rec.header.contentType,
-                off, rec.header.contentLength))
-        }._2
-        spooledWrites.incrementAndGet()
-        if (slices.nonEmpty)
-          store.writeStagedSlices(bucket, staged, slices,
-            onConflict = BucketStore.Conflict.Preadmitted) // admitted above
-        else fs.delete(staged, false): Unit
-      }
+      // disk, not foldable without re-spooling); the store admits each
+      // record inside it, same semantics as the coalesced path
+      val offsets = decoded.toVector.scanLeft(0L)(_ + _.header.contentLength)
+      spooledWrites.incrementAndGet()
+      store.writeStagedSlices(bucket, staged, decoded.zipWithIndex.collect {
+        case (rec, i) if !dupIdx(i) => BucketStore.StagedSlice(rec.entry,
+          rec.timestamp, rec.header.labels, rec.header.contentType,
+          offsets(i), rec.header.contentLength)
+      })
     }
+    for ((entry, ts) <- rejected) rejectHeader(entry, ts)
     createdBuckets.add(bucket)
     json(ex, 200, JObject())
   }
@@ -2125,92 +2111,71 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     limits.checkIngress(requestClientIp(ex), expected)
     store.ensureStorageLimit(expected)
     val respH = ex.getResponseHeaders
+    def reject(ts: Long): Unit = respH.set(s"x-reduct-error-$ts",
+      s"409,A record with timestamp $ts already exists")
     // in-batch duplicate ts (aliased header spellings — x-reduct-time-0100
     // and x-reduct-time-100 parse to the same ts) degrades to its
     // per-record 409 like the reference: the second begin_write at the
     // same ts fails into the error map and a RecordDrainer eats its body
     // slice while the REST of the batch writes (write_batched.rs:322-330)
     // — never an all-or-nothing batch failure. Keep-first leaves the
-    // surviving rows in-batch unique, preserving the Preadmitted
-    // invariant the engine write relies on.
+    // surviving records in-batch unique, as the store's admission requires.
     val dupIdx: Set[Int] = {
       val seen = scala.collection.mutable.HashSet.empty[Long]
       timed.iterator.zipWithIndex
         .collect { case ((ts, _), i) if !seen.add(ts) => i }.toSet
     }
-    for (ts <- dupIdx.toSeq.map(timed(_)._1).distinct)
-      respH.set(s"x-reduct-error-$ts",
-        s"409,A record with timestamp $ts already exists")
+    for (i <- dupIdx) reject(timed(i)._1)
     val in = requestBody(ex)
     val head = in.readNBytes(spoolThresholdBytes)
     // The per-record conflict admission (the reference checks per
-    // record) runs inside the SAME store mutation section as the write:
-    // checked outside it, a concurrent write of one of the batch's
-    // timestamps between admission and write would trip the engine-level
-    // clash check and fail the WHOLE batch — the reference degrades such
-    // a record to its per-record 409 entry and writes the rest
+    // record) runs inside the SAME store mutation section as the write,
+    // on both paths below: a record whose timestamp is already stored
+    // degrades to its per-record 409 entry and the rest is written
     // (write_batched.rs error map). The body is fully consumed BEFORE
     // the section so a slow client never holds the store lock.
-    def admitConflicts(): Set[Long] = {
-      val existing = store.existingTimestamps(bucket, entry, timed.map(_._1))
-      for (ts <- timed.map(_._1) if existing(ts))
-        respH.set(s"x-reduct-error-$ts",
-          s"409,A record with timestamp $ts already exists")
-      existing
-    }
     val written: Int = inFlight.withWriterSlot {
-      if (head.length < spoolThresholdBytes) {
-      val body = head
-      // slice every record first — conflicting records still consume
-      // their body slice, so offsets are per-batch, not per-survivor
-      var offset = 0
-      val sliced = timed.zipWithIndex.map { case ((ts, hdr), i) =>
-        val len = hdr.contentLength.toInt
-        if (offset + len > body.length)
+      val rejected = if (head.length < spoolThresholdBytes) {
+        val body = head
+        // slice every record first — conflicting records still consume
+        // their body slice, so offsets are per-batch, not per-survivor
+        var offset = 0
+        val sliced = timed.zipWithIndex.map { case ((ts, hdr), i) =>
+          val len = hdr.contentLength.toInt
+          if (offset + len > body.length)
+            throw unprocessable("Content length mismatch with record headers")
+          val payload = java.util.Arrays.copyOfRange(body, offset, offset + len)
+          offset += len
+          (ts, hdr, payload, i)
+        }
+        if (offset != body.length)
           throw unprocessable("Content length mismatch with record headers")
-        val payload = java.util.Arrays.copyOfRange(body, offset, offset + len)
-        offset += len
-        (ts, hdr, payload, i)
-      }
-      if (offset != body.length)
-        throw unprocessable("Content length mismatch with record headers")
-      // Coalesced: the per-record conflict admission, quota/cap checks,
-      // write, and usage counting all run inside writeFolded's shared
-      // mutation section — concurrent /batch writers share ONE Spark job
-      // per bucket instead of one each (the measured serving bottleneck,
-      // SCALE.md r17/r18), with serial per-request semantics preserved.
-      val rejected = writeCoalescer.submit(BucketStore.FoldReq(bucket,
-        sliced.collect { case (ts, hdr, payload, i) if !dupIdx(i) =>
-          BucketStore.FoldRec(entry, ts, hdr.labels, hdr.contentType, payload)
-        }))
-      for ((_, ts) <- rejected)
-        respH.set(s"x-reduct-error-$ts",
-          s"409,A record with timestamp $ts already exists")
-      sliced.size - dupIdx.size - rejected.size
-    } else {
-      val staged = spoolToStaging(head, in)
-      val fs = staged.getFileSystem(store.spark.sparkContext.hadoopConfiguration)
-      if (fs.getFileStatus(staged).getLen != expected) {
-        fs.delete(staged, false)
-        throw unprocessable("Content length mismatch with record headers")
-      }
-      store.mutating {
-        val existing = admitConflicts()
-        val slices = timed.zipWithIndex
-          .foldLeft((0L, Vector.empty[BucketStore.StagedSlice])) {
-          case ((off, acc), ((ts, hdr), i)) =>
-            (off + hdr.contentLength,
-              if (existing(ts) || dupIdx(i)) acc // slice skipped, offset still advances
-              else acc :+ BucketStore.StagedSlice(entry, ts, hdr.labels,
-                hdr.contentType, off, hdr.contentLength))
-        }._2
+        // Coalesced: the per-record conflict admission, quota/cap checks,
+        // write, and usage counting all run inside writeFolded's shared
+        // mutation section — concurrent /batch writers share ONE Spark job
+        // per bucket instead of one each (the measured serving bottleneck,
+        // SCALE.md r17/r18), with serial per-request semantics preserved.
+        writeCoalescer.submit(BucketStore.FoldReq(bucket,
+          sliced.collect { case (ts, hdr, payload, i) if !dupIdx(i) =>
+            BucketStore.FoldRec(entry, ts, hdr.labels, hdr.contentType, payload)
+          }))
+      } else {
+        val staged = spoolToStaging(head, in)
+        val fs = staged.getFileSystem(store.spark.sparkContext.hadoopConfiguration)
+        if (fs.getFileStatus(staged).getLen != expected) {
+          fs.delete(staged, false)
+          throw unprocessable("Content length mismatch with record headers")
+        }
+        // a skipped record's slice still advances the offset
+        val offsets = timed.toVector.scanLeft(0L)(_ + _._2.contentLength)
         spooledWrites.incrementAndGet()
-        if (slices.nonEmpty) store.writeStagedSlices(bucket, staged, slices,
-          onConflict = BucketStore.Conflict.Preadmitted) // admitted above
-        else fs.delete(staged, false): Unit
-        slices.size
+        store.writeStagedSlices(bucket, staged, timed.zipWithIndex.collect {
+          case ((ts, hdr), i) if !dupIdx(i) => BucketStore.StagedSlice(entry,
+            ts, hdr.labels, hdr.contentType, offsets(i), hdr.contentLength)
+        })
       }
-    }
+      for ((_, ts) <- rejected) reject(ts)
+      timed.size - dupIdx.size - rejected.size
     }
     json(ex, 200, JObject("written_records" -> JInt(BigInt(written))))
   }

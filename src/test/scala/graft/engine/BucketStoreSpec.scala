@@ -66,6 +66,12 @@ class BucketStoreSpec extends AnyFunSuite with SparkTestBase {
     intercept[IllegalArgumentException] {
       store.write(recordsDf(Seq(("e", 1L, Map()), ("e", 1L, Map()))))
     }
+    // rejected before any byte is written: the fresh store stays empty
+    assert(store.tableOrEmpty().count() == 0)
+    val root = new org.apache.hadoop.fs.Path(store.root)
+    assert(!root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(root).exists(_.getPath.getName.startsWith("bucket=")),
+      "a rejected batch must not create a bucket= directory")
     store.write(recordsDf(Seq(("e", 1L, Map("v" -> "1")))))
     intercept[IllegalArgumentException] {
       store.write(recordsDf(Seq(("e", 1L, Map("v" -> "2")))))
@@ -188,9 +194,12 @@ class BucketStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(evicted > 0)
     val minTs = store.table().agg(min("ts")).collect()(0).getLong(0)
     assert(minTs > 0L, "oldest day evicted first")
-    intercept[IllegalStateException] {
-      store.writeWithHardQuota(recordsDf(Seq(("e", 100L, Map()))), "b", 1L)
+    store.putBucketSettings("b", BucketStore.BucketSettings(
+      quotaType = Some("HARD"), quotaSize = Some(1L)))
+    intercept[IllegalArgumentException] {
+      store.writeWithSettings("b", recordsDf(Seq(("e", 100L, Map()))))
     }
+    assert(store.table().filter(col("ts") === 100L).count() == 0)
   }
 
   test("RS_ENGINE_MAX_STORAGE_SIZE analog: global cap rejects across buckets") {

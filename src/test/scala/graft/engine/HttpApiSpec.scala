@@ -1072,6 +1072,17 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     // a small body still takes the buffered path
     assert(req("POST", "/b/big/blob?ts=43", "tiny".getBytes).statusCode() == 200)
     assert(api.spooledWrites.get() == before + 1)
+    // re-sending the stored ts on the spooled path is the record's 409:
+    // the stored payload stays and the spooled body is not left behind
+    val again = req("POST", "/b/big/blob?ts=42",
+      Array.fill[Byte](2 * 1024 * 1024)(1))
+    assert(again.statusCode() == 409, new String(again.body()))
+    assert(api.spooledWrites.get() == before + 2,
+      "the re-sent body must take the spooled path")
+    assert(java.util.Arrays.equals(req("GET", "/b/big/blob?ts=42").body(), big),
+      "stored record untouched")
+    assert(!fs.exists(staging) || fs.listStatus(staging).isEmpty,
+      "staging file deleted after the rejected write")
   }
 
   test("large io-v2 batch spools and slices executor-side") {
@@ -1107,6 +1118,30 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
       s"${store.root}/${BucketStore.StagingDir}")
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(staging) || fs.listStatus(staging).isEmpty)
+    // a re-sent stored key in a spooled batch is its per-record
+    // x-reduct-error-<idx>-<delta>; the batch's new record still lands
+    val resend = Seq(
+      ("e1", 1000L, BatchWire.RecordHeader(payloads(0).length.toLong,
+        "application/octet-stream", Map("i" -> "x"))),
+      ("e3", 3000L, BatchWire.RecordHeader(payloads(2).length.toLong,
+        "application/octet-stream", Map("i" -> "3"))))
+    val clash = req("POST", "/io/bigb/write",
+      Array.fill[Byte](payloads(0).length)(9) ++ payloads(2),
+      headers = BatchWire.encodeBatchV2(resend))
+    assert(clash.statusCode() == 200, new String(clash.body()))
+    assert(api.spooledWrites.get() == before + 2,
+      "the re-sent batch must take the spooled path")
+    assert(clash.headers().firstValue(s"${BatchWire.ErrorHeaderPrefix}0-0")
+      .get().startsWith("409"))
+    assert(clash.headers().firstValue(s"${BatchWire.ErrorHeaderPrefix}1-2000")
+      .isEmpty)
+    val kept = req("GET", "/b/bigb/e1?ts=1000")
+    assert(java.util.Arrays.equals(kept.body(), payloads(0)),
+      "stored record untouched")
+    assert(kept.headers().firstValue("x-reduct-label-i").get() == "0")
+    assert(java.util.Arrays.equals(
+      req("GET", "/b/bigb/e3?ts=3000").body(), payloads(2)))
+    assert(!fs.exists(staging) || fs.listStatus(staging).isEmpty)
     // body shorter than the headers claim → 422, staging not leaked
     val bad = req("POST", "/io/bigb/write",
       Array.tabulate[Byte](3 * 1024 * 1024)(_.toByte),
@@ -1114,6 +1149,37 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
         ("e3", 1L, BatchWire.RecordHeader(4 * 1024 * 1024L,
           "application/octet-stream", Map.empty)))))
     assert(bad.statusCode() == 422)
+    assert(!fs.exists(staging) || fs.listStatus(staging).isEmpty)
+  }
+
+  test("large v1 batch spools; a re-sent stored ts is its per-record 409") {
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    assert(req("POST", "/b/bigv1").statusCode() == 200)
+    // 1 MiB records: every two-record body is over the spool threshold
+    val mb = 1024 * 1024
+    val p = Seq.tabulate(3)(i => Array.tabulate[Byte](mb)(j => (j * 7 + i).toByte))
+    def time(ts: Long) = s"x-reduct-time-$ts" -> s"$mb,application/octet-stream"
+    val before = api.spooledWrites.get()
+    val w1 = req("POST", "/b/bigv1/e/batch", p(0) ++ p(1),
+      headers = Seq(time(1000), time(2000)))
+    assert(w1.statusCode() == 200, new String(w1.body()))
+    assert((jsonOf(w1) \ "written_records").extract[Long] == 2L)
+    // ts 2000 is stored: its slice is skipped, ts 3000 lands
+    val w2 = req("POST", "/b/bigv1/e/batch", p(2) ++ p(2),
+      headers = Seq(time(2000), time(3000)))
+    assert(w2.statusCode() == 200, new String(w2.body()))
+    assert(api.spooledWrites.get() == before + 2,
+      "both batches must take the spooled path")
+    assert(w2.headers().firstValue("x-reduct-error-2000").get().startsWith("409"))
+    assert(w2.headers().firstValue("x-reduct-error-3000").isEmpty)
+    assert((jsonOf(w2) \ "written_records").extract[Long] == 1L,
+      "written_records counts only the new record")
+    assert(java.util.Arrays.equals(req("GET", "/b/bigv1/e?ts=2000").body(), p(1)),
+      "stored record untouched")
+    assert(java.util.Arrays.equals(req("GET", "/b/bigv1/e?ts=3000").body(), p(2)))
+    val staging = new org.apache.hadoop.fs.Path(
+      s"${store.root}/${BucketStore.StagingDir}")
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(staging) || fs.listStatus(staging).isEmpty)
   }
 
@@ -1313,7 +1379,7 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     // admitted (PR-1411) — proving the 422 keys on the declaration only
     val ok = raw("x-reduct-content-length: 0\r\n")
     assert(ok.contains("200"), s"declared length must admit, got: $ok")
-    assert(store.existingTimestamps("ncl", "e", Seq(7L)) == Set(7L))
+    assert(store.existingKeys("ncl", Seq(("e", 7L))) == Set(("e", 7L)))
   }
 
   test("declared-vs-actual and declared-vs-sum content length parity " +
@@ -1341,7 +1407,7 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     val long = raw("/api/v1/b/cl/e?ts=2",
       "x-reduct-content-length: 1\r\n", "2\r\nab\r\n")
     assert(long.contains("400"), s"overlong body must 400, got: $long")
-    assert(store.existingTimestamps("cl", "e", Seq(1L, 2L)).isEmpty,
+    assert(store.existingKeys("cl", Seq(("e", 1L), ("e", 2L))).isEmpty,
       "neither mismatched record may land")
     // v1 batched write WITHOUT any content-length header is ACCEPTED —
     // the record-length sum defines the size (the Content-Encoding
@@ -1350,7 +1416,7 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     val noHdr = raw("/api/v1/b/cl/e/batch",
       "x-reduct-time-50: 5,text/plain\r\n", "5\r\nhello\r\n")
     assert(noHdr.contains("200"), s"sum-defined batch must admit, got: $noHdr")
-    assert(store.existingTimestamps("cl", "e", Seq(50L)) == Set(50L))
+    assert(store.existingKeys("cl", Seq(("e", 50L))) == Set(("e", 50L)))
     // a PRESENT header that contradicts the sum is a 422
     // (write_batched.rs:293-297)
     val clash = raw("/api/v1/b/cl/e/batch",

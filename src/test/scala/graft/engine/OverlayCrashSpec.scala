@@ -57,6 +57,10 @@ class OverlayCrashSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("crash between PATCH staged write and overlay rename-in: patch fully absent, retry lands it") {
+    // the staged-write seams rely on committer v1 (task output hidden
+    // under _temporary until job commit); GraftSession pins it
+    assert(spark.sparkContext.hadoopConfiguration
+      .get("mapreduce.fileoutputcommitter.algorithm.version") == "1")
     val root = Files.createTempDirectory("graft-crash").toString
     val s1 = new BucketStore(spark, root)
     s1.write(recordsDf((1L to 4L).map(ts => ("e", ts, Map("v" -> "old")))))

@@ -173,7 +173,7 @@ class RateLimitsSpec extends AnyFunSuite with SparkTestBase {
       assert(over.headers().firstValue("x-reduct-error").get()
         .contains("ingress bytes"))
       // the refused record never landed
-      assert(store.existingTimestamps("rb", "e", Seq(1L, 2L)) == Set(1L))
+      assert(store.existingKeys("rb", Seq(("e", 1L), ("e", 2L))) == Set(("e", 1L)))
     } finally api.stop()
   }
 

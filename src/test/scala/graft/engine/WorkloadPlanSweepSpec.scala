@@ -2,7 +2,14 @@ package graft.engine
 
 import graft.SparkTestBase
 import graft.core.Records
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,23 +24,38 @@ import org.scalatest.funsuite.AnyFunSuite
   * nodes that melt first at 100 TB if a refactor drops an equi-join key
   * from the conflict check / label merge / remove rewrite.
   */
-class WorkloadPlanSweepSpec extends AnyFunSuite with SparkTestBase {
+class WorkloadPlanSweepSpec extends AnyFunSuite with SparkTestBase
+    with AdaptiveSparkPlanHelper {
 
   test("store workload executes no cartesian / nested-loop plan") {
+    val storeDir =
+      java.nio.file.Files.createTempDirectory("graft-plansweep").toString
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    // write jobs into THIS store only — the session is shared, and other
+    // suites' background writers ($system flushes) post to the same bus
+    val writeJobs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit =
+          durationNs: Long): Unit = {
         plans.add((funcName, qe.executedPlan.toString))
+        if (find(qe.executedPlan) {
+              case DataWritingCommandExec(cmd: InsertIntoHadoopFsRelationCommand, _) =>
+                cmd.outputPath.toUri.getPath == storeDir
+              case _ => false
+            }.isDefined)
+          writeJobs.add(qe)
+      }
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
+      // materialized: fromEvents plans its own Window + Exchange (ts
+      // uniquing), so a checkpointed input leaves the write jobs' plans
+      // showing only what the store adds
       val records = Records.fromEvents(
         spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
-      val storeDir =
-        java.nio.file.Files.createTempDirectory("graft-plansweep").toString
+        .localCheckpoint()
       val store = new BucketStore(spark, storeDir)
       // the full w_* sequence from Bench, including the conflict-checked
       // write path (Error mode joins the batch against the store bounds)
@@ -73,5 +95,21 @@ class WorkloadPlanSweepSpec extends AnyFunSuite with SparkTestBase {
       }
     assert(failures.isEmpty,
       s"workload plans must stay equi-keyed:\n${failures.mkString("\n")}")
+
+    // the fresh-store write job shuffles its payload bytes once: the
+    // pinned (bucket, entry, dt) exchange, no window — admission is a
+    // separate key-only pass, never a second trip through the payload
+    val fresh = writeJobs.peek()
+    assert(fresh != null, "listener captured no write job into the store")
+    val plan = fresh.executedPlan
+    assert(collect(plan) { case w: WindowExec => w }.isEmpty,
+      s"fresh-store write must not plan a Window:\n$plan")
+    val exchanges = collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, s"fresh-store write must plan ONE Exchange:\n$plan")
+    val keys = exchanges.head.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+      case other => fail(s"write exchange is not hash-partitioned: $other")
+    }
+    assert(keys == Seq("bucket", "entry", "dt"), s"write exchange keys: $keys")
   }
 }

@@ -10,4 +10,4 @@ OUT=${2:-/tmp/vout_sf1}
 [ -f "$CORPUS/events.parquet" ] || python3 tools/gen_sf1.py "$CORPUS" /root/testdata/sf0.1
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $CORPUS $OUT"
-python3 tools/check_oracle_par.py "$CORPUS" "$OUT" 10
+python3 tools/check_oracle.py "$CORPUS" "$OUT" 10
