@@ -126,25 +126,27 @@ object Bench {
     * is selected IN (the r19 comparison read 0 improved with the
     * round's two biggest verified wins both "dropped"). Ranking by
     * max(current, previous) keeps an improved query comparable. */
-  private def previousCommittedQueries(): Map[String, Double] = try {
+  private def previousCommittedQueries(): Map[String, Double] = {
     val p = java.nio.file.Paths.get("bench_results.json")
-    if (!java.nio.file.Files.exists(p)) return Map.empty
-    val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    val tag = "\"queries\":{"
-    val i = s.indexOf(tag)
-    if (i < 0) return Map.empty
-    val start = i + tag.length
-    val end = s.indexOf('}', start)
-    if (end < 0) return Map.empty
-    s.substring(start, end).split(",").iterator.flatMap { kv =>
-      val j = kv.lastIndexOf(':')
-      if (j <= 0) None
-      else {
-        val k = kv.substring(0, j).trim.stripPrefix("\"").stripSuffix("\"")
-        kv.substring(j + 1).toDoubleOption.map(k -> _)
-      }
-    }.toMap
-  } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    if (!java.nio.file.Files.exists(p)) Map.empty
+    else try committedQueries(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    catch { case scala.util.control.NonFatal(_) => Map.empty }
+  }
+
+  /** The numeric `queries` members of a bench_results.json document;
+    * empty when the document has none or does not parse. */
+  private[graft] def committedQueries(json: String): Map[String, Double] = {
+    import org.json4s._
+    org.json4s.jackson.JsonMethods.parseOpt(json).map(_ \ "queries") match {
+      case Some(JObject(fields)) => fields.collect {
+        case (k, JDouble(v)) => k -> v
+        case (k, JDecimal(v)) => k -> v.toDouble
+        case (k, JInt(v)) => k -> v.toDouble
+        case (k, JLong(v)) => k -> v.toDouble
+      }.toMap
+      case _ => Map.empty
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -292,9 +292,41 @@ final class BucketStore(val spark: SparkSession, val root: String,
 
   private def dtCol = to_date(timestamp_micros(col("ts")))
 
-  /** The whole store as one logical table (records schema + dt), with
-    * the label overlay applied — `labels` reflects every PATCH. */
-  def table(): DataFrame = applyOverlay(baseTable())
+  /** `rows` plus `dt`, each (bucket, entry, dt) output partition in one
+    * task, ready for a partitioned write — otherwise every task writes a
+    * file into every dir it touches and the store degrades into
+    * thousands of tiny files (measured 10x on the write path). Rows the
+    * caller knows to land in ONE partition — the usual small serving
+    * mutation: one entry, one day — are co-located already: one task
+    * takes them with no exchange, saving the shuffle-map job (measured:
+    * a 16-record write 310 → 165 ms on 4 cores). Otherwise a pinned hash
+    * exchange: AQE byte-coalescing would serialize a many-entry batch
+    * through one task (core/Partitioning.scala). */
+  private def colocated(rows: DataFrame, onePartition: Boolean): DataFrame = {
+    val withDt = rows.withColumn("dt", dtCol)
+    if (onePartition) withDt.coalesce(1)
+    else graft.core.Partitioning.pinned(withDt, col("bucket"), col("entry"), col("dt"))
+  }
+
+  /** [[dtCol]] on the driver: the session-time-zone day of a µs
+    * timestamp, spelled as the `dt=` directory names it. */
+  private[graft] def dtOf(ts: Long): String =
+    java.time.Instant.EPOCH.plus(ts, java.time.temporal.ChronoUnit.MICROS)
+      .atZone(java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"),
+        java.time.ZoneId.SHORT_IDS))
+      .toLocalDate.toString
+
+  /** The whole store as one logical table (records schema), with the
+    * label overlay applied — `labels` reflects every PATCH. */
+  def table(): DataFrame = overlaid(baseTable(), overlayScope().nonEmpty)
+
+  /** [[table]] for a read that `spec` scopes: the overlay join is planned
+    * only when an overlay partition lies in the spec's bucket and matches
+    * its entry patterns (resolved the way the query filters them,
+    * [[EntryPattern.resolve]]). Elsewhere the overlay holds no rows, so
+    * the base labels are the effective ones and the join would be a
+    * wasted broadcast job per read. */
+  def table(spec: QuerySpec): DataFrame = overlaid(baseTable(), overlayMeets(spec))
 
   def tableOrEmpty(): DataFrame =
     try table()
@@ -366,9 +398,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * underscore root hides the tree from the base table's partition
     * discovery (batch and streaming alike, same mechanism as `_rewrite`).
     *
-    * Read path: when the overlay is empty (the common case) `table()` is
-    * the plain base scan — zero overhead. Otherwise a BROADCAST left
-    * join applies the latest overlay labels map-side: payload bytes
+    * Read path: where the overlay holds no rows (see [[overlayScope]])
+    * a read is the plain base scan — zero overhead. Otherwise a BROADCAST
+    * left join applies the latest overlay labels map-side: payload bytes
     * never shuffle, full-payload reads stay scan-shaped. The broadcast
     * is safe because the overlay is bounded: once it exceeds
     * [[overlayFoldThreshold]] rows the next PATCH folds it into the base
@@ -468,7 +500,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
   private def hiddenTreeFileCount(dirName: String): Long = {
     val p = new org.apache.hadoop.fs.Path(s"$root/$dirName")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L else fs.getContentSummary(p).getFileCount
+    treeSummary(fs, p)._2
   }
 
   /** Cheap base-tree non-empty gate: any `bucket=` child under the root
@@ -502,7 +534,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
       }
     if (children.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(overlayStoredSchema.dropRight(1)))
+        overlayRowSchema)
     else
       spark.read.schema(overlayStoredSchema)
         .option("basePath", p.toString)
@@ -523,11 +555,13 @@ final class BucketStore(val spark: SparkSession, val root: String,
   /** Driver-side overlay row count: -1 = unknown (re-seeded by the next
     * MUTATOR under the write lock — readers never write it, a racing
     * reader's stale seed could mask live patches). Keeps the per-patch
-    * fold-threshold check and the per-read has-overlay gate O(1)
-    * instead of a Spark count job / fs walk per call (review r15): the
-    * count only runs on the first patch of a store instance or after a
-    * partial purge left the count unknown. */
+    * fold-threshold check O(1) instead of a Spark count job per call:
+    * the count only runs on the first patch of a store instance or
+    * after a purge that deleted overlay rows. */
   private val overlayRowsApprox = new java.util.concurrent.atomic.AtomicLong(-1L)
+
+  /** Spec hook: whether the next mutator can skip the overlay recount. */
+  private[graft] def overlayRowsKnown: Boolean = overlayRowsApprox.get >= 0L
 
   /** Exact overlay rows, from the driver counter when known (mutator
     * callers only — runs a count job to re-seed when unknown). */
@@ -596,8 +630,10 @@ final class BucketStore(val spark: SparkSession, val root: String,
       .agg(max_by(col("labels"), col("seq")).as("__ov_labels"))
     // install only if no overlay change overlapped the build — a raced
     // build is still correct to RETURN (the caller's own consistency
-    // comes from readConsistent), just never to CACHE
-    if (overlayEpochCounter.get != e0) return ov
+    // comes from readConsistent), just never to CACHE. A read-only
+    // replica never caches: its epoch cannot see the primary's patches,
+    // so a cached agg would serve the first patches it read forever.
+    if (readOnly || overlayEpochCounter.get != e0) return ov
     val p = ov.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     if (overlayEpochCounter.get == e0 && ovAggCache.compareAndSet(hit, (e0, p))) {
       // a replaced non-null stale hit must unpersist NOW — leaving it
@@ -620,34 +656,76 @@ final class BucketStore(val spark: SparkSession, val root: String,
         graft.cond.Node.readsLabels(parsed.root)
     }
 
-  private def applyOverlay(base: DataFrame): DataFrame = {
-    // O(1) gate when the driver counter is known; fs fallback otherwise
-    val known = overlayRowsApprox.get
-    val has = if (known >= 0L) known > 0L else overlayFileCount() > 0L
-    if (!has) base
+  /** `base` with the latest overlay labels joined in when `needed`. */
+  private def overlaid(base: DataFrame, needed: Boolean): DataFrame =
+    if (!needed) base
     else
       base.join(broadcast(overlayLatest()), Seq("bucket", "entry", "ts"), "left")
         .withColumn("labels", coalesce(col("__ov_labels"), col("labels")))
         .drop("__ov_labels")
+
+  /** The overlay scope: every (bucket, entry, dt) partition holding
+    * overlay rows. Built by listing `_labels` (no Spark job) and cached
+    * against the overlay epoch; the two overlay mutators keep it exact
+    * without a re-listing — [[appendOverlay]] adds the partitions it
+    * landed, [[purgeOverlayDirs]] drops the ones it deleted — and every
+    * other overlay change (entry/bucket deletes and renames, FIFO
+    * eviction) bumps the epoch, so the next use re-lists. A read-only
+    * replica re-lists on every use: its epoch cannot see the primary's
+    * patches. */
+  private val overlayScopeCache = new java.util.concurrent.atomic.AtomicReference[
+    (Long, Set[(String, String, String)])]()
+
+  private[graft] def overlayScope(): Set[(String, String, String)] = {
+    val e0 = overlayEpochCounter.get
+    val hit = overlayScopeCache.get
+    if (!readOnly && hit != null && hit._1 == e0) return hit._2
+    val fs = overlayRootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed = partitionDirs(fs, overlayRootPath).collect {
+      case (d, rel) if listQuiet(fs, d).exists(f => f.isFile &&
+          !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")) =>
+        partitionKey(rel)
+    }.toSet
+    // same install guard as the agg: a listing an overlay change
+    // overlapped is correct to return, never to cache
+    if (!readOnly && overlayEpochCounter.get == e0)
+      overlayScopeCache.compareAndSet(hit, (e0, listed))
+    listed
   }
 
-  /** Append overlay rows (`bucket, entry, ts, labels, seq`) via staged
-    * write + rename-in: the parquet job runs outside the epoch window,
-    * only the per-file renames hold it — same discipline as
-    * [[overwritePartitions]], but files ADD to live overlay dirs instead
-    * of swapping them (readers dedup by seq, so accumulation is safe). */
+  /** Record an overlay change made inside the caller's swap window: the
+    * aggregate is retired and `scope` installed as the current scope
+    * before readers can see the settled tree. */
+  private def overlayChanged(scope: Set[(String, String, String)]): Unit = {
+    invalidateOverlayAgg()
+    overlayScopeCache.set((overlayEpochCounter.get, scope))
+  }
+
+  /** Whether an overlay partition lies in `spec`'s bucket and matches its
+    * entry patterns. */
+  private def overlayMeets(spec: QuerySpec): Boolean = {
+    val entries = overlayScope().iterator
+      .collect { case (b, e, _) if spec.bucket.forall(_ == b) => e }.toSeq.distinct
+    EntryPattern.resolve(entries, spec.entries).nonEmpty
+  }
+
   /** Overlay append that ALSO feeds the `_updates` log from the same
     * staged job: the two trees receive identical rows, and a second
     * Spark write would double the per-patch fixed cost (measured ~2x at
     * sf0.01) — copying the staged label-only files is bytes-proportional
-    * and cheap. */
-  private def appendOverlay(rows: DataFrame): Unit =
-    // invalidate even on FAILURE: a throw mid-rename may have landed
-    // some overlay files — the pre-append agg must not stay cached as
-    // current (review r15 pass 2)
-    try appendHiddenTree(rows, LabelsDir,
-      alsoCopyTo = if (updateLogEnabled) Some(UpdatesDir) else None)
-    finally invalidateOverlayAgg()
+    * and cheap. The scope grows by the landed partitions inside the
+    * landing window; a rename that failed part-way retires the cached
+    * agg and scope instead, since some files may have landed. */
+  private def appendOverlay(rows: DataFrame, onePartition: Boolean): Unit = {
+    val before = overlayScope()
+    appendHiddenTree(rows, LabelsDir,
+      alsoCopyTo = if (updateLogEnabled) Some(UpdatesDir) else None,
+      onePartition = onePartition,
+      landed = {
+        case Some(keys) => overlayChanged(before ++ keys)
+        case None => invalidateOverlayAgg()
+      })
+  }
 
   /** Whether PATCHes also append to the `_updates` replication log. OFF
     * by default — the reference creates its transaction log PER
@@ -660,39 +738,31 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * creation). */
   @volatile var updateLogEnabled: Boolean = false
 
-  /** Env-gated patch-path component timing (GRAFT_PATCH_TIMING=true):
-    * stderr-only, for probes localizing per-patch cost. */
-  private val patchTiming = sys.env.get("GRAFT_PATCH_TIMING").contains("true")
-  private def ptimed[T](label: String)(f: => T): T =
-    if (!patchTiming) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[patch-timing] $label%-20s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   /** Stage + rename-in append of (key, labels, seq) rows under a hidden
     * partitioned tree — shared by the label overlay and the update log.
     * `alsoCopyTo` duplicates each staged file into a second tree before
-    * the rename (same swap window — a reader sees both or neither). */
+    * the rename (same swap window — a reader sees both or neither).
+    * Parquet job outside the epoch window, only the renames inside it —
+    * same discipline as [[overwritePartitions]], but files ADD to live
+    * dirs instead of swapping them (readers dedup by seq). `landed` runs
+    * inside the window with the (bucket, entry, dt) partitions that
+    * received files, or None when the rename-in failed part-way. */
   private def appendHiddenTree(rows: DataFrame, dirName: String,
-      alsoCopyTo: Option[String] = None): Unit = {
+      alsoCopyTo: Option[String] = None, onePartition: Boolean = false,
+      landed: Option[Seq[(String, String, String)]] => Unit = _ => ()): Unit = {
     val stage = new org.apache.hadoop.fs.Path(
       s"$root/$RewriteDir/${java.util.UUID.randomUUID}")
-    ptimed(s"stage-write:$dirName") {
-      graft.core.Partitioning.pinned(
-          rows.withColumn("dt", dtCol),
-          col("bucket"), col("entry"), col("dt"))
-        .write.partitionBy("bucket", "entry", "dt")
-        .mode(SaveMode.Overwrite)
-        .parquet(stage.toString)
-    }
+    colocated(rows, onePartition)
+      .write.partitionBy("bucket", "entry", "dt")
+      .mode(SaveMode.Overwrite)
+      .parquet(stage.toString)
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
     crashSeamForTest(s"append:$dirName:staged")
     rewriteEpochCounter.incrementAndGet() // odd: files landing
-    try ptimed(s"rename-in:$dirName") {
+    var keys: Option[Seq[(String, String, String)]] = None
+    try {
       val treeRoot = new org.apache.hadoop.fs.Path(s"$root/$dirName")
-      val dirs = stagedPartitionDirs(fs, stage)
+      val dirs = partitionDirs(fs, stage)
       // per-dir ops are independent (distinct paths; mkdirs of a shared
       // entry parent is idempotent) — issue them in parallel so the
       // landing window doesn't grow with the touched-partition count
@@ -713,45 +783,73 @@ final class BucketStore(val spark: SparkSession, val root: String,
           fs.rename(f.getPath, new org.apache.hadoop.fs.Path(live, f.getPath.getName))
         }
       }
+      keys = Some(dirs.map { case (_, rel) => partitionKey(rel) })
     } finally {
-      rewriteEpochCounter.incrementAndGet() // even: settled
-      try fs.delete(stage, true)
-      catch { case NonFatal(e) =>
-        System.err.println(s"[store] $dirName stage GC failed, leaking $stage: $e") }
+      try landed(keys)
+      finally {
+        rewriteEpochCounter.incrementAndGet() // even: settled
+        try fs.delete(stage, true)
+        catch { case NonFatal(e) =>
+          System.err.println(s"[store] $dirName stage GC failed, leaking $stage: $e") }
+      }
     }
   }
 
-  /** Walk a staged partitioned tree: every `bucket=/entry=/dt=` leaf dir
-    * with its tree-relative path. One serial listing pass — the listing
-    * is O(buckets + entries) calls; the per-dir WORK it feeds is what
-    * [[parallelFs]] spreads. */
-  private def stagedPartitionDirs(fs: org.apache.hadoop.fs.FileSystem,
-      stage: org.apache.hadoop.fs.Path): Seq[(org.apache.hadoop.fs.Path, String)] =
-    (for {
-      b <- fs.listStatus(stage) if b.isDirectory &&
-        b.getPath.getName.startsWith("bucket=")
-      e <- fs.listStatus(b.getPath) if e.isDirectory &&
-        e.getPath.getName.startsWith("entry=")
-      d <- fs.listStatus(e.getPath) if d.isDirectory &&
-        d.getPath.getName.startsWith("dt=")
+  /** Walk a partitioned tree: every `bucket=/entry=/dt=` leaf dir with
+    * its tree-relative path. One serial listing pass — the listing is
+    * O(buckets + entries) calls; the per-dir WORK it feeds is what
+    * [[parallelFs]] spreads. A dir deleted mid-walk is skipped. */
+  private def partitionDirs(fs: org.apache.hadoop.fs.FileSystem,
+      tree: org.apache.hadoop.fs.Path): Seq[(org.apache.hadoop.fs.Path, String)] = {
+    def sub(p: org.apache.hadoop.fs.Path, prefix: String) =
+      listQuiet(fs, p).filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+    for {
+      b <- sub(tree, "bucket=")
+      e <- sub(b.getPath, "entry=")
+      d <- sub(e.getPath, "dt=")
     } yield (d.getPath,
-      s"${b.getPath.getName}/${e.getPath.getName}/${d.getPath.getName}")).toSeq
+      s"${b.getPath.getName}/${e.getPath.getName}/${d.getPath.getName}")
+  }
+
+  private def listQuiet(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    try fs.listStatus(p).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** (bucket, entry, dt) of a tree-relative `bucket=/entry=/dt=` path. */
+  private def partitionKey(rel: String): (String, String, String) = {
+    val Array(b, e, d) = rel.split('/')
+    (unescapePartition(b.stripPrefix("bucket=")),
+      unescapePartition(e.stripPrefix("entry=")), d.stripPrefix("dt="))
+  }
 
   /** Drop the overlay dirs mirroring the given base partitions — runs
-    * inside a rewrite-swap window (the caller's `extraSwapActions`). */
+    * inside a rewrite-swap window (the caller's `extraSwapActions`).
+    * Only partitions in the overlay scope are touched: a rewrite of
+    * partitions that were never patched deletes nothing, keeps the agg
+    * cached and the row count known. */
   private[graft] def purgeOverlayDirs(
       affected: Iterable[(String, String, String)]): Unit = {
+    val scope = overlayScope()
+    val doomed = affected.iterator.filter(scope).toSeq.distinct
+    if (doomed.isEmpty) return
     val fs = overlayRootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dtDir(b: String, e: String, d: String) = new org.apache.hadoop.fs.Path(
       s"$root/$LabelsDir/bucket=${escapePartition(b)}/entry=${escapePartition(e)}/dt=$d")
-    parallelFs(affected.toSeq) { case (b, e, d) =>
-      fs.delete(dtDir(b, e, d), true): Unit }
-    // GC empty parent skeletons so the overlay-gate walk never grows
-    // with dead entry/bucket dirs (review r15)
-    gcEmptyParents(fs, affected.map(a => (a._1, a._2)).toSet[(String, String)]
-      .map { case (b, e) => dtDir(b, e, "x").getParent })
-    overlayRowsApprox.set(-1L) // partial purge: count unknown until re-seeded
-    invalidateOverlayAgg() // the overlay changed mid-mutation
+    overlayRowsApprox.set(-1L) // rows deleted: count unknown until re-seeded
+    var deleted = false
+    try {
+      parallelFs(doomed) { case (b, e, d) => fs.delete(dtDir(b, e, d), true): Unit }
+      deleted = true
+      // GC empty parent skeletons so the scope walk never grows with
+      // dead entry/bucket dirs
+      gcEmptyParents(fs, doomed.map(a => (a._1, a._2)).toSet[(String, String)]
+        .map { case (b, e) => dtDir(b, e, "x").getParent })
+    } finally {
+      // the overlay changed mid-mutation; after a failed delete the
+      // scope is re-listed rather than guessed
+      if (deleted) overlayChanged(scope -- doomed) else invalidateOverlayAgg()
+    }
   }
 
   /** Best-effort GC of empty `entry=` skeleton dirs (and their `bucket=`
@@ -834,7 +932,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
   private def foldOverlayLocked(): Long = {
     val n = knownOverlayRows()
     if (n == 0L) return 0L
-    val affected = collectAffected(overlayTableRaw().select("bucket", "entry", "ts"))
+    val affected = overlayScope().toArray // every partition with overlay rows
     val rewritten = prunedPartitionScan(affected) // effective labels
     overwritePartitions(rewritten,
       extraSwapActions = () => purgeOverlayDirs(affected))
@@ -864,7 +962,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
         * (driver-assembled batches — the `$system` flushes assign every
         * ts serially). Skips the bounds-aggregation Spark job the
         * Conflict.Skip admission otherwise runs before the write: one
-        * whole job per telemetry flush for a value already in hand. */
+        * whole job per telemetry flush for a value already in hand.
+        * With one touched entry and both bounds on one day, the batch
+        * is one partition and is written without an exchange. */
       knownTsBounds: Option[(Long, Long)] = None): Unit = mutating {
     // the global storage cap guards the COMMON mutator, not just the
     // settings-aware wire path — the reference enforces it in
@@ -897,9 +997,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
       case Conflict.Error =>
         // one aggregation pass yields BOTH the in-batch-duplicate flag and
         // the ts bounds for the overlap check (was two scans)
-        val stats = ptimed("write:stats-agg")(batch0
+        val stats = batch0
           .groupBy("bucket", "entry", "ts").count()
-          .agg(max("count"), min("ts"), max("ts")).collect()(0))
+          .agg(max("count"), min("ts"), max("ts")).collect()(0)
         if (!stats.isNullAt(0) && stats.getLong(0) > 1) {
           val dup = batch0.groupBy("bucket", "entry", "ts").count()
             .filter(col("count") > 1).limit(1).collect()(0) // rare path
@@ -908,33 +1008,27 @@ final class BucketStore(val spark: SparkSession, val root: String,
         }
         if (!stats.isNullAt(1))
           existingInRange(stats.getLong(1), stats.getLong(2)).foreach { existing =>
-            val clash = ptimed("write:clash-check")(
-              batch0.join(existing, Seq("bucket", "entry", "ts"))
-                .limit(1).collect())
+            val clash = batch0.join(existing, Seq("bucket", "entry", "ts"))
+              .limit(1).collect()
             if (clash.nonEmpty)
               throw new IllegalArgumentException(
                 s"record already exists: ${clash(0)}")
           }
         batch0
     }
-    // co-locate each output partition in one task before the partitioned
-    // write — otherwise every task writes a file into every (entry, dt)
-    // dir it touches and the store degrades into thousands of tiny files
-    // (the classic small-files problem; measured 10x on the write path).
-    // `maxRecordsPerFile` still splits a genuinely hot (entry, day).
-    // Pinned count: AQE byte-coalescing would serialize a many-entry
-    // batch through one task (core/Partitioning.scala).
-    val writer = graft.core.Partitioning.pinned(
-        deduped.withColumn("dt", dtCol),
-        col("bucket"), col("entry"), col("dt"))
+    // one task per output partition; a batch the caller declared as one
+    // entry within one day needs no exchange. `maxRecordsPerFile` still
+    // splits a genuinely hot (entry, day).
+    val onePartition = touchedEntries.exists(_.size == 1) &&
+      knownTsBounds.exists { case (lo, hi) => dtOf(lo) == dtOf(hi) }
+    val writer = colocated(deduped, onePartition)
       .write
       .partitionBy("bucket", "entry", "dt")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .mode(SaveMode.Append)
     // per-write codec override (replication transfer compression); None
     // keeps the session default (zstd, set above)
-    ptimed("write:partitioned-write")(
-      codec.fold(writer)(c => writer.option("compression", c)).parquet(root))
+    codec.fold(writer)(c => writer.option("compression", c)).parquet(root)
     touchedEntries match {
       case Some(pairs) => markEntriesDirty(pairs)
       case None => markAllEntriesDirty()
@@ -962,6 +1056,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
       .filter(col("ts").between(lo, hi))
       .select("bucket", "entry", "ts"))
 
+  private def tsBounds(tss: Seq[Long]): Option[(Long, Long)] =
+    if (tss.isEmpty) None else Some((tss.min, tss.max))
+
   /** Batch-write convenience (the wire batch-protocol analog,
     * reduct_base/src/batch/v1.rs): records as (ts, labels, payload)
     * triples for one bucket/entry. This is the wire path, so it honors
@@ -977,7 +1074,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
     }.asJava
     val bytes = records.map(_._3.length.toLong).sum
     writeWithSettings(bucket, spark.createDataFrame(rows, Records.schema),
-      incomingBytes = bytes, touchedEntries = Some(Seq((bucket, entry))))
+      incomingBytes = bytes, touchedEntries = Some(Seq((bucket, entry))),
+      knownTsBounds = tsBounds(records.map(_._1)))
     usage.countWrite(bucket, entry, records.size.toLong, bytes)
   }
 
@@ -1062,7 +1160,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
             maxRecordsPerFile = s.maxBlockRecords.filter(_ > 0).getOrElse(1000000L),
             incomingBytes = admittedBytes,
             touchedEntries = Some(admitted.result()
-              .flatMap(_._3.iterator.map(rec => (bucket, rec.entry))).distinct))
+              .flatMap(_._3.iterator.map(rec => (bucket, rec.entry))).distinct),
+            knownTsBounds = tsBounds(admitted.result().flatMap(_._3.map(_.ts))))
           if (s.quotaType.contains("FIFO") && quota > 0)
             enforceFifoQuota(bucket, quota)
           for ((_, _, survivors) <- admitted.result();
@@ -1148,7 +1247,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     */
   def updateLabels(spec: QuerySpec, set: Map[String, String],
       remove: Set[String] = Set.empty): Long = mutating {
-    val all = table()
+    val all = table(spec)
     val patch =
       if (set.isEmpty) map().cast("map<string,string>")
       else map(set.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
@@ -1162,7 +1261,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
       .withColumn("seq", lit(overlaySeqCounter.incrementAndGet()))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = ptimed("match+persist+count")(patched.count())
+      val n = patched.count()
       if (n == 0) return 0
       applyPatch(patched, n)
       n
@@ -1176,7 +1275,11 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * patches take the direct pruned-partition rewrite (folding any older
     * overlay rows for those partitions in the same swap, since
     * [[prunedPartitionScan]] is effective and the new labels override). */
-  private def applyPatch(patched: DataFrame, n: Long): Unit = {
+  private def applyPatch(patched: DataFrame, n: Long,
+      /** the patch's (bucket, entry, dt) partitions, when the caller
+        * holds them on the driver */
+      known: Option[Array[(String, String, String)]] = None): Unit = {
+    val onePartition = known.exists(_.length == 1)
     // the UPDATE transaction log (the reference's replication analog of
     // Transaction::UpdateRecord, replication.rs:27): BOTH patch paths
     // record the patched (key, labels, seq) rows under `_updates/`, an
@@ -1188,7 +1291,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     // path runs the one extra small job.
     if (n <= overlayFoldThreshold) {
       val before = knownOverlayRows() // O(1) once seeded
-      try appendOverlay(patched) // also feeds _updates/
+      try appendOverlay(patched, onePartition) // also feeds _updates/
       catch { case NonFatal(e) =>
         overlayRowsApprox.set(-1L) // partial landing: count unknown
         throw e
@@ -1197,14 +1300,14 @@ final class BucketStore(val spark: SparkSession, val root: String,
       if (before + n > overlayFoldThreshold) foldOverlayLocked(): Unit
     } else {
       if (updateLogEnabled)
-        appendHiddenTree(patched, UpdatesDir) // log only; base rewrite below
-      val affected = collectAffected(patched.select("bucket", "entry", "ts"))
+        appendHiddenTree(patched, UpdatesDir, onePartition = onePartition) // log only
+      val affected = known.getOrElse(collectAffected(patched.select("bucket", "entry", "ts")))
       val rewritten = prunedPartitionScan(affected)
         .join(patched.drop("seq").withColumnRenamed("labels", "__new_labels"),
           Seq("bucket", "entry", "ts"), "left")
         .withColumn("labels", coalesce(col("__new_labels"), col("labels")))
         .drop("__new_labels")
-      overwritePartitions(rewritten,
+      overwritePartitions(rewritten, dropMissingFrom = affected,
         extraSwapActions = () => purgeOverlayDirs(affected))
     }
   }
@@ -1296,14 +1399,18 @@ final class BucketStore(val spark: SparkSession, val root: String,
     // overlay broadcast join AND the overlay-agg build while patches
     // are outstanding. The rewrite below still folds effective labels
     // into the affected partitions either way (purge invariant).
-    val all = if (specReadsLabels(spec)) table() else baseTable()
+    val all = if (specReadsLabels(spec)) table(spec) else baseTable()
     val matched = QueryEngine.matching(all, spec).select("bucket", "entry", "ts")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = ptimed("rm:match+count")(matched.count())
+      // one job yields both the count and the affected-partition list,
+      // materialized before any file is touched
+      val perPartition = matched.withColumn("dt", dtCol)
+        .groupBy("bucket", "entry", "dt").count().collect()
+      val n = perPartition.iterator.map(_.getLong(3)).sum
       if (n == 0) return 0
-      // materialize the affected-partition list before any file is touched
-      val affected = ptimed("rm:affected")(collectAffected(matched))
+      val affected = perPartition.map(r =>
+        (r.getString(0), r.getString(1), r.getDate(2).toString))
       // survivors are consumed by exactly one action — the staged write
       // inside overwritePartitions. No localCheckpoint: checkpointing
       // the survivor set materializes (corpus - removed) bytes into
@@ -1314,80 +1421,90 @@ final class BucketStore(val spark: SparkSession, val root: String,
       // removal or none of it.
       val survivors = prunedPartitionScan(affected)
         .join(matched, Seq("bucket", "entry", "ts"), "left_anti")
-      ptimed("rm:overwrite") {
-        overwritePartitions(survivors,
-          dropMissingFrom = affected,
-          // survivors carry folded effective labels; purging the affected
-          // overlay dirs in the SAME swap keeps the live-records-only
-          // invariant (a later re-write of a removed ts must not see
-          // stale overlay labels)
-          extraSwapActions = () => purgeOverlayDirs(affected))
-      }
+      overwritePartitions(survivors,
+        dropMissingFrom = affected,
+        // survivors carry folded effective labels; purging the affected
+        // overlay dirs in the SAME swap keeps the live-records-only
+        // invariant (a later re-write of a removed ts must not see
+        // stale overlay labels)
+        extraSwapActions = () => purgeOverlayDirs(affected))
       n
     } finally matched.unpersist()
   }
 
   /** Batched per-record label updates (the io v2 PATCH verb): each key
-    * carries its own set/remove delta; ONE pruned partition-rewrite pass
-    * applies them all (a per-record loop would rewrite partitions k
-    * times). Returns the number of records found and patched. */
+    * carries its own set/remove delta; ONE overlay append applies them
+    * all. Returns the number of records found and patched. */
   def updateLabelsBatch(bucket: String,
       updates0: Seq[(String, Long, Map[String, String], Set[String])]): Long =
     updateLabelsMatched(bucket, updates0).size.toLong
 
   /** [[updateLabelsBatch]] returning the matched (entry, ts) keys —
-    * the folded variant attributes matches back to each folded request. */
+    * the folded variant attributes matches back to each folded request.
+    * The keys come from HTTP headers, so the batch is driver-sized: the
+    * current labels of the requested keys are collected in one job
+    * ([[storedLabels]]), merged here, and the merged rows appended. */
   def updateLabelsMatched(bucket: String,
       updates0: Seq[(String, Long, Map[String, String], Set[String])])
       : Set[(String, Long)] = mutating {
     if (updates0.isEmpty) return Set.empty
-    // compose duplicate (entry, ts) deltas IN ORDER before the join —
-    // the inner join would otherwise emit same-seq overlay rows with a
-    // nondeterministic winner and an inflated match count (review r15).
-    // Composition: later sets win, later removes drop earlier sets,
-    // a later set resurrects an earlier remove (apply-in-order).
+    // compose duplicate (entry, ts) deltas IN ORDER first — one overlay
+    // row per key, so no same-seq rows with a nondeterministic winner and
+    // no inflated match count. Composition: later sets win,
+    // later removes drop earlier sets, a later set resurrects an earlier
+    // remove (apply-in-order).
     val updates = updates0.groupBy(u => (u._1, u._2)).values.map { vs =>
       vs.reduce { (a, b) =>
         (a._1, a._2, (a._3 -- b._4) ++ b._3, (a._4 ++ b._4) -- b._3.keySet)
       }
     }.toSeq
+    val current = storedLabels(bucket, updates.map(u => (u._1, u._2)))
+    if (current.isEmpty) return Set.empty
+    val seq = overlaySeqCounter.incrementAndGet()
+    // merge = drop `remove` keys, then `set` wins: the reference's
+    // update_labels.rs:14-36 semantics
+    val rows = updates.collect { case (e, ts, set, remove) if current.contains((e, ts)) =>
+      org.apache.spark.sql.Row(bucket, e, ts, (current((e, ts)) -- remove) ++ set, seq)
+    }
     import scala.jdk.CollectionConverters._
-    val patchSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("entry", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("__set",
-        org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType)),
-      org.apache.spark.sql.types.StructField("__drop",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType))))
-    val patches = spark.createDataFrame(
-      updates.map { case (e, ts, set, remove) =>
-        org.apache.spark.sql.Row(bucket, e, ts, set, (remove ++ set.keys).toSeq)
-      }.asJava, patchSchema)
-    val patched = table()
-      .filter(col("bucket") === bucket &&
-        col("entry").isin(updates.map(_._1).distinct: _*) &&
-        col("ts").between(updates.map(_._2).min, updates.map(_._2).max))
-      .join(broadcast(patches), Seq("bucket", "entry", "ts"), "inner")
-      .select(col("bucket"), col("entry"), col("ts"),
-        map_concat(
-          map_filter(coalesce(col("labels"), map().cast("map<string,string>")),
-            (k, _) => !array_contains(coalesce(col("__drop"),
-              array().cast("array<string>")), k)),
-          coalesce(col("__set"), map().cast("map<string,string>"))).as("labels"))
-      .withColumn("seq", lit(overlaySeqCounter.incrementAndGet()))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // keys, not a bare count: the folded variant needs per-request
-      // match attribution, and the frame is persisted + batch-bounded,
-      // so collecting (entry, ts) costs what count() did
-      val keys = patched.select("entry", "ts").collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-      if (keys.isEmpty) return Set.empty
-      applyPatch(patched, keys.length.toLong)
-      keys.toSet
-    } finally patched.unpersist()
+    applyPatch(spark.createDataFrame(rows.asJava, overlayRowSchema), rows.size.toLong,
+      known = Some(current.keysIterator.map { case (e, ts) => (bucket, e, dtOf(ts)) }
+        .toArray.distinct))
+    current.keySet
+  }
+
+  /** The stored-record filter for `keys` of `bucket`: entry partition
+    * pruning, the ts range for row-group stats, the exact ts list. */
+  private def keysIn(bucket: String, keys: Seq[(String, Long)]) = {
+    val tss = keys.map(_._2).distinct
+    col("bucket") === bucket && col("entry").isin(keys.map(_._1).distinct: _*) &&
+      col("ts").between(tss.min, tss.max) && col("ts").isin(tss: _*)
+  }
+
+  /** Effective labels of the stored records among `keys` of `bucket`, in
+    * one Spark job: the base rows, plus the raw rows of the overlay
+    * partitions in scope that hold these keys' days, the highest seq
+    * winning on the driver. No overlay aggregate is built or broadcast. */
+  private def storedLabels(bucket: String, keys: Seq[(String, Long)])
+      : Map[(String, Long), Map[String, String]] = {
+    val BaseSeq = Long.MinValue
+    val base = baseTableOrEmpty().filter(keysIn(bucket, keys))
+      .select(col("entry"), col("ts"), col("labels"), lit(BaseSeq).as("seq"))
+    val scope = overlayScope()
+    val overlayDirs = keys.map { case (e, ts) => (bucket, e, dtOf(ts)) }.distinct
+      .filter(scope).map { case (b, e, d) =>
+        s"$overlayRootPath/bucket=${escapePartition(b)}/entry=${escapePartition(e)}/dt=$d" }
+    val rows =
+      if (overlayDirs.isEmpty) base
+      else base.unionByName(spark.read.schema(overlayStoredSchema)
+        .option("basePath", overlayRootPath.toString).parquet(overlayDirs: _*)
+        .filter(keysIn(bucket, keys)).select("entry", "ts", "labels", "seq"))
+    val wanted = keys.toSet
+    rows.collect().groupBy(r => (r.getString(0), r.getLong(1))).collect {
+      case (k, rs) if wanted(k) && rs.exists(_.getLong(3) == BaseSeq) =>
+        val latest = rs.maxBy(_.getLong(3))
+        k -> Option(latest.getMap[String, String](2)).fold(Map.empty[String, String])(_.toMap)
+    }
   }
 
   /** Which (entry, ts) keys of `bucket` are already stored — the
@@ -1401,48 +1518,35 @@ final class BucketStore(val spark: SparkSession, val root: String,
   def existingKeys(bucket: String,
       keys: Seq[(String, Long)]): Set[(String, Long)] = {
     if (keys.isEmpty) return Set.empty
-    val entries = keys.map(_._1).distinct
-    val tss = keys.map(_._2).distinct
-    val hits = baseTableOrEmpty()
-      .filter(col("bucket") === bucket && col("entry").isin(entries: _*) &&
-        col("ts").between(tss.min, tss.max) && col("ts").isin(tss: _*))
+    val hits = baseTableOrEmpty().filter(keysIn(bucket, keys))
       .select("entry", "ts").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     hits.intersect(keys.toSet)
   }
 
   /** Remove records by explicit (entry, ts) keys (remove_records.rs:34-60,
-    * the ts-list form); returns per-key found/not-found. */
+    * the ts-list form); returns per-key found/not-found. Planned from the
+    * keys on the driver: [[existingKeys]] is the only job before the
+    * rewrite, the affected partitions follow from the found keys' days,
+    * and the survivors filter is a literal per-entry ts list (keys come
+    * from HTTP headers, so the lists stay small). */
   def removeRecords(bucket: String,
       keys: Seq[(String, Long)]): Map[(String, Long), Boolean] = mutating {
     if (keys.isEmpty) return Map.empty
-    import scala.jdk.CollectionConverters._
-    val keyDf = spark.createDataFrame(
-      keys.map { case (e, ts) => org.apache.spark.sql.Row(bucket, e, ts) }.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("entry", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.LongType))))
-    val existing = baseTable() // keys only — overlay can't change them
-      .filter(col("bucket") === bucket && col("entry").isin(keys.map(_._1).distinct: _*) &&
-        col("ts").between(keys.map(_._2).min, keys.map(_._2).max))
-      .join(broadcast(keyDf), Seq("bucket", "entry", "ts"), "left_semi")
-      .select("bucket", "entry", "ts")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val found = existing.collect().map(r => (r.getString(1), r.getLong(2))).toSet
-      if (found.nonEmpty) {
-        val affected = collectAffected(existing)
-        // one action (the staged write) — no localCheckpoint, see
-        // removeQuery; fully-emptied partitions drop via dropMissingFrom
-        val survivors = prunedPartitionScan(affected)
-          .join(broadcast(existing), Seq("bucket", "entry", "ts"), "left_anti")
-        overwritePartitions(survivors,
-          dropMissingFrom = affected,
-          extraSwapActions = () => purgeOverlayDirs(affected))
-      }
-      keys.map(k => k -> found(k)).toMap
-    } finally existing.unpersist()
+    val found = existingKeys(bucket, keys)
+    if (found.nonEmpty) {
+      val affected = found.iterator.map { case (e, ts) => (bucket, e, dtOf(ts)) }
+        .toArray.distinct
+      val doomed = found.groupBy(_._1).map { case (e, ks) =>
+        col("entry") === e && col("ts").isin(ks.iterator.map(_._2).toSeq: _*)
+      }.reduce(_ || _)
+      // one action (the staged write) — no localCheckpoint, see
+      // removeQuery; fully-emptied partitions drop via dropMissingFrom
+      overwritePartitions(prunedPartitionScan(affected).filter(!doomed),
+        dropMissingFrom = affected,
+        extraSwapActions = () => purgeOverlayDirs(affected))
+    }
+    keys.map(k => k -> found(k)).toMap
   }
 
   private def collectAffected(matched: DataFrame): Array[(String, String, String)] =
@@ -1467,7 +1571,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * dirs in the swap (idempotent if skipped — a folded overlay row
     * re-applies the labels the base now already has). */
   private def prunedPartitionScan(affected: Array[(String, String, String)]): DataFrame =
-    applyOverlay(prunedPartitionScanBase(affected))
+    overlaid(prunedPartitionScanBase(affected), affected.exists(overlayScope()))
 
   private def prunedPartitionScanBase(affected: Array[(String, String, String)]): DataFrame =
     if (affected.length <= PruneListMax) prunedPartitionScanIsin(affected)
@@ -1526,11 +1630,12 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * that would read `records` AFTER the swap must still materialize it
     * first — recomputing post-swap resolves against a changed tree.
     *
-    * `dropMissingFrom`: partitions the mutation touched; any of them
-    * ABSENT from the staged tree (every record removed) is deleted in
-    * the same swap window. This is derived from the staged dirs, so
-    * callers don't need a second pass over `records` to learn which
-    * partitions survived.
+    * `dropMissingFrom`: partitions the mutation touched — `records` lie
+    * in them; any of them ABSENT from the staged tree (every record
+    * removed) is deleted in the same swap window. This is derived from
+    * the staged dirs, so callers don't need a second pass over `records`
+    * to learn which partitions survived. One touched partition is
+    * staged by one task with no exchange ([[colocated]]).
     *
     * `private[graft]` so lifecycle compaction reuses this seam (its
     * rewrite must land inside the same odd-epoch window readers retry
@@ -1542,9 +1647,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
       extraSwapActions: () => Unit = () => ()): Unit = {
     val stage = new org.apache.hadoop.fs.Path(
       s"$root/$RewriteDir/${java.util.UUID.randomUUID}")
-    graft.core.Partitioning.pinned( // one task per dir, AQE-proof
-        records.withColumn("dt", dtCol),
-        col("bucket"), col("entry"), col("dt"))
+    colocated(records, onePartition = dropMissingFrom.size == 1)
       .write.partitionBy("bucket", "entry", "dt")
       .options(writerOptions)
       .mode(SaveMode.Overwrite)
@@ -1560,7 +1663,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     try {
       val rootPath = new org.apache.hadoop.fs.Path(root)
       val parked = new java.util.concurrent.atomic.AtomicInteger(0)
-      val dirs = stagedPartitionDirs(fs, stage)
+      val dirs = partitionDirs(fs, stage)
       // touched partitions the staged tree does NOT recreate were fully
       // emptied by the mutation — drop them in the same window
       val stagedRels = dirs.map(_._2).toSet
@@ -1697,10 +1800,27 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * version only bumps when the block exits, so the cache would serve
     * the pre-eviction figure for the whole loop). */
   private def treeBytes(path: org.apache.hadoop.fs.Path): Long = {
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     sizeWalks.incrementAndGet()
-    if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
+    treeSummary(path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)._1
   }
+
+  /** (bytes, files) under `path`; 0 when it does not exist. The walk
+    * races mutations — a staged write creating and dropping its
+    * temporary dirs, a swap renaming partition dirs, a purge — so a dir
+    * that vanishes mid-walk counts as empty instead of failing the
+    * serving call (`/info`, `/list` and bucket info answered 500 with a
+    * FileNotFoundException from `getContentSummary`). */
+  private def treeSummary(fs: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path): (Long, Long) =
+    try {
+      val s = fs.getContentSummary(path)
+      (s.getLength, s.getFileCount)
+    } catch { case _: java.io.FileNotFoundException =>
+      listQuiet(fs, path).foldLeft((0L, 0L)) { case ((bytes, files), st) =>
+        val (b, f) = if (st.isDirectory) treeSummary(fs, st.getPath) else (st.getLen, 1L)
+        (bytes + b, files + f)
+      }
+    }
 
   private def bucketPath(bucket: String) =
     new org.apache.hadoop.fs.Path(s"$root/bucket=${escapePartition(bucket)}")
@@ -1731,13 +1851,11 @@ final class BucketStore(val spark: SparkSession, val root: String,
     val bpath = new org.apache.hadoop.fs.Path(
       s"$root/bucket=${escapePartition(bucket)}")
     val fs = bpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(bpath)) return Map.empty
-    fs.listStatus(bpath).iterator
+    listQuiet(fs, bpath).iterator
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("entry="))
       .map { st =>
-        val name = unescapePartition(st.getPath.getName.stripPrefix("entry="))
-        val sum = fs.getContentSummary(st.getPath)
-        name -> (sum.getLength, sum.getFileCount)
+        unescapePartition(st.getPath.getName.stripPrefix("entry=")) ->
+          treeSummary(fs, st.getPath)
       }.toMap
   }
 
@@ -1822,8 +1940,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     if (scope.isEmpty && !fs.exists(rootPath)) return Array.empty
     def list(p: org.apache.hadoop.fs.Path) = {
       lastProbeListings.incrementAndGet()
-      try fs.listStatus(p).toSeq
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
+      listQuiet(fs, p)
     }
     def subDirs(p: org.apache.hadoop.fs.Path, prefix: String) =
       list(p).filter(st =>
@@ -1972,7 +2089,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
           }.toDF()
         try writeWithSettings(bucket, df, Conflict.Preadmitted,
           incomingBytes = survivors.map(_.len).sum,
-          touchedEntries = Some(survivors.map(s => (bucket, s.entry)).distinct))
+          touchedEntries = Some(survivors.map(s => (bucket, s.entry)).distinct),
+          knownTsBounds = tsBounds(survivors.map(_.ts)))
         finally conf.destroy()
         for ((entry, es) <- survivors.groupBy(_.entry))
           usage.countWrite(bucket, entry, es.size.toLong, es.map(_.len).sum)
@@ -2250,6 +2368,9 @@ object BucketStore {
     StructField("labels", MapType(StringType, StringType), nullable = true),
     StructField("seq", LongType, nullable = false),
     StructField("dt", DateType)))
+
+  /** An overlay row as written and read: [[overlayStoredSchema]] without `dt`. */
+  val overlayRowSchema: StructType = StructType(overlayStoredSchema.dropRight(1))
 
   def emptyRecords(spark: SparkSession): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),

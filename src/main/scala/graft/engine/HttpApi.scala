@@ -650,7 +650,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     // set, driver-side already), so folding per-bucket rows here costs
     // what the bucket map already costs.
     val rows = store.readConsistent(
-      store.tableOrEmpty().groupBy("bucket")
+      store.baseTableOrEmpty().groupBy("bucket")
         .agg(min(when(visibleEntry, col("ts"))).as("oldest"),
           max(when(visibleEntry, col("ts"))).as("latest"))
         .collect())
@@ -728,7 +728,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
       // scan is 10k tiny file opens and dominates). The cached frame is
       // O(distinct entries) rows — the same bound the distributed counting
       // already guarantees the driver never exceeds per bucket.
-      val perEntry = store.tableOrEmpty()
+      val perEntry = store.baseTableOrEmpty() // keys only: the overlay can't change them
         .groupBy("bucket", "entry")
         .agg(min(when(visibleEntry, col("ts"))).as("emin"),
           max(when(visibleEntry, col("ts"))).as("emax"))
@@ -912,7 +912,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   private def bucketInfo(ex: HttpExchange, bucket: String): Unit = {
     if (!bucketExists(bucket)) throw notFound(s"Bucket '$bucket' is not found")
     val all = store.readConsistent(
-      store.tableOrEmpty().filter(col("bucket") === bucket)
+      store.baseTableOrEmpty().filter(col("bucket") === bucket)
         .groupBy("entry").agg(count(lit(1)).as("n"),
           min("ts").as("oldest"), max("ts").as("latest"))
         .orderBy("entry").collect())
@@ -1074,7 +1074,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     // at construction, so a plan built pre-swap would re-hit renamed-away
     // files on the retry with the epoch already settled.
     store.readConsistent {
-      val base = store.table()
+      val base = store.table(QuerySpec(entries = Some(Seq(entry)), bucket = Some(bucket)))
         .filter(col("bucket") === bucket && col("entry") === entry)
       val at = q.get("ts") match {
         case Some(ts) => base.filter(col("ts") === ts.toLong)
@@ -1186,7 +1186,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     val (spec0, ttlMs, continuous) = parseQueryEntry(body)
     val spec = spec0.copy(bucket = Some(bucket),
       entries = Some(spec0.entries.getOrElse(Seq(entry))))
-    val id = registry.open(() => store.table(), spec,
+    val id = registry.open(() => store.table(spec), spec,
       continuous = continuous, ttlMs = ttlMs)
     rememberBatchLimits(id, spec)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
@@ -1206,7 +1206,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     val continuous = params.get("continuous").exists(v =>
       v.toBooleanOption.getOrElse(
         throw unprocessable("'continue' must be a bool value")))
-    val id = registry.open(() => store.table(), spec,
+    val id = registry.open(() => store.table(spec), spec,
       continuous = continuous, ttlMs = ttlMs)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
   }
@@ -1743,7 +1743,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     val lp = QueryLinks.verify(token, linkSecret)
       .getOrElse(throw unauthorized("Invalid or expired query link"))
     val row = store.readConsistent {
-      QueryEngine.query(store.table(), lp.spec)
+      QueryEngine.query(store.table(lp.spec), lp.spec)
         .filter(col("entry") === lp.recordEntry && col("ts") === lp.recordTs)
         .limit(1).collect()
     }.headOption.getOrElse(throw notFound(
@@ -1819,7 +1819,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   private def ioQuery(ex: HttpExchange, bucket: String): Unit = {
     val (spec0, ttlMs, continuous) = parseQueryEntry(new String(readBody(ex), UTF_8))
     val spec = spec0.copy(bucket = Some(bucket))
-    val id = registry.open(() => store.table(), spec,
+    val id = registry.open(() => store.table(spec), spec,
       continuous = continuous, ttlMs = ttlMs)
     rememberBatchLimits(id, spec)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))

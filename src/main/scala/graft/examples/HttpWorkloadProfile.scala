@@ -4,8 +4,7 @@ import graft.{Bench, GraftSession}
 
 /** Bench's w_http_concurrent entry in isolation, with a Spark listener
   * counting jobs and their wall time — localizes where the serving
-  * entry's seconds go (args: [reps]). Run with GRAFT_PATCH_TIMING=true
-  * for the store-internal phase breakdown too. */
+  * entry's seconds go (args: [reps]). */
 object HttpWorkloadProfile {
   def main(args: Array[String]): Unit = {
     val reps = if (args.nonEmpty) args(0).toInt else 3

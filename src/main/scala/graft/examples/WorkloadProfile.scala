@@ -6,9 +6,9 @@ import graft.engine.{BucketStore, QueryEngine, QuerySpec}
 import org.apache.spark.sql.functions._
 
 /** Bench's w_* workload sequence in isolation, with per-phase wall
-  * timings — run with GRAFT_PATCH_TIMING=true to get the store's
-  * internal phase breakdown on stderr (args: [sfDir] [reps]). The
-  * optimization-round profiling loop for the serving/store family. */
+  * timings (args: [sfDir] [reps]). The profiling loop for the
+  * serving/store family; `graftbench/run.py --trace 1` splits the
+  * store's phases per op. */
 object WorkloadProfile {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else

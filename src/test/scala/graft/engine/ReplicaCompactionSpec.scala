@@ -415,4 +415,62 @@ class ReplicaCompactionSpec extends AnyFunSuite with SparkTestBase {
       s"a $$system flush must probe only its own entries, got $listings")
     store.close()
   }
+
+  test("/list, /info and bucket info stay 200 while compaction swaps " +
+      "overcrowded partitions under them") {
+    import java.net.URI
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    val root = Files.createTempDirectory("graft-list-race").toString
+    val store = new BucketStore(spark, root)
+    val api = new HttpApi(store, apiToken = "root")
+    val port = api.start()
+    val client = HttpClient.newHttpClient()
+    def get(path: String) = client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$port/api/v1$path"))
+      .header("Authorization", "Bearer root").GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    // 8 entries x 3 days, one file per record: every partition is
+    // overcrowded for maxFilesPerPartition = 2. A writer keeps adding
+    // such files (each write bumps the data version, so the cached
+    // figures are recomputed) while compaction swaps partition dirs.
+    val day = 86400000000L
+    val next = new java.util.concurrent.atomic.AtomicLong(0L)
+    def fragment(): Unit = {
+      import scala.jdk.CollectionConverters._
+      val base = next.getAndAdd(3L)
+      val rows = for (e <- 0 until 8; d <- 0 until 3; i <- 0 until 3) yield
+        org.apache.spark.sql.Row("b", s"e$e", d * day + base + i,
+          Map.empty[String, String], Map.empty[String, String], "",
+          graft.core.Records.State.Finished, s"p$i".getBytes("UTF-8"))
+      store.write(spark.createDataFrame(rows.asJava, graft.core.Records.schema),
+        maxRecordsPerFile = 1L)
+    }
+    fragment()
+    @volatile var done = false
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val replies = new java.util.concurrent.atomic.AtomicInteger(0)
+    def loop(body: => Unit) = {
+      val t = new Thread(() => while (!done) body)
+      t.start(); t
+    }
+    val threads = loop(fragment()) +: Seq("/list", "/list", "/info", "/b/b").map { path =>
+      loop {
+        val r = get(path)
+        replies.incrementAndGet()
+        if (r.statusCode() != 200) failures.add(s"$path ${r.statusCode()}: ${r.body()}")
+      }
+    }
+    var rounds = 0
+    val deadline = System.nanoTime() + 120L * 1000000000L
+    try while (rounds < 10 && System.nanoTime() < deadline)
+      if (store.compact(maxFilesPerPartition = 2) > 0) rounds += 1
+    finally {
+      done = true
+      threads.foreach(_.join())
+      api.stop(); store.close()
+    }
+    import scala.jdk.CollectionConverters._
+    assert(failures.isEmpty, failures.asScala.take(3).mkString("\n"))
+    assert(rounds == 10 && replies.get > 0, s"$rounds compactions, ${replies.get} replies")
+  }
 }

@@ -112,4 +112,45 @@ class WorkloadPlanSweepSpec extends AnyFunSuite with SparkTestBase
     }
     assert(keys == Seq("bucket", "entry", "dt"), s"write exchange keys: $keys")
   }
+
+  test("one-entry, one-day serving mutations stage their writes without an exchange") {
+    val storeDir =
+      java.nio.file.Files.createTempDirectory("graft-onepart").toString
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (find(qe.executedPlan) {
+              case DataWritingCommandExec(cmd: InsertIntoHadoopFsRelationCommand, _) =>
+                cmd.outputPath.toUri.getPath.startsWith(storeDir)
+              case _ => false
+            }.isDefined)
+          writes.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val store = new BucketStore(spark, storeDir)
+    try {
+      def recs(e: String, ts: Long*) =
+        ts.map(t => BucketStore.FoldRec(e, t, Map("k" -> "v"), "x", Array[Byte](1)))
+      // two entries: the exchange co-locates each partition in one task
+      store.writeFolded(Seq(BucketStore.FoldReq("b", recs("a", 1L, 2L) ++ recs("c", 1L))))
+      // one entry, one day: write, label patch, key remove
+      store.writeFolded(Seq(BucketStore.FoldReq("b", recs("a", 3L, 4L))))
+      store.updateLabelsMatched("b", Seq(("a", 3L, Map("k" -> "w"), Set.empty[String])))
+      store.removeRecords("b", Seq(("a", 1L)))
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (writes.size() < 4 && System.nanoTime() < deadline) Thread.sleep(200)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val exchanges = writes.asScala.toSeq.map(qe =>
+      collect(qe.executedPlan) { case e: ShuffleExchangeExec => e }.size)
+    assert(exchanges == Seq(1, 0, 0, 0), s"exchanges per staged write: $exchanges")
+    val rows = store.table().select("entry", "ts", "labels").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getMap[String, String](2).toMap)).toSet
+    assert(rows == Set(("a", 2L, Map("k" -> "v")), ("c", 1L, Map("k" -> "v")),
+      ("a", 3L, Map("k" -> "w")), ("a", 4L, Map("k" -> "v"))))
+    store.close()
+  }
 }
