@@ -225,7 +225,7 @@ object Bench {
         // so Spark's CacheManager dedups them into one entry — and an
         // unpersist() here would evict that shared entry, silently
         // de-staging every events query in later passes (measured: q_logic
-        // 0.45 → 2.2 s/run, PassDegradeProbe). Leave it cached: the entry
+        // 0.45 → 2.2 s/run, SCALE.md round 15). Leave it cached: the entry
         // IS the staging later passes want warm.
         val records = Records.fromEvents(
           spark.read.parquet(s"$sfDir/events.parquet")).cache()

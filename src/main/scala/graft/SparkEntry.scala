@@ -42,7 +42,7 @@ object SparkEntry {
     // self-heal: an unpersist of a PLAN-EQUAL frame elsewhere (Spark's
     // CacheManager dedups by plan) evicts this entry out from under the
     // memo — without re-staging, every later events query silently pays
-    // the full ingest per run (measured 0.45 → 2.2 s, PassDegradeProbe)
+    // the full ingest per run (measured 0.45 → 2.2 s, SCALE.md round 15)
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count(): Unit

@@ -167,8 +167,8 @@ object Auth {
   }
 
   /** token_repository/repo.rs — in-memory (the storage backend would be a
-    * `$system` entry at scale; see Lifecycle.recordUsageEvent). `nowMs` is
-    * injectable for deterministic tests.
+    * `$system` entry at scale, written through [[SystemLog]] like every
+    * other `$system` row). `nowMs` is injectable for deterministic tests.
     *
     * Thread-safe: the serving layer runs on a thread pool and EVERY
     * authenticated request mutates the repo (validateToken stamps

@@ -173,34 +173,23 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   private val lastUsageFlushMs =
     new java.util.concurrent.atomic.AtomicLong(System.currentTimeMillis())
 
-  /** Telemetry must never break serving: all flush errors are swallowed
-    * (usage.rs:111-112). Graft-visible so specs and probes can force a
-    * flush instead of waiting out the interval. */
-  private[graft] def flushUsageNow(): Unit = try {
+  /** The periodic tick's and shutdown's telemetry drain: usage and the
+    * buffered audit rows land in ONE `$system` write — one store
+    * mutation per tick instead of one per family (each mutation is a
+    * full Spark job; the pair was the bulk of api.stop()'s wall and
+    * recurs every 60 s on a live server). The audit trail is enabled
+    * only with system events, so there is nothing to drain otherwise.
+    * Telemetry must never break serving: all flush errors are swallowed
+    * (usage.rs:111-112). Graft-visible so specs can force a flush
+    * instead of waiting out the interval. */
+  private[graft] def flushTelemetryNow(): Unit = try {
     if (provisionedResources.systemEvents.enabled) {
       val now = System.currentTimeMillis()
       val dur = (now - lastUsageFlushMs.getAndSet(now)) / 1000.0
-      graft.lifecycle.Lifecycle.flushUsage(store, systemLog, dur)
+      graft.lifecycle.Lifecycle.flushUsage(store, systemLog, dur,
+        extraEvents = auditLog.drainAsEvents())
     }
   } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** The periodic tick's and shutdown's combined telemetry drain: the
-    * audit buffer folds into the usage flush's single `$system` write —
-    * ONE store mutation per tick instead of one per family (each
-    * mutation is a full Spark job; the pair was the bulk of api.stop()'s
-    * wall and recurs every 60 s on a live server). With system events
-    * disabled the audit trail is disabled too (its enablement requires
-    * them), so the fallback separate flush is only defensive. */
-  private[graft] def flushTelemetryNow(): Unit = {
-    try {
-      if (provisionedResources.systemEvents.enabled) {
-        val now = System.currentTimeMillis()
-        val dur = (now - lastUsageFlushMs.getAndSet(now)) / 1000.0
-        graft.lifecycle.Lifecycle.flushUsage(store, systemLog, dur,
-          extraEvents = auditLog.drainAsEvents())
-      } else flushAuditNow()
-    } catch { case scala.util.control.NonFatal(_) => () }
-  }
 
   def start(): Int = {
     server.start()
@@ -239,9 +228,6 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     dispatchPool.shutdown()
   }
 
-  private def flushAuditNow(): Unit =
-    try auditLog.flush()
-    catch { case scala.util.control.NonFatal(_) => () }
   def boundPort: Int = server.getAddress.getPort
 
   // ------------------------------------------------------------- routing
@@ -2297,13 +2283,11 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     * RS_SYSTEM_EVENTS_QUOTA_SIZE (graft colocates the audit trail
     * there, so a separate RS_AUDIT_QUOTA_SIZE knob would double-govern
     * one bucket). */
-  private[engine] val auditLog = new AuditLog(store,
-    provisionedResources.systemEvents.instance,
+  private[engine] val auditLog = new AuditLog(systemLog,
     enabled = provisionedResources.systemEvents.enabled &&
       env.get("RS_AUDIT_ENABLED")
         .map(v => v.equalsIgnoreCase("true") || v == "1")
-        .getOrElse(apiToken.nonEmpty),
-    forwarder = eventForwarder)
+        .getOrElse(apiToken.nonEmpty))
 
   provisionedResources.warnings.foreach { w =>
     System.err.println(s"[provision] $w")

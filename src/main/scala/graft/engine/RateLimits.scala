@@ -183,9 +183,9 @@ final class RateLimits(val config: RateLimits.Config,
       // the reference prunes on every consume (limits.rs:260-268), but
       // that walk is O(active scopes) under the map lock, and measured
       // at 10k client-IP scopes it serialized the JDK HttpServer
-      // dispatch pool to ~16k consumes/s (RateLimitLoadProbe, SCALE.md
-      // r18). Pruning is memory hygiene only — window turnover is
-      // per-counter below — so once a second keeps the map bounded by
+      // dispatch pool to ~16k consumes/s (SCALE.md round 18). Pruning
+      // is memory hygiene only — window turnover is per-counter
+      // below — so once a second keeps the map bounded by
       // the active-client set with O(1) consumes in between.
       if (map.lastPruneSecs != now) {
         pruneStaleScopes(map.counters, now, lim.windowSecs)

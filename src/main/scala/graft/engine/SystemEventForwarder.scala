@@ -53,10 +53,21 @@ final class SystemEventForwarder(
     * per-event POST's lone 409), and failover follows [[send]]'s policy
     * (connect error / 5xx → next base; 4xx is final — the primary
     * answered). Returns true only when the batch landed with ZERO
-    * per-record errors — the AND of the per-event results, as before. */
+    * per-record errors — the AND of the per-event results, as before.
+    *
+    * The io-v2 wire carries one header per record, and the primary's
+    * JDK HttpServer refuses a request with more than 200 headers
+    * (`sun.net.httpserver.maxReqHeaders`), so a flush ships as chunks of
+    * at most [[SystemEventForwarder.MaxBatchRecords]] records, each
+    * under the same failover policy. Every chunk is attempted even when
+    * an earlier one failed. */
   def sendBatch(
+      events: Seq[(String, Long, Map[String, String], Array[Byte])]): Boolean =
+    events.grouped(SystemEventForwarder.MaxBatchRecords)
+      .map(sendChunk).toList.forall(identity)
+
+  private def sendChunk(
       events: Seq[(String, Long, Map[String, String], Array[Byte])]): Boolean = {
-    if (events.isEmpty) return true
     if (events.size == 1) {
       val e = events.head
       return send(e._1, e._2, e._3, e._4)
@@ -154,6 +165,11 @@ final class SystemEventForwarder(
 }
 
 object SystemEventForwarder {
+  /** Records per forwarded io-v2 request: one header each, well under
+    * the JDK HttpServer's 200-header cap with room for the batch's own
+    * entries/start-ts/labels headers and the client's standard ones. */
+  val MaxBatchRecords: Int = 100
+
   /** `RS_PRIMARY_URL` / `RS_SECONDARY_URL` +
     * `RS_SYSTEM_EVENTS_REMOTE_TIMEOUT` (seconds). None when neither URL
     * is configured — the caller keeps its local sink then. The

@@ -16,6 +16,10 @@ import org.apache.spark.sql.Row
   * `unknown` (path.rs entry_path). Writes use Conflict.Skip so a
   * same-microsecond duplicate never turns logging into a failure —
   * logging must not take the server down.
+  *
+  * This is the ONE `$system` writer (syslog.rs): log capture, usage,
+  * audit ([[AuditLog]] only buffers), replication and lifecycle rows all
+  * go through the same private write and are stamped by the same clock.
   */
 final class SystemLog(store: BucketStore, instance: String,
     persistLevel: Option[String],
@@ -46,40 +50,10 @@ final class SystemLog(store: BucketStore, instance: String,
     val lvl = level.trim.toUpperCase
     val persist = persistLevel.exists(p =>
       Rank.getOrElse(lvl, Int.MaxValue) <= Rank.getOrElse(p, 0))
-    if (persist) {
-      val ts = lastUs.updateAndGet(prev => math.max(prev + 1, nowUs))
-      import scala.jdk.CollectionConverters._
-      val payload =
-        s"""{"event_type":"log_message","level":${jstr(lvl)},""" +
-          s""""target":${jstr(target)},"message":${jstr(message)}}"""
-      val row = Row("$system", s"logs/$inst/messages", ts,
-        Map("status" -> "200", "level" -> lvl),
-        Map.empty[String, String], "application/json",
-        graft.core.Records.State.Finished, payload.getBytes("UTF-8"))
-      // writeWithSettings so $system's provisioned FIFO quota and the
-      // free-disk preflight apply to log records like any other write.
-      // GUARDED: telemetry must never take the serving path down — a
-      // full disk (507 preflight) would otherwise abort server startup
-      // (the ctor logs provisioning warnings) or turn an already-
-      // completed operation into an error response.
-      try {
-        // touchedEntries declared: an undeclared write marks the WHOLE
-        // store dirty, so on a live server every 60 s usage flush and
-        // every captured log line would re-arm the full-walk compaction
-        // probe — defeating the r19 incremental-candidate optimization
-        // for exactly the steady-state ticks it exists for (ADVICE r19)
-        store.writeWithSettings("$system", store.spark.createDataFrame(
-          Seq(row).asJava, graft.core.Records.schema),
-          BucketStore.Conflict.Skip,
-          incomingBytes = payload.getBytes("UTF-8").length.toLong,
-          touchedEntries = Some(Seq(("$system", s"logs/$inst/messages"))),
-          knownTsBounds = Some((ts, ts)))
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[system-log] dropped log write: $e")
-        return false
-      }
-    }
-    persist
+    persist && write(Seq(Event("logs", "messages", 200,
+      s"""{"event_type":"log_message","level":${jstr(lvl)},""" +
+        s""""target":${jstr(target)},"message":${jstr(message)}}""",
+      nowUs, extraLabels = Map("level" -> lvl))))
   }
 
   /** Generic `$system` diagnostics event at
@@ -104,58 +78,55 @@ final class SystemLog(store: BucketStore, instance: String,
     * order fixes the ts order: each event takes the next strictly-
     * increasing microsecond, so `usage/total` emitted first still sorts
     * before the per-bucket events it summarizes. */
-  def events(items: Seq[Event]): Boolean = {
-    if (!eventsEnabled || items.isEmpty) return false
-    forwarder.foreach { fwd =>
-      // replica: the whole flush forwards to the primary as ONE
-      // multi-entry io-v2 batch (r20, replacing r19's bounded-concurrent
-      // per-event POSTs): the flusher holds every event of a flush in
-      // hand, so a many-bucket usage flush costs one primary mutation
-      // instead of ~N (r19 pricing: ~21 drains / 25 events on loopback,
-      // 0.29-0.40 s/event — the per-event POSTs outran the coalescer).
-      // Timestamps are assigned serially BEFORE encoding, so the
-      // strictly-increasing clock and event ordering are unchanged; a
-      // single event keeps the reference's per-event POST wire shape;
-      // per-record conflicts come back as the batch's error headers and
-      // report false exactly like the per-event 409 did.
-      val recs = items.map { e =>
-        val ts = lastUs.updateAndGet(prev => math.max(prev + 1, e.nowUs))
-        (s"${e.entryPrefix}/$inst/${e.name}", ts,
-          Map("status" -> e.status.toString) ++ e.extraLabels,
-          e.payloadJson.getBytes("UTF-8"))
-      }
-      return fwd.sendBatch(recs)
-    }
-    import scala.jdk.CollectionConverters._
-    val rows = items.map { e =>
+  def events(items: Seq[Event]): Boolean =
+    eventsEnabled && items.nonEmpty && write(items)
+
+  /** The one `$system` write behind [[log]] and [[events]]: stamps each
+    * event from the shared clock in sequence order, then either forwards
+    * the burst to the primary (replica, see [[SystemEventForwarder]]) or
+    * lands it as one local store write. Never throws — telemetry must
+    * not take the serving path down. */
+  private def write(items: Seq[Event]): Boolean = {
+    val recs = items.map { e =>
       val ts = lastUs.updateAndGet(prev => math.max(prev + 1, e.nowUs))
-      Row("$system", s"${e.entryPrefix}/$inst/${e.name}", ts,
+      (s"${e.entryPrefix}/$inst/${e.name}", ts,
         Map("status" -> e.status.toString) ++ e.extraLabels,
-        Map.empty[String, String], "application/json",
-        graft.core.Records.State.Finished,
         e.payloadJson.getBytes("UTF-8"))
     }
-    // same no-throw guard as log(); byte count, not char count — CJK
-    // payloads are 3 bytes/char and the quota/preflight admission must
-    // see the real size
-    try {
-      // touchedEntries declared — see log()'s guard: the batched usage
-      // flush is THE steady-state write on a live server, and leaving it
-      // undeclared re-armed the full-walk probe every tick (ADVICE r19)
-      store.writeWithSettings("$system", store.spark.createDataFrame(
-        rows.asJava, graft.core.Records.schema),
-        BucketStore.Conflict.Skip,
-        incomingBytes = items.iterator
-          .map(_.payloadJson.getBytes("UTF-8").length.toLong).sum,
-        touchedEntries = Some(items.iterator
-          .map(e => ("$system", s"${e.entryPrefix}/$inst/${e.name}"))
-          .toSeq.distinct),
-        // ts are assigned serially above — min is the first, max the last
-        knownTsBounds = Some((rows.head.getLong(2), rows.last.getLong(2))))
-      true
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[system-log] dropped ${items.size}-event write: $e")
-      false
+    forwarder match {
+      case Some(fwd) => fwd.sendBatch(recs)
+      case None =>
+        import scala.jdk.CollectionConverters._
+        val rows = recs.map { case (entry, ts, labels, payload) =>
+          Row("$system", entry, ts, labels, Map.empty[String, String],
+            "application/json", graft.core.Records.State.Finished, payload)
+        }
+        // writeWithSettings so $system's provisioned FIFO quota and the
+        // free-disk preflight apply like any other write. GUARDED: a full
+        // disk (507 preflight) would otherwise abort server startup (the
+        // ctor logs provisioning warnings) or turn an already-completed
+        // operation into an error response.
+        try {
+          store.writeWithSettings("$system", store.spark.createDataFrame(
+            rows.asJava, graft.core.Records.schema),
+            BucketStore.Conflict.Skip,
+            // byte count, not char count — CJK payloads are 3 bytes/char
+            // and the quota/preflight admission must see the real size
+            incomingBytes = recs.iterator.map(_._4.length.toLong).sum,
+            // touchedEntries declared: an undeclared write marks the
+            // WHOLE store dirty, so every 60 s usage flush and every
+            // captured log line would re-arm the full-walk compaction
+            // probe (ADVICE r19)
+            touchedEntries = Some(recs.map(r => ("$system", r._1)).distinct),
+            // ts are assigned serially above — min is the first, max the
+            // last
+            knownTsBounds = Some((recs.head._2, recs.last._2)))
+          true
+        } catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(
+            s"[system-log] dropped ${items.size}-event write: $e")
+          false
+        }
     }
   }
 }

@@ -2,7 +2,6 @@ package graft.lifecycle
 
 import graft.engine.{BucketStore, QueryEngine, QuerySpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Row}
 
 /** Lifecycle policies (SURVEY §2.6; lifecycle/lifecycle_task.rs:25-90):
   * periodic batch jobs applying `delete` or `compress` to records older
@@ -123,8 +122,10 @@ object Lifecycle {
         * API layer's audit drain rides the usage flush's mutation — one
         * store job per telemetry tick, not one per family). Appended
         * after the usage events, so `usage/total` keeps the earliest
-        * ts of the flush. */
-      extraEvents: Seq[graft.engine.SystemLog.Event] = Nil): Unit = {
+        * ts of the flush. By-name: evaluated only once the snapshot has
+        * succeeded, so a snapshot that throws leaves a draining source
+        * (the audit buffer) intact for the next tick. */
+      extraEvents: => Seq[graft.engine.SystemLog.Event] = Nil): Unit = {
     val drained = store.usage.drain()
     // base table, not table(): per-bucket record/entry COUNTS cannot be
     // changed by label patches, so the snapshot job skips the overlay
@@ -185,19 +186,5 @@ object Lifecycle {
         yield graft.engine.SystemLog.Event("usage", name, 200,
           payloadJson(t, storageBytes, 1L, entries, blocks, records),
           nowUs, extraLabels = labels(t, records))) ++ extraEvents))
-  }
-
-  /** `$system` usage events (syslog.rs:52-155): the engine's own telemetry
-    * written through the same record model into a `$system` bucket. */
-  def recordUsageEvent(store: BucketStore, instance: String, bucket: String,
-      event: String, detail: Map[String, String], nowUs: Long): Unit = {
-    import scala.jdk.CollectionConverters._
-    val row = Row("$system", s"usage/$instance/$bucket", nowUs,
-      detail + ("event" -> event), Map.empty[String, String],
-      "application/json", graft.core.Records.State.Finished,
-      Array.empty[Byte])
-    val df = store.spark.createDataFrame(
-      Seq(row).asJava, graft.core.Records.schema)
-    store.write(df, BucketStore.Conflict.Skip)
   }
 }

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication for training-data pipelines, designed scale-first:
@@ -127,7 +126,8 @@ object Dedup {
     * rounded to 6 — the common tail of [[minhashPairs]] and the
     * oversized-group branch of [[groupedJaccardPairs]].
     *
-    * Two shape decisions, both from the r19 plan audit (plans/r19):
+    * Two shape decisions, both from the r19 plan audit
+    * (OPTIMIZATION_r19.md):
     *
     *  1. ONE pass over `hsTab`, not two. The candidates are exploded to
     *     (a, b, role-id) rows, joined to `hsTab` ONCE, and regrouped to
@@ -239,14 +239,6 @@ object Dedup {
       .select(col("doc_id"), col("n_paragraphs"), col("n_removed"),
         md5(array_join(transform(col("__kept"), _.getField("para")), "\n\n"))
           .as("kept_md5"))
-  }
-
-  /** Exact-dedup: keep the smallest id per distinct text. */
-  def exactDedup(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val w = Window.partitionBy(md5(col(textCol))).orderBy(col(idCol))
-    docs.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
   }
 
   // ----------------------------------------------------------- minhash

@@ -872,13 +872,13 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
       .orderBy(col("ts").desc).collect()
     def attempt(bkt: String): Boolean = {
       assert(req("POST", s"/b/$bkt").statusCode() == 200)
-      api.flushUsageNow() // fresh interval for the traffic below
+      api.flushTelemetryNow() // fresh interval for the traffic below
       assert(req("POST", s"/b/$bkt/e1?ts=100", "aaaa".getBytes).statusCode() == 200)
       assert(req("POST", s"/b/$bkt/e1?ts=200", "bbbb".getBytes).statusCode() == 200)
       assert(req("POST", s"/b/$bkt/e2?ts=300", "cc".getBytes).statusCode() == 200)
       assert(req("GET", s"/b/$bkt/e1?ts=100").statusCode() == 200)
       assert(req("GET", s"/b/$bkt/e2?ts=300").statusCode() == 200)
-      api.flushUsageNow()
+      api.flushTelemetryNow()
       val ev = perBucketEvents(bkt)
       assert(ev.nonEmpty, "per-bucket usage event must exist")
       // PR-1474 parity: distinct entries written/read + stored record
@@ -910,7 +910,7 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     assert(totalEv.nonEmpty, "instance-total usage event must exist")
     assert(totalEv.head.getAs[Long]("ts") < ev.head.getAs[Long]("ts"),
       "total event must precede per-bucket events")
-    api.flushUsageNow()
+    api.flushTelemetryNow()
     // the total's storage side includes $-prefixed system buckets
     // (engine.rs:238 walks ALL buckets for the total, filtering $ names
     // only per-bucket): by the second flush, $system itself holds the
@@ -934,7 +934,7 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
   test("usage read counters: batched, continuous re-arm and io-v2 drains count") {
     implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
     import org.apache.spark.sql.functions.col
-    api.flushUsageNow() // clean interval: earlier tests' traffic drains now
+    api.flushTelemetryNow() // clean interval: earlier tests' traffic drains now
     assert(req("POST", "/b/urc").statusCode() == 200)
     assert(req("POST", "/b/urc/e1?ts=100", "aaaa".getBytes).statusCode() == 200)
     assert(req("POST", "/b/urc/e1?ts=200", "bb".getBytes).statusCode() == 200)
@@ -954,7 +954,7 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     assert(req("GET", "/io/urc/read",
       headers = Seq(BatchWire.QueryIdHeader -> qid2.toString))
       .statusCode() == 200)
-    api.flushUsageNow()
+    api.flushTelemetryNow()
     val ev = store.table()
       .filter(col("bucket") === "$system" &&
         col("entry").startsWith("usage/") && col("entry").endsWith("/urc"))

@@ -126,6 +126,35 @@ class QueryEngineSpec extends AnyFunSuite with SparkTestBase {
     assert(out == Seq(2000L, 4000L, 6000L, 8000L, 10000L))
   }
 
+  test("stateful kernel: many entries split across tasks, one entry stays whole") {
+    // the kernel is sequential WITHIN an entry (the reference's cursor
+    // order) and parallel ACROSS entries: the same rows as one entry land
+    // in one task, as 1000 entries they spread over every partition
+    val n = 4000L
+    def maxTaskShare(entryOf: org.apache.spark.sql.Column): (Long, Long) = {
+      val records = spark.range(n).select(lit("b").as("bucket"),
+        entryOf.as("entry"), col("id").as("ts"),
+        typedLit(Map("k" -> "v")).as("labels"),
+        typedLit(Map.empty[String, String]).as("computed_labels"),
+        lit("").as("content_type"), lit(Records.State.Finished).as("state"),
+        lit(Array.emptyByteArray).as("payload"))
+      // $each_t has no window lowering: it always runs on the kernel
+      val perTask = QueryEngine.matching(records,
+          QuerySpec(when = Some("""{"$each_t": 0}""")))
+        .groupBy(spark_partition_id()).count().collect().map(_.getLong(1))
+      (perTask.max, perTask.sum)
+    }
+    val (oneMax, oneTotal) = maxTaskShare(lit("e0"))
+    assert(oneTotal > 0 && oneMax == oneTotal,
+      s"one entry must stay one task's slice: $oneMax of $oneTotal")
+    val (manyMax, manyTotal) =
+      maxTaskShare(concat(lit("e"), pmod(col("id"), lit(1000L))))
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(parts > 1)
+    assert(manyMax * parts <= manyTotal * 3 / 2,
+      s"1000 entries must split across $parts tasks: max $manyMax of $manyTotal")
+  }
+
   test("gate opens on rising edge for duration then requires reset (gate.rs)") {
     // input true at ts 0..3ms, false at 4ms, true 5..6ms; gate 2ms
     val inputs = Seq(0L -> "1", 1000L -> "1", 2000L -> "1", 3000L -> "1",

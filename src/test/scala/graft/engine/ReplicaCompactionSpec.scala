@@ -193,7 +193,7 @@ class ReplicaCompactionSpec extends AnyFunSuite with SparkTestBase {
       // generate replica-side telemetry, then flush — the usage events
       // must LAND IN THE PRIMARY'S TREE, shipped over its write API
       replica.usage.countRead("b", "e", 3L, 42L)
-      api.flushUsageNow()
+      api.flushTelemetryNow()
       val landed = primary.readConsistent {
         primary.table()
           .filter(col("bucket") === "$system" &&
@@ -222,6 +222,39 @@ class ReplicaCompactionSpec extends AnyFunSuite with SparkTestBase {
       // and log capture is node-local: skipped on a replica
       assert(!api.systemLog.log("ERROR", "t", "m"),
         "replica log capture must be skipped (syslog.rs:332)")
+    } finally { api.stop(); primaryApi.stop(); primary.close() }
+  }
+
+  test("a replica flush past the primary's 200-header cap forwards every " +
+      "usage event (chunked io-v2 batches)") {
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("graft-fwd-cap").toString
+    val primary = new BucketStore(spark, root)
+    val primaryApi = new HttpApi(primary, apiToken = "shared")
+    val pPort = primaryApi.start()
+    val replica = new BucketStore(spark, root, readOnly = true)
+    val api = new HttpApi(replica, apiToken = "shared",
+      env = Map("RS_INSTANCE_ROLE" -> "REPLICA",
+        "RS_PRIMARY_URL" -> s"http://127.0.0.1:$pPort",
+        "RS_SYSTEM_EVENTS_REMOTE_TIMEOUT" -> "10"))
+    api.start()
+    try {
+      // usage/total + one event per bucket = 251 records; the io-v2 wire
+      // spends one header per record, and the JDK HttpServer refuses a
+      // request with more than 200 headers
+      val nBuckets = 250
+      for (b <- 0 until nBuckets)
+        replica.usage.countRead(f"cap$b%03d", "e", 3L, 1024L)
+      api.flushTelemetryNow()
+      val landed = primary.readConsistent {
+        primary.table()
+          .filter(col("bucket") === "$system" &&
+            col("entry").startsWith("usage/"))
+          .select("entry").collect().map(_.getString(0))
+      }
+      assert(landed.length == nBuckets + 1,
+        s"expected ${nBuckets + 1} forwarded usage events, found ${landed.length}")
+      assert(landed.count(_.endsWith("/total")) == 1)
     } finally { api.stop(); primaryApi.stop(); primary.close() }
   }
 

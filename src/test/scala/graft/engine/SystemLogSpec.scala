@@ -77,4 +77,36 @@ class SystemLogSpec extends AnyFunSuite with SparkTestBase {
     assert(jobs < n, s"flushUsage started $jobs jobs for $n buckets " +
       "(per-bucket writes would need >= one job each)")
   }
+
+  test("a usage snapshot that throws leaves the buffered audit rows for " +
+      "the next tick") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft-snapshot-fail")
+    val store = new BucketStore(spark, root.toString)
+    store.writeBatch("b", "e", Seq((1L, Map.empty[String, String],
+      "x".getBytes("UTF-8"))))
+    // an API token turns the audit trail on
+    val api = new HttpApi(store, apiToken = "root")
+    try {
+      api.auditLog.record(Some("root"), "GET", "/api/v1/info", 200, None,
+        0.01)
+      // zero the user bucket's data file: the snapshot's scan fails
+      val file = Files.walk(root).iterator().asScala.find { p =>
+        p.toString.contains("bucket=b") &&
+          p.getFileName.toString.endsWith(".parquet")
+      }.get
+      val good = Files.readAllBytes(file)
+      Files.write(file, new Array[Byte](good.length))
+      api.flushTelemetryNow() // swallowed: telemetry never breaks serving
+      Files.write(file, good)
+      api.flushTelemetryNow()
+      val audits = store.table()
+        .filter(col("bucket") === "$system" && col("entry").startsWith("audit/"))
+        .select("payload").collect()
+        .map(r => new String(r.getAs[Array[Byte]](0), "UTF-8"))
+      assert(audits.length == 1 &&
+        audits.head.contains("\"path\":\"/api/v1/info\""),
+        s"the failed tick must not drop the audit buffer: ${audits.toSeq}")
+    } finally { api.stop(); store.close() }
+  }
 }

@@ -404,6 +404,32 @@ class TimeSeriesSpec extends AnyFunSuite with SparkTestBase {
       s"movingAggregate naive branch must not chunk: $mN")
   }
 
+  test("chunked windows: the per-task slice stays below the per-type series") {
+    // one event type whose series spans 100 chunks: once chunking
+    // engages each task holds a few (type, chunk) slices, never the
+    // whole series; the naive branch is the control that does
+    val n = 4000
+    val df = ev((0 until n).map(i => (i.toLong, i * 10L, 7L, "a", 1.0)): _*)
+    def maxSlice(out: DataFrame): Long = out
+      .groupBy(spark_partition_id()).count().agg(max("count"))
+      .first().getLong(0)
+    // the hazard is a partition too big to coalesce; at test scale AQE
+    // would merge the tiny shuffle into one partition and hide the split
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val mov = maxSlice(TimeSeries.movingAggregate(df, 100L,
+        naiveMaxRows = 0))
+      assert(mov * 2 < n, s"movingAggregate slice $mov of a $n-row series")
+      val der = maxSlice(TimeSeries.derivative(df, chunkUs = 400L,
+        naiveMaxRows = 0))
+      assert(der * 2 < n, s"derivative slice $der of a $n-row series")
+      assert(maxSlice(TimeSeries.derivative(df, chunkUs = 400L)) == n - 1,
+        "control: the naive per-type lag holds the whole series in one task")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("movingAggregate: null values count into win_n but not the sum, " +
       "both branches") {
     val df = Seq(

@@ -338,9 +338,5 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       nowUs = 6 * day)
     assert(comp.matched == 2 && comp.applied)
     assert(store.table().count() == 5) // rewrite preserves rows
-    // usage event lands in the $system bucket
-    Lifecycle.recordUsageEvent(store, "inst", "b", "lifecycle_run",
-      Map("deleted" -> "1"), nowUs = 6 * day)
-    assert(store.table().filter(col("bucket") === "$system").count() == 1)
   }
 }
