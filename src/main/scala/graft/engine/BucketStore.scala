@@ -1706,10 +1706,41 @@ final class BucketStore(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Entry catalog (names only; from partition listing, no data scan). */
+  /** Entry catalog: record count and oldest/latest ts per (bucket,
+    * entry) from ONE aggregation over the base tree (label patches
+    * cannot move them, so the overlay join is skipped). It is the one
+    * source of `/info`, `/list`, bucket info, the usage snapshot and
+    * [[entries]]. Cached per [[dataVersion]] with the size figures' rule:
+    * a build that overlapped a mutation serves its caller but is not
+    * installed, and a build that throws installs nothing. The driver
+    * holds one small row per entry — the cached file index of
+    * [[baseTable]] already holds every bucket/entry/dt path there. */
+  private val catalogCache = new java.util.concurrent.atomic.AtomicReference[
+    (Long, Map[String, BucketStore.BucketEntries])]()
+  /** Build count — observable by specs pinning one build per version. */
+  private[graft] val catalogBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  def entryCatalog(): Map[String, BucketStore.BucketEntries] = {
+    val v0 = dataVersion
+    val hit = catalogCache.get
+    if (hit != null && hit._1 == v0) return hit._2
+    catalogBuilds.incrementAndGet()
+    // the WHOLE frame is built inside the block: a retry after a raced
+    // swap re-lists the settled tree, not a plan pinned to renamed-away
+    // files
+    val rows = readConsistent(baseTableOrEmpty().groupBy("bucket", "entry")
+      .agg(count(lit(1)), min("ts"), max("ts")).collect())
+    val catalog = rows.groupBy(_.getString(0)).map { case (bucket, rs) =>
+      bucket -> BucketStore.BucketEntries(rs.map(r => r.getString(1) ->
+        BucketStore.EntryRecords(r.getLong(2), r.getLong(3), r.getLong(4))).toMap)
+    }
+    if (dataVersion == v0) catalogCache.set((v0, catalog))
+    catalog
+  }
+
+  /** Entry names of a bucket, `$meta` entries included. */
   def entries(bucket: String): Seq[String] =
-    baseTable().filter(col("bucket") === bucket)
-      .select("entry").distinct().collect().map(_.getString(0)).toSeq.sorted
+    entryCatalog().get(bucket).toSeq.flatMap(_.all.keys).sorted
 
   /** Rename an entry (storage/bucket/rename_entry.rs): partition rewrite. */
   def renameEntry(bucket: String, from: String, to: String): Unit = mutating {
@@ -2283,6 +2314,31 @@ object BucketStore {
     * and inclusive ts bounds — the resume bookkeeping a 100-TB consumer
     * keys on (shard ids alone shift with sampled range boundaries). */
   final case class ShardInfo(shard: Long, rows: Long, minTs: Long, maxTs: Long)
+
+  /** Record count and oldest/latest ts of one stored entry. */
+  final case class EntryRecords(records: Long, oldest: Long, latest: Long)
+
+  /** One bucket's slice of the entry catalog, read with the reference's
+    * entry rules: `$meta` system entries are invisible
+    * (storage/entry/system.rs:163-165), their parents — created by the
+    * parent_prefixes walk — surface as EMPTY entries, and history spans
+    * visible records only, so a bucket whose records are all metadata
+    * reports 0/0 (PR-1534). */
+  final case class BucketEntries(all: Map[String, EntryRecords]) {
+    /** Entries holding visible records, by name. */
+    lazy val visible: Seq[(String, EntryRecords)] =
+      all.toSeq.filterNot(e => EntryPattern.isSystemMetaEntry(e._1)).sortBy(_._1)
+    /** Parents of `$meta` entries that hold no visible records. */
+    lazy val emptyParents: Seq[String] = {
+      val names = visible.map(_._1).toSet
+      all.keys.flatMap(EntryPattern.metaEntryParent).toSeq.distinct
+        .filterNot(names).sorted
+    }
+    def entryCount: Int = visible.length + emptyParents.length
+    def oldest: Option[Long] = visible.map(_._2.oldest).minOption
+    def latest: Option[Long] = visible.map(_._2.latest).maxOption
+  }
+  object BucketEntries { val Empty: BucketEntries = BucketEntries(Map.empty) }
 
   /** One record of a spooled batch body: its payload is
     * `staged[offset, offset + len)`. */

@@ -619,42 +619,20 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
 
   private val startedAtMs = System.currentTimeMillis()
 
-  /** Row predicate for entries visible in bucket/server history —
-    * `$meta` system entries are invisible (storage/entry/system.rs:
-    * 163-165), so a store whose records are all metadata reports a
-    * normalized 0/0 history (PR-1534). */
-  private val visibleEntry =
-    col("entry") =!= EntryPattern.MetaSegment &&
-      !col("entry").endsWith("/" + EntryPattern.MetaSegment)
-
   private def info(ex: HttpExchange): Unit = {
-    // DISTRIBUTIVE, the /list pattern: the driver receives one small row
-    // per bucket (partial-aggregated min/max), never a collect_set array
-    // inside a single row/aggregation buffer. Bucket cardinality is
-    // in-memory-sized by the reference's own contract (engine.rs holds
-    // the bucket map in server memory; createdBuckets below is the same
-    // set, driver-side already), so folding per-bucket rows here costs
-    // what the bucket map already costs.
-    val rows = store.readConsistent(
-      store.baseTableOrEmpty().groupBy("bucket")
-        .agg(min(when(visibleEntry, col("ts"))).as("oldest"),
-          max(when(visibleEntry, col("ts"))).as("latest"))
-        .collect())
+    val catalog = store.entryCatalog()
     // created-but-empty buckets exist too (engine.rs keeps the bucket
     // map, not the record table)
-    val bucketCount =
-      (rows.map(_.getString(0)).toSet ++ createdBuckets.asScala).size
-    val oldest = rows.collect { case r if !r.isNullAt(1) => r.getLong(1) }
-    val latest = rows.collect { case r if !r.isNullAt(2) => r.getLong(2) }
+    val bucketCount = (catalog.keySet ++ createdBuckets.asScala).size
     json(ex, 200, JObject(
       "version" -> JString(s"${HttpApi.ServerVersion}-spark"),
       "bucket_count" -> JInt(bucketCount),
       "usage" -> JInt(BigInt(storeBytes)),
       "uptime" -> JLong((System.currentTimeMillis() - startedAtMs) / 1000L),
-      "oldest_record" -> JInt(
-        if (oldest.isEmpty) 0 else BigInt(oldest.min)),
-      "latest_record" -> JInt(
-        if (latest.isEmpty) 0 else BigInt(latest.max)),
+      "oldest_record" -> JInt(BigInt(
+        catalog.values.flatMap(_.oldest).minOption.getOrElse(0L))),
+      "latest_record" -> JInt(BigInt(
+        catalog.values.flatMap(_.latest).maxOption.getOrElse(0L))),
       // server_api.rs:55-58: instance-default bucket settings; license
       // null = OSS terms
       "defaults" -> JObject("bucket" ->
@@ -666,99 +644,17 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   // file count between mutations (was a full getContentSummary per call)
   private def storeBytes: Long = store.storeSizeBytes
 
-  /** Per-bucket /list stats (entry_count, oldest, latest) cached against
-    * the store data version: the aggregation re-reads the store, and a
-    * fresh read pays PARTITION DISCOVERY over every entry dir — measured
-    * ~30 s per read at 10k entries (SCALE.md r14). Two fixes here: both
-    * aggregations share ONE DataFrame (one discovery per recompute, not
-    * two), and the collected rows are served from this cache between
-    * mutations (same contract + raced-mutation guard as
-    * BucketStore.sizeCache). */
-  private val listStatsCache = new java.util.concurrent.atomic.AtomicReference[
-    (Long, Array[org.apache.spark.sql.Row])]()
-  /** Recompute count — observable by specs pinning cache behavior. */
-  private[engine] val listAggs = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def listStats(): Array[org.apache.spark.sql.Row] = {
-    val v0 = store.dataVersion
-    val hit = listStatsCache.get()
-    if (hit != null && hit._1 == v0) return hit._2
-    listAggs.incrementAndGet()
-    // entry_count counts visible entries plus the (possibly empty)
-    // parents of `$meta` entries — the reference's parent_prefixes walk
-    // creates the parent entry alongside `<entry>/$meta`; history spans
-    // visible records only and normalizes to 0/0 for meta-only and
-    // empty buckets (PR-1534).
-    //
-    // The counting stays DISTRIBUTED: the driver receives one row per
-    // bucket, never entry names — a collect_set(entry) here is bounded
-    // only by the store (a bucket with millions of entries would
-    // materialize them all on the serving thread). The parent
-    // computation mirrors EntryPattern.metaEntryParent column-side:
-    // strip the "/$meta" suffix, drop the bare-"$meta" root, anti-join
-    // away parents that already exist as visible entries.
-    val metaSuffix = "/" + EntryPattern.MetaSegment
-    // swap-consistent like info(): an aggregation racing a partition
-    // swap could collect torn/errored rows — and if the mutation hadn't
-    // bumped dataVersion yet, the torn rows would be CACHED under v0 and
-    // served to every /list caller until the next mutation (ADVICE r14).
-    // The WHOLE frame is built inside the block: a retry must re-list
-    // the settled file tree, not re-collect a plan pinned to the
-    // renamed-away files.
-    val rows = store.readConsistent {
-      // ONE scan: everything below derives from the per-(bucket, entry)
-      // aggregation, PERSISTED for the duration of this recompute — the
-      // three consumers (visible set, meta parents, ts bounds) each push a
-      // different filter into the scan otherwise, so without the persist
-      // the store is scanned three times (at 10k one-record entries the
-      // scan is 10k tiny file opens and dominates). The cached frame is
-      // O(distinct entries) rows — the same bound the distributed counting
-      // already guarantees the driver never exceeds per bucket.
-      val perEntry = store.baseTableOrEmpty() // keys only: the overlay can't change them
-        .groupBy("bucket", "entry")
-        .agg(min(when(visibleEntry, col("ts"))).as("emin"),
-          max(when(visibleEntry, col("ts"))).as("emax"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val vis = perEntry.filter(visibleEntry).select("bucket", "entry")
-      val parents = perEntry
-        .filter(col("entry").endsWith(metaSuffix) &&
-          length(col("entry")) > metaSuffix.length)
-        .select(col("bucket"), expr(
-          s"substring(entry, 1, length(entry) - ${metaSuffix.length})")
-          .as("entry"))
-        .distinct()
-        .join(vis, Seq("bucket", "entry"), "left_anti")
-      val counts = vis.unionByName(parents).groupBy("bucket")
-        .agg(count(lit(1)).as("entry_count"))
-      try perEntry.groupBy("bucket")
-        .agg(min(col("emin")).as("oldest"), // min-of-entry-minima == min
-          max(col("emax")).as("latest"))
-        .join(counts, Seq("bucket"), "left")
-        .collect()
-      finally perEntry.unpersist(false)
-    }
-    if (store.dataVersion == v0) listStatsCache.set((v0, rows))
-    rows
-  }
-
   private def list(ex: HttpExchange): Unit = {
-    val rows = listStats()
-    val byName = rows.map(r => r.getString(0) -> r).toMap
-    val names = (byName.keySet ++ createdBuckets.asScala).toSeq.sorted
+    val catalog = store.entryCatalog()
+    val names = (catalog.keySet ++ createdBuckets.asScala).toSeq.sorted
     json(ex, 200, JObject("buckets" -> JArray(names.map { name =>
-      val r = byName.get(name)
+      val b = catalog.getOrElse(name, BucketStore.BucketEntries.Empty)
       JObject(
         "name" -> JString(name),
         "size" -> JInt(BigInt(store.bucketSizeBytes(name))),
-        "entry_count" -> JInt(
-          r.filter(!_.isNullAt(3)).map(x => BigInt(x.getLong(3)))
-            .getOrElse(BigInt(0))),
-        "oldest_record" -> JInt(
-          r.filter(!_.isNullAt(1)).map(x => BigInt(x.getLong(1)))
-            .getOrElse(BigInt(0))),
-        "latest_record" -> JInt(
-          r.filter(!_.isNullAt(2)).map(x => BigInt(x.getLong(2)))
-            .getOrElse(BigInt(0))),
+        "entry_count" -> JInt(b.entryCount),
+        "oldest_record" -> JInt(BigInt(b.oldest.getOrElse(0L))),
+        "latest_record" -> JInt(BigInt(b.latest.getOrElse(0L))),
         "is_provisioned" -> JBool(provisionedBuckets.contains(name)),
         "status" -> JString("READY")) // msg/status.rs: sync deletes → READY
     }.toList)))
@@ -897,34 +793,16 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
 
   private def bucketInfo(ex: HttpExchange, bucket: String): Unit = {
     if (!bucketExists(bucket)) throw notFound(s"Bucket '$bucket' is not found")
-    val all = store.readConsistent(
-      store.baseTableOrEmpty().filter(col("bucket") === bucket)
-        .groupBy("entry").agg(count(lit(1)).as("n"),
-          min("ts").as("oldest"), max("ts").as("latest"))
-        .orderBy("entry").collect())
-    // $meta system entries are invisible here (storage/entry/system.rs:
-    // 163-165); their parents — auto-created by the reference's
-    // parent_prefixes walk — surface as EMPTY entries, and when no
-    // visible entry holds records the bucket history normalizes to 0/0
-    // (PR-1534, bucket.rs test_bucket_info_normalizes_history_when_only_
-    // meta_entries_have_records)
-    val (meta, entries) = all.partition(r =>
-      EntryPattern.isSystemMetaEntry(r.getString(0)))
-    val visibleNames = entries.map(_.getString(0)).toSet
-    val emptyParents = meta
-      .flatMap(r => EntryPattern.metaEntryParent(r.getString(0)))
-      .distinct.filterNot(visibleNames).sorted
+    val b = store.entryCatalog().getOrElse(bucket, BucketStore.BucketEntries.Empty)
     val stats = store.entryStats(bucket)
     json(ex, 200, JObject(
       "info" -> JObject(
         "name" -> JString(bucket),
         "size" -> JInt(BigInt(store.bucketSizeBytes(bucket))),
-        "entry_count" -> JInt(entries.length + emptyParents.length),
-        "record_count" -> JInt(BigInt(entries.map(_.getLong(1)).sum)),
-        "oldest_record" -> JInt(BigInt(
-          if (entries.isEmpty) 0L else entries.map(_.getLong(2)).min)),
-        "latest_record" -> JInt(BigInt(
-          if (entries.isEmpty) 0L else entries.map(_.getLong(3)).max)),
+        "entry_count" -> JInt(b.entryCount),
+        "record_count" -> JInt(BigInt(b.visible.map(_._2.records).sum)),
+        "oldest_record" -> JInt(BigInt(b.oldest.getOrElse(0L))),
+        "latest_record" -> JInt(BigInt(b.latest.getOrElse(0L))),
         "is_provisioned" -> JBool(provisionedBuckets.contains(bucket)),
         // deletes here are synchronous, so READY is the only observable
         // state (msg/status.rs:8-16; DELETING is the reference's async
@@ -932,16 +810,16 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
         "status" -> JString("READY")),
       "settings" -> settingsJson(store.bucketSettings(bucket)
         .getOrElse(defaultBucketSettings)),
-      "entries" -> JArray((entries.map { r =>
-        val (bytes, files) = stats.getOrElse(r.getString(0), (0L, 0L))
-        JObject("name" -> JString(r.getString(0)),
+      "entries" -> JArray((b.visible.map { case (name, e) =>
+        val (bytes, files) = stats.getOrElse(name, (0L, 0L))
+        JObject("name" -> JString(name),
           "size" -> JInt(BigInt(bytes)),
-          "record_count" -> JInt(BigInt(r.getLong(1))),
+          "record_count" -> JInt(BigInt(e.records)),
           "block_count" -> JInt(BigInt(files)), // parquet files ≙ blocks
-          "oldest_record" -> JInt(BigInt(r.getLong(2))),
-          "latest_record" -> JInt(BigInt(r.getLong(3))),
+          "oldest_record" -> JInt(BigInt(e.oldest)),
+          "latest_record" -> JInt(BigInt(e.latest)),
           "status" -> JString("READY")) // entry_api.rs:22-24
-      } ++ emptyParents.map { name =>
+      } ++ b.emptyParents.map { name =>
         val (bytes, files) = stats.getOrElse(name, (0L, 0L))
         JObject("name" -> JString(name),
           "size" -> JInt(BigInt(bytes)),

@@ -38,12 +38,17 @@ final class UsageCounters {
     t.readEntries += entry
   }
 
-  /** Drain and reset the interval counters. An entry is identified by
-    * (bucket, name), so the instance-total distinct-entry counts are the
-    * sum of the per-bucket counts (storage/usage.rs:134-136). */
-  def drain(): DrainedUsage = synchronized {
-    val out = perBucket
-    perBucket = collection.mutable.Map.empty
+  /** Buckets with traffic counted this interval; drains nothing. */
+  def buckets: Set[String] = synchronized { perBucket.keySet.toSet }
+
+  /** Drain and reset the interval counters of the buckets `only`
+    * selects (default: all); the others keep counting into the next
+    * drain. An entry is identified by (bucket, name), so the
+    * instance-total distinct-entry counts are the sum of the per-bucket
+    * counts (storage/usage.rs:134-136). */
+  def drain(only: String => Boolean = _ => true): DrainedUsage = synchronized {
+    val (out, kept) = perBucket.partition { case (b, _) => only(b) }
+    perBucket = kept
     DrainedUsage(out.iterator.map { case (b, t) =>
       b -> Drained(t.writeBytes, t.readBytes, t.recordsWritten,
         t.recordsRead, t.writtenEntries.size.toLong, t.readEntries.size.toLong)

@@ -111,7 +111,7 @@ object Lifecycle {
     * entries written/read) come from the drained
     * [[graft.engine.UsageCounters]]; the storage fields (record_count,
     * entry_count, block_count, storage_bytes) are a point-in-time
-    * snapshot — one aggregation job over the store plus a per-bucket
+    * snapshot — the store's entry catalog plus a per-bucket
     * file-listing, at flush cadence (default 60 s), never per record.
     * `written_entries`, `read_entries` and `record_count` are also
     * pinned as queryable record labels. */
@@ -126,16 +126,21 @@ object Lifecycle {
         * succeeded, so a snapshot that throws leaves a draining source
         * (the audit buffer) intact for the next tick. */
       extraEvents: => Seq[graft.engine.SystemLog.Event] = Nil): Unit = {
-    val drained = store.usage.drain()
-    // base table, not table(): per-bucket record/entry COUNTS cannot be
-    // changed by label patches, so the snapshot job skips the overlay
-    // broadcast join and rides the version-cached file index (r20 — this
-    // job runs every 60 s tick and on every shutdown flush)
-    val snapshot = store.baseTableOrEmpty().groupBy("bucket")
-      .agg(count(lit(1)).as("records"),
-        countDistinct("entry").as("entries"))
-      .collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // every snapshot read comes first and the drain last: a read that
+    // throws (a catalog build that fails installs nothing) leaves this
+    // interval's traffic counters for the next tick. The catalog reads
+    // the base table, not table(): label patches cannot change counts.
+    val catalog = store.entryCatalog()
+    val names = (catalog.keySet ++ store.usage.buckets).toSeq.sorted
+    val snapshot = names.map { name =>
+      val entries = catalog.getOrElse(name, BucketStore.BucketEntries.Empty).all
+      (name, entries.valuesIterator.map(_.records).sum, entries.size.toLong,
+        store.entryStats(name).valuesIterator.map(_._2).sum,
+        store.bucketSizeBytes(name))
+    }
+    // a bucket whose first traffic lands after `names` was taken keeps
+    // its counters for the next tick
+    val drained = store.usage.drain(names.toSet)
     def payloadJson(t: graft.engine.UsageCounters.Drained,
         storageBytes: Long, bucketCount: Long, entryCount: Long,
         blockCount: Long, recordCount: Long): String =
@@ -161,13 +166,9 @@ object Lifecycle {
     // fields come from drained.total, which already includes $-bucket
     // API traffic). It also emits the total event BEFORE the per-bucket
     // events, so the $system log's ts ordering matches.
-    val allNames = (drained.buckets.keySet ++ snapshot.keySet).toSeq.sorted
-    val perBucket = allNames.map { name =>
+    val perBucket = snapshot.map { case (name, records, entries, blocks, storageBytes) =>
       val t = drained.buckets.getOrElse(name,
         graft.engine.UsageCounters.Drained(0, 0, 0, 0, 0, 0))
-      val (records, entries) = snapshot.getOrElse(name, (0L, 0L))
-      val blocks = store.entryStats(name).valuesIterator.map(_._2).sum
-      val storageBytes = store.bucketSizeBytes(name)
       (name, t, records, entries, blocks, storageBytes)
     }
     val totalRecords = perBucket.map(_._3).sum
@@ -178,7 +179,7 @@ object Lifecycle {
     syslog.events(
       graft.engine.SystemLog.Event("usage", "total", 200,
         payloadJson(drained.total, perBucket.map(_._6).sum,
-          allNames.length.toLong, perBucket.map(_._4).sum,
+          names.length.toLong, perBucket.map(_._4).sum,
           perBucket.map(_._5).sum, totalRecords),
         nowUs, extraLabels = labels(drained.total, totalRecords)) +:
       ((for ((name, t, records, entries, blocks, storageBytes) <- perBucket

@@ -694,22 +694,26 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
       assert((big \ "oldest_record").extract[Long] == 0L)
       assert((big \ "latest_record").extract[Long] == 9999L)
       // repeat /list in a version-stable window must serve the cached
-      // aggregation — a fresh read pays partition discovery over all 10k
-      // entry dirs (~30 s), so the cache is what makes /list serveable
-      def listReq() = client.send(HttpRequest.newBuilder(
-          URI.create(s"http://127.0.0.1:${bigApi.boundPort}/api/v1/list"))
+      // catalog — a fresh read pays partition discovery over all 10k
+      // entry dirs (~30 s), so the cache is what makes /list serveable.
+      // /info and bucket info read the same catalog: no extra build.
+      def getReq(path: String) = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${bigApi.boundPort}/api/v1$path"))
           .header("Authorization", "Bearer root-token").GET().build(),
         HttpResponse.BodyHandlers.ofByteArray())
       val stable = (1 to 3).exists { _ =>
-        val (v0, a0) = (bigStore.dataVersion, bigApi.listAggs.get())
-        for (_ <- 1 to 3) assert(listReq().statusCode() == 200)
-        val (v1, a1) = (bigStore.dataVersion, bigApi.listAggs.get())
+        val (v0, a0) = (bigStore.dataVersion, bigStore.catalogBuilds.get())
+        for (_ <- 1 to 3) assert(getReq("/list").statusCode() == 200)
+        assert(getReq("/info").statusCode() == 200)
+        assert(getReq("/b/big").statusCode() == 200)
+        val (v1, a1) = (bigStore.dataVersion, bigStore.catalogBuilds.get())
         v0 == v1 && {
           // <= 1: the first call in the window may legitimately recompute
           // if a racing mutation voided the previous fill (same contract
-          // as the sizeWalks pin above); a broken cache would show 3
+          // as the sizeWalks pin above); a broken cache would show 5
           assert(a1 - a0 <= 1,
-            s"3 /list calls in a version-stable window re-aggregated ${a1 - a0}x")
+            s"/list x3, /info and GET /b/big in a version-stable window " +
+              s"built the catalog ${a1 - a0}x")
           true
         }
       }
@@ -822,6 +826,66 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     assert((b("mempty") \ "entry_count").extract[Long] == 0)
     assert((b("mempty") \ "oldest_record").extract[Long] == 0)
     assert((b("mempty") \ "latest_record").extract[Long] == 0)
+  }
+
+  test("/list, bucket info, /info and the usage event agree: one entry " +
+      "catalog") {
+    import org.apache.spark.sql.functions.col
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    val xStore = new BucketStore(spark,
+      Files.createTempDirectory("graft-http-catalog").toString)
+    val xApi = new HttpApi(xStore, apiToken = "root-token")
+    val xPort = xApi.start()
+    def xreq(method: String, path: String, body: Array[Byte] = Array.empty) =
+      client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:$xPort/api/v1$path"))
+        .header("Authorization", "Bearer root-token")
+        .method(method, HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+        HttpResponse.BodyHandlers.ofByteArray())
+    try {
+      for (b <- Seq("mixed", "metaonly", "empty"))
+        assert(xreq("POST", s"/b/$b").statusCode() == 200)
+      // visible entries a, b; `$meta` entries older and newer than every
+      // visible record; the meta-only parent p; the bare `$meta` root
+      for ((bucket, entry, ts) <- Seq(("mixed", "a", 10L), ("mixed", "a", 20L),
+          ("mixed", "b", 15L), ("mixed", "a%2F%24meta", 5L),
+          ("mixed", "p%2F%24meta", 100L), ("mixed", "%24meta", 1L),
+          ("metaonly", "q%2F%24meta", 7L)))
+        assert(xreq("POST", s"/b/$bucket/$entry?ts=$ts", "x".getBytes)
+          .statusCode() == 200)
+      val listed = (jsonOf(xreq("GET", "/list")) \ "buckets").children
+      def figures(j: org.json4s.JValue) = Seq("entry_count", "oldest_record",
+        "latest_record").map(f => (j \ f).extract[Long])
+      val fromList = Seq("mixed", "metaonly", "empty").map { b =>
+        b -> figures(listed.find(x => (x \ "name").extract[String] == b).get)
+      }.toMap
+      for (b <- fromList.keys)
+        assert(figures(jsonOf(xreq("GET", s"/b/$b")) \ "info") == fromList(b),
+          s"/list and GET /b/$b disagree")
+      assert(fromList("mixed") == Seq(3L, 10L, 20L)) // a, b + empty p
+      assert(fromList("metaonly") == Seq(1L, 0L, 0L))
+      assert(fromList("empty") == Seq(0L, 0L, 0L))
+      // /info folds the per-bucket history of every bucket that has one
+      val withHistory = listed.filter(x => (x \ "latest_record").extract[Long] > 0)
+      val info = jsonOf(xreq("GET", "/info"))
+      assert((info \ "oldest_record").extract[Long] ==
+        withHistory.map(x => (x \ "oldest_record").extract[Long]).min)
+      assert((info \ "latest_record").extract[Long] ==
+        withHistory.map(x => (x \ "latest_record").extract[Long]).max)
+      // the usage snapshot counts every stored entry and record of the
+      // catalog, `$meta` ones included (the 60 s timer may add an event
+      // of its own: the data did not change, so each carries the same)
+      val mixed = xStore.entryCatalog()("mixed").all
+      assert(mixed.size == 5 && mixed.values.map(_.records).sum == 6L)
+      xApi.flushTelemetryNow()
+      val payloads = xStore.table()
+        .filter(col("bucket") === "$system" &&
+          col("entry").startsWith("usage/") && col("entry").endsWith("/mixed"))
+        .collect().map(r => new String(r.getAs[Array[Byte]]("payload"), "UTF-8"))
+      assert(payloads.nonEmpty && payloads.forall(p =>
+        p.contains("\"record_count\":6") && p.contains("\"entry_count\":5")),
+        payloads.toSeq)
+    } finally { xApi.stop(); xStore.close() }
   }
 
   test("replication delete emits final diagnostics; removed fields 422") {

@@ -90,6 +90,7 @@ class SystemLogSpec extends AnyFunSuite with SparkTestBase {
     try {
       api.auditLog.record(Some("root"), "GET", "/api/v1/info", 200, None,
         0.01)
+      store.usage.countRead("b", "e", records = 7L, bytes = 7L)
       // zero the user bucket's data file: the snapshot's scan fails
       val file = Files.walk(root).iterator().asScala.find { p =>
         p.toString.contains("bucket=b") &&
@@ -107,6 +108,15 @@ class SystemLogSpec extends AnyFunSuite with SparkTestBase {
       assert(audits.length == 1 &&
         audits.head.contains("\"path\":\"/api/v1/info\""),
         s"the failed tick must not drop the audit buffer: ${audits.toSeq}")
+      // the failed tick wrote no usage event and drained no counter: the
+      // one event for `b` is the second tick's, carrying the reads
+      val usage = store.table()
+        .filter(col("bucket") === "$system" && col("entry").startsWith("usage/") &&
+          col("entry").endsWith("/b"))
+        .select("payload").collect()
+        .map(r => new String(r.getAs[Array[Byte]](0), "UTF-8"))
+      assert(usage.length == 1 && usage.head.contains("\"records_read\":7"),
+        s"the failed tick must not drop the traffic counters: ${usage.toSeq}")
     } finally { api.stop(); store.close() }
   }
 }
