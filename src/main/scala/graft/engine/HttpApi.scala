@@ -989,13 +989,12 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
       q: Map[String, String]): Unit = {
     val ts = q.getOrElse("ts",
       throw unprocessable("'ts' parameter is required")).toLong
-    recordAt(bucket, entry, q) // 404 if absent
     // empty header value removes the label (update_labels.rs:116)
     val (set, remove) = labelHeaders(ex).partition(_._2.nonEmpty)
-    store.updateLabels(
-      QuerySpec(start = Some(ts), stop = Some(ts + 1),
-        entries = Some(Seq(entry)), bucket = Some(bucket)),
-      set = set, remove = remove.keySet)
+    // one key through the batched PATCH's fold: the match set is the
+    // existence check, so no separate read job answers the 404
+    val matched = updateCoalescer.submit((bucket, Seq((entry, ts, set, remove.keySet))))
+    if (matched.isEmpty) throw notFound("No record found")
     json(ex, 200, JObject())
   }
 

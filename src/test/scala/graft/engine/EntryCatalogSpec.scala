@@ -1,0 +1,337 @@
+package graft.engine
+
+import graft.SparkTestBase
+import graft.lifecycle.Lifecycle
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.Files
+
+/** The entry catalog folded from Parquet footers, checked against the
+  * Spark aggregate it replaced (kept here as the oracle) after every step
+  * of seeded random mutation sequences, plus the Spark job counts the
+  * footer catalog buys on the serving write path. */
+class EntryCatalogSpec extends AnyFunSuite with SparkTestBase
+    with AdaptiveSparkPlanHelper {
+
+  private val Day = 86400000000L
+  private type Catalog = Map[(String, String), BucketStore.EntryRecords]
+
+  /** `groupBy(bucket, entry).agg(count, min(ts), max(ts))` over the base
+    * table: the catalog's definition. */
+  private def oracle(store: BucketStore): Catalog =
+    store.readConsistent(store.baseTableOrEmpty().groupBy("bucket", "entry")
+      .agg(count(lit(1)), min("ts"), max("ts")).collect())
+      .map(r => (r.getString(0), r.getString(1)) ->
+        BucketStore.EntryRecords(r.getLong(2), r.getLong(3), r.getLong(4)))
+      .toMap
+
+  private def folded(store: BucketStore): Catalog =
+    store.entryCatalog().toSeq.flatMap { case (b, es) =>
+      es.all.map { case (e, r) => (b, e) -> r }
+    }.toMap
+
+  private def recs(entry: String, tss: Long*): Seq[BucketStore.FoldRec] =
+    tss.map(ts => BucketStore.FoldRec(entry, ts, Map("k" -> s"v$ts"), "x",
+      s"p$ts".getBytes("UTF-8")))
+
+  private def keysOf(store: BucketStore, b: String, e: String): Seq[Long] =
+    store.baseTableOrEmpty()
+      .filter(col("bucket") === b && col("entry") === e)
+      .select("ts").collect().map(_.getLong(0)).sorted.toSeq
+
+  /** One seeded sequence: every step kind once, in a seeded order, then
+    * seeded extra steps; the catalog must equal the oracle after each. */
+  private def runSequence(seed: Long): Unit = {
+    val rng = new scala.util.Random(seed)
+    val root = Files.createTempDirectory("graft-catalog").toString
+    var store = new BucketStore(spark, root)
+    val buckets = Seq("a", "b", "c")
+    val entries = Seq("e0", "e1", "e2/$meta")
+    var log = Vector.empty[String]
+    def check(s: BucketStore, step: String): Unit = {
+      log :+= step
+      val want = oracle(s)
+      val got = folded(s)
+      assert(got == want, s"seed $seed after ${log.mkString(" > ")}:\n" +
+        s"catalog $got\noracle  $want")
+    }
+    /** An entry that holds records, if any. */
+    def stored(): Option[(String, String)] = {
+      val live = oracle(store).keys.toSeq.sorted
+      if (live.isEmpty) None else Some(live(rng.nextInt(live.size)))
+    }
+    def latestOf(b: String, e: String): Long =
+      oracle(store).get((b, e)).map(_.latest).getOrElse(-1L)
+    def append(b: String, e: String): Unit = {
+      val from = math.max(latestOf(b, e) + 1, 0L)
+      // 1–4 records, sometimes spilling into the next day
+      val tss = (0 until 1 + rng.nextInt(4)).map(i =>
+        from + i * (if (rng.nextInt(4) == 0) Day / 2 else 1L))
+      val res = store.writeFolded(Seq(BucketStore.FoldReq(b, recs(e, tss: _*))))
+      assert(res == Seq(Right(Set.empty)), s"append $b/$e $tss: $res")
+    }
+    def anyEntry(): (String, String) =
+      (buckets(rng.nextInt(buckets.size)), entries(rng.nextInt(entries.size)))
+    val steps: Seq[(String, () => Unit)] = Seq(
+      "append" -> (() => { val (b, e) = anyEntry(); append(b, e) }),
+      "belated" -> (() => stored() match {
+        case Some((b, e)) if latestOf(b, e) > 0 =>
+          // a free ts below the entry's latest record
+          val have = keysOf(store, b, e).toSet
+          Iterator.continually(rng.nextLong(latestOf(b, e))).take(64)
+            .find(t => !have(t)) match {
+            case Some(ts) =>
+              assert(store.writeFolded(Seq(BucketStore.FoldReq(b, recs(e, ts)))) ==
+                Seq(Right(Set.empty)), s"belated $b/$e $ts")
+            case None => append(b, e)
+          }
+        case _ => append("a", "e0")
+      }),
+      "resend" -> (() => stored() match {
+        case Some((b, e)) =>
+          // the entry's latest (ts == latest takes the admission scan)
+          // and one more stored key, beside a fresh append
+          val have = keysOf(store, b, e)
+          val again = Seq(have.last, have(rng.nextInt(have.size))).distinct
+          val fresh = have.last + 1
+          val res = store.writeFolded(Seq(
+            BucketStore.FoldReq(b, recs(e, (again :+ fresh): _*))))
+          assert(res == Seq(Right(again.map(t => (e, t)).toSet)),
+            s"re-sent $b/$e $again must be rejected: $res")
+        case None => append("b", "e1")
+      }),
+      "remove-ends" -> (() => stored() match {
+        case Some((b, e)) =>
+          val have = keysOf(store, b, e)
+          val ends = Seq(have.head, have.last).distinct.map(t => (e, t))
+          val res = store.removeFolded(Seq((b, ends)))
+          assert(res == Seq(Right(ends.map(_ -> true).toMap)), s"remove $b $ends")
+        case None => append("c", "e0")
+      }),
+      "remove-each-n" -> (() => stored() match {
+        case Some((b, e)) =>
+          store.removeQuery(QuerySpec(entries = Some(Seq(e)),
+            when = Some("""{"$each_n": 2}"""), bucket = Some(b))): Unit
+        case None => append("a", "e1")
+      }),
+      "patch+fold" -> (() => stored() match {
+        case Some((b, e)) =>
+          val have = keysOf(store, b, e)
+          store.updateLabelsBatch(b, Seq((e, have(rng.nextInt(have.size)),
+            Map("patched" -> seed.toString), Set("k")))): Unit
+          check(store, "patch")
+          store.foldLabelOverlay(): Unit
+        case None => append("a", "e0")
+      }),
+      "compact" -> (() => store.compact(maxFilesPerPartition = 1): Unit),
+      "compress" -> (() => stored() match {
+        case Some((b, _)) =>
+          Lifecycle.apply(store, Lifecycle.Policy(olderThanUs = 0L,
+            action = Lifecycle.Action.Compress("zstd", 3), bucket = Some(b)),
+            nowUs = 1000 * Day): Unit
+        case None => append("b", "e0")
+      }),
+      "fifo" -> (() => stored() match {
+        case Some((b, _)) =>
+          store.enforceFifoQuota(b, store.bucketSizeBytes(b) / 2): Unit
+        case None => append("c", "e1")
+      }),
+      "delete-entry" -> (() => stored() match {
+        case Some((b, e)) if !graft.core.EntryPattern.isSystemMetaEntry(e) =>
+          store.removeEntry(b, e)
+        case _ => append("a", "e1")
+      }),
+      "delete-bucket" -> (() => stored() match {
+        case Some((b, _)) => store.removeBucket(b)
+        case None => append("b", "e0")
+      }),
+      "rename-entry" -> (() => stored() match {
+        case Some((b, e)) if !graft.core.EntryPattern.isSystemMetaEntry(e) =>
+          val to = Iterator.from(0).map(i => s"r$i")
+            .find(n => !store.entries(b).contains(n)).get
+          store.renameEntry(b, e, to)
+        case _ => append("c", "e0")
+      }),
+      "rename-bucket" -> (() => {
+        val live = store.entryCatalog().keySet
+        val names = buckets ++ Seq("d", "e")
+        (live.toSeq.sorted.headOption, names.find(n => !live(n))) match {
+          case (Some(from), Some(to)) => store.renameBucket(from, to)
+          case _ => append("a", "e2/$meta")
+        }
+      }),
+      "reopen" -> (() => {
+        store.close()
+        store = new BucketStore(spark, root)
+      }),
+      "replica" -> (() => {
+        val replica = new BucketStore(spark, root, readOnly = true)
+        check(replica, "replica open")
+        val (b, e) = anyEntry()
+        append(b, e)
+        replica.refreshReplica()
+        check(replica, s"replica after refreshReplica (primary wrote $b/$e)")
+      }))
+    // a few entries before the first step, so removes hit real records
+    for (b <- buckets.take(2); e <- entries) append(b, e)
+    check(store, "preload")
+    val order = rng.shuffle(steps) ++ Seq.fill(8)(steps(rng.nextInt(steps.size)))
+    try for ((name, run) <- order) { run(); check(store, name) }
+    finally store.close()
+  }
+
+  test("footer catalog equals the Spark aggregate after every mutator " +
+      "(seeded sequences)") {
+    for (seed <- Seq(11L, 12L)) runSequence(seed)
+  }
+
+  /** Jobs of `f` on the calling thread: it runs under its own job group,
+    * and only that group's job starts count, so jobs of other threads on
+    * the shared session cannot leak in. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"catalog-spec-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try f finally sc.clearJobGroup()
+      drainBus()
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  /** Returns once every listener event posted so far is delivered: a
+    * marker job's start, posted after them, has reached a listener on
+    * the same (shared) queue. */
+  private def drainBus(): Unit = {
+    val sc = spark.sparkContext
+    val marker = s"drain-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          seen.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(marker, "bus drain")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A store holding b/e at ts 100, 200 and b/f at ts 100. */
+  private def withJobStore(f: BucketStore => Unit): Unit = {
+    val store = new BucketStore(spark,
+      Files.createTempDirectory("graft-catalog-jobs").toString)
+    try {
+      store.writeFolded(Seq(BucketStore.FoldReq("b", recs("e", 100L, 200L))))
+      store.writeFolded(Seq(BucketStore.FoldReq("b", recs("f", 100L))))
+      f(store)
+    } finally store.close()
+  }
+
+  test("an append past the entry's latest record runs 1 job: the write") {
+    withJobStore { store =>
+      val append = jobsOf {
+        assert(store.writeFolded(Seq(BucketStore.FoldReq("b", recs("e", 300L, 301L)))) ==
+          Seq(Right(Set.empty)))
+      }
+      assert(append == 1, s"an append past the latest record ran $append jobs")
+      // a new entry of a stored bucket is an append too
+      val fresh = jobsOf(store.writeFolded(Seq(BucketStore.FoldReq("b", recs("g", 1L)))))
+      assert(fresh == 1, s"a new entry's first write ran $fresh jobs")
+      // a spooled upload takes the same rule: its belated write runs one
+      // job more than its append, the admission scan
+      def spooled(ts: Long): Int = {
+        val staged = store.stageUploadPath()
+        val out = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .create(staged, true)
+        try out.write("abcd".getBytes("UTF-8")) finally out.close()
+        jobsOf(assert(store.writeStagedSlices("b", staged, Seq(
+          BucketStore.StagedSlice("e", ts, Map.empty, "x", 0L, 4L))).isEmpty))
+      }
+      val (spooledAppend, spooledBelated) = (spooled(1000L), spooled(999L))
+      assert(spooledBelated - spooledAppend == 1,
+        s"spooled append ran $spooledAppend jobs, belated $spooledBelated")
+    }
+  }
+
+  test("a belated write keeps its admission job, and a re-sent key is " +
+      "rejected by it") {
+    withJobStore { store =>
+      // below the latest record: the admission scan, then the write
+      val belated = jobsOf {
+        assert(store.writeFolded(Seq(BucketStore.FoldReq("b", recs("e", 150L)))) ==
+          Seq(Right(Set.empty)))
+      }
+      assert(belated == 2, s"a belated write ran $belated jobs (admission + write)")
+      // the entry's latest key again: the scan finds it, nothing is written
+      val resent = jobsOf {
+        assert(store.writeFolded(Seq(BucketStore.FoldReq("b", recs("e", 200L)))) ==
+          Seq(Right(Set(("e", 200L)))))
+      }
+      assert(resent == 1, s"a re-sent key ran $resent jobs (admission only)")
+    }
+  }
+
+  test("entryCatalog() after a write runs no job") {
+    withJobStore { store =>
+      store.writeFolded(Seq(BucketStore.FoldReq("b", recs("f", 500L))))
+      val builds = store.catalogBuilds.get()
+      val catalogJobs = jobsOf {
+        assert(store.entryCatalog()("b").all("f") == BucketStore.EntryRecords(2L, 100L, 500L))
+      }
+      assert(store.catalogBuilds.get() == builds + 1, "the write must invalidate the catalog")
+      assert(catalogJobs == 0, s"entryCatalog() after a write ran $catalogJobs jobs")
+    }
+  }
+
+  test("a $system flush past every declared entry's latest plans no join") {
+    val root = Files.createTempDirectory("graft-catalog-syslog").toString
+    val store = new BucketStore(spark, root)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (find(qe.executedPlan) {
+              case DataWritingCommandExec(cmd: InsertIntoHadoopFsRelationCommand, _) =>
+                cmd.outputPath.toUri.getPath == root
+              case _ => false
+            }.isDefined)
+          writes.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    try {
+      val syslog = new SystemLog(store, "srv", None)
+      def flush(i: Int) = assert(syslog.events(Seq(
+        SystemLog.Event("usage", "total", 200, s"""{"i":$i}"""),
+        SystemLog.Event("usage", "b", 200, s"""{"i":$i}"""))))
+      flush(0) // the `$system` bucket now holds both entries
+      drainBus()
+      spark.listenerManager.register(listener)
+      flush(1)
+      drainBus()
+      spark.listenerManager.unregister(listener)
+      assert(writes.size == 1, s"captured ${writes.size} flush writes")
+      val plan = writes.peek().analyzed
+      assert(plan.find(_.isInstanceOf[Join]).isEmpty,
+        s"a $$system flush must not plan the stored-key anti-join:\n$plan")
+      assert(store.table().filter(col("bucket") === "$system").count() == 4)
+    } finally { spark.listenerManager.unregister(listener); store.close() }
+  }
+}

@@ -684,6 +684,13 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
           .header("Authorization", "Bearer root-token").GET().build(),
         HttpResponse.BodyHandlers.ofByteArray())
       println(f"[probe] first /list: ${(System.nanoTime()-tL0)/1e9}%.1f s")
+      // its phases: the last catalog build's base-table listing (partition
+      // discovery over the entry dirs) and footer fold; the rest of the
+      // request is mostly the bucket size walk
+      val fold = bigStore.lastCatalogBuild
+      println(f"[probe] first /list catalog: listing ${fold.listNanos / 1e9}%.1f s, " +
+        f"footer fold ${fold.foldNanos / 1e9}%.1f s (${fold.files} files, " +
+        s"${fold.footersRead} footers read)")
       assert(r.statusCode() == 200)
       // the response must carry COUNTS, not 10k entry names
       assert(r.body().length < 4096,
