@@ -361,19 +361,33 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * figures). */
   private[graft] def baseTable(): DataFrame = {
     if (readOnly) return freshBaseTable()
-    val v0 = dataVersion
-    val e0 = rewriteEpoch
-    val hit = baseTableCache.get
-    if (hit != null && hit._1 == v0 && hit._2 == e0) return hit._3
-    val df = freshBaseTable()
-    baseTableBuilds.incrementAndGet()
-    // install only when nothing moved during the listing — a listing
-    // that overlapped a mutation may be partial and must not be keyed
-    // as current
-    if (dataVersion == v0 && rewriteEpoch == e0)
-      baseTableCache.set((v0, e0, df))
-    df
+    def cached(): DataFrame = {
+      val hit = baseTableCache.get
+      if (hit != null && hit._1 == dataVersion && hit._2 == rewriteEpoch) hit._3 else null
+    }
+    val hit = cached()
+    if (hit != null) return hit
+    // single flight: callers that miss together wait for one listing
+    // (the usage flusher, a `/list` and cursor opens all arrive right
+    // after a mutation). Nothing that holds this lock waits on a swap
+    // window, so a mutator calling in never waits on a reader that
+    // waits on it.
+    baseTableBuildLock.synchronized {
+      val raced = cached()
+      if (raced != null) return raced
+      val v0 = dataVersion
+      val e0 = rewriteEpoch
+      val df = freshBaseTable()
+      baseTableBuilds.incrementAndGet()
+      // install only when nothing moved during the listing — a listing
+      // that overlapped a mutation may be partial and must not be keyed
+      // as current
+      if (dataVersion == v0 && rewriteEpoch == e0)
+        baseTableCache.set((v0, e0, df))
+      df
+    }
   }
+  private val baseTableBuildLock = new Object
 
   private def freshBaseTable(): DataFrame =
     spark.read.schema(storedSchema).parquet(root)
@@ -1769,41 +1783,34 @@ final class BucketStore(val spark: SparkSession, val root: String,
   @volatile private[graft] var lastCatalogBuild = BucketStore.CatalogBuild(0L, 0L, 0, 0)
 
   def entryCatalog(): Map[String, BucketStore.BucketEntries] = {
-    val v0 = dataVersion
-    val hit = catalogCache.get
-    if (hit != null && hit._1 == v0) return hit._2
-    catalogBuilds.incrementAndGet()
-    // listing and fold inside the block: a retry after a raced swap
-    // re-lists the settled tree instead of re-reading renamed-away files
-    val catalog = readConsistent(foldFooters())
-    if (dataVersion == v0) catalogCache.set((v0, catalog))
-    catalog
+    def cached(): Map[String, BucketStore.BucketEntries] = {
+      val hit = catalogCache.get
+      if (hit != null && hit._1 == dataVersion) hit._2 else null
+    }
+    val hit = cached()
+    if (hit != null) return hit
+    // single flight, as for [[baseTable]]. The build waits on swap
+    // windows (readConsistent); no mutator calls in from inside one.
+    catalogBuildLock.synchronized {
+      val raced = cached()
+      if (raced != null) return raced
+      val v0 = dataVersion
+      catalogBuilds.incrementAndGet()
+      // listing and fold inside the block: a retry after a raced swap
+      // re-lists the settled tree instead of re-reading renamed-away files
+      val catalog = readConsistent(foldFooters())
+      if (dataVersion == v0) catalogCache.set((v0, catalog))
+      catalog
+    }
   }
+  private val catalogBuildLock = new Object
 
   private def foldFooters(): Map[String, BucketStore.BucketEntries] = {
-    import scala.jdk.CollectionConverters._
     val t0 = System.nanoTime()
-    val files = baseFiles()
+    val files = baseFiles(baseTableOrEmpty())
     val t1 = System.nanoTime()
-    val known = footerCache.get
-    val figures = new java.util.concurrent.ConcurrentHashMap[String, BucketStore.FileFigures]()
-    val unread = files.filter { case (_, _, st) =>
-      known.get(st.getPath.toString) match {
-        case Some(f) if f.len == st.getLen && f.mtime == st.getModificationTime =>
-          figures.put(st.getPath.toString, f): Unit
-          false
-        case _ => true
-      }
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    // one options object for the fold: parquet's no-argument options
-    // build a fresh Hadoop Configuration per file (measured 9.8 ms a
-    // footer against 0.16 ms shared, local fs)
-    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
-    parallelFs(unread) { case (_, _, st) =>
-      figures.put(st.getPath.toString, readFooter(st, conf, options)): Unit
-    }
-    val byPath = figures.asScala.toMap
+    val (byPath, unread) = footerFigures(files.map(_._3))
+    // the fold sees the whole listing: vanished files drop out here
     footerCache.set(byPath)
     val catalog = files.groupBy(_._1).map { case (bucket, fs) =>
       bucket -> BucketStore.BucketEntries(fs.groupBy(_._2).flatMap { case (entry, es) =>
@@ -1814,14 +1821,62 @@ final class BucketStore(val spark: SparkSession, val root: String,
       })
     }.filter(_._2.all.nonEmpty)
     lastCatalogBuild = BucketStore.CatalogBuild(t1 - t0, System.nanoTime() - t1,
-      files.size, unread.size)
+      files.size, unread)
     catalog
   }
 
-  /** (bucket, entry, file) for every file of the base table's file
-    * index — the listing [[baseTable]] already holds, no job. */
-  private def baseFiles(): Seq[(String, String, org.apache.hadoop.fs.FileStatus)] =
-    baseTableOrEmpty().queryExecution.analyzed.collectFirst {
+  /** Footer figures of `files` by path, reading only the footers the
+    * cache does not hold (on the [[parallelFs]] pool), and how many it
+    * read. */
+  private def footerFigures(files: Seq[org.apache.hadoop.fs.FileStatus])
+      : (Map[String, BucketStore.FileFigures], Int) = {
+    import scala.jdk.CollectionConverters._
+    val known = footerCache.get
+    val figures = new java.util.concurrent.ConcurrentHashMap[String, BucketStore.FileFigures]()
+    val unread = files.filter { st =>
+      known.get(st.getPath.toString) match {
+        case Some(f) if f.len == st.getLen && f.mtime == st.getModificationTime =>
+          figures.put(st.getPath.toString, f): Unit
+          false
+        case _ => true
+      }
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    // one options object per call: parquet's no-argument options
+    // build a fresh Hadoop Configuration per file (measured 9.8 ms a
+    // footer against 0.16 ms shared, local fs)
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    parallelFs(unread) { st =>
+      figures.put(st.getPath.toString, readFooter(st, conf, options)): Unit
+    }
+    (figures.asScala.toMap, unread.size)
+  }
+
+  /** [[table(spec)*]] with a bound on what its scan reads: the
+    * uncompressed bytes of the base files in the spec's bucket whose
+    * entry resolves under its patterns ([[EntryPattern.resolve]], the
+    * query's `$meta` rule) and whose footer `[minTs, maxTs]` meets
+    * `[start, stop)`. No Spark job: the file index [[baseTable]] holds
+    * and the cached footer figures. Table and bound come from one
+    * base-table value, so a write landing in between cannot make the
+    * bound understate the table. [[QueryRegistry]] plans a query whose
+    * bound is small on one partition. */
+  def scanBound(spec: QuerySpec): (DataFrame, Long) = {
+    val base = baseTable()
+    val files = baseFiles(base).filter(f => spec.bucket.forall(_ == f._1))
+    val entries = EntryPattern.resolve(files.map(_._2).distinct, spec.entries).toSet
+    val (figures, read) = footerFigures(files.collect { case (_, e, st) if entries(e) => st })
+    if (read > 0) footerCache.updateAndGet(_ ++ figures): Unit
+    val bytes = figures.valuesIterator.filter { f =>
+      f.rows > 0 && spec.start.forall(f.maxTs >= _) && spec.stop.forall(f.minTs < _)
+    }.map(_.bytes).sum
+    (overlaid(base, overlayMeets(spec)), bytes)
+  }
+
+  /** (bucket, entry, file) for every file of `base`'s file index — the
+    * listing [[baseTable]] already holds, no job. */
+  private def baseFiles(base: DataFrame): Seq[(String, String, org.apache.hadoop.fs.FileStatus)] =
+    base.queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
     } match {
       case Some(rel: org.apache.spark.sql.execution.datasources.HadoopFsRelation) =>
@@ -1842,10 +1897,11 @@ final class BucketStore(val spark: SparkSession, val root: String,
       case _ => Nil // no base tree yet
     }
 
-  /** Row count and `ts` bounds of one base file from its footer. A file
-    * whose row groups carry no `ts` statistics breaks the store contract
-    * (every base file is written by this store's parquet writer), so it
-    * fails the build by name instead of reading the rows. */
+  /** Row count, uncompressed bytes and `ts` bounds of one base file
+    * from its footer. A file whose row groups carry no `ts` statistics
+    * breaks the store contract (every base file is written by this
+    * store's parquet writer), so it fails the build by name instead of
+    * reading the rows. */
   private def readFooter(st: org.apache.hadoop.fs.FileStatus,
       conf: org.apache.hadoop.conf.Configuration,
       options: org.apache.parquet.ParquetReadOptions): BucketStore.FileFigures = {
@@ -1854,6 +1910,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
       org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf), options)
     val blocks = try reader.getFooter.getBlocks.asScala finally reader.close()
     var rows = 0L
+    var bytes = 0L
     var lo = Long.MaxValue
     var hi = Long.MinValue
     for (b <- blocks if b.getRowCount > 0) {
@@ -1864,10 +1921,11 @@ final class BucketStore(val spark: SparkSession, val root: String,
         }.getOrElse(throw new IllegalStateException(
           s"base file ${st.getPath} has a row group without ts statistics"))
       rows += b.getRowCount
+      bytes += b.getTotalByteSize
       lo = math.min(lo, groupLo)
       hi = math.max(hi, groupHi)
     }
-    BucketStore.FileFigures(st.getLen, st.getModificationTime, rows, lo, hi)
+    BucketStore.FileFigures(st.getLen, st.getModificationTime, rows, bytes, lo, hi)
   }
 
   /** Entry names of a bucket, `$meta` entries included. */
@@ -2452,9 +2510,10 @@ object BucketStore {
   final case class EntryRecords(records: Long, oldest: Long, latest: Long)
 
   /** One base file's footer figures, with the length and modification
-    * time they were read at. */
+    * time they were read at. `bytes` is the row groups' uncompressed
+    * size. */
   private[engine] final case class FileFigures(len: Long, mtime: Long,
-      rows: Long, minTs: Long, maxTs: Long)
+      rows: Long, bytes: Long, minTs: Long, maxTs: Long)
 
   /** Phase split of one entry-catalog build: nanos spent listing the
     * base table and folding footers, files listed and footers read. */

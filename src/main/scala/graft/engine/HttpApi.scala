@@ -1050,7 +1050,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     val spec = spec0.copy(bucket = Some(bucket),
       entries = Some(spec0.entries.getOrElse(Seq(entry))))
     val id = registry.open(() => store.table(spec), spec,
-      continuous = continuous, ttlMs = ttlMs)
+      continuous = continuous, ttlMs = ttlMs, bound = Some(store.scanBound))
     rememberBatchLimits(id, spec)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
   }
@@ -1070,7 +1070,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
       v.toBooleanOption.getOrElse(
         throw unprocessable("'continue' must be a bool value")))
     val id = registry.open(() => store.table(spec), spec,
-      continuous = continuous, ttlMs = ttlMs)
+      continuous = continuous, ttlMs = ttlMs, bound = Some(store.scanBound))
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
   }
 
@@ -1606,7 +1606,10 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     val lp = QueryLinks.verify(token, linkSecret)
       .getOrElse(throw unauthorized("Invalid or expired query link"))
     val row = store.readConsistent {
-      QueryEngine.query(store.table(lp.spec), lp.spec)
+      // a small answer resolves in one task (QueryRegistry's rule)
+      val (table, bytes) = store.scanBound(lp.spec)
+      QueryEngine.query(table, lp.spec,
+          onePartition = QueryRegistry.onePartition(lp.spec, bytes))
         .filter(col("entry") === lp.recordEntry && col("ts") === lp.recordTs)
         .limit(1).collect()
     }.headOption.getOrElse(throw notFound(
@@ -1683,7 +1686,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     val (spec0, ttlMs, continuous) = parseQueryEntry(new String(readBody(ex), UTF_8))
     val spec = spec0.copy(bucket = Some(bucket))
     val id = registry.open(() => store.table(spec), spec,
-      continuous = continuous, ttlMs = ttlMs)
+      continuous = continuous, ttlMs = ttlMs, bound = Some(store.scanBound))
     rememberBatchLimits(id, spec)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
   }

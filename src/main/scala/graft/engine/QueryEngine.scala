@@ -41,18 +41,24 @@ object QueryEngine {
   /** Main read path: filtered records ordered by (ts, entry) — the
     * k-way-merge order of the reference's multi-entry aggregator
     * (storage/bucket/query.rs:156-318, ties broken by entry name).
+    *
+    * `onePartition` plans a small answer in one task: see [[matching]].
+    * Off by default — the distributed plan is the analytics contract.
     */
   def query(records: DataFrame, spec: QuerySpec,
-      processors: Map[String, RecordProcessor] = Processors.registry): DataFrame =
-    queryUnordered(records, spec, processors).orderBy(col("ts"), col("entry"))
+      processors: Map[String, RecordProcessor] = Processors.registry,
+      onePartition: Boolean = false): DataFrame =
+    queryUnordered(records, spec, processors, onePartition)
+      .orderBy(col("ts"), col("entry"))
 
   /** [[query]] without the final total (ts, entry) sort — for consumers
     * that impose their own order-preserving exchange (bulk shard export
     * range-partitions on the same key, so a global sort underneath would
     * be a redundant second exchange). */
   def queryUnordered(records: DataFrame, spec: QuerySpec,
-      processors: Map[String, RecordProcessor] = Processors.registry): DataFrame = {
-    val filtered = matching(records, spec)
+      processors: Map[String, RecordProcessor] = Processors.registry,
+      onePartition: Boolean = false): DataFrame = {
+    val filtered = matching(records, spec, onePartition)
     val projected = spec.when match {
       case Some(w) =>
         val directives = Parser.parse(w).directives
@@ -68,13 +74,24 @@ object QueryEngine {
     if (spec.onlyMetadata) projected.drop("payload") else projected
   }
 
-  /** The matching record set (unordered) — shared by read/count/remove. */
-  def matching(records: DataFrame, spec: QuerySpec): DataFrame = {
+  /** The matching record set (unordered) — shared by read/count/remove.
+    *
+    * `onePartition` coalesces the candidates to one partition after the
+    * range, state and entry filters: the read-side twin of the store's
+    * co-located small writes. Every later operator — the trailing-count
+    * and `#ctx` windows, the sequential kernel, a caller's (ts, entry)
+    * sort — then finds its distribution satisfied, so the plan runs as
+    * one task with no exchange. Only for answers known to be small
+    * (QueryRegistry's bound): one task holds the whole scan. */
+  def matching(records: DataFrame, spec: QuerySpec,
+      onePartition: Boolean = false): DataFrame = {
     val scoped = spec.bucket.fold(records)(b => records.filter(col("bucket") === b))
-    val base = applyEntries(applyRange(scoped, spec), spec.entries)
+    val candidates = applyEntries(applyRange(scoped, spec), spec.entries)
+    val base = if (onePartition) candidates.coalesce(1) else candidates
     spec.when match {
       case None => base
-      case Some(whenJson) => applyWhen(base, Parser.parse(whenJson), spec.strict)
+      case Some(whenJson) =>
+        applyWhen(base, Parser.parse(whenJson), spec.strict, onePartition)
     }
   }
 
@@ -232,20 +249,21 @@ object QueryEngine {
       (lblCols ++ cmpCols).map(_._2))
   }
 
-  private def applyWhen(base: DataFrame, parsed: ParsedCondition, strict: Boolean): DataFrame = {
+  private def applyWhen(base: DataFrame, parsed: ParsedCondition, strict: Boolean,
+      onePartition: Boolean): DataFrame = {
     val root = parsed.root
     if (Node.isStateful(root)) {
-      if (strict) StatefulKernel.run(base, parsed, strict)
+      if (strict) StatefulKernel.run(base, parsed, strict, onePartition)
       else splitTrailingStateful(root) match {
         case Some((pure, trailing)) =>
           val (df, compile, helpers) = staged(base, pure)
           ctxRewrite(df, trailingFlag(compile(pure), trailing), parsed.directives)
             .drop(helpers: _*)
-        case None => StatefulKernel.run(base, parsed, strict)
+        case None => StatefulKernel.run(base, parsed, strict, onePartition)
       }
     } else if (strict && mayError(root)) {
       // strict mode must surface evaluation errors — interpret row-by-row
-      StatefulKernel.run(base, parsed, strict)
+      StatefulKernel.run(base, parsed, strict, onePartition)
     } else {
       val (df, compile, helpers) = staged(base, root)
       ctxRewrite(df, compile(root), parsed.directives).drop(helpers: _*)

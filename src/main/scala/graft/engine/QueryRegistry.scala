@@ -1,10 +1,12 @@
 package graft.engine
 
+import graft.cond.Parser
 import org.apache.spark.sql.{DataFrame, Row}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import javax.crypto.Mac
 import javax.crypto.spec.SecretKeySpec
+import scala.util.control.NonFatal
 
 /** Driver-side query lifecycle: the reference's push-based cursor
   * (process-global incrementing ids, TTL expiry, batched drain,
@@ -14,10 +16,29 @@ import javax.crypto.spec.SecretKeySpec
   * 16-84). `query links` serialize a QuerySpec with an HMAC signature and
   * expiry (reduct_base/src/msg/query_link_api.rs:10-35).
   *
-  * MEMORY BOUND: an idle cursor holds its spec + a lazy local iterator
-  * (at most ONE partition's fetched rows once draining starts — Spark's
-  * toLocalIterator pulls partitions on demand), and the registry never
-  * exceeds `maxCursors` entries (default 8192): expired cursors are
+  * BOUNDED CURSORS: the reference orders an answer by k-way-merging
+  * per-entry readers that already yield ts order
+  * (storage/bucket/query.rs:156-318); the distributed plan needs a global
+  * (ts, entry) sort instead — a range-sample job, a shuffle-map job and
+  * a result job per drain. When `open` gets a `bound` and the store
+  * bounds the scan at ≤ [[QueryRegistry.MaxBoundedBytes]] uncompressed
+  * bytes, the query plans on one partition
+  * ([[QueryEngine.matching]]): windows, kernel and sort run in one task
+  * and the drain is one job. `#ext` queries always stream (processors
+  * may split rows past any bound), and a continuous cursor bounds again
+  * at each re-arm.
+  *
+  * MEMORY BOUND: a streaming cursor holds its spec + a lazy local
+  * iterator (at most ONE partition's fetched rows once draining starts
+  * — Spark's toLocalIterator pulls partitions on demand). A bounded
+  * cursor's one partition is its whole answer, so it holds at most
+  * `MaxBoundedBytes` of rows, and the bounds of all live bounded
+  * cursors are reserved against [[QueryRegistry.BoundedBudgetBytes]]:
+  * an open that would pass the budget streams instead, with the same
+  * answer. A reservation is returned when the cursor drains to its end
+  * (an exhausted cursor also drops its iterator), is closed, or
+  * expires. The registry never exceeds `maxCursors` entries (default
+  * 8192): expired cursors are
   * swept on every open/fetch, and an open at the cap is REJECTED with
   * [[QueryRegistry.TooManyQueriesException]] (HTTP 429) after a final
   * expiry sweep. Live cursors are never evicted — the reference only
@@ -31,16 +52,23 @@ import javax.crypto.spec.SecretKeySpec
   */
 final class QueryRegistry(defaultTtlMs: Long = 60000L,
     maxCursors: Int = 8192) {
+  import QueryRegistry._
 
   final class Cursor(
       val id: Long,
       records: () => DataFrame,
       spec: QuerySpec,
       continuous: Boolean,
-      ttlMs: Long) {
+      ttlMs: Long,
+      bound: Option[QuerySpec => (DataFrame, Long)]) {
     @volatile private var lastAccess = System.nanoTime()
     private[QueryRegistry] def lastAccessNanos: Long = lastAccess
     private var lastTs: Option[Long] = None
+    // the bound this cursor holds against the registry budget; guarded
+    // by its own lock so close/expiry never wait on an in-flight fetch
+    private val reservation = new Object
+    private var held = 0L
+    private var retired = false
     // Compiled at OPEN (parse/plan errors surface there → HTTP 422; no
     // Spark jobs run — the flood spec pins ~10 ms opens), but the
     // iterator is materialized on FIRST FETCH: toLocalIterator under
@@ -48,16 +76,41 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
     // init made open() pay the query's first shuffle (measured: a
     // gated 4-row sort blocked open for the full stage time; the
     // reference registers instantly and pays on read, query.rs:33-36).
-    private var compiled: DataFrame = QueryEngine.query(records(), spec)
+    private var compiled: DataFrame = plan(spec)
     private var iter: Iterator[Row] = null
 
-    private def newIter(s: QuerySpec): Iterator[Row] = {
-      import scala.jdk.CollectionConverters._
-      QueryEngine.query(records(), s).toLocalIterator().asScala
+    /** The query's plan: on one partition when the store bounds it
+      * under the cap and the budget takes the bound, else streaming. */
+    private def plan(s: QuerySpec): DataFrame = bound match {
+      case None => QueryEngine.query(records(), s)
+      case Some(b) =>
+        val (table, bytes) = b(s)
+        if (onePartition(s, bytes) && reserve(bytes))
+          try QueryEngine.query(table, s, onePartition = true)
+          catch { case NonFatal(e) => release(); throw e }
+        else QueryEngine.query(table, s)
+    }
+
+    private def reserve(bytes: Long): Boolean = reservation.synchronized {
+      !retired && tryReserve(bytes) && { held = bytes; true }
+    }
+
+    private def release(): Unit = reservation.synchronized {
+      unreserve(held)
+      held = 0L
+    }
+
+    /** Closed or expired: the reservation returns and none is taken
+      * again, also by a fetch still in flight. */
+    private[QueryRegistry] def retire(): Unit = reservation.synchronized {
+      retired = true
+      release()
     }
 
     def expired: Boolean =
       (System.nanoTime() - lastAccess) / 1000000L > ttlMs
+
+    private[QueryRegistry] def drained: Boolean = synchronized { iter eq Iterator.empty }
 
     /** Drain up to `maxRecords`; empty result = NoContent. A continuous
       * cursor re-arms from last_ts+1 on exhaustion (continuous.rs:41-66).
@@ -86,41 +139,65 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
 
     private def ensureNext(): Boolean = {
       if (iter == null) {
-        import scala.jdk.CollectionConverters._
-        iter = compiled.toLocalIterator().asScala
+        iter = drain(compiled)
         compiled = null // the iterator owns the execution from here
       }
       if (iter.hasNext) return true
-      if (!continuous) return false
+      release()
+      if (!continuous) {
+        iter = Iterator.empty // drained rows are not held until the TTL
+        return false
+      }
       // re-arm a fresh historical query from last emitted ts + 1
-      val next = spec.copy(start = lastTs.map(_ + 1).orElse(spec.start))
-      iter = newIter(next)
-      iter.hasNext
+      iter = drain(plan(spec.copy(start = lastTs.map(_ + 1).orElse(spec.start))))
+      iter.hasNext || { release(); false }
     }
   }
 
   private val nextId = new AtomicLong(1)
   private val cursors = new ConcurrentHashMap[Long, Cursor]()
+  private val reservedBytes = new AtomicLong(0L)
+
+  /** Bytes the live bounded cursors hold against [[BoundedBudgetBytes]]. */
+  def reserved: Long = reservedBytes.get
+
+  private def tryReserve(bytes: Long): Boolean = {
+    var cur = reservedBytes.get
+    while (cur + bytes <= BoundedBudgetBytes) {
+      if (reservedBytes.compareAndSet(cur, cur + bytes)) return true
+      cur = reservedBytes.get
+    }
+    false
+  }
+
+  private def unreserve(bytes: Long): Unit =
+    if (bytes != 0L) reservedBytes.addAndGet(-bytes): Unit
 
   /** Register a query; returns its process-global id (query.rs:33-36).
+    * `bound` gives the table to query and a bound on the bytes its scan
+    * reads (`BucketStore.scanBound`); without it the cursor streams over
+    * `records()`.
     * @throws QueryRegistry.TooManyQueriesException when the registry is
     *         at `maxCursors` live (unexpired) cursors — the caller maps
     *         this to HTTP 429; existing cursors are never evicted. */
   def open(records: () => DataFrame, spec: QuerySpec,
-      continuous: Boolean = false, ttlMs: Long = defaultTtlMs): Long = {
+      continuous: Boolean = false, ttlMs: Long = defaultTtlMs,
+      bound: Option[QuerySpec => (DataFrame, Long)] = None): Long = {
     evictExpired()
     val id = nextId.getAndIncrement()
-    val cursor = new Cursor(id, records, spec, continuous, ttlMs)
+    val cursor = new Cursor(id, records, spec, continuous, ttlMs, bound)
     // cap enforcement under a lock: a check-then-put race would let N
     // concurrent opens overshoot the documented bound. The check is
     // O(1); fetch/close stay lock-free on the ConcurrentHashMap.
     capLock.synchronized {
       if (cursors.size() >= maxCursors) {
         evictExpired() // a racer may have left expired entries behind
-        if (cursors.size() >= maxCursors)
+        if (cursors.size() >= maxCursors) {
+          cursor.retire()
           throw new QueryRegistry.TooManyQueriesException(
             s"too many queries: $maxCursors cursors live; close cursors " +
               "or let them expire before opening more")
+        }
       }
       cursors.put(id, cursor)
     }
@@ -133,12 +210,17 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
     Option(cursors.get(id)).map(_.fetch(maxRecords))
   }
 
-  def close(id: Long): Unit = cursors.remove(id)
+  def close(id: Long): Unit = Option(cursors.remove(id)).foreach(_.retire())
+  /** Whether cursor `id` drained to its end and dropped its rows. */
+  private[engine] def drained(id: Long): Boolean = Option(cursors.get(id)).exists(_.drained)
   def size: Int = cursors.size()
 
   private def evictExpired(): Unit = {
     val it = cursors.entrySet().iterator()
-    while (it.hasNext) if (it.next().getValue.expired) it.remove()
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.getValue.expired && cursors.remove(e.getKey, e.getValue)) e.getValue.retire()
+    }
   }
 }
 
@@ -146,6 +228,31 @@ object QueryRegistry {
   /** Open rejected at the cursor cap (→ HTTP 429). The registry never
     * evicts live cursors to make room (see class doc). */
   final class TooManyQueriesException(msg: String) extends RuntimeException(msg)
+
+  /** A cursor whose scan the store bounds at this many uncompressed
+    * bytes or fewer plans on one partition: about the default page body
+    * cap (`RS_IO_BATCH_MAX_SIZE`, 8 MB), so a bounded answer is about
+    * one page. */
+  val MaxBoundedBytes: Long = 8L << 20
+
+  /** Across the registry, bounded cursors reserve at most this many
+    * bytes; past it, cursors stream. */
+  val BoundedBudgetBytes: Long = 256L << 20
+
+  /** `#ext` processors may split rows past any scan bound. */
+  private def hasExt(spec: QuerySpec): Boolean =
+    spec.when.exists(w => Parser.parse(w).directives.get("#ext").isDefined)
+
+  /** Whether a one-shot drain of `spec`, whose scan the store bounds at
+    * `bytes`, plans on one partition: the cursors' per-cursor rule. Such
+    * a drain holds its answer only while it runs, so it takes no budget. */
+  def onePartition(spec: QuerySpec, bytes: Long): Boolean =
+    bytes <= MaxBoundedBytes && !hasExt(spec)
+
+  private def drain(df: DataFrame): Iterator[Row] = {
+    import scala.jdk.CollectionConverters._
+    df.toLocalIterator().asScala
+  }
 }
 
 /** Shareable signed query links (query_link_api.rs:10-35): a serialized

@@ -21,7 +21,11 @@ import scala.collection.mutable
   */
 object StatefulKernel {
 
-  def run(base: DataFrame, parsed: ParsedCondition, strict: Boolean): DataFrame = {
+  /** `onePartition`: `base` already sits in one partition (a bounded
+    * cursor, [[QueryEngine.matching]]), so the entry exchange is skipped
+    * and the one task sorts by (entry, ts). */
+  def run(base: DataFrame, parsed: ParsedCondition, strict: Boolean,
+      onePartition: Boolean = false): DataFrame = {
     val schema = base.schema
     val tsIdx = schema.fieldIndex("ts")
     val entryIdx = schema.fieldIndex("entry")
@@ -31,8 +35,8 @@ object StatefulKernel {
     val before = QueryEngine.padding(parsed.directives, "#ctx_before")
     val after = QueryEngine.padding(parsed.directives, "#ctx_after")
 
-    val sorted = graft.core.Partitioning.pinned(base, col("entry"))
-      .sortWithinPartitions(col("entry"), col("ts"))
+    val byEntry = if (onePartition) base else graft.core.Partitioning.pinned(base, col("entry"))
+    val sorted = byEntry.sortWithinPartitions(col("entry"), col("ts"))
 
     sorted.mapPartitions { rows =>
       new Iterator[Row] {

@@ -1,7 +1,7 @@
 package graft.stream
 
 import graft.core.EntryPattern
-import graft.engine.{BucketStore, QueryEngine, QuerySpec}
+import graft.engine.{BucketStore, QueryEngine, QueryRegistry, QuerySpec}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.json4s._
@@ -10,6 +10,7 @@ import org.json4s.jackson.JsonMethods
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Zenoh-shaped pub/sub seam (SURVEY §2.4).
   *
@@ -249,7 +250,10 @@ final class ZenohBridge(
     * pulls one partition of rows at a time as the transport drains, so
     * an unbounded selector over a large entry holds at most one
     * partition driver-side — the same paging discipline the HTTP
-    * cursors get from [[graft.engine.QueryRegistry]]. Each reply pays
+    * cursors get from [[graft.engine.QueryRegistry]], whose rule also
+    * applies: a scan the store bounds under its cap plans on one
+    * partition, so the drain is one job with no exchange, and the rows
+    * arrive in one pull of at most that bound. Each reply pays
     * its egress bytes as it ships (session.rs:597,672); a mid-stream
     * 429 aborts the remaining replies, which the transport surfaces as
     * an error reply. The `ts`/`last` point reads collect ≤ 1 row by
@@ -298,7 +302,12 @@ final class ZenohBridge(
       when = when,
       strict = q.params.get("strict").exists(_.toBoolean),
       bucket = Some(config.bucket))
-    val rows = QueryEngine.query(store.tableOrEmpty(), spec)
+    // a small answer plans on one partition (QueryRegistry's rule)
+    val (table, bytes) =
+      try store.scanBound(spec)
+      catch { case NonFatal(_) => (BucketStore.emptyRecords(store.spark), 0L) }
+    val rows = QueryEngine.query(table, spec,
+      onePartition = QueryRegistry.onePartition(spec, bytes))
     val limited = q.params.get("limit").map(_.toInt)
       .fold(rows)(n => rows.limit(n))
     import scala.jdk.CollectionConverters._

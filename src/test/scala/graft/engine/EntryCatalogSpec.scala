@@ -1,8 +1,6 @@
 package graft.engine
 
-import graft.SparkTestBase
 import graft.lifecycle.Lifecycle
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -17,7 +15,7 @@ import java.nio.file.Files
   * Spark aggregate it replaced (kept here as the oracle) after every step
   * of seeded random mutation sequences, plus the Spark job counts the
   * footer catalog buys on the serving write path. */
-class EntryCatalogSpec extends AnyFunSuite with SparkTestBase
+class EntryCatalogSpec extends AnyFunSuite with SparkJobs
     with AdaptiveSparkPlanHelper {
 
   private val Day = 86400000000L
@@ -192,47 +190,6 @@ class EntryCatalogSpec extends AnyFunSuite with SparkTestBase
     for (seed <- Seq(11L, 12L)) runSequence(seed)
   }
 
-  /** Jobs of `f` on the calling thread: it runs under its own job group,
-    * and only that group's job starts count, so jobs of other threads on
-    * the shared session cannot leak in. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"catalog-spec-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try f finally sc.clearJobGroup()
-      drainBus()
-    } finally sc.removeSparkListener(listener)
-    jobs.get()
-  }
-
-  /** Returns once every listener event posted so far is delivered: a
-    * marker job's start, posted after them, has reached a listener on
-    * the same (shared) queue. */
-  private def drainBus(): Unit = {
-    val sc = spark.sparkContext
-    val marker = s"drain-${java.util.UUID.randomUUID}"
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
-          seen.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(marker, "bus drain")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** A store holding b/e at ts 100, 200 and b/f at ts 100. */
   private def withJobStore(f: BucketStore => Unit): Unit = {
     val store = new BucketStore(spark,
@@ -297,6 +254,34 @@ class EntryCatalogSpec extends AnyFunSuite with SparkTestBase
       }
       assert(store.catalogBuilds.get() == builds + 1, "the write must invalidate the catalog")
       assert(catalogJobs == 0, s"entryCatalog() after a write ran $catalogJobs jobs")
+    }
+  }
+
+  test("callers racing right after a write share one base-table listing " +
+      "and one catalog build") {
+    withJobStore { store =>
+      store.writeFolded(Seq(BucketStore.FoldReq("b", recs("f", 500L))))
+      val (tables, catalogs) = (store.baseTableBuilds.get(), store.catalogBuilds.get())
+      val n = 8
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+      try {
+        val racers = (0 until n).map { i =>
+          pool.submit(new java.util.concurrent.Callable[Any] {
+            def call(): Any = {
+              go.await()
+              if (i % 2 == 0) store.baseTable() else store.entryCatalog()
+            }
+          })
+        }
+        go.countDown()
+        racers.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally pool.shutdown()
+      assert(store.baseTableBuilds.get() == tables + 1,
+        s"${store.baseTableBuilds.get() - tables} base-table listings for $n racers")
+      assert(store.catalogBuilds.get() == catalogs + 1,
+        s"${store.catalogBuilds.get() - catalogs} catalog builds for $n racers")
+      assert(store.entryCatalog()("b").all("f") == BucketStore.EntryRecords(2L, 100L, 500L))
     }
   }
 

@@ -1,6 +1,5 @@
 package graft.engine
 
-import graft.SparkTestBase
 import graft.core.Records
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -9,6 +8,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -24,7 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * nodes that melt first at 100 TB if a refactor drops an equi-join key
   * from the conflict check / label merge / remove rewrite.
   */
-class WorkloadPlanSweepSpec extends AnyFunSuite with SparkTestBase
+class WorkloadPlanSweepSpec extends AnyFunSuite with SparkJobs
     with AdaptiveSparkPlanHelper {
 
   test("store workload executes no cartesian / nested-loop plan") {
@@ -152,5 +152,45 @@ class WorkloadPlanSweepSpec extends AnyFunSuite with SparkTestBase
     assert(rows == Set(("a", 2L, Map("k" -> "v")), ("c", 1L, Map("k" -> "v")),
       ("a", 3L, Map("k" -> "w")), ("a", 4L, Map("k" -> "v"))))
     store.close()
+  }
+
+  test("bounded cursors of the five query classes plan no cartesian / nested loop") {
+    val store = new BucketStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-bounded-sweep").toString)
+    try {
+      val t0 = 1704067200000000L
+      val rng = new scala.util.Random(5)
+      store.writeFolded(Seq(BucketStore.FoldReq("b", for (e <- Seq("a", "c"); i <- 0 until 24)
+        yield BucketStore.FoldRec(e, t0 + i * 10000000L, Map(
+          "n" -> rng.nextInt(100).toString, "f" -> f"${rng.nextDouble()}%.3f",
+          "ok" -> rng.nextBoolean().toString, "kind" -> "abcd".charAt(rng.nextInt(4)).toString),
+          "x", Array[Byte](1)))))
+      // a patched entry: its cursors plan the overlay join too
+      store.updateLabelsMatched("b", Seq(("c", t0, Map("n" -> "1"), Set.empty[String])))
+      val whens = Seq(None,
+        Some("""{"&n":{"$lt":50},"&kind":{"$ne":"a"}}"""),
+        Some("""{"&ok":{"$eq":true},"$each_n":3}"""),
+        Some("""{"&f":{"$gt":0.2},"$limit":12}"""),
+        Some("""{"$each_t":"40s"}"""),
+        Some("""{"$gate":["30s",{"&n":{"$gt":70}}]}"""),
+        Some("""{"&n":{"$lt":10},"#ctx_before":2,"#ctx_after":1}"""))
+      val specs = for (e <- Seq("a", "c"); w <- whens)
+        yield QuerySpec(entries = Some(Seq(e)), when = w, bucket = Some("b"))
+      val registry = new QueryRegistry()
+      val plans = plansOf("toLocalIterator") {
+        for (spec <- specs) {
+          val id = registry.open(() => store.table(spec), spec,
+            bound = Some(store.scanBound))
+          assert(registry.reserved > 0, s"$spec did not plan bounded")
+          while (registry.fetch(id, 85).exists(_.nonEmpty)) ()
+        }
+      }
+      assert(plans.size == specs.size, s"captured ${plans.size} cursor drains")
+      val offending = plans.flatMap(p => collect(p) {
+        case j: CartesianProductExec => j.nodeName
+        case j: BroadcastNestedLoopJoinExec => j.nodeName
+      })
+      assert(offending.isEmpty, s"bounded cursor plans must stay equi-keyed: $offending")
+    } finally store.close()
   }
 }
