@@ -142,6 +142,17 @@ object EntryPattern {
     }
   }
 
+  /** The entry names `patterns` can resolve to when no include is a
+    * glob: each include as written and without leading `/`, the forms
+    * [[resolve]] compares. None when an include is a glob, or when there
+    * is no include (every queryable entry). */
+  def literalNames(patterns: Option[Seq[String]]): Option[Set[String]] =
+    patterns.flatMap { pats =>
+      val includes = pats.filterNot(p => p.startsWith("!") && p.length > 1)
+      if (includes.isEmpty || includes.exists(_.contains('*'))) None
+      else Some(includes.flatMap(p => Seq(p, p.dropWhile(_ == '/'))).toSet)
+    }
+
   /** bucket/query.rs:96-154: resolve an entry universe against
     * include/exclude patterns. `patterns == None` → all non-system entries.
     */

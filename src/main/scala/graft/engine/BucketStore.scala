@@ -1774,8 +1774,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
   /** Footer figures per base file, keyed by path. Base files are
     * immutable and every rewrite writes new names, so a cached figure
     * stays valid while its file is listed; each fold rebuilds the map
-    * from the current listing, so vanished files drop out. The length
-    * and modification time guard a reused name. */
+    * from the current listing, so vanished files drop out, and only the
+    * fold installs. The length and modification time guard a reused
+    * name. */
   private val footerCache = new java.util.concurrent.atomic.AtomicReference[
     Map[String, BucketStore.FileFigures]](Map.empty)
   /** Phase split of the last catalog build: the base-table listing
@@ -1852,21 +1853,39 @@ final class BucketStore(val spark: SparkSession, val root: String,
     (figures.asScala.toMap, unread.size)
   }
 
-  /** [[table(spec)*]] with a bound on what its scan reads: the
+  /** [[table(spec)*]] with an estimate of what its scan reads: the
     * uncompressed bytes of the base files in the spec's bucket whose
     * entry resolves under its patterns ([[EntryPattern.resolve]], the
     * query's `$meta` rule) and whose footer `[minTs, maxTs]` meets
-    * `[start, stop)`. No Spark job: the file index [[baseTable]] holds
-    * and the cached footer figures. Table and bound come from one
-    * base-table value, so a write landing in between cannot make the
-    * bound understate the table. [[QueryRegistry]] plans a query whose
-    * bound is small on one partition. */
-  def scanBound(spec: QuerySpec): (DataFrame, Long) = {
-    val base = baseTable()
-    val files = baseFiles(base).filter(f => spec.bucket.forall(_ == f._1))
+    * `[start, stop)`. No Spark job: the file index [[baseTable]] holds,
+    * pruned to the spec's bucket (and entry names, when no include is a
+    * glob), and the footer figures, read for the files the catalog fold
+    * has not cached. Table and estimate come from one base-table value,
+    * so a write landing in between cannot make the estimate understate
+    * the table, and a compaction swap racing the footer reads retries
+    * ([[readConsistent]]). [[QueryRegistry]] plans a query whose
+    * estimate is small on one partition. */
+  def scanBound(spec: QuerySpec): (DataFrame, Long) =
+    readConsistent(scanBoundOf(baseTable(), spec))
+
+  /** [[scanBound]] for readers that answer a store with no base tree yet
+    * with no rows, as [[tableOrEmpty]] does. Only the listing's failure
+    * maps to the empty table; a failing footer read surfaces. */
+  def scanBoundOrEmpty(spec: QuerySpec): (DataFrame, Long) =
+    readConsistent(scanBoundOf(baseTableOrEmpty(), spec))
+
+  private def scanBoundOf(base: DataFrame, spec: QuerySpec): (DataFrame, Long) = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, In, Literal}
+    import org.apache.spark.sql.types.StringType
+    val pruning = spec.bucket.map(b =>
+      EqualTo(AttributeReference("bucket", StringType)(), Literal(b))).toSeq ++
+      EntryPattern.literalNames(spec.entries).map(names =>
+        In(AttributeReference("entry", StringType)(), names.toSeq.map(Literal(_))))
+    val files = baseFiles(base, pruning).filter(f => spec.bucket.forall(_ == f._1))
     val entries = EntryPattern.resolve(files.map(_._2).distinct, spec.entries).toSet
-    val (figures, read) = footerFigures(files.collect { case (_, e, st) if entries(e) => st })
-    if (read > 0) footerCache.updateAndGet(_ ++ figures): Unit
+    // only the catalog fold installs figures: it sees the whole listing,
+    // so a file a racing fold dropped is never put back
+    val (figures, _) = footerFigures(files.collect { case (_, e, st) if entries(e) => st })
     val bytes = figures.valuesIterator.filter { f =>
       f.rows > 0 && spec.start.forall(f.maxTs >= _) && spec.stop.forall(f.minTs < _)
     }.map(_.bytes).sum
@@ -1874,14 +1893,17 @@ final class BucketStore(val spark: SparkSession, val root: String,
   }
 
   /** (bucket, entry, file) for every file of `base`'s file index — the
-    * listing [[baseTable]] already holds, no job. */
-  private def baseFiles(base: DataFrame): Seq[(String, String, org.apache.hadoop.fs.FileStatus)] =
+    * listing [[baseTable]] already holds, no job — in the partitions
+    * `partitionFilters` (over `bucket` and `entry`) keep. */
+  private def baseFiles(base: DataFrame,
+      partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil)
+      : Seq[(String, String, org.apache.hadoop.fs.FileStatus)] =
     base.queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
     } match {
       case Some(rel: org.apache.spark.sql.execution.datasources.HadoopFsRelation) =>
         val index = rel.location
-        val parts = index.listFiles(Nil, Nil).filter(_.files.nonEmpty)
+        val parts = index.listFiles(partitionFilters, Nil).filter(_.files.nonEmpty)
         val ps = index.partitionSchema
         if (parts.isEmpty) return Nil
         if (!(ps.fieldNames.contains("bucket") && ps.fieldNames.contains("entry")))

@@ -1049,8 +1049,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     val (spec0, ttlMs, continuous) = parseQueryEntry(body)
     val spec = spec0.copy(bucket = Some(bucket),
       entries = Some(spec0.entries.getOrElse(Seq(entry))))
-    val id = registry.open(() => store.table(spec), spec,
-      continuous = continuous, ttlMs = ttlMs, bound = Some(store.scanBound))
+    val id = registry.open(spec, store.scanBound _, continuous, ttlMs)
     rememberBatchLimits(id, spec)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
   }
@@ -1069,8 +1068,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     val continuous = params.get("continuous").exists(v =>
       v.toBooleanOption.getOrElse(
         throw unprocessable("'continue' must be a bool value")))
-    val id = registry.open(() => store.table(spec), spec,
-      continuous = continuous, ttlMs = ttlMs, bound = Some(store.scanBound))
+    val id = registry.open(spec, store.scanBound _, continuous, ttlMs)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
   }
 
@@ -1685,8 +1683,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   private def ioQuery(ex: HttpExchange, bucket: String): Unit = {
     val (spec0, ttlMs, continuous) = parseQueryEntry(new String(readBody(ex), UTF_8))
     val spec = spec0.copy(bucket = Some(bucket))
-    val id = registry.open(() => store.table(spec), spec,
-      continuous = continuous, ttlMs = ttlMs, bound = Some(store.scanBound))
+    val id = registry.open(spec, store.scanBound _, continuous, ttlMs)
     rememberBatchLimits(id, spec)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
   }

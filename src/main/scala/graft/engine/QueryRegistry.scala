@@ -20,21 +20,26 @@ import scala.util.control.NonFatal
   * per-entry readers that already yield ts order
   * (storage/bucket/query.rs:156-318); the distributed plan needs a global
   * (ts, entry) sort instead — a range-sample job, a shuffle-map job and
-  * a result job per drain. When `open` gets a `bound` and the store
-  * bounds the scan at ≤ [[QueryRegistry.MaxBoundedBytes]] uncompressed
-  * bytes, the query plans on one partition
-  * ([[QueryEngine.matching]]): windows, kernel and sort run in one task
-  * and the drain is one job. `#ext` queries always stream (processors
-  * may split rows past any bound), and a continuous cursor bounds again
-  * at each re-arm.
+  * a result job per drain. A cursor's table source returns the table
+  * and an estimate of the bytes its scan reads
+  * (`BucketStore.scanBound`: the uncompressed size of the base files it
+  * can read). When the estimate is ≤ [[QueryRegistry.MaxBoundedBytes]],
+  * the query plans on one partition ([[QueryEngine.matching]]): windows,
+  * kernel and sort run in one task and the drain is one job. `#ext`
+  * queries always stream (processors may split rows past any bound),
+  * and a continuous cursor bounds again at each re-arm. A source with
+  * no estimate (`open(records, spec)`) always streams.
   *
   * MEMORY BOUND: a streaming cursor holds its spec + a lazy local
   * iterator (at most ONE partition's fetched rows once draining starts
   * — Spark's toLocalIterator pulls partitions on demand). A bounded
-  * cursor's one partition is its whole answer, so it holds at most
-  * `MaxBoundedBytes` of rows, and the bounds of all live bounded
-  * cursors are reserved against [[QueryRegistry.BoundedBudgetBytes]]:
-  * an open that would pass the budget streams instead, with the same
+  * cursor's one partition is its whole answer, so once draining starts
+  * it holds the whole answer. The per-cursor cap and the registry-wide
+  * [[QueryRegistry.BoundedBudgetBytes]] limit that answer by its scan
+  * estimate, not by measured heap: the estimate counts encoded page
+  * bytes (dictionary and run-length encoded labels can decode larger)
+  * and not the overlay labels a patched entry joins in. An open whose
+  * estimate would pass the budget streams instead, with the same
   * answer. A reservation is returned when the cursor drains to its end
   * (an exhausted cursor also drops its iterator), is closed, or
   * expires. The registry never exceeds `maxCursors` entries (default
@@ -56,15 +61,14 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
 
   final class Cursor(
       val id: Long,
-      records: () => DataFrame,
+      scan: QuerySpec => (DataFrame, Long),
       spec: QuerySpec,
       continuous: Boolean,
-      ttlMs: Long,
-      bound: Option[QuerySpec => (DataFrame, Long)]) {
+      ttlMs: Long) {
     @volatile private var lastAccess = System.nanoTime()
     private[QueryRegistry] def lastAccessNanos: Long = lastAccess
     private var lastTs: Option[Long] = None
-    // the bound this cursor holds against the registry budget; guarded
+    // the estimate this cursor holds against the registry budget; guarded
     // by its own lock so close/expiry never wait on an in-flight fetch
     private val reservation = new Object
     private var held = 0L
@@ -79,16 +83,14 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
     private var compiled: DataFrame = plan(spec)
     private var iter: Iterator[Row] = null
 
-    /** The query's plan: on one partition when the store bounds it
-      * under the cap and the budget takes the bound, else streaming. */
-    private def plan(s: QuerySpec): DataFrame = bound match {
-      case None => QueryEngine.query(records(), s)
-      case Some(b) =>
-        val (table, bytes) = b(s)
-        if (onePartition(s, bytes) && reserve(bytes))
-          try QueryEngine.query(table, s, onePartition = true)
-          catch { case NonFatal(e) => release(); throw e }
-        else QueryEngine.query(table, s)
+    /** The query's plan: on one partition when the scan estimate is
+      * under the cap and the budget takes it, else streaming. */
+    private def plan(s: QuerySpec): DataFrame = {
+      val (table, bytes) = scan(s)
+      if (onePartition(s, bytes) && reserve(bytes))
+        try QueryEngine.query(table, s, onePartition = true)
+        catch { case NonFatal(e) => release(); throw e }
+      else QueryEngine.query(table, s)
     }
 
     private def reserve(bytes: Long): Boolean = reservation.synchronized {
@@ -173,19 +175,25 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
   private def unreserve(bytes: Long): Unit =
     if (bytes != 0L) reservedBytes.addAndGet(-bytes): Unit
 
+  /** Register a query over a table source without a scan estimate:
+    * the cursor streams. `records` is called again at each continuous
+    * re-arm. */
+  def open(records: () => DataFrame, spec: QuerySpec,
+      continuous: Boolean = false, ttlMs: Long = defaultTtlMs): Long =
+    open(spec, (_: QuerySpec) => (records(), Long.MaxValue), continuous, ttlMs)
+
   /** Register a query; returns its process-global id (query.rs:33-36).
-    * `bound` gives the table to query and a bound on the bytes its scan
-    * reads (`BucketStore.scanBound`); without it the cursor streams over
-    * `records()`.
+    * `scan` gives the table to query and an estimate of the bytes its
+    * scan reads (`BucketStore.scanBound`), which picks the plan (class
+    * doc); it is called at open and at each continuous re-arm.
     * @throws QueryRegistry.TooManyQueriesException when the registry is
     *         at `maxCursors` live (unexpired) cursors — the caller maps
     *         this to HTTP 429; existing cursors are never evicted. */
-  def open(records: () => DataFrame, spec: QuerySpec,
-      continuous: Boolean = false, ttlMs: Long = defaultTtlMs,
-      bound: Option[QuerySpec => (DataFrame, Long)] = None): Long = {
+  def open(spec: QuerySpec, scan: QuerySpec => (DataFrame, Long),
+      continuous: Boolean, ttlMs: Long): Long = {
     evictExpired()
     val id = nextId.getAndIncrement()
-    val cursor = new Cursor(id, records, spec, continuous, ttlMs, bound)
+    val cursor = new Cursor(id, scan, spec, continuous, ttlMs)
     // cap enforcement under a lock: a check-then-put race would let N
     // concurrent opens overshoot the documented bound. The check is
     // O(1); fetch/close stay lock-free on the ConcurrentHashMap.
@@ -229,21 +237,22 @@ object QueryRegistry {
     * evicts live cursors to make room (see class doc). */
   final class TooManyQueriesException(msg: String) extends RuntimeException(msg)
 
-  /** A cursor whose scan the store bounds at this many uncompressed
-    * bytes or fewer plans on one partition: about the default page body
-    * cap (`RS_IO_BATCH_MAX_SIZE`, 8 MB), so a bounded answer is about
-    * one page. */
+  /** A cursor whose scan estimate is this many bytes or fewer plans on
+    * one partition. Set to about the default page body cap
+    * (`RS_IO_BATCH_MAX_SIZE`, 8 MB), so a bounded answer is about one
+    * page; not tuned by measurement. */
   val MaxBoundedBytes: Long = 8L << 20
 
   /** Across the registry, bounded cursors reserve at most this many
-    * bytes; past it, cursors stream. */
+    * bytes of scan estimate; past it, cursors stream. Not tuned by
+    * measurement. */
   val BoundedBudgetBytes: Long = 256L << 20
 
   /** `#ext` processors may split rows past any scan bound. */
   private def hasExt(spec: QuerySpec): Boolean =
     spec.when.exists(w => Parser.parse(w).directives.get("#ext").isDefined)
 
-  /** Whether a one-shot drain of `spec`, whose scan the store bounds at
+  /** Whether a one-shot drain of `spec`, whose scan estimate is
     * `bytes`, plans on one partition: the cursors' per-cursor rule. Such
     * a drain holds its answer only while it runs, so it takes no budget. */
   def onePartition(spec: QuerySpec, bytes: Long): Boolean =

@@ -10,7 +10,6 @@ import org.json4s.jackson.JsonMethods
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import scala.collection.mutable
-import scala.util.control.NonFatal
 
 /** Zenoh-shaped pub/sub seam (SURVEY §2.4).
   *
@@ -251,9 +250,10 @@ final class ZenohBridge(
     * an unbounded selector over a large entry holds at most one
     * partition driver-side — the same paging discipline the HTTP
     * cursors get from [[graft.engine.QueryRegistry]], whose rule also
-    * applies: a scan the store bounds under its cap plans on one
+    * applies: a query whose scan estimate is under the cap plans on one
     * partition, so the drain is one job with no exchange, and the rows
-    * arrive in one pull of at most that bound. Each reply pays
+    * arrive in one pull. An empty store answers no rows; a failing
+    * footer read is an error reply, not an empty answer. Each reply pays
     * its egress bytes as it ships (session.rs:597,672); a mid-stream
     * 429 aborts the remaining replies, which the transport surfaces as
     * an error reply. The `ts`/`last` point reads collect ≤ 1 row by
@@ -303,9 +303,7 @@ final class ZenohBridge(
       strict = q.params.get("strict").exists(_.toBoolean),
       bucket = Some(config.bucket))
     // a small answer plans on one partition (QueryRegistry's rule)
-    val (table, bytes) =
-      try store.scanBound(spec)
-      catch { case NonFatal(_) => (BucketStore.emptyRecords(store.spark), 0L) }
+    val (table, bytes) = store.scanBoundOrEmpty(spec)
     val rows = QueryEngine.query(table, spec,
       onePartition = QueryRegistry.onePartition(spec, bytes))
     val limited = q.params.get("limit").map(_.toInt)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-/** Bounded cursors: a cursor whose scan the store bounds under
+/** Bounded cursors: a cursor whose scan estimate is under
   * [[QueryRegistry.MaxBoundedBytes]] plans on one partition. Pinned
   * here: the one-partition and streaming plans return identical row
   * sequences, (ts, entry) tie order included; a bounded drain is one
@@ -67,8 +67,7 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
 
   private def boundedOpen(reg: QueryRegistry, s: QuerySpec, continuous: Boolean = false,
       ttlMs: Long = 60000L): Long =
-    reg.open(() => store.table(s), s, continuous = continuous, ttlMs = ttlMs,
-      bound = Some(store.scanBound))
+    reg.open(s, store.scanBound _, continuous, ttlMs)
 
   private def drain(reg: QueryRegistry, id: Long): Seq[Row] =
     Iterator.continually(reg.fetch(id, 7).getOrElse(fail(s"cursor $id vanished")))
@@ -91,7 +90,9 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
     val bounded = boundedOpen(reg, s)
     assert(reg.reserved > 0, s"$name: the bounded open took no reservation")
     val one = drain(reg, bounded).map(key)
-    val streamed = drain(reg, reg.open(() => store.table(s), s)).map(key)
+    val streaming = reg.open(() => store.table(s), s)
+    assert(reg.reserved == 0L, s"$name: a source without an estimate must stream")
+    val streamed = drain(reg, streaming).map(key)
     assert(one == streamed, s"$name: one-partition and streaming answers differ")
     val order = one.map(k => (k._1, k._2))
     assert(order == order.sorted, s"$name: not in (ts, entry) order")
@@ -166,7 +167,7 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
     var jobs = 0
     val plans = plansOf("toLocalIterator") {
       jobs = jobsOf {
-        val id = reg.open(() => st.table(s), s, bound = Some(st.scanBound))
+        val id = reg.open(s, st.scanBound _, continuous = false, ttlMs = 60000L)
         assert(reg.reserved == 0L, s"$name: a streaming cursor reserved ${reg.reserved}")
         rows = drain(reg, id)
       }
@@ -193,6 +194,13 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
     val one = store.scanBound(spec(Seq("e000"), from = 0, until = 40))._2
     assert(one > 0 && one < all)
     assert(store.scanBound(spec(Seq("e000"), from = 40, until = 80))._2 == 0L)
+    // literal names prune the listing; a leading `/` and an exclude
+    // resolve as the query resolves them
+    assert(graft.core.EntryPattern.literalNames(Some(Seq("/e000", "!e001"))) == Some(Set("/e000", "e000")))
+    assert(graft.core.EntryPattern.literalNames(Some(Seq("e*"))).isEmpty)
+    assert(store.scanBound(spec(Seq("/e000"), from = 0, until = 40))._2 == one)
+    assert(store.scanBound(spec(Seq("e000", "e001", "!e001"), from = 0, until = 40))._2 == one)
+    assert(store.scanBound(spec(Seq("e*", "!e000"), from = 0, until = 40))._2 == all - one)
     assert(store.scanBound(spec(Seq("nope")))._2 == 0L)
     assert(store.scanBound(spec(Seq("e000")).copy(bucket = Some("other")))._2 == 0L)
   }
@@ -204,7 +212,7 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
       val fits = (QueryRegistry.BoundedBudgetBytes / bound).toInt
       val reg = new QueryRegistry()
       def open(ttlMs: Long = 60000L) =
-        reg.open(() => big.table(s), s, ttlMs = ttlMs, bound = Some(big.scanBound))
+        reg.open(s, big.scanBound _, continuous = false, ttlMs = ttlMs)
       val held = (0 until fits).map(_ => open())
       assert(reg.reserved == fits * bound && reg.reserved <= QueryRegistry.BoundedBudgetBytes)
       // past the budget the next cursor streams, with the same answer

@@ -179,8 +179,8 @@ class WorkloadPlanSweepSpec extends AnyFunSuite with SparkJobs
       val registry = new QueryRegistry()
       val plans = plansOf("toLocalIterator") {
         for (spec <- specs) {
-          val id = registry.open(() => store.table(spec), spec,
-            bound = Some(store.scanBound))
+          val id = registry.open(spec, store.scanBound _,
+            continuous = false, ttlMs = 60000L)
           assert(registry.reserved > 0, s"$spec did not plan bounded")
           while (registry.fetch(id, 85).exists(_.nonEmpty)) ()
         }

@@ -145,6 +145,30 @@ class ZenohBridgeSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("queryable: an empty store answers no rows, a failing footer read " +
+      "is an error, not an empty answer") {
+    val store = newStore()
+    val t = new InMemoryTransport
+    val b = bridge(store, t)
+    b.start()
+    assert(t.get(Query("sensor/imu", params = Map("start" -> "0"))).isEmpty)
+    for (i <- 1 to 3)
+      t.publish(Sample("sensor/imu", s"r$i".getBytes, timestampUs = Some(i.toLong)))
+    b.flush()
+    assert(t.get(Query("sensor/imu", params = Map("start" -> "0"))).size == 3)
+    // a base file whose footer cannot be read, beside the entry's data
+    import scala.jdk.CollectionConverters._
+    val beside = Files.walk(java.nio.file.Paths.get(store.root)).iterator().asScala
+      .find(f => f.toString.endsWith(".parquet") && !f.toString.contains("/_"))
+      .getOrElse(fail("no base file written")).getParent
+    Files.write(beside.resolve("part-99999-broken.parquet"), "not parquet".getBytes)
+    store.invalidateBaseTable()
+    intercept[Exception] {
+      t.get(Query("sensor/imu", params = Map("start" -> "0")))
+    }
+    store.close()
+  }
+
   test("config env parsing + inline credential materialization (cfg/zenoh.rs)") {
     val cfg = Config.fromEnv(Map(
       "RS_ZENOH_ENABLED" -> "true",
