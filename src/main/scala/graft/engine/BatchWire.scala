@@ -17,6 +17,12 @@ import scala.collection.mutable
   *
   * Every parse error mirrors the reference's unprocessable_entity cases as
   * IllegalArgumentException with the same message.
+  *
+  * Each wire — single record, v1 and v2 — decodes into one typed request
+  * per operation ([[WriteRequest]], [[RemoveRequest]], [[UpdateRequest]])
+  * that names its [[Wire]]: how a body-size mismatch and a per-record
+  * clash or miss are answered. [[HttpApi]] keeps one body per operation
+  * over these; each page read passes only the wire's header encoder.
   */
 object BatchWire {
 
@@ -373,9 +379,13 @@ object BatchWire {
       recordHeaders
   }
 
-  /** Decode v2 headers back into (entry, ts, header) triples in
-    * (entryIdx, ts) order. */
-  def decodeBatchV2(headers: Seq[(String, String)]): Seq[EntryRecordHeader] = {
+
+  /** The v2 dictionaries and record headers `(idx, delta, value)` in
+    * (idx, delta) order. Record headers are exactly
+    * `x-reduct-<digits>-<digits>`; other x-reduct-* metadata (entries,
+    * start-ts, labels, query id, errors, v1 times) is not. */
+  private def parseV2(headers: Seq[(String, String)]):
+      (V2, Seq[(Int, Long, String)]) = {
     val hmap = headers.toMap
     val startTs = hmap.get(StartTsHeader) match {
       case None => bad("x-reduct-start-ts header is required")
@@ -385,21 +395,197 @@ object BatchWire {
     }
     val entries = hmap.get(EntriesHeader).map(parseEntriesHeader)
       .getOrElse(bad("x-reduct-entries header is required"))
-    val labelNames = hmap.get(LabelsHeader).map(parseLabelsHeader)
     val recs = headers
-      .filter { case (n, _) =>
-        // record headers are exactly `x-reduct-<digits>-<digits>` — other
-        // x-reduct-* metadata (entries, start-ts, last, errors…) is not
-        n.startsWith(HeaderPrefix) &&
-          n.substring(HeaderPrefix.length).headOption.exists(_.isDigit) }
-      .map { case (n, v) => val (i, d) = parseBatchedHeaderName(n); (i, d, v) }
+      .collect { case (n, v) if n.startsWith(HeaderPrefix) &&
+          n.substring(HeaderPrefix.length).headOption.exists(_.isDigit) =>
+        val (i, d) = parseBatchedHeaderName(n)
+        if (i >= entries.length) bad(s"Entry index '$i' is out of range")
+        (i, d, v)
+      }
       .sortBy(t => (t._1, t._2))
+    (V2(entries, startTs), recs)
+  }
+
+  private def labelNamesV2(headers: Seq[(String, String)]): Option[Seq[String]] =
+    headers.toMap.get(LabelsHeader).map(parseLabelsHeader)
+
+  private def recordsV2(headers: Seq[(String, String)]):
+      (V2, Seq[EntryRecordHeader]) = {
+    val (wire, recs) = parseV2(headers)
+    val labelNames = labelNamesV2(headers)
     val prevByEntry = mutable.HashMap.empty[Int, RecordHeader]
-    recs.map { case (idx, delta, value) =>
-      if (idx >= entries.length) bad(s"Entry index '$idx' is out of range")
+    (wire, recs.map { case (idx, delta, value) =>
       val h = parseRecordHeaderWithDefaults(value, prevByEntry.get(idx), labelNames)
       prevByEntry(idx) = h
-      EntryRecordHeader(entries(idx), startTs + delta, h)
-    }
+      EntryRecordHeader(wire.entries(idx), wire.startTs + delta, h)
+    })
   }
+
+  /** Decode v2 headers back into (entry, ts, header) triples in
+    * (entryIdx, ts) order. */
+  def decodeBatchV2(headers: Seq[(String, String)]): Seq[EntryRecordHeader] =
+    recordsV2(headers)._2
+
+  // ---------------------------------------------------- typed requests
+
+  /** How a wire answers a decoded request. */
+  sealed trait Wire {
+    /** Status and message when the body holds `actual` bytes where the
+      * request's records claim `expected`. */
+    def lengthMismatch(actual: Long, expected: Long): (Int, String) =
+      (422, "Content length mismatch with record headers")
+  }
+
+  /** The single-record routes (`/b/:b/:e?ts=`): a clash or a miss fails
+    * the whole request, and the body is bound by the record writer
+    * (record_writer.rs:133 bigger, write_batched.rs:162 shorter). */
+  case object Single extends Wire {
+    override def lengthMismatch(actual: Long, expected: Long): (Int, String) =
+      if (actual > expected) (400, "Content is bigger than in content-length")
+      else (400, "Content is shorter than expected: no more data to read")
+  }
+
+  /** A batch wire: a record's clash or miss is an entry of the
+    * reference's per-record error map, one response header each. */
+  sealed trait Batch extends Wire {
+    def errorHeader(entry: String, ts: Long): String
+    /** The message of a miss (404) in the error map. */
+    def notFound(ts: Long): String
+  }
+
+  /** v1 `/b/:b/:e/batch`: errors keyed `x-reduct-error-<ts>`. */
+  case object V1 extends Batch {
+    def errorHeader(entry: String, ts: Long): String = s"$ErrorHeaderPrefix$ts"
+    def notFound(ts: Long): String = s"No record with timestamp $ts"
+  }
+
+  /** v2 `/io/:b/...`: errors keyed `x-reduct-error-<idx>-<delta>` against
+    * the batch's dictionaries (io/write.rs:101-103). */
+  final case class V2(entries: Seq[String], startTs: Long) extends Batch {
+    def errorHeader(entry: String, ts: Long): String =
+      s"$ErrorHeaderPrefix${entries.indexOf(entry)}-${ts - startTs}"
+    def notFound(ts: Long): String = "Record not found"
+  }
+
+  /** A write: its records in body order and the body size they claim. */
+  final case class WriteRequest(wire: Wire, records: Seq[EntryRecordHeader],
+      expected: Long)
+
+  /** Removes by (entry, ts) key. */
+  final case class RemoveRequest(wire: Batch, keys: Seq[(String, Long)])
+
+  /** Label updates: per key, the labels to set and the ones to unset. */
+  final case class UpdateRequest(wire: Wire,
+      deltas: Seq[(String, Long, Map[String, String], Set[String])])
+
+  val LabelHeaderPrefix = "x-reduct-label-"
+
+  /** `x-reduct-label-<k>` headers of a single-record request. */
+  def singleLabels(headers: Seq[(String, String)]): Map[String, String] =
+    headers.collect { case (k, v) if k.toLowerCase.startsWith(LabelHeaderPrefix) =>
+      (k.toLowerCase.stripPrefix(LabelHeaderPrefix), v)
+    }.groupMap(_._1)(_._2).map { case (k, vs) => k -> vs.mkString(",") }
+
+  /** The body size the records claim; a declared length must match it. */
+  private def bodySize(records: Seq[EntryRecordHeader], declared: Option[Long]): Long = {
+    val sum = try records.foldLeft(0L)((s, r) => Math.addExact(s, r.header.contentLength))
+      catch { case _: ArithmeticException => bad("Invalid content length") }
+    if (declared.exists(_ != sum)) bad(
+      "content-length header does not match the sum of the content-lengths in the headers")
+    sum
+  }
+
+  private def required(declared: Option[Long]): Long =
+    declared.getOrElse(bad("content-length header is required"))
+
+  private def decodeTimed(headers: Seq[(String, String)],
+      none: String): Seq[(Long, RecordHeader)] = {
+    val timed = sortHeadersByTime(headers).map { case (ts, raw) =>
+      (ts, parseBatchedHeader(raw)) }
+    if (timed.isEmpty) bad(none)
+    timed
+  }
+
+  /** An empty label value unsets (update_labels.rs:116, update_batched.rs:71-82). */
+  private def labelDelta(entry: String, ts: Long, labels: Map[String, String]) = {
+    val (set, unset) = labels.partition(_._2.nonEmpty)
+    (entry, ts, set, unset.keySet)
+  }
+
+  /** Single-record write: the body is the record, `Content-Type` and
+    * `x-reduct-label-*` carry its header, and the declared length is
+    * required (common.rs:12-19). */
+  def decodeWriteSingle(entry: String, ts: Long, headers: Seq[(String, String)],
+      declared: Option[Long]): WriteRequest = {
+    val len = required(declared)
+    val ct = headers.collectFirst { case (k, v) if k.equalsIgnoreCase("content-type") => v }
+      .getOrElse("application/octet-stream")
+    WriteRequest(Single,
+      Seq(EntryRecordHeader(entry, ts, RecordHeader(len, ct, singleLabels(headers)))), len)
+  }
+
+  /** v1 write to one entry (write_batched.rs): the body is the payloads
+    * in ts order. A declared length is optional — a body sent with
+    * Content-Encoding has none — but must match the records' sum
+    * (write_batched.rs:278-298). */
+  def decodeWriteV1(entry: String, headers: Seq[(String, String)],
+      declared: Option[Long]): WriteRequest = {
+    val timed = decodeTimed(headers, "No records in batch")
+    if (timed.exists(_._2.contentLength > Int.MaxValue))
+      bad("Record content length too large")
+    val records = timed.map { case (ts, h) => EntryRecordHeader(entry, ts, h) }
+    WriteRequest(V1, records, bodySize(records, declared))
+  }
+
+  /** v2 multi-entry write: the declared length is required and must
+    * match the records' sum (io/write.rs:154-173). */
+  def decodeWriteV2(headers: Seq[(String, String)],
+      declared: Option[Long]): WriteRequest = {
+    val (wire, records) = recordsV2(headers)
+    WriteRequest(wire, records, bodySize(records, Some(required(declared))))
+  }
+
+  /** v1 remove (remove_batched.rs): the `x-reduct-time-<ts>` names. */
+  def decodeRemoveV1(entry: String, headers: Seq[(String, String)]): RemoveRequest = {
+    val times = sortHeadersByTime(headers).map(_._1)
+    if (times.isEmpty) bad("No records to remove")
+    RemoveRequest(V1, times.map((entry, _)))
+  }
+
+  /** v2 remove: keys by record header name; values carry nothing. */
+  def decodeRemoveV2(headers: Seq[(String, String)]): RemoveRequest = {
+    val (wire, recs) = parseV2(headers)
+    RemoveRequest(wire, recs.map { case (i, d, _) => (wire.entries(i), wire.startTs + d) })
+  }
+
+  def decodeUpdateSingle(entry: String, ts: Long,
+      headers: Seq[(String, String)]): UpdateRequest =
+    UpdateRequest(Single, Seq(labelDelta(entry, ts, singleLabels(headers))))
+
+  /** v1 label update: the v1 record form with the labels to change. */
+  def decodeUpdateV1(entry: String, headers: Seq[(String, String)]): UpdateRequest =
+    UpdateRequest(V1, decodeTimed(headers, "No records to update").map {
+      case (ts, h) => labelDelta(entry, ts, h.labels) })
+
+  /** v2 label update: each record value is a label delta (`k=` unsets). */
+  def decodeUpdateV2(headers: Seq[(String, String)]): UpdateRequest = {
+    val (wire, recs) = parseV2(headers)
+    val labelNames = labelNamesV2(headers)
+    UpdateRequest(wire, recs.map { case (i, d, v) =>
+      val (set, unset) = parseLabelDelta(v, labelNames)
+      (wire.entries(i), wire.startTs + d, set, unset)
+    })
+  }
+
+  /** A page's v1 record headers (read_batched.rs): `x-reduct-time-<ts>`. */
+  def encodeBatchV1(records: Seq[(String, Long, RecordHeader)]): Seq[(String, String)] =
+    records.map { case (_, ts, h) => makeTimeHeaderName(ts) -> formatBatchedHeader(h) }
+
+  /** A single record's headers (read_single.rs). */
+  def encodeSingle(records: Seq[(String, Long, RecordHeader)]): Seq[(String, String)] =
+    records.flatMap { case (_, ts, h) =>
+      Seq("Content-Type" -> h.contentType, "x-reduct-time" -> ts.toString,
+        "x-reduct-last" -> "true") ++
+        h.labels.map { case (k, v) => s"$LabelHeaderPrefix$k" -> v }
+    }
 }

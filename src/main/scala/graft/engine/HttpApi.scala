@@ -56,8 +56,8 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   import Auth._
   import HttpApi._
 
-  /** Count of single-record writes that took the spooled (streamed)
-    * path — observable so tests can prove a large body never buffered. */
+  /** Count of writes whose body took the spooled (streamed) path —
+    * observable so tests can prove a large body never buffered. */
   val spooledWrites = new java.util.concurrent.atomic.AtomicLong
 
   import graft.stream.Streaming
@@ -331,38 +331,44 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
             if rest.length > 1 && rest.last == "q" =>
           auth(ex, WriteAccessPolicy(bucket))
           removeQuery(ex, bucket, rest.dropRight(1).mkString("/"), q)
-        case ("GET", "b" :: bucket :: rest)
+        // v1 batches (read_batched.rs, write_batched.rs,
+        // update_batched.rs, remove_batched.rs): one entry, records named
+        // by `x-reduct-time-<ts>` headers
+        case ("GET" | "HEAD", "b" :: bucket :: rest)
             if rest.length > 1 && rest.last == "batch" =>
           auth(ex, ReadAccessPolicy(bucket))
-          readBatched(ex, bucket, rest.dropRight(1).mkString("/"), q)
+          readPage(ex, bucket, q.getOrElse("q",
+            throw unprocessable("'q' parameter is required")).toLong,
+            q.get("max").map(_.toInt), BatchWire.encodeBatchV1)
         case ("POST", "b" :: bucket :: rest)
             if rest.length > 1 && rest.last == "batch" =>
           auth(ex, WriteAccessPolicy(bucket))
-          writeBatched(ex, bucket, rest.dropRight(1).mkString("/"))
+          writeRecords(ex, bucket, BatchWire.decodeWriteV1(
+            rest.dropRight(1).mkString("/"), requestHeaders(ex), declaredContentLength(ex)))
         case ("PATCH", "b" :: bucket :: rest)
             if rest.length > 1 && rest.last == "batch" =>
           auth(ex, WriteAccessPolicy(bucket))
-          updateBatched(ex, bucket, rest.dropRight(1).mkString("/"))
-        case ("POST", "b" :: bucket :: rest) if rest.nonEmpty =>
-          auth(ex, WriteAccessPolicy(bucket)); writeSingle(ex, bucket, rest.mkString("/"), q)
-        case ("GET", "b" :: bucket :: rest) if rest.nonEmpty =>
-          auth(ex, ReadAccessPolicy(bucket)); readSingle(ex, bucket, rest.mkString("/"), q)
-        case ("PATCH", "b" :: bucket :: rest) if rest.nonEmpty =>
-          auth(ex, WriteAccessPolicy(bucket)); updateSingle(ex, bucket, rest.mkString("/"), q)
+          updateRecords(ex, bucket,
+            BatchWire.decodeUpdateV1(rest.dropRight(1).mkString("/"), requestHeaders(ex)))
         case ("DELETE", "b" :: bucket :: rest)
             if rest.length > 1 && rest.last == "batch" =>
           auth(ex, WriteAccessPolicy(bucket))
-          removeBatched(ex, bucket, rest.dropRight(1).mkString("/"))
+          removeRecords(ex, bucket,
+            BatchWire.decodeRemoveV1(rest.dropRight(1).mkString("/"), requestHeaders(ex)))
+        // single records: one-record batches of the same bodies
+        case ("POST", "b" :: bucket :: rest) if rest.nonEmpty =>
+          auth(ex, WriteAccessPolicy(bucket))
+          writeRecords(ex, bucket, BatchWire.decodeWriteSingle(rest.mkString("/"),
+            recordTs(q), requestHeaders(ex), declaredContentLength(ex)))
+        case ("GET" | "HEAD", "b" :: bucket :: rest) if rest.nonEmpty =>
+          auth(ex, ReadAccessPolicy(bucket)); readSingle(ex, bucket, rest.mkString("/"), q)
+        case ("PATCH", "b" :: bucket :: rest) if rest.nonEmpty =>
+          auth(ex, WriteAccessPolicy(bucket))
+          updateRecords(ex, bucket, BatchWire.decodeUpdateSingle(rest.mkString("/"),
+            recordTs(q), requestHeaders(ex)))
         case ("DELETE", "b" :: bucket :: rest) if rest.nonEmpty =>
           auth(ex, FullAccessPolicy)
           store.removeEntry(bucket, rest.mkString("/")); json(ex, 200, JObject())
-        case ("HEAD", "b" :: bucket :: rest)
-            if rest.length > 1 && rest.last == "batch" =>
-          auth(ex, ReadAccessPolicy(bucket))
-          readBatched(ex, bucket, rest.dropRight(1).mkString("/"), q)
-        case ("HEAD", "b" :: bucket :: rest) if rest.nonEmpty =>
-          auth(ex, ReadAccessPolicy(bucket))
-          readSingle(ex, bucket, rest.mkString("/"), q)
         // ----------------- renames (bucket.rs:73, entry.rs:295)
         case ("PUT", List("b", bucket, "rename")) =>
           auth(ex, FullAccessPolicy)
@@ -473,13 +479,20 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
         case ("POST", List("io", bucket, "q")) =>
           auth(ex, ReadAccessPolicy(bucket)); ioQuery(ex, bucket)
         case ("GET" | "HEAD", List("io", bucket, "read")) =>
-          auth(ex, ReadAccessPolicy(bucket)); ioRead(ex, bucket)
+          auth(ex, ReadAccessPolicy(bucket))
+          readPage(ex, bucket, Option(ex.getRequestHeaders.getFirst(BatchWire.QueryIdHeader))
+            .getOrElse(throw unprocessable(s"${BatchWire.QueryIdHeader} header is required"))
+            .toLong, q.get("max").map(_.toInt), BatchWire.encodeBatchV2)
         case ("POST", List("io", bucket, "write")) =>
-          auth(ex, WriteAccessPolicy(bucket)); ioWrite(ex, bucket)
+          auth(ex, WriteAccessPolicy(bucket))
+          writeRecords(ex, bucket,
+            BatchWire.decodeWriteV2(requestHeaders(ex), declaredContentLength(ex)))
         case ("DELETE", List("io", bucket, "remove")) =>
-          auth(ex, WriteAccessPolicy(bucket)); ioRemove(ex, bucket)
+          auth(ex, WriteAccessPolicy(bucket))
+          removeRecords(ex, bucket, BatchWire.decodeRemoveV2(requestHeaders(ex)))
         case ("PATCH", List("io", bucket, "update")) =>
-          auth(ex, WriteAccessPolicy(bucket)); ioUpdate(ex, bucket)
+          auth(ex, WriteAccessPolicy(bucket))
+          updateRecords(ex, bucket, BatchWire.decodeUpdateV2(requestHeaders(ex)))
         case ("POST", List("io", bucket, "export")) =>
           auth(ex, ReadAccessPolicy(bucket)); ioExport(ex, bucket)
         case _ => throw notFound(s"Route not found: $method ${ex.getRequestURI.getPath}")
@@ -564,19 +577,6 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     }
   }
 
-  /** Declared request-body size, REQUIRED on write paths
-    * (entry/common.rs parse_content_length_from_header):
-    * `Content-Length` first, then `x-reduct-content-length` — the
-    * Fetch-API alternative for browser streaming uploads where the
-    * UA strips Content-Length (PR-1411). A write declaring NEITHER is
-    * a hard 422 ("content-length header is required", common.rs:12-19,
-    * checked before ingress admission, write_single.rs:44-54) — a
-    * chunked upload with no declared size would otherwise be admitted
-    * at 0 ingress bytes while its body streams unbounded into the
-    * spool, defeating `RS_RATE_LIMIT_INGRESS` and the storage-cap
-    * preflight for exactly the client those limits exist to stop.
-    * A present-but-non-numeric value is equally a 422 (common.rs:24-26),
-    * never silently coerced to 0. */
   /** Non-identity Content-Encoding of the request, lowercased. */
   private def requestContentEncoding(ex: HttpExchange): Option[String] =
     Option(ex.getRequestHeaders.getFirst("Content-Encoding"))
@@ -590,7 +590,25 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   private def requestBody(ex: HttpExchange): java.io.InputStream =
     HttpApi.decodeBody(ex.getRequestBody, requestContentEncoding(ex))
 
-  private def declaredContentLengthOpt(ex: HttpExchange): Option[Long] =
+  /** Request headers as (lowercased name, value) pairs, one per value. */
+  private def requestHeaders(ex: HttpExchange): Seq[(String, String)] =
+    ex.getRequestHeaders.asScala.toSeq.flatMap { case (k, vs) =>
+      vs.asScala.map(v => (k.toLowerCase, v))
+    }
+
+  /** Declared request-body size (entry/common.rs
+    * parse_content_length_from_header): `Content-Length` first, then
+    * `x-reduct-content-length` — the Fetch-API alternative for browser
+    * streaming uploads where the UA strips Content-Length (PR-1411).
+    * Each wire's decoder applies its rule to it ([[BatchWire]]): the
+    * single-record and v2 writes REQUIRE it ("content-length header is
+    * required", common.rs:12-19, checked before ingress admission,
+    * write_single.rs:44-54) — a chunked upload with no declared size
+    * would otherwise be admitted at 0 ingress bytes while its body
+    * streams unbounded into the spool, defeating `RS_RATE_LIMIT_INGRESS`
+    * and the storage-cap preflight. A present-but-non-numeric value is a
+    * 422 (common.rs:24-26), never silently coerced to 0. */
+  private def declaredContentLength(ex: HttpExchange): Option[Long] =
     Option(ex.getRequestHeaders.getFirst("Content-Length"))
       .map(("content-length", _))
       // a compressed body's content-length describes the COMPRESSED
@@ -604,10 +622,6 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
         value.trim.toLongOption.filter(_ >= 0)
           .getOrElse(throw unprocessable(s"$name header must be a number"))
       }
-
-  private def declaredContentLength(ex: HttpExchange): Long =
-    declaredContentLengthOpt(ex)
-      .getOrElse(throw unprocessable("content-length header is required"))
 
   private def auth(ex: HttpExchange, policy: Policy): Unit =
     tokens.check(Option(ex.getRequestHeaders.getFirst("Authorization")),
@@ -840,79 +854,111 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     json(ex, 200, JObject())
   }
 
-  // ------------------------------------------------------------ entry IO
+  // ------------------------------------------- entry IO, every wire
 
-  private def labelHeaders(ex: HttpExchange): Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    ex.getRequestHeaders.asScala.flatMap { case (k, vs) =>
-      val lower = k.toLowerCase
-      if (lower.startsWith("x-reduct-label-"))
-        Some(lower.stripPrefix("x-reduct-label-") -> vs.asScala.mkString(","))
-      else None
-    }.toMap
-  }
+  private def recordTs(q: Map[String, String]): Long =
+    q.getOrElse("ts", throw unprocessable("'ts' parameter is required")).toLong
 
-  private def writeSingle(ex: HttpExchange, bucket: String, entry: String,
-      q: Map[String, String]): Unit = {
-    checkEntryName(entry) // entry creation path (engine.rs get_or_create)
-    val ts = q.getOrElse("ts",
-      throw unprocessable("'ts' parameter is required")).toLong
-    // ingress admission against the declared size, BEFORE the body is
-    // consumed (write_single.rs:44-54) — a too-large upload is refused
-    // without paying its transfer; same for the global storage cap
-    // (engine.rs:226 checks it in begin_write with the declared size)
-    val declared = declaredContentLength(ex)
-    limits.checkIngress(requestClientIp(ex), declared)
-    store.ensureStorageLimit(declared)
-    // the whole body copy + write holds one in-flight writer slot
-    // (write_record.rs:69) — a flood of slow uploads queues here
-    // instead of exhausting threads and staging disk
-    inFlight.withWriterSlot { writeSingleAdmitted(ex, bucket, entry, ts, declared) }
-  }
+  private def alreadyExists(ts: Long): String = s"A record with timestamp $ts already exists"
 
-  private def writeSingleAdmitted(ex: HttpExchange, bucket: String,
-      entry: String, ts: Long, declared: Long): Unit = {
-    val ct = Option(ex.getRequestHeaders.getFirst("Content-Type"))
-      .getOrElse("application/octet-stream")
-    // Stream, don't buffer (write_single.rs streams bodies): read up to
-    // the spool threshold in memory; anything larger is copied to a
-    // staging file on the store's filesystem in 64 KiB chunks, so a
-    // 10 MB record costs this handler one chunk buffer, not 10 MB.
-    val in = requestBody(ex)
-    val head = in.readNBytes(spoolThresholdBytes)
-    // The body must match its declaration. With a real Content-Length the
-    // server bounds the stream, so this only bites the alt-header +
-    // chunked path (PR-1411) — where a mismatch previously stored a
-    // truncated record silently. Reference messages: record_writer.rs:133
-    // (bigger), write_batched.rs:162 (shorter, bad_request both).
-    def checkDeclared(actual: Long): Unit = {
-      if (actual > declared)
-        throw ApiError(400, "Content is bigger than in content-length")
-      if (actual < declared)
-        throw ApiError(400,
-          "Content is shorter than expected: no more data to read")
+  /** The one write body under every wire (write_single.rs,
+    * write_batched.rs, io/write.rs). Entry names (engine.rs
+    * get_or_create), ingress admission and the storage-cap preflight
+    * (engine.rs:226) run on the decoded request BEFORE any body byte is
+    * read, so a refused upload never pays its transfer. The body copy
+    * and the store write then hold one in-flight writer slot
+    * (write_record.rs:69): a flood of slow uploads queues here instead
+    * of exhausting threads and staging disk. An in-request duplicate
+    * (entry, ts) — aliased header spellings such as x-reduct-time-0100
+    * and x-reduct-time-100 — keeps its first record and answers the
+    * clash like the reference's second begin_write, while its slice
+    * still advances the offsets (write_batched.rs:322-330); the
+    * survivors are in-request unique, as the store's admission
+    * requires. A body under the spool threshold is sliced in memory and
+    * coalesced with concurrent writes into one store mutation; a larger
+    * one streams to a staging file in 64 KiB chunks and is sliced
+    * executor-side ([[BucketStore.writeStagedSlices]]). Either way the
+    * store admits each record inside its mutation section: a stored key
+    * is a clash, the rest is written. A batch wire answers each clash in
+    * its error map on a 200; the single-record route answers 409. */
+  private def writeRecords(ex: HttpExchange, bucket: String,
+      req: BatchWire.WriteRequest): Unit = {
+    req.records.map(_.entry).distinct.foreach(checkEntryName)
+    limits.checkIngress(requestClientIp(ex), req.expected)
+    store.ensureStorageLimit(req.expected)
+    val keys = req.records.map(r => (r.entry, r.timestamp))
+    val seen = scala.collection.mutable.HashSet.empty[(String, Long)]
+    val kept = req.records.zip(req.records.scanLeft(0L)(_ + _.header.contentLength))
+      .filter { case (r, _) => seen.add((r.entry, r.timestamp)) }
+    def checkLength(actual: Long): Unit = if (actual != req.expected) {
+      val (status, msg) = req.wire.lengthMismatch(actual, req.expected)
+      throw ApiError(status, msg)
     }
-    val rejected =
+    val rejected = inFlight.withWriterSlot {
+      val in = requestBody(ex)
+      val head = in.readNBytes(spoolThresholdBytes)
       if (head.length < spoolThresholdBytes) {
-        checkDeclared(head.length.toLong)
-        // coalesced: concurrent single writes share one store mutation
-        writeCoalescer.submit(BucketStore.FoldReq(bucket,
-          Seq(BucketStore.FoldRec(entry, ts, labelHeaders(ex), ct, head))))
+        checkLength(head.length.toLong)
+        writeCoalescer.submit(BucketStore.FoldReq(bucket, kept.map { case (r, at) =>
+          BucketStore.FoldRec(r.entry, r.timestamp, r.header.labels, r.header.contentType,
+            java.util.Arrays.copyOfRange(head, at.toInt, (at + r.header.contentLength).toInt))
+        }))
       } else {
         val staged = spoolToStaging(head, in)
         val fs = staged.getFileSystem(store.spark.sparkContext.hadoopConfiguration)
-        val len = fs.getFileStatus(staged).getLen
-        try checkDeclared(len)
+        try checkLength(fs.getFileStatus(staged).getLen)
         catch { case e: ApiError => fs.delete(staged, false); throw e }
         spooledWrites.incrementAndGet()
-        store.writeStagedSlices(bucket, staged, Seq(BucketStore.StagedSlice(
-          entry, ts, labelHeaders(ex), ct, 0L, len)))
+        store.writeStagedSlices(bucket, staged, kept.map { case (r, at) =>
+          BucketStore.StagedSlice(r.entry, r.timestamp, r.header.labels,
+            r.header.contentType, at, r.header.contentLength)
+        })
       }
-    if (rejected.nonEmpty)
-      throw conflict(s"A record with timestamp $ts already exists")
+    }
+    val clashes = rejected ++ keys.diff(keys.distinct)
+    req.wire match {
+      case wire: BatchWire.Batch =>
+        for ((entry, ts) <- clashes)
+          ex.getResponseHeaders.set(wire.errorHeader(entry, ts), s"409,${alreadyExists(ts)}")
+      case BatchWire.Single =>
+        for ((_, ts) <- clashes.headOption) throw conflict(alreadyExists(ts))
+    }
     createdBuckets.add(bucket)
-    json(ex, 200, JObject())
+    json(ex, 200, if (req.wire != BatchWire.V1) JObject()
+      else JObject("written_records" -> JInt(BigInt(kept.size - rejected.size))))
   }
+
+  /** The one label-update body (update_labels.rs, update_batched.rs, io
+    * update). One folded mutation yields the matched keys, which are
+    * both the count and the existence check: no separate read job and
+    * no check-then-apply window. A miss fails the single-record route
+    * with 404, is a per-record 404 entry on v1, and only lowers v2's
+    * count. */
+  private def updateRecords(ex: HttpExchange, bucket: String,
+      req: BatchWire.UpdateRequest): Unit = {
+    val matched = updateCoalescer.submit((bucket, req.deltas))
+    if (req.wire == BatchWire.Single && matched.isEmpty)
+      throw notFound("No record found")
+    if (req.wire == BatchWire.V1)
+      reportMisses(ex, BatchWire.V1, req.deltas.map(d => (d._1, d._2)), matched)
+    json(ex, 200, if (req.wire == BatchWire.Single) JObject()
+      else JObject("updated_records" -> JInt(BigInt(matched.size))))
+  }
+
+  /** The one keyed-remove body (remove_batched.rs, io remove): misses
+    * are per-record 404 entries of the wire's error map. */
+  private def removeRecords(ex: HttpExchange, bucket: String,
+      req: BatchWire.RemoveRequest): Unit = {
+    val result = removeCoalescer.submit((bucket, req.keys))
+    reportMisses(ex, req.wire, req.keys, result)
+    json(ex, 200, JObject(
+      "removed_records" -> JInt(result.values.count(identity))))
+  }
+
+  private def reportMisses(ex: HttpExchange, wire: BatchWire.Batch,
+      keys: Seq[(String, Long)], hit: ((String, Long)) => Boolean): Unit =
+    for ((entry, ts) <- keys if !hit((entry, ts)))
+      ex.getResponseHeaders.set(wire.errorHeader(entry, ts), s"404,${wire.notFound(ts)}")
 
   /** Copy `head` + the rest of the request stream to a staging file on
     * the store's filesystem in 64 KiB chunks; returns the staged path. */
@@ -950,53 +996,15 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   }
 
   private def readSingle(ex: HttpExchange, bucket: String, entry: String,
-      q: Map[String, String]): Unit = {
+      q: Map[String, String]): Unit = q.get("q") match {
     // ?q=<id>: sequential cursor read — the next record of an open query
     // (read_single.rs + query_test.py:41-76 cursor semantics)
-    q.get("q").foreach { qid =>
-      val rows = registry.fetch(qid.toLong, 1)
-        .getOrElse(throw notFound(s"Query $qid doesn't exist or expired"))
-      if (rows.isEmpty) {
-        ex.getResponseHeaders.set("x-reduct-last", "true")
-        respond(ex, 204, Array.empty)
-      } else serveRecord(ex, rows.head)
-      return
-    }
-    val r = recordAt(bucket, entry, q)
-    serveRecord(ex, r)
+    case Some(id) => readPage(ex, bucket, id.toLong, Some(1), BatchWire.encodeSingle)
+    case None     => serveRecord(ex, recordAt(bucket, entry, q))
   }
 
-  private def serveRecord(ex: HttpExchange, r: Row): Unit = {
-    val payload = Option(r.getAs[Array[Byte]]("payload")).getOrElse(Array.empty[Byte])
-    // egress admission AFTER the record resolves (404 beats 429) and
-    // only when a body will ship — HEAD is free (read_single.rs:99-104)
-    if (!ex.getRequestMethod.equalsIgnoreCase("HEAD"))
-      limits.checkEgress(requestClientIp(ex), payload.length.toLong)
-    store.usage.countRead(r.getAs[String]("bucket"),
-      r.getAs[String]("entry"), 1L, payload.length.toLong)
-    val h = ex.getResponseHeaders
-    h.set("Content-Type", Option(r.getAs[String]("content_type"))
-      .filter(_.nonEmpty).getOrElse("application/octet-stream"))
-    h.set("x-reduct-time", r.getAs[Long]("ts").toString)
-    h.set("x-reduct-last", "true")
-    val labels = Option(r.getAs[collection.Map[String, String]]("labels"))
-      .getOrElse(Map.empty[String, String])
-    for ((k, v) <- labels) h.set(s"x-reduct-label-$k", v)
-    respond(ex, 200, payload)
-  }
-
-  private def updateSingle(ex: HttpExchange, bucket: String, entry: String,
-      q: Map[String, String]): Unit = {
-    val ts = q.getOrElse("ts",
-      throw unprocessable("'ts' parameter is required")).toLong
-    // empty header value removes the label (update_labels.rs:116)
-    val (set, remove) = labelHeaders(ex).partition(_._2.nonEmpty)
-    // one key through the batched PATCH's fold: the match set is the
-    // existence check, so no separate read job answers the 404
-    val matched = updateCoalescer.submit((bucket, Seq((entry, ts, set, remove.keySet))))
-    if (matched.isEmpty) throw notFound("No record found")
-    json(ex, 200, JObject())
-  }
+  private def serveRecord(ex: HttpExchange, r: Row): Unit =
+    servePage(ex, Seq(r), last = true, BatchWire.encodeSingle)
 
   // -------------------------------------------------------------- query
 
@@ -1050,7 +1058,6 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     val spec = spec0.copy(bucket = Some(bucket),
       entries = Some(spec0.entries.getOrElse(Seq(entry))))
     val id = registry.open(spec, store.scanBound _, continuous, ttlMs)
-    rememberBatchLimits(id, spec)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
   }
 
@@ -1078,17 +1085,15 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   private def longParam(name: String, v: String, err: String): Long =
     v.toLongOption.filter(_ >= 0).getOrElse(throw unprocessable(err))
 
-  /** `#batch_records` / `#batch_size` directives — per-query overrides of
-    * the batched-read page limits (filters/when/io_cfg.rs). Instance
-    * defaults come from `RS_IO_BATCH_MAX_RECORDS` /
-    * `RS_IO_BATCH_MAX_SIZE` / `RS_IO_BATCH_MAX_METADATA_SIZE`
-    * (cfg/io.rs:9-11,50-61: 85 records / 8 MB body / 512 kB metadata).
+  /** Batched-read page limits (cfg/io.rs:9-11,50-61): 85 records, 8 MB
+    * body, 512 kB metadata by default, `RS_IO_BATCH_MAX_RECORDS` /
+    * `RS_IO_BATCH_MAX_SIZE` / `RS_IO_BATCH_MAX_METADATA_SIZE` per
+    * instance, and a query's own `#batch_records` / `#batch_size`
+    * directives (filters/when/io_cfg.rs), read from its cursor's spec.
     * The reference's `RS_IO_BATCH_TIMEOUT`/`RS_IO_BATCH_RECORDS_TIMEOUT`
     * bound how long its push-side batcher WAITS to fill a batch; graft's
     * pages are pull-based (a fetch returns whatever the cursor has, at
     * once), so there is nothing to wait on — deliberately N/A. */
-  private val queryLimits =
-    new java.util.concurrent.ConcurrentHashMap[Long, (Int, Long)]()
   private val DefaultBatchRecords =
     env.get("RS_IO_BATCH_MAX_RECORDS")
       .flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(85)
@@ -1099,93 +1104,87 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     env.get("RS_IO_BATCH_MAX_METADATA_SIZE")
       .flatMap(Provisioning.parseByteSize).filter(_ > 0).getOrElse(512000L)
 
-  private def rememberBatchLimits(id: Long, spec: QuerySpec): Unit =
-    for (w <- spec.when) {
-      val d = graft.cond.Parser.parse(w).directives
-      val mr = d.single("#batch_records").map(_.asInt.toInt)
-      val mb = d.single("#batch_size").map(_.asInt)
-      if (mr.isDefined || mb.isDefined)
-        queryLimits.put(id, (mr.getOrElse(DefaultBatchRecords),
-          mb.getOrElse(DefaultBatchBytes)))
-    }
-
-  /** Drain one page from a cursor: up to the record cap, stopping once
-    * the payload-byte or metadata-byte budget is exceeded (at least one
-    * record is always served — read_batched.rs:187-189 checks the caps
-    * AFTER admitting a record). Returns (rows, last). */
-  private def fetchPage(id: Long, maxParam: Option[Int]): (Seq[Row], Boolean) = {
-    val (dirRec, dirBytes) = queryLimits.getOrDefault(id,
-      (DefaultBatchRecords, DefaultBatchBytes))
-    val maxRec = math.min(maxParam.getOrElse(dirRec), dirRec)
-    val out = Seq.newBuilder[Row]
-    var n = 0
-    var bytes = 0L
-    var metaBytes = 0L
-    var last = false
-    while (n < maxRec && bytes < dirBytes && metaBytes < MaxBatchMetadataBytes
-        && !last) {
-      registry.fetch(id, 1) match {
-        case None => throw notFound(s"Query $id doesn't exist or expired")
-        case Some(Nil) => last = true
-        case Some(rows) =>
-          val r = rows.head
-          bytes += Option(r.getAs[Array[Byte]]("payload")).map(_.length.toLong)
-            .getOrElse(0L)
-          // approximate serialized v1 header size: ts digits + length,
-          // content-type, and label pairs — what the client's header
-          // parser must buffer (batch_max_metadata_size's concern)
-          metaBytes += 48L +
-            Option(r.getAs[String]("content_type")).fold(0)(_.length) +
-            Option(r.getAs[collection.Map[String, String]]("labels"))
-              .fold(0L)(_.iterator.map { case (k, v) =>
-                k.length + v.length + 2L }.sum)
-          out += r
-          n += 1
+  /** The one page reader under every cursor wire (read_batched.rs,
+    * io/read.rs, read_single.rs `?q=`): drains cursor `id`, which must
+    * have been opened over `bucket`, up to the record cap, stopping once
+    * the payload or metadata budget is spent (at least one record always
+    * ships — read_batched.rs:187-189 checks the caps AFTER admitting a
+    * record). `encode` is the wire's record-header encoder. */
+  private def readPage(ex: HttpExchange, bucket: String, id: Long,
+      maxParam: Option[Int], encode: Seq[PageRecord] => Seq[(String, String)]): Unit = {
+    val (rows, last) = registry.fetch(id, bucket) { cursor =>
+      val d = cursor.spec.when.map(graft.cond.Parser.parse(_).directives)
+      val dirRec = d.flatMap(_.single("#batch_records")).map(_.asInt.toInt)
+        .getOrElse(DefaultBatchRecords)
+      val maxBytes = d.flatMap(_.single("#batch_size")).map(_.asInt)
+        .getOrElse(DefaultBatchBytes)
+      val maxRec = math.min(maxParam.getOrElse(dirRec), dirRec)
+      val out = Seq.newBuilder[Row]
+      var n = 0
+      var bytes = 0L
+      var metaBytes = 0L
+      var last = false
+      while (n < maxRec && bytes < maxBytes && metaBytes < MaxBatchMetadataBytes
+          && !last) {
+        cursor.fetch(1).headOption match {
+          case None => last = true
+          case Some(r) =>
+            val ((_, _, h), payload) = pageRecord(r)
+            bytes += payload.length
+            // approximate serialized v1 header size: ts digits + length,
+            // content-type, and label pairs — what the client's header
+            // parser must buffer (batch_max_metadata_size's concern)
+            metaBytes += 48L + h.contentType.length +
+              h.labels.iterator.map { case (k, v) => k.length + v.length + 2L }.sum
+            out += r
+            n += 1
+        }
       }
-    }
-    (out.result(), last)
+      (out.result(), last)
+    }.getOrElse(throw notFound(s"Query $id doesn't exist or expired"))
+    servePage(ex, rows, last, encode)
   }
 
-  private def readBatched(ex: HttpExchange, bucket: String, entry: String,
-      q: Map[String, String]): Unit = {
-    val id = q.getOrElse("q", throw unprocessable("'q' parameter is required")).toLong
-    val (rows, last) = fetchPage(id, q.get("max").map(_.toInt))
+  /** A page's record as its wire sees it: (entry, ts, header), payload. */
+  private type PageRecord = (String, Long, BatchWire.RecordHeader)
+
+  private def pageRecord(r: Row): (PageRecord, Array[Byte]) = {
+    val payload = Option(r.getAs[Array[Byte]]("payload")).getOrElse(Array.empty[Byte])
+    val labels = Option(r.getAs[collection.Map[String, String]]("labels"))
+      .getOrElse(Map.empty[String, String])
+    val ct = Option(r.getAs[String]("content_type"))
+      .filter(_.nonEmpty).getOrElse("application/octet-stream")
+    ((r.getAs[String]("entry"), r.getAs[Long]("ts"),
+      BatchWire.RecordHeader(payload.length.toLong, ct, labels.toMap)), payload)
+  }
+
+  /** Egress admission on the page size before any header or usage tally
+    * is emitted (read_batched.rs:214-216, io/read.rs:237-239; after the
+    * record resolves, so 404 beats 429, read_single.rs:99-104; HEAD ships
+    * no body and is exempt), then the wire's record headers and the
+    * payloads written sequentially — no concatenated copy of the page. */
+  private def servePage(ex: HttpExchange, rows: Seq[Row], last: Boolean,
+      encode: Seq[PageRecord] => Seq[(String, String)]): Unit = {
+    val h = ex.getResponseHeaders
     if (rows.isEmpty) {
-      ex.getResponseHeaders.set("x-reduct-last", "true")
+      h.set("x-reduct-last", "true")
       respond(ex, 204, Array.empty)
       return
     }
-    // egress admission on the assembled batch size, before any record
-    // header or usage tally is emitted (read_batched.rs:214-216); HEAD
-    // ships no body and is exempt
-    if (!ex.getRequestMethod.equalsIgnoreCase("HEAD"))
-      limits.checkEgress(requestClientIp(ex), rows.iterator.map(r =>
-        Option(r.getAs[Array[Byte]]("payload")).map(_.length.toLong)
-          .getOrElse(0L)).sum)
-    val h = ex.getResponseHeaders
-    val payloads = rows.map { r =>
-      val payload = Option(r.getAs[Array[Byte]]("payload")).getOrElse(Array.empty[Byte])
-      store.usage.countRead(r.getAs[String]("bucket"),
-        r.getAs[String]("entry"), 1L, payload.length.toLong)
-      val labels = Option(r.getAs[collection.Map[String, String]]("labels"))
-        .getOrElse(Map.empty[String, String])
-      val ct = Option(r.getAs[String]("content_type"))
-        .filter(_.nonEmpty).getOrElse("application/octet-stream")
-      h.set(BatchWire.makeTimeHeaderName(r.getAs[Long]("ts")),
-        BatchWire.formatBatchedHeader(
-          BatchWire.RecordHeader(payload.length.toLong, ct, labels.toMap)))
-      payload
-    }
+    val head = ex.getRequestMethod.equalsIgnoreCase("HEAD")
+    val recs = rows.map(pageRecord)
+    val totalLen = recs.iterator.map(_._2.length.toLong).sum
+    if (!head) limits.checkEgress(requestClientIp(ex), totalLen)
+    for ((r, ((entry, _, _), payload)) <- rows.zip(recs))
+      store.usage.countRead(r.getAs[String]("bucket"), entry, 1L, payload.length.toLong)
     h.set("Content-Type", "application/octet-stream")
     h.set("x-reduct-last", last.toString)
-    // write payloads sequentially — no concatenated copy of the batch
-    val totalLen = payloads.iterator.map(_.length.toLong).sum
-    if (totalLen == 0 || ex.getRequestMethod.equalsIgnoreCase("HEAD"))
-      respond(ex, 200, Array.empty)
+    for ((name, value) <- encode(recs.map(_._1))) h.set(name, value)
+    if (totalLen == 0 || head) respond(ex, 200, Array.empty)
     else {
       ex.sendResponseHeaders(200, totalLen)
       val os = ex.getResponseBody
-      try payloads.foreach(p => os.write(p)) finally os.close()
+      try recs.foreach(r => os.write(r._2)) finally os.close()
     }
   }
 
@@ -1672,19 +1671,11 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
 
   // ------------------------------------------------------- io API v2
 
-  private def requestHeaders(ex: HttpExchange): Seq[(String, String)] = {
-    import scala.jdk.CollectionConverters._
-    ex.getRequestHeaders.asScala.toSeq.flatMap { case (k, vs) =>
-      vs.asScala.map(v => (k.toLowerCase, v))
-    }
-  }
-
   /** POST /io/:bucket/q — multi-entry query; entries come in the body. */
   private def ioQuery(ex: HttpExchange, bucket: String): Unit = {
     val (spec0, ttlMs, continuous) = parseQueryEntry(new String(readBody(ex), UTF_8))
     val spec = spec0.copy(bucket = Some(bucket))
     val id = registry.open(spec, store.scanBound _, continuous, ttlMs)
-    rememberBatchLimits(id, spec)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
   }
 
@@ -1746,337 +1737,6 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
         "rows" -> JInt(BigInt(s.rows)),
         "min_ts" -> JInt(BigInt(s.minTs)),
         "max_ts" -> JInt(BigInt(s.maxTs)))).toList)))
-  }
-
-  /** GET /io/:bucket/read — drain a cursor as a batch-protocol-v2
-    * response: entries/start-ts/labels dictionaries + per-record
-    * `x-reduct-<idx>-<delta>` delta headers, concatenated payloads. */
-  private def ioRead(ex: HttpExchange, bucket: String): Unit = {
-    val id = Option(ex.getRequestHeaders.getFirst(BatchWire.QueryIdHeader))
-      .getOrElse(throw unprocessable(s"${BatchWire.QueryIdHeader} header is required"))
-      .toLong
-    val (rows, last) = fetchPage(id, queryParams(ex).get("max").map(_.toInt))
-    if (rows.isEmpty) {
-      ex.getResponseHeaders.set("x-reduct-last", "true")
-      respond(ex, 204, Array.empty)
-      return
-    }
-    // egress admission on the page size before emission (io/read.rs:237-239)
-    if (!ex.getRequestMethod.equalsIgnoreCase("HEAD"))
-      limits.checkEgress(requestClientIp(ex), rows.iterator.map(r =>
-        Option(r.getAs[Array[Byte]]("payload")).map(_.length.toLong)
-          .getOrElse(0L)).sum)
-    val recs = rows.map { r =>
-      val payload = Option(r.getAs[Array[Byte]]("payload")).getOrElse(Array.empty[Byte])
-      store.usage.countRead(r.getAs[String]("bucket"),
-        r.getAs[String]("entry"), 1L, payload.length.toLong)
-      val labels = Option(r.getAs[collection.Map[String, String]]("labels"))
-        .getOrElse(Map.empty[String, String])
-      val ct = Option(r.getAs[String]("content_type"))
-        .filter(_.nonEmpty).getOrElse("application/octet-stream")
-      ((r.getAs[String]("entry"), r.getAs[Long]("ts"),
-        BatchWire.RecordHeader(payload.length.toLong, ct, labels.toMap)), payload)
-    }
-    val h = ex.getResponseHeaders
-    for ((name, value) <- BatchWire.encodeBatchV2(recs.map(_._1)))
-      h.set(name, value)
-    h.set("Content-Type", "application/octet-stream")
-    h.set("x-reduct-last", last.toString)
-    // write payloads sequentially — no concatenated copy of the batch
-    val totalLen = recs.iterator.map(_._2.length.toLong).sum
-    if (totalLen == 0 || ex.getRequestMethod.equalsIgnoreCase("HEAD"))
-      respond(ex, 200, Array.empty)
-    else {
-      ex.sendResponseHeaders(200, totalLen)
-      val os = ex.getResponseBody
-      try recs.foreach(r => os.write(r._2)) finally os.close()
-    }
-  }
-
-  /** POST /io/:bucket/write — batch-protocol-v2 multi-entry write. Record
-    * metadata travels in headers, the body is the concatenated payloads —
-    * so large batches spool to staging like single records do, and the
-    * payload slicing happens executor-side ([[BucketStore.writeStagedSlices]]). */
-  private def ioWrite(ex: HttpExchange, bucket: String): Unit = {
-    // v2 REQUIRES the declared header AND it must match the sum of the
-    // per-record lengths (io/write.rs:154-173 check_and_get_content_length
-    // → parse_content_length_from_header), all checked BEFORE the body;
-    // ingress admission + storage-cap preflight on that size
-    // (io/write.rs:68-78, engine.rs:226)
-    val headers = requestHeaders(ex)
-    val decoded = BatchWire.decodeBatchV2(headers)
-    val expected = decoded.map(_.header.contentLength).sum
-    if (declaredContentLength(ex) != expected) throw unprocessable(
-      "content-length header does not match the sum of the content-lengths in the headers")
-    limits.checkIngress(requestClientIp(ex), expected)
-    store.ensureStorageLimit(expected)
-    // body copy + write under one in-flight writer slot (write_record.rs:69)
-    inFlight.withWriterSlot { ioWriteAdmitted(ex, bucket, headers, decoded) }
-  }
-
-  private def ioWriteAdmitted(ex: HttpExchange, bucket: String,
-      headers: Seq[(String, String)],
-      decoded: Seq[BatchWire.EntryRecordHeader]): Unit = {
-    val expected = decoded.map(_.header.contentLength).sum
-    // error headers are keyed (entry_idx, delta) in the v2 wire
-    // (io/write.rs:101-103 err_to_batched_header)
-    val hmap = headers.toMap
-    val entryIdx = hmap.get(BatchWire.EntriesHeader)
-      .map(BatchWire.parseEntriesHeader).getOrElse(Seq.empty)
-      .zipWithIndex.toMap
-    val startTs = hmap.get(BatchWire.StartTsHeader).map(_.toLong).getOrElse(0L)
-    val respH = ex.getResponseHeaders
-    def rejectHeader(entry: String, ts: Long): Unit =
-      respH.set(s"${BatchWire.ErrorHeaderPrefix}${entryIdx.getOrElse(entry, 0)}-" +
-        s"${ts - startTs}", s"409,A record with timestamp $ts already exists")
-    // in-request duplicate (entry, ts) — a repeated v2 record header —
-    // degrades to its per-record 409 like write_batched (keep-first);
-    // preserves the fold's in-request-uniqueness contract
-    val dupIdx: Set[Int] = {
-      val seen = scala.collection.mutable.HashSet.empty[(String, Long)]
-      decoded.iterator.zipWithIndex
-        .collect { case (r, i) if !seen.add((r.entry, r.timestamp)) => i }.toSet
-    }
-    for (i <- dupIdx) rejectHeader(decoded(i).entry, decoded(i).timestamp)
-    val in = requestBody(ex)
-    val head = in.readNBytes(spoolThresholdBytes)
-    val rejected = if (head.length < spoolThresholdBytes) {
-      val body = head
-      var offset = 0
-      val rows = decoded.zipWithIndex.map { case (rec, i) =>
-        val len = rec.header.contentLength.toInt
-        if (offset + len > body.length)
-          throw unprocessable("Content length mismatch with record headers")
-        val payload = java.util.Arrays.copyOfRange(body, offset, offset + len)
-        offset += len
-        (rec, payload, i)
-      }
-      if (offset != body.length)
-        throw unprocessable("Content length mismatch with record headers")
-      // coalesced + per-record conflict degrade: an existing (entry, ts)
-      // comes back as its x-reduct-error-<idx>-<delta> entry on a 200
-      // with the REST written — the reference's io/write.rs error map
-      // (start_writing fails into error_map per record), which the old
-      // whole-request 409 here diverged from
-      writeCoalescer.submit(BucketStore.FoldReq(bucket,
-        rows.collect { case (rec, payload, i) if !dupIdx(i) =>
-          BucketStore.FoldRec(rec.entry, rec.timestamp, rec.header.labels,
-            rec.header.contentType, payload)
-        }))
-    } else {
-      val staged = spoolToStaging(head, in)
-      val fs = staged.getFileSystem(store.spark.sparkContext.hadoopConfiguration)
-      if (fs.getFileStatus(staged).getLen != expected) {
-        fs.delete(staged, false)
-        throw unprocessable("Content length mismatch with record headers")
-      }
-      // spooled batches keep their own mutation section (the body is on
-      // disk, not foldable without re-spooling); the store admits each
-      // record inside it, same semantics as the coalesced path
-      val offsets = decoded.toVector.scanLeft(0L)(_ + _.header.contentLength)
-      spooledWrites.incrementAndGet()
-      store.writeStagedSlices(bucket, staged, decoded.zipWithIndex.collect {
-        case (rec, i) if !dupIdx(i) => BucketStore.StagedSlice(rec.entry,
-          rec.timestamp, rec.header.labels, rec.header.contentType,
-          offsets(i), rec.header.contentLength)
-      })
-    }
-    for ((entry, ts) <- rejected) rejectHeader(entry, ts)
-    createdBuckets.add(bucket)
-    json(ex, 200, JObject())
-  }
-
-  /** DELETE /io/:bucket/remove — remove by (entry, ts) keys from v2
-    * headers; per-record misses reported as x-reduct-error-* headers. */
-  private def ioRemove(ex: HttpExchange, bucket: String): Unit = {
-    val headers = requestHeaders(ex)
-    val hmap = headers.toMap
-    val entries = hmap.get(BatchWire.EntriesHeader)
-      .map(BatchWire.parseEntriesHeader)
-      .getOrElse(throw unprocessable("x-reduct-entries header is required"))
-    val startTs = hmap.get(BatchWire.StartTsHeader)
-      .getOrElse(throw unprocessable("x-reduct-start-ts header is required")).toLong
-    // remove targets are addressed by header NAME only (no content metadata)
-    val keys = headers.collect {
-      case (n, _) if n.startsWith(BatchWire.HeaderPrefix) &&
-          !Set(BatchWire.EntriesHeader, BatchWire.StartTsHeader,
-            BatchWire.LabelsHeader, BatchWire.QueryIdHeader).contains(n) &&
-          !n.startsWith(BatchWire.ErrorHeaderPrefix) &&
-          !n.startsWith(BatchWire.TimeHeaderPrefix) &&
-          n.substring(BatchWire.HeaderPrefix.length).headOption.exists(_.isDigit) =>
-        val (idx, delta) = BatchWire.parseBatchedHeaderName(n)
-        if (idx >= entries.length) throw unprocessable(s"Entry index '$idx' is out of range")
-        (idx, entries(idx), startTs + delta)
-    }
-    val result = removeCoalescer.submit((bucket, keys.map(k => (k._2, k._3))))
-    val h = ex.getResponseHeaders
-    for ((idx, entry, ts) <- keys if !result((entry, ts)))
-      h.set(s"${BatchWire.ErrorHeaderPrefix}$idx-${ts - startTs}", "404,Record not found")
-    json(ex, 200, JObject(
-      "removed_records" -> JInt(result.values.count(identity))))
-  }
-
-  /** PATCH /io/:bucket/update — per-record label deltas (`k=` removes),
-    * applied in ONE batched partition-rewrite pass. */
-  private def ioUpdate(ex: HttpExchange, bucket: String): Unit = {
-    val headers = requestHeaders(ex)
-    val hmap = headers.toMap
-    val entries = hmap.get(BatchWire.EntriesHeader)
-      .map(BatchWire.parseEntriesHeader)
-      .getOrElse(throw unprocessable("x-reduct-entries header is required"))
-    val startTs = hmap.get(BatchWire.StartTsHeader)
-      .getOrElse(throw unprocessable("x-reduct-start-ts header is required")).toLong
-    val labelNames = hmap.get(BatchWire.LabelsHeader).map(BatchWire.parseLabelsHeader)
-    val updates = headers
-      .filter { case (n, _) => n.startsWith(BatchWire.HeaderPrefix) &&
-        !Set(BatchWire.EntriesHeader, BatchWire.StartTsHeader,
-          BatchWire.LabelsHeader, BatchWire.QueryIdHeader).contains(n) &&
-        !n.startsWith(BatchWire.ErrorHeaderPrefix) &&
-        !n.startsWith(BatchWire.TimeHeaderPrefix) &&
-        n.substring(BatchWire.HeaderPrefix.length).headOption.exists(_.isDigit) }
-      .map { case (n, v) =>
-        val (idx, delta) = BatchWire.parseBatchedHeaderName(n)
-        if (idx >= entries.length) throw unprocessable(s"Entry index '$idx' is out of range")
-        // value here is just the label delta (no content length for updates)
-        val (set, remove) = BatchWire.parseLabelDelta(v, labelNames)
-        (entries(idx), startTs + delta, set, remove)
-      }
-    val matched = updateCoalescer.submit((bucket, updates.toSeq))
-    json(ex, 200, JObject("updated_records" -> JInt(BigInt(matched.size))))
-  }
-
-  /** POST /b/:b/:e/batch (write_batched.rs): one request writes many
-    * records to ONE entry. `x-reduct-time-<ts>` headers carry the batch
-    * v1 record form `content_length,content_type,k=v,...`; the body is
-    * the payloads concatenated in ascending-ts order. Per-record
-    * admission failures (existing timestamp → 409) come back as
-    * `x-reduct-error-<ts>` headers on a 200 with the REST of the batch
-    * written — the reference's error map, not an all-or-nothing batch.
-    * Spools past the threshold like writeSingle/ioWrite. */
-  private def writeBatched(ex: HttpExchange, bucket: String, entry: String): Unit = {
-    val timed = BatchWire.sortHeadersByTime(requestHeaders(ex))
-      .map { case (ts, raw) => (ts, BatchWire.parseBatchedHeader(raw)) }
-    if (timed.isEmpty) throw unprocessable("No records in batch")
-    for ((_, h) <- timed if h.contentLength > Int.MaxValue)
-      throw unprocessable("Record content length too large")
-    // The batch's expected size is the SUM of the per-record lengths.
-    // A declared content-length header is OPTIONAL here — a body sent
-    // with Content-Encoding arrives without one, and the record sum
-    // defines the size then — but when present it must MATCH the sum
-    // (write_batched.rs:278-298 check_and_get_content_length). Ingress
-    // admission + storage-cap preflight run on the sum, before the body
-    // is consumed (write_batched.rs:66-76, engine.rs:226).
-    val expected = timed.map(_._2.contentLength).sum
-    declaredContentLengthOpt(ex).foreach { declared =>
-      if (declared != expected) throw unprocessable(
-        "content-length header does not match the sum of the content-lengths in the headers")
-    }
-    limits.checkIngress(requestClientIp(ex), expected)
-    store.ensureStorageLimit(expected)
-    val respH = ex.getResponseHeaders
-    def reject(ts: Long): Unit = respH.set(s"x-reduct-error-$ts",
-      s"409,A record with timestamp $ts already exists")
-    // in-batch duplicate ts (aliased header spellings — x-reduct-time-0100
-    // and x-reduct-time-100 parse to the same ts) degrades to its
-    // per-record 409 like the reference: the second begin_write at the
-    // same ts fails into the error map and a RecordDrainer eats its body
-    // slice while the REST of the batch writes (write_batched.rs:322-330)
-    // — never an all-or-nothing batch failure. Keep-first leaves the
-    // surviving records in-batch unique, as the store's admission requires.
-    val dupIdx: Set[Int] = {
-      val seen = scala.collection.mutable.HashSet.empty[Long]
-      timed.iterator.zipWithIndex
-        .collect { case ((ts, _), i) if !seen.add(ts) => i }.toSet
-    }
-    for (i <- dupIdx) reject(timed(i)._1)
-    val in = requestBody(ex)
-    val head = in.readNBytes(spoolThresholdBytes)
-    // The per-record conflict admission (the reference checks per
-    // record) runs inside the SAME store mutation section as the write,
-    // on both paths below: a record whose timestamp is already stored
-    // degrades to its per-record 409 entry and the rest is written
-    // (write_batched.rs error map). The body is fully consumed BEFORE
-    // the section so a slow client never holds the store lock.
-    val written: Int = inFlight.withWriterSlot {
-      val rejected = if (head.length < spoolThresholdBytes) {
-        val body = head
-        // slice every record first — conflicting records still consume
-        // their body slice, so offsets are per-batch, not per-survivor
-        var offset = 0
-        val sliced = timed.zipWithIndex.map { case ((ts, hdr), i) =>
-          val len = hdr.contentLength.toInt
-          if (offset + len > body.length)
-            throw unprocessable("Content length mismatch with record headers")
-          val payload = java.util.Arrays.copyOfRange(body, offset, offset + len)
-          offset += len
-          (ts, hdr, payload, i)
-        }
-        if (offset != body.length)
-          throw unprocessable("Content length mismatch with record headers")
-        // Coalesced: the per-record conflict admission, quota/cap checks,
-        // write, and usage counting all run inside writeFolded's shared
-        // mutation section — concurrent /batch writers share ONE Spark job
-        // per bucket instead of one each (the measured serving bottleneck,
-        // SCALE.md r17/r18), with serial per-request semantics preserved.
-        writeCoalescer.submit(BucketStore.FoldReq(bucket,
-          sliced.collect { case (ts, hdr, payload, i) if !dupIdx(i) =>
-            BucketStore.FoldRec(entry, ts, hdr.labels, hdr.contentType, payload)
-          }))
-      } else {
-        val staged = spoolToStaging(head, in)
-        val fs = staged.getFileSystem(store.spark.sparkContext.hadoopConfiguration)
-        if (fs.getFileStatus(staged).getLen != expected) {
-          fs.delete(staged, false)
-          throw unprocessable("Content length mismatch with record headers")
-        }
-        // a skipped record's slice still advances the offset
-        val offsets = timed.toVector.scanLeft(0L)(_ + _._2.contentLength)
-        spooledWrites.incrementAndGet()
-        store.writeStagedSlices(bucket, staged, timed.zipWithIndex.collect {
-          case ((ts, hdr), i) if !dupIdx(i) => BucketStore.StagedSlice(entry,
-            ts, hdr.labels, hdr.contentType, offsets(i), hdr.contentLength)
-        })
-      }
-      for ((_, ts) <- rejected) reject(ts)
-      timed.size - dupIdx.size - rejected.size
-    }
-    json(ex, 200, JObject("written_records" -> JInt(BigInt(written))))
-  }
-
-  /** PATCH /b/:b/:e/batch (update_batched.rs): batched label updates for
-    * one entry — same `x-reduct-time-<ts>` v1 headers; a label with an
-    * EMPTY value means remove, others merge (update_batched.rs:71-82).
-    * Missing records come back as `x-reduct-error-<ts>: 404,...`. */
-  private def updateBatched(ex: HttpExchange, bucket: String, entry: String): Unit = {
-    val timed = BatchWire.sortHeadersByTime(requestHeaders(ex))
-      .map { case (ts, raw) => (ts, BatchWire.parseBatchedHeader(raw)) }
-    if (timed.isEmpty) throw unprocessable("No records to update")
-    val updates = timed.map { case (ts, hdr) =>
-      val (set, remove) = hdr.labels.partition(_._2.nonEmpty)
-      (entry, ts, set, remove.keySet)
-    }
-    // ONE folded mutation yields both the updated count and the 404 map
-    // (matched-key attribution) — the old existence pre-scan was a
-    // separate Spark job per PATCH and a check-then-apply race window
-    val matched = updateCoalescer.submit((bucket, updates))
-    val respH = ex.getResponseHeaders
-    for (ts <- timed.map(_._1) if !matched((entry, ts)))
-      respH.set(s"x-reduct-error-$ts", "404,No record with timestamp " + ts)
-    json(ex, 200, JObject("updated_records" -> JInt(BigInt(matched.size))))
-  }
-
-  /** DELETE /b/:b/:e/batch (remove_batched.rs): delete the records named
-    * by `x-reduct-time-<ts>` headers; misses come back as
-    * `x-reduct-error-<ts>` headers. */
-  private def removeBatched(ex: HttpExchange, bucket: String, entry: String): Unit = {
-    val times = BatchWire.sortHeadersByTime(requestHeaders(ex)).map(_._1)
-    if (times.isEmpty) throw unprocessable("No records to remove")
-    val result = removeCoalescer.submit((bucket, times.map(ts => (entry, ts))))
-    val h = ex.getResponseHeaders
-    for (ts <- times if !result((entry, ts)))
-      h.set(s"x-reduct-error-$ts", "404,No record with timestamp " + ts)
-    json(ex, 200, JObject(
-      "removed_records" -> JInt(result.values.count(identity))))
   }
 
   /** DELETE /b/:bucket/:entry/q — legacy remove-by-params

@@ -62,7 +62,7 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
   final class Cursor(
       val id: Long,
       scan: QuerySpec => (DataFrame, Long),
-      spec: QuerySpec,
+      val spec: QuerySpec,
       continuous: Boolean,
       ttlMs: Long) {
     @volatile private var lastAccess = System.nanoTime()
@@ -216,6 +216,14 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
   def fetch(id: Long, maxRecords: Int): Option[Seq[Row]] = {
     evictExpired()
     Option(cursors.get(id)).map(_.fetch(maxRecords))
+  }
+
+  /** Runs `read` on cursor `id` when it is live and was opened over
+    * `bucket`. Ids are process-wide and sequential, so a caller scoped
+    * to one bucket sees another bucket's cursor as unknown (None). */
+  def fetch[T](id: Long, bucket: String)(read: Cursor => T): Option[T] = {
+    evictExpired()
+    Option(cursors.get(id)).filter(_.spec.bucket.contains(bucket)).map(read)
   }
 
   def close(id: Long): Unit = Option(cursors.remove(id)).foreach(_.retire())

@@ -115,4 +115,64 @@ class BatchWireSpec extends AnyFunSuite {
     val bare = headers.find(_._1 == makeBatchedHeaderName(0, 2000)).get._2
     assert(bare == "7")
   }
+
+  // ------------------------------------------------------ typed requests
+
+  test("typed form: single-record write round trip; the declared length is required") {
+    val h = RecordHeader(4, "text/plain", Map("k" -> "v", "x" -> "a,b"))
+    val wire = encodeSingle(Seq(("e", 7L, h)))
+    assert(decodeWriteSingle("e", 7L, wire, Some(4L)) ==
+      WriteRequest(Single, Seq(EntryRecordHeader("e", 7L, h)), 4L))
+    intercept[IllegalArgumentException](decodeWriteSingle("e", 7L, wire, None))
+    assert(Single.lengthMismatch(5, 4)._1 == 400 && Single.lengthMismatch(3, 4)._1 == 400)
+    // an empty label value unsets on the single PATCH
+    assert(decodeUpdateSingle("e", 7L, Seq("x-reduct-label-k" -> "", "X-Reduct-Label-n" -> "1")) ==
+      UpdateRequest(Single, Seq(("e", 7L, Map("n" -> "1"), Set("k")))))
+  }
+
+  test("typed form: v1 write, update and remove round trip with ts error keys") {
+    val recs = Seq(
+      ("e", 200L, RecordHeader(3, "text/plain", Map("k" -> "2"))),
+      ("e", 100L, RecordHeader(2, "application/json", Map.empty[String, String])))
+    val wire = encodeBatchV1(recs)
+    val w = decodeWriteV1("e", wire, None)
+    assert(w == WriteRequest(V1, recs.sortBy(_._2).map { case (e, ts, h) =>
+      EntryRecordHeader(e, ts, h) }, 5L))
+    assert(decodeWriteV1("e", wire, Some(5L)) == w)
+    intercept[IllegalArgumentException](decodeWriteV1("e", wire, Some(4L)))
+    intercept[IllegalArgumentException](decodeWriteV1("e", Seq.empty, None))
+    assert(w.wire.lengthMismatch(4, 5)._1 == 422)
+    assert(V1.errorHeader("e", 100L) == "x-reduct-error-100")
+    assert(decodeRemoveV1("e", wire) == RemoveRequest(V1, Seq(("e", 100L), ("e", 200L))))
+    assert(decodeUpdateV1("e", Seq(makeTimeHeaderName(100L) -> "0,,k=,n=1")) ==
+      UpdateRequest(V1, Seq(("e", 100L, Map("n" -> "1"), Set("k")))))
+  }
+
+  test("typed form: v2 write, key-only remove and label-delta update round " +
+      "trip; an out-of-range entry index is an IllegalArgumentException") {
+    val recs = Seq(
+      ("a", 1000L, RecordHeader(2, "text/plain", Map("k" -> "1"))),
+      ("b", 1005L, RecordHeader(3, "text/plain", Map.empty[String, String])))
+    val wire = encodeBatchV2(recs)
+    val v2 = V2(Seq("a", "b"), 1000L)
+    assert(decodeWriteV2(wire, Some(5L)) ==
+      WriteRequest(v2, recs.map { case (e, ts, h) => EntryRecordHeader(e, ts, h) }, 5L))
+    intercept[IllegalArgumentException](decodeWriteV2(wire, None))
+    intercept[IllegalArgumentException](decodeWriteV2(wire, Some(6L)))
+    assert(v2.errorHeader("b", 1005L) == "x-reduct-error-1-5")
+    // remove: keys by header name, values carry nothing
+    val meta = Seq(EntriesHeader -> makeEntriesHeader(Seq("a", "b")), StartTsHeader -> "1000")
+    val keys = meta ++ Seq(makeBatchedHeaderName(1, 5) -> "0", makeBatchedHeaderName(0, 0) -> "0")
+    assert(decodeRemoveV2(keys) == RemoveRequest(v2, Seq(("a", 1000L), ("b", 1005L))))
+    // update: each value is a label delta against the labels dictionary
+    val index = new LabelIndex
+    val delta = buildLabelDelta(Map("mark" -> "yes"), Map.empty, Some(Map("k" -> "1")), index)
+    val upd = meta ++ Seq(LabelsHeader -> index.asHeader.get,
+      makeBatchedHeaderName(0, 0) -> delta)
+    assert(decodeUpdateV2(upd) == UpdateRequest(v2, Seq(("a", 1000L, Map("mark" -> "yes"), Set("k")))))
+    val outOfRange = meta :+ (makeBatchedHeaderName(2, 0) -> "1,text/plain")
+    intercept[IllegalArgumentException](decodeRemoveV2(outOfRange))
+    intercept[IllegalArgumentException](decodeUpdateV2(outOfRange))
+    intercept[IllegalArgumentException](decodeWriteV2(outOfRange, Some(1L)))
+  }
 }

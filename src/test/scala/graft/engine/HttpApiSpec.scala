@@ -1378,21 +1378,80 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
   test("in-batch duplicate ts degrades to its per-record 409, rest written " +
       "(write_batched.rs:322-330 begin_write-fails-into-error-map)") {
     implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    assert(req("POST", "/b/dup").statusCode() == 200)
-    // x-reduct-time-0100 and x-reduct-time-100 alias the SAME ts — the
-    // whole batch must NOT fail: keep-first, per-record 409 on the alias,
-    // the unrelated ts=200 record still lands
-    val w = req("POST", "/b/dup/e/batch", "aaaaaaaaaacccc".getBytes,
-      headers = Seq(
-        "x-reduct-time-0100" -> "5,text/plain",
-        "x-reduct-time-100" -> "5,text/plain",
-        "x-reduct-time-200" -> "4,text/plain"))
-    assert(w.statusCode() == 200, new String(w.body()))
-    assert(w.headers().firstValue("x-reduct-error-100").get().startsWith("409"))
-    assert(w.headers().firstValue("x-reduct-error-200").isEmpty)
-    assert((jsonOf(w) \ "written_records").extract[Long] == 2L)
-    assert(new String(req("GET", "/b/dup/e?ts=100").body()) == "aaaaa")
-    assert(new String(req("GET", "/b/dup/e?ts=200").body()) == "cccc")
+    // x-reduct-time-0100 and x-reduct-time-100 alias the SAME ts (as do
+    // x-reduct-0-100 and x-reduct-0-0100 on v2) — the whole batch must
+    // NOT fail: keep-first, per-record 409 on the alias, the unrelated
+    // ts=200 record still lands. The aliased pair carries equal payloads:
+    // the server sees the pair in no defined order. One row per wire,
+    // with a body under the spool threshold and one over it.
+    for ((bucket, v2, size) <- Seq(("dup", false, 5), ("dupv1s", false, 600 * 1024),
+        ("dupv2", true, 5), ("dupv2s", true, 600 * 1024))) {
+      assert(req("POST", s"/b/$bucket").statusCode() == 200)
+      val (a, c) = (Array.fill[Byte](size)('a'), Array.fill[Byte](size - 1)('c'))
+      val headers =
+        if (v2) Seq(BatchWire.EntriesHeader -> "e", BatchWire.StartTsHeader -> "0",
+          "x-reduct-0-0100" -> s"$size,text/plain", "x-reduct-0-100" -> s"$size,text/plain",
+          "x-reduct-0-200" -> s"${size - 1},text/plain")
+        else Seq("x-reduct-time-0100" -> s"$size,text/plain",
+          "x-reduct-time-100" -> s"$size,text/plain",
+          "x-reduct-time-200" -> s"${size - 1},text/plain")
+      val spooled = api.spooledWrites.get()
+      val w = req("POST", if (v2) s"/io/$bucket/write" else s"/b/$bucket/e/batch",
+        a ++ a ++ c, headers = headers)
+      assert(w.statusCode() == 200, new String(w.body()))
+      val (dupKey, otherKey) = if (v2) ("x-reduct-error-0-100", "x-reduct-error-0-200")
+        else ("x-reduct-error-100", "x-reduct-error-200")
+      assert(w.headers().firstValue(dupKey).get().startsWith("409"), bucket)
+      assert(w.headers().firstValue(otherKey).isEmpty, bucket)
+      if (!v2) assert((jsonOf(w) \ "written_records").extract[Long] == 2L)
+      assert(api.spooledWrites.get() == spooled + (if (size > 5) 1 else 0), bucket)
+      assert(java.util.Arrays.equals(req("GET", s"/b/$bucket/e?ts=100").body(), a), bucket)
+      assert(java.util.Arrays.equals(req("GET", s"/b/$bucket/e?ts=200").body(), c), bucket)
+    }
+  }
+
+  test("cursor reads are scoped to the URL's bucket on every route; the " +
+      "owner still drains in full under the v1 page cap") {
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    assert(req("POST", "/b/scopeA").statusCode() == 200)
+    assert(req("POST", "/b/scopeB").statusCode() == 200)
+    for (i <- 0 until 5)
+      assert(req("POST", s"/b/scopeA/e?ts=${i * 10}", s"s$i".getBytes)
+        .statusCode() == 200)
+    val bOnly = (jsonOf(req("POST", "/tokens/scope-b-reader",
+      """{"permissions": {"read": ["scopeB"]}}""".getBytes)) \ "value").extract[String]
+    def open(): Long = (jsonOf(req("POST", "/b/scopeA/e/q",
+      """{"when": {"#batch_records": 2}}""".getBytes)) \ "id").extract[Long]
+    // each route: (its request for cursor `id` under `bucket`, the
+    // records a page may carry)
+    val routes = Seq[(String, (String, Long, String) => HttpResponse[Array[Byte]], Int)](
+      ("v1", (b, id, tok) => req("GET", s"/b/$b/e/batch?q=$id", token = tok), 2),
+      ("v2", (b, id, tok) => req("GET", s"/io/$b/read", token = tok,
+        headers = Seq(BatchWire.QueryIdHeader -> id.toString)), 2),
+      ("single", (b, id, tok) => req("GET", s"/b/$b/e?q=$id", token = tok), 1))
+    for ((name, read, cap) <- routes) {
+      val id = open()
+      val foreign = read("scopeB", id, bOnly)
+      assert(foreign.statusCode() == 404, s"$name: ${foreign.statusCode()}")
+      assert(new String(foreign.body()).contains(s"Query $id doesn't exist or expired"))
+      val pages = Iterator.continually(read("scopeA", id, "root-token"))
+        .takeWhile(_.statusCode() == 200).map(p => new String(p.body())).toList
+      assert(pages.mkString == "s0s1s2s3s4", s"$name drains in full: $pages")
+      assert(pages.forall(_.length <= 2 * cap) && pages.head.length == 2 * cap,
+        s"$name pages by ${cap}: $pages")
+    }
+  }
+
+  test("every write wire checks entry names before storing (engine.rs:580-605)") {
+    assert(req("POST", "/b/names").statusCode() == 200)
+    val v1 = req("POST", "/b/names/bad!/batch", "x".getBytes,
+      headers = Seq("x-reduct-time-1" -> "1,text/plain"))
+    assert(v1.statusCode() == 422, new String(v1.body()))
+    val v2 = req("POST", "/io/names/write", "y".getBytes,
+      headers = BatchWire.encodeBatchV2(Seq(
+        ("a b", 2L, BatchWire.RecordHeader(1, "text/plain", Map.empty)))))
+    assert(v2.statusCode() == 422, new String(v2.body()))
+    assert(store.existingKeys("names", Seq(("bad!", 1L), ("a b", 2L))).isEmpty)
   }
 
   test("io v2 write conflict degrades per record (io/write.rs error map): " +
