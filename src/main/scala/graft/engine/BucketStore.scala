@@ -98,9 +98,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
   private[graft] val writeLock = new Object
 
   /** Monotone data version: bumped after every mutation (all mutators
-    * run through [[mutating]]). Size figures and other derived serving
-    * metadata cache against it, so an idle store serves them without
-    * re-walking the tree. */
+    * run through [[mutating]]). The base file index, the entry catalog
+    * and the size figures it carries cache against it, so an idle store
+    * serves them without re-listing the tree. */
   private val dataVersionCounter = new java.util.concurrent.atomic.AtomicLong(0L)
   def dataVersion: Long = dataVersionCounter.get
 
@@ -251,44 +251,6 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * engine writes (replication sink, `$system` telemetry) are not
     * counted — no telemetry on telemetry. */
   val usage = new UsageCounters
-
-  // ------------- incremental compaction candidates (r19, r18 weak mark)
-  //
-  // The compaction tick used to FULL-WALK the storage tree every probe
-  // (every bucket=*/entry=*/dt=* dir listed per tick, even idle) — O(all
-  // partitions) in FS metadata ops per minute, unreachable on an object
-  // store at the 10k-entry design point. The write path already knows
-  // which (bucket, entry) pairs it touched, so mutators feed a BOUNDED
-  // dirty set and compact() probes only those entries' dt dirs; an idle
-  // tick costs ZERO listings. The set holds entry pairs (not dt
-  // triples) so a marking is one set-add per touched entry, and it is
-  // bounded: past `dirtyEntriesCap` distinct pairs it collapses to the
-  // all-dirty flag (one full walk amortizes past that fan-out anyway).
-  // Boot starts all-dirty — the bootstrap debt walk — and a generic
-  // `write(records)` whose entry set the caller didn't declare marks
-  // all-dirty too (rare: bulk ingest; wire paths all declare).
-  private val dirtyEntriesCap = 4096
-  private val dirtyAllEntries = new java.util.concurrent.atomic.AtomicBoolean(true)
-  private val dirtyEntrySet =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
-
-  /** listStatus calls made by the LAST compact() candidate probe — the
-    * spec/probe hook pinning per-tick FS cost ∝ touched partitions. */
-  private[graft] val lastProbeListings = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private[graft] def markEntriesDirty(pairs: Iterable[(String, String)]): Unit = {
-    if (dirtyAllEntries.get) return
-    val it = pairs.iterator
-    while (it.hasNext) {
-      dirtyEntrySet.add(it.next())
-      if (dirtyEntrySet.size > dirtyEntriesCap) { markAllEntriesDirty(); return }
-    }
-  }
-
-  private[graft] def markAllEntriesDirty(): Unit = {
-    dirtyAllEntries.set(true)
-    dirtyEntrySet.clear()
-  }
 
   private def dtCol = to_date(timestamp_micros(col("ts")))
 
@@ -969,12 +931,12 @@ final class BucketStore(val spark: SparkSession, val root: String,
       codec: Option[String] = None,
       incomingBytes: Long = -1L,
       /** (bucket, entry) pairs this batch writes into, when the caller
-        * knows them (every wire path does) — feeds the incremental
-        * compaction candidate set; None marks the whole store dirty.
-        * The declaration must be exact: every row's (bucket, entry) is
-        * in it. Conflict.Skip trusts it to skip the anti-join for an
-        * append past every declared entry's latest record, so a row of
-        * an undeclared entry would be admitted unchecked. */
+        * knows them (every wire path does). The declaration must be
+        * exact: every row's (bucket, entry) is in it. Conflict.Skip
+        * trusts it to skip the anti-join for an append past every
+        * declared entry's latest record, so a row of an undeclared entry
+        * would be admitted unchecked; one declared entry within one day
+        * is written without an exchange. */
       touchedEntries: Option[Seq[(String, String)]] = None,
       /** (min, max) record ts of the batch when the caller knows them
         * (driver-assembled batches — the `$system` flushes assign every
@@ -1048,10 +1010,6 @@ final class BucketStore(val spark: SparkSession, val root: String,
     // per-write codec override (replication transfer compression); None
     // keeps the session default (zstd, set above)
     codec.fold(writer)(c => writer.option("compression", c)).parquet(root)
-    touchedEntries match {
-      case Some(pairs) => markEntriesDirty(pairs)
-      case None => markAllEntriesDirty()
-    }
   }
 
   /** `batch` without the keys already stored (Conflict.Skip). With the
@@ -1469,15 +1427,10 @@ final class BucketStore(val spark: SparkSession, val root: String,
 
   /** Batched per-record label updates (the io v2 PATCH verb): each key
     * carries its own set/remove delta; ONE overlay append applies them
-    * all. Returns the number of records found and patched. */
-  def updateLabelsBatch(bucket: String,
-      updates0: Seq[(String, Long, Map[String, String], Set[String])]): Long =
-    updateLabelsMatched(bucket, updates0).size.toLong
-
-  /** [[updateLabelsBatch]] returning the matched (entry, ts) keys —
-    * the folded variant attributes matches back to each folded request.
-    * The keys come from HTTP headers, so the batch is driver-sized: the
-    * current labels of the requested keys are collected in one job
+    * all. Returns the (entry, ts) keys found and patched — the folded
+    * variant attributes matches back to each folded request. The keys
+    * come from HTTP headers, so the batch is driver-sized: the current
+    * labels of the requested keys are collected in one job
     * ([[storedLabels]]), merged here, and the merged rows appended. */
   def updateLabelsMatched(bucket: String,
       updates0: Seq[(String, Long, Map[String, String], Set[String])])
@@ -1756,16 +1709,19 @@ final class BucketStore(val spark: SparkSession, val root: String,
 
   /** Entry catalog: record count and oldest/latest ts per (bucket,
     * entry), folded on the driver from the Parquet footers of the files
-    * in [[baseTable]]'s cached file index — no Spark job. Each file adds
-    * its row-group row counts and the min/max of its `ts` column-chunk
-    * statistics; label patches cannot move these figures, so the overlay
-    * is not read. It is the one source of `/info`, `/list`, bucket info,
-    * the usage snapshot, [[entries]] and the serving writers' append
-    * rule ([[mayBeStored]]). Cached per [[dataVersion]] with the size
-    * figures' rule: a build that overlapped a mutation serves its caller
-    * but is not installed, and a build that throws installs nothing.
-    * Exact after every mutator by construction: it is a function of the
-    * current file listing, with no per-mutator bookkeeping. */
+    * in [[baseTable]]'s cached file index — no Spark job — beside each
+    * entry's file bytes and file count, read from the same listing. Each
+    * file adds its row-group row counts and the min/max of its `ts`
+    * column-chunk statistics; label patches cannot move these figures,
+    * so the overlay is not read. It is the one source of `/info`,
+    * `/list`, bucket info, the usage snapshot, the size figures and
+    * quotas ([[bucketSizeBytes]], [[storeSizeBytes]], [[entryStats]]),
+    * [[entries]] and the serving writers' append rule ([[mayBeStored]]).
+    * Cached per [[dataVersion]]: a build that overlapped a mutation
+    * serves its caller but is not installed, and a build that throws
+    * installs nothing. Exact after every mutator by construction: it is
+    * a function of the current file listing, with no per-mutator
+    * bookkeeping. */
   private val catalogCache = new java.util.concurrent.atomic.AtomicReference[
     (Long, Map[String, BucketStore.BucketEntries])]()
   /** Build count — observable by specs pinning one build per version. */
@@ -1810,17 +1766,20 @@ final class BucketStore(val spark: SparkSession, val root: String,
     val t0 = System.nanoTime()
     val files = baseFiles(baseTableOrEmpty())
     val t1 = System.nanoTime()
-    val (byPath, unread) = footerFigures(files.map(_._3))
+    val (byPath, unread) = footerFigures(files.map(_._4))
     // the fold sees the whole listing: vanished files drop out here
     footerCache.set(byPath)
     val catalog = files.groupBy(_._1).map { case (bucket, fs) =>
-      bucket -> BucketStore.BucketEntries(fs.groupBy(_._2).flatMap { case (entry, es) =>
-        val figs = es.map(e => byPath(e._3.getPath.toString)).filter(_.rows > 0)
+      val byEntry = fs.groupBy(_._2)
+      bucket -> BucketStore.BucketEntries(byEntry.flatMap { case (entry, es) =>
+        val figs = es.map(e => byPath(e._4.getPath.toString)).filter(_.rows > 0)
         if (figs.isEmpty) None
         else Some(entry -> BucketStore.EntryRecords(figs.map(_.rows).sum,
           figs.map(_.minTs).min, figs.map(_.maxTs).max))
+      }, byEntry.map { case (entry, es) =>
+        entry -> ((es.map(_._4.getLen).sum, es.size.toLong))
       })
-    }.filter(_._2.all.nonEmpty)
+    }
     lastCatalogBuild = BucketStore.CatalogBuild(t1 - t0, System.nanoTime() - t1,
       files.size, unread)
     catalog
@@ -1885,19 +1844,22 @@ final class BucketStore(val spark: SparkSession, val root: String,
     val entries = EntryPattern.resolve(files.map(_._2).distinct, spec.entries).toSet
     // only the catalog fold installs figures: it sees the whole listing,
     // so a file a racing fold dropped is never put back
-    val (figures, _) = footerFigures(files.collect { case (_, e, st) if entries(e) => st })
+    val (figures, _) = footerFigures(files.collect { case (_, e, _, st) if entries(e) => st })
     val bytes = figures.valuesIterator.filter { f =>
       f.rows > 0 && spec.start.forall(f.maxTs >= _) && spec.stop.forall(f.minTs < _)
     }.map(_.bytes).sum
     (overlaid(base, overlayMeets(spec)), bytes)
   }
 
-  /** (bucket, entry, file) for every file of `base`'s file index — the
-    * listing [[baseTable]] already holds, no job — in the partitions
-    * `partitionFilters` (over `bucket` and `entry`) keep. */
+  /** (bucket, entry, dt, file) for every file of `base`'s file index —
+    * the listing [[baseTable]] already holds, no job — in the partitions
+    * `partitionFilters` (over `bucket` and `entry`) keep. `dt` is
+    * spelled as its directory name. The store's only view of its base
+    * files: reads, the entry catalog, the size figures and the
+    * compaction probe all come from it. */
   private def baseFiles(base: DataFrame,
       partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil)
-      : Seq[(String, String, org.apache.hadoop.fs.FileStatus)] =
+      : Seq[(String, String, String, org.apache.hadoop.fs.FileStatus)] =
     base.queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
     } match {
@@ -1906,15 +1868,17 @@ final class BucketStore(val spark: SparkSession, val root: String,
         val parts = index.listFiles(partitionFilters, Nil).filter(_.files.nonEmpty)
         val ps = index.partitionSchema
         if (parts.isEmpty) return Nil
-        if (!(ps.fieldNames.contains("bucket") && ps.fieldNames.contains("entry")))
+        if (!Seq("bucket", "entry", "dt").forall(ps.fieldNames.contains))
           throw new IllegalStateException(
-            s"base table under $root holds files outside bucket=/entry= directories: " +
+            s"base table under $root holds files outside bucket=/entry=/dt= directories: " +
               parts.head.files.head.fileStatus.getPath)
-        val (bi, ei) = (ps.fieldIndex("bucket"), ps.fieldIndex("entry"))
+        val (bi, ei, di) = (ps.fieldIndex("bucket"), ps.fieldIndex("entry"), ps.fieldIndex("dt"))
         parts.flatMap { p =>
           val b = p.values.getUTF8String(bi).toString
           val e = p.values.getUTF8String(ei).toString
-          p.files.map(f => (b, e, f.fileStatus))
+          // DateType partition value: days since the epoch
+          val d = java.time.LocalDate.ofEpochDay(p.values.getInt(di).toLong).toString
+          p.files.map(f => (b, e, d, f.fileStatus))
         }
       case _ => Nil // no base tree yet
     }
@@ -2027,32 +1991,18 @@ final class BucketStore(val spark: SparkSession, val root: String,
     invalidateOverlayAgg()
   }
 
-  /** Bytes on disk per bucket (for quotas). */
-  /** Size figures cached against [[dataVersion]]: `getContentSummary`
-    * walks the whole subtree (O(files) — a slow serving call at millions
-    * of files), so `/info` and `/list` pay it once per MUTATION, not per
-    * call. The cache entry count is bounded by the bucket count, which
-    * the reference's own engine holds in server memory (engine.rs). */
-  private val sizeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-  /** Recompute count — observable by specs pinning cache behavior. */
-  private[graft] val sizeWalks = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Uncached subtree walk — for reads INSIDE a [[mutating]] block (the
-    * FIFO-eviction loop re-checks the size it is actively shrinking; the
-    * version only bumps when the block exits, so the cache would serve
-    * the pre-eviction figure for the whole loop). */
-  private def treeBytes(path: org.apache.hadoop.fs.Path): Long = {
-    sizeWalks.incrementAndGet()
+  /** Uncached subtree bytes — for the FIFO-eviction loop, which
+    * re-checks the size it is shrinking INSIDE a [[mutating]] block: the
+    * base file index and the catalog stay stale until the block exits,
+    * so the post-write, mid-eviction size cannot come from them. */
+  private def treeBytes(path: org.apache.hadoop.fs.Path): Long =
     treeSummary(path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)._1
-  }
 
   /** (bytes, files) under `path`; 0 when it does not exist. The walk
     * races mutations — a staged write creating and dropping its
     * temporary dirs, a swap renaming partition dirs, a purge — so a dir
     * that vanishes mid-walk counts as empty instead of failing the
-    * serving call (`/info`, `/list` and bucket info answered 500 with a
-    * FileNotFoundException from `getContentSummary`). */
+    * caller with a FileNotFoundException from `getContentSummary`. */
   private def treeSummary(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path): (Long, Long) =
     try {
@@ -2065,42 +2015,22 @@ final class BucketStore(val spark: SparkSession, val root: String,
       }
     }
 
-  private def bucketPath(bucket: String) =
-    new org.apache.hadoop.fs.Path(s"$root/bucket=${escapePartition(bucket)}")
+  /** Whole-store bytes (the `/info` usage figure and the global storage
+    * cap): the sum of the bucket sizes, so it equals the sum of the
+    * `/list` sizes. The label overlay and the other hidden trees are not
+    * counted; [[checkFreeDiskSpace]] guards the physical disk. */
+  def storeSizeBytes: Long = entryCatalog().valuesIterator.map(_.bytes).sum
 
-  private def cachedTreeBytes(key: String, mk: () => org.apache.hadoop.fs.Path): Long = {
-    val v0 = dataVersion
-    val hit = sizeCache.get(key)
-    if (hit != null && hit._1 == v0) return hit._2
-    val bytes = treeBytes(mk())
-    // cache only when no mutation raced the walk — a mid-mutation figure
-    // must not survive past the mutation; a raced call recomputes next time
-    if (dataVersion == v0) sizeCache.put(key, (v0, bytes)): Unit
-    bytes
-  }
-
-  /** Whole-store bytes (the `/info` usage figure). */
-  def storeSizeBytes: Long =
-    cachedTreeBytes("", () => new org.apache.hadoop.fs.Path(root))
-
-  def bucketSizeBytes(bucket: String): Long =
-    cachedTreeBytes(s"b:$bucket", () => bucketPath(bucket))
+  /** A bucket's base-file bytes (`/list` size, HARD quota), from the
+    * entry catalog. */
+  def bucketSizeBytes(bucket: String): Long = entryCatalog().get(bucket).fold(0L)(_.bytes)
 
   /** Bytes + parquet-file count per entry of a bucket (decoded names) —
     * the EntryInfo size/block_count analog (entry_api.rs:9-23: blocks are
-    * the reference's storage unit, parquet files are ours). One
-    * filesystem listing, no Spark job. */
-  def entryStats(bucket: String): Map[String, (Long, Long)] = {
-    val bpath = new org.apache.hadoop.fs.Path(
-      s"$root/bucket=${escapePartition(bucket)}")
-    val fs = bpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    listQuiet(fs, bpath).iterator
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("entry="))
-      .map { st =>
-        unescapePartition(st.getPath.getName.stripPrefix("entry=")) ->
-          treeSummary(fs, st.getPath)
-      }.toMap
-  }
+    * the reference's storage unit, parquet files are ours). From the
+    * entry catalog: no listing of its own, no Spark job. */
+  def entryStats(bucket: String): Map[String, (Long, Long)] =
+    entryCatalog().get(bucket).fold(Map.empty[String, (Long, Long)])(_.files)
 
   /** Periodic storage maintenance — the engine's compaction tick
     * (`RS_ENGINE_COMPACTION_INTERVAL`, engine.rs:520-531
@@ -2117,103 +2047,35 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * (prunedPartitionScan contract), with the matching overlay dirs
     * purged inside the swap window.
     *
-    * The overcrowded-partition probe runs LOCK-FREE first and is
-    * INCREMENTAL (r19, closing the r18 weak mark): candidates come from
-    * the dirty-entry set the write paths feed, so a tick lists only the
-    * dt dirs of entries actually written since the last probe — an idle
-    * tick costs ZERO FS listings (pinned in ReplicaCompactionSpec),
-    * where the r18 tick full-walked every bucket=X/entry=Y/dt=Z dir
-    * per tick (O(all partitions) FS
-    * metadata ops per minute; unreachable and billable on the s3a
-    * deployment ServerMain documents). The full walk still happens
-    * exactly where it is owed: once at boot (bootstrap debt — files may
-    * predate this process) and after a generic `write(records)` whose
-    * caller didn't declare its entries. Neither probe takes the store
-    * lock nor bumps the data version (cached size figures stay valid —
-    * the no-tree-walk-between-mutations contract). Only a tick with
-    * real work mutates. Returns the number of partitions compacted. */
+    * The probe counts files per partition in [[baseTable]]'s cached
+    * file index, once LOCK-FREE and once more under the store lock. An
+    * idle tick lists nothing (the index is cached per data version and
+    * rewrite epoch); a tick after a mutation shares the one listing the
+    * next read builds anyway. The lock-free probe neither takes the
+    * store lock nor bumps the data version; only a tick with real work
+    * mutates. Returns the number of partitions compacted. */
   def compact(maxFilesPerPartition: Int = 16): Int = {
-    lastProbeListings.set(0L)
-    // Drain the dirty state FIRST: a mutation racing the probe re-marks
-    // AFTER this snapshot and is re-probed next tick, never lost.
-    val all = dirtyAllEntries.getAndSet(false)
-    val scoped: Array[(String, String)] =
-      if (all) null
+    if (overcrowdedPartitions(maxFilesPerPartition).isEmpty) return 0
+    mutating {
+      // exact re-probe under the lock: the index at this version is
+      // the tree as the last mutation left it
+      val affected = overcrowdedPartitions(maxFilesPerPartition)
+      if (affected.isEmpty) 0
       else {
-        import scala.jdk.CollectionConverters._
-        val snap = dirtyEntrySet.iterator().asScala.toArray
-        snap.foreach(dirtyEntrySet.remove)
-        snap
+        overwritePartitions(prunedPartitionScan(affected),
+          dropMissingFrom = affected,
+          extraSwapActions = () => purgeOverlayDirs(affected))
+        affected.length
       }
-    if (!all && scoped.isEmpty) return 0 // idle tick: zero FS listings
-    try {
-      val candidates =
-        listOvercrowdedPartitions(maxFilesPerPartition, Option(scoped))
-      if (candidates.isEmpty) return 0
-      mutating {
-        // exact re-probe under the lock, scoped to the candidate entries
-        val affected = listOvercrowdedPartitions(maxFilesPerPartition,
-          Some(candidates.map(c => (c._1, c._2)).distinct))
-        if (affected.isEmpty) 0
-        else {
-          overwritePartitions(prunedPartitionScan(affected),
-            dropMissingFrom = affected,
-            extraSwapActions = () => purgeOverlayDirs(affected))
-          affected.length
-        }
-      }
-    } catch { case t: Throwable =>
-      // the drained dirtiness was not serviced — restore it so the next
-      // tick retries instead of silently forgetting the debt
-      if (all) markAllEntriesDirty()
-      else markEntriesDirty(scoped)
-      throw t
     }
   }
 
-  /** (bucket, entry, dt) partitions whose file count exceeds `maxFiles`.
-    * Read-only FS walk — over `scope`'s (bucket, entry) dirs when given
-    * (the incremental tick), else the whole tree (boot / undeclared bulk
-    * write) — parallel across entry dirs. Every listStatus is counted
-    * into [[lastProbeListings]] so specs can pin the per-tick FS cost. */
-  private def listOvercrowdedPartitions(maxFiles: Int,
-      scope: Option[Seq[(String, String)]] = None): Array[(String, String, String)] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (scope.isEmpty && !fs.exists(rootPath)) return Array.empty
-    def list(p: org.apache.hadoop.fs.Path) = {
-      lastProbeListings.incrementAndGet()
-      listQuiet(fs, p)
-    }
-    def subDirs(p: org.apache.hadoop.fs.Path, prefix: String) =
-      list(p).filter(st =>
-        st.isDirectory && st.getPath.getName.startsWith(prefix))
-    val found = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
-    val entryDirs = scope match {
-      case Some(pairs) => pairs.map { case (b, e) =>
-        (s"bucket=${escapePartition(b)}", new org.apache.hadoop.fs.Path(
-          s"$root/bucket=${escapePartition(b)}/entry=${escapePartition(e)}"))
-      }
-      case None => for {
-        b <- subDirs(rootPath, "bucket=")
-        e <- subDirs(b.getPath, "entry=")
-      } yield (b.getPath.getName, e.getPath)
-    }
-    parallelFs(entryDirs) { case (bucketDir, entryPath) =>
-      for (d <- subDirs(entryPath, "dt=")) {
-        val files = list(d.getPath).count(st =>
-          st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-        if (files > maxFiles)
-          found.add((
-            unescapePartition(bucketDir.stripPrefix("bucket=")),
-            unescapePartition(entryPath.getName.stripPrefix("entry=")),
-            d.getPath.getName.stripPrefix("dt=")))
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    found.iterator().asScala.toArray
-  }
+  /** (bucket, entry, dt) partitions holding more than `maxFiles` files
+    * in the base file index. */
+  private def overcrowdedPartitions(maxFiles: Int): Array[(String, String, String)] =
+    baseFiles(baseTableOrEmpty()).groupBy(f => (f._1, f._2, f._3))
+      .collect { case (partition, files) if files.size > maxFiles => partition }
+      .toArray
 
   /** FIFO quota (bucket/quotas.rs:44-95): evict oldest day-partitions
     * until under `maxBytes`; `$meta` entries are never eviction candidates.
@@ -2230,17 +2092,16 @@ final class BucketStore(val spark: SparkSession, val root: String,
   private def enforceFifoLoop(bucket: String, maxBytes: Long,
       report: Int => Unit): Unit = {
     var evicted = 0
+    val bpath = new org.apache.hadoop.fs.Path(s"$root/bucket=${escapePartition(bucket)}")
     // uncached: the loop shrinks the very size it re-checks, and the data
     // version only moves when this mutating block exits
-    while (treeBytes(bucketPath(bucket)) > maxBytes) {
+    while (treeBytes(bpath) > maxBytes) {
       val oldest = baseTable().filter(col("bucket") === bucket)
         .filter(!col("entry").endsWith("/" + EntryPattern.MetaSegment) &&
           col("entry") =!= EntryPattern.MetaSegment)
         .agg(min(dtCol).as("dt")).collect()(0)
       if (oldest.isNullAt(0)) return
       val dt = oldest.getDate(0).toString
-      val bpath = new org.apache.hadoop.fs.Path(
-      s"$root/bucket=${escapePartition(bucket)}")
       val fs = bpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // system $meta entries are never eviction candidates
       // (bucket/quotas.rs is_eligible_for_fifo_eviction) — skip their dirs,
@@ -2420,8 +2281,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * common mutator every path (wire, zenoh ingest, streaming ingest,
     * replication) funnels through, mirroring engine::begin_write — plus
     * a declared-size preflight on the HTTP write admissions; uses the
-    * cached whole-store size, so an unset cap costs nothing and a set
-    * one costs one cached tree walk per mutation epoch. */
+    * entry catalog's whole-store size, so an unset cap costs nothing and
+    * a set one reads the catalog cached per data version. */
   @volatile var maxStorageSize: Option[Long] = None
 
   /** engine.rs ensure_storage_limit: total usage + incoming must stay
@@ -2547,8 +2408,11 @@ object BucketStore {
     * (storage/entry/system.rs:163-165), their parents — created by the
     * parent_prefixes walk — surface as EMPTY entries, and history spans
     * visible records only, so a bucket whose records are all metadata
-    * reports 0/0 (PR-1534). */
-  final case class BucketEntries(all: Map[String, EntryRecords]) {
+    * reports 0/0 (PR-1534). `files` holds every listed entry's
+    * (bytes, parquet file count), `$meta` entries included: blocks and
+    * storage are physical figures. */
+  final case class BucketEntries(all: Map[String, EntryRecords],
+      files: Map[String, (Long, Long)]) {
     /** Entries holding visible records, by name. */
     lazy val visible: Seq[(String, EntryRecords)] =
       all.toSeq.filterNot(e => EntryPattern.isSystemMetaEntry(e._1)).sortBy(_._1)
@@ -2561,8 +2425,10 @@ object BucketStore {
     def entryCount: Int = visible.length + emptyParents.length
     def oldest: Option[Long] = visible.map(_._2.oldest).minOption
     def latest: Option[Long] = visible.map(_._2.latest).maxOption
+    lazy val bytes: Long = files.valuesIterator.map(_._1).sum
+    lazy val blocks: Long = files.valuesIterator.map(_._2).sum
   }
-  object BucketEntries { val Empty: BucketEntries = BucketEntries(Map.empty) }
+  object BucketEntries { val Empty: BucketEntries = BucketEntries(Map.empty, Map.empty) }
 
   /** One record of a spooled batch body: its payload is
     * `staged[offset, offset + len)`. */

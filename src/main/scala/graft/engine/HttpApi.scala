@@ -641,7 +641,8 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     json(ex, 200, JObject(
       "version" -> JString(s"${HttpApi.ServerVersion}-spark"),
       "bucket_count" -> JInt(bucketCount),
-      "usage" -> JInt(BigInt(storeBytes)),
+      // the sum of the /list sizes (BucketStore.storeSizeBytes)
+      "usage" -> JInt(BigInt(catalog.valuesIterator.map(_.bytes).sum)),
       "uptime" -> JLong((System.currentTimeMillis() - startedAtMs) / 1000L),
       "oldest_record" -> JInt(BigInt(
         catalog.values.flatMap(_.oldest).minOption.getOrElse(0L))),
@@ -654,10 +655,6 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
       "license" -> JNull))
   }
 
-  // version-cached in the store: /info serving cost is independent of
-  // file count between mutations (was a full getContentSummary per call)
-  private def storeBytes: Long = store.storeSizeBytes
-
   private def list(ex: HttpExchange): Unit = {
     val catalog = store.entryCatalog()
     val names = (catalog.keySet ++ createdBuckets.asScala).toSeq.sorted
@@ -665,7 +662,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
       val b = catalog.getOrElse(name, BucketStore.BucketEntries.Empty)
       JObject(
         "name" -> JString(name),
-        "size" -> JInt(BigInt(store.bucketSizeBytes(name))),
+        "size" -> JInt(BigInt(b.bytes)),
         "entry_count" -> JInt(b.entryCount),
         "oldest_record" -> JInt(BigInt(b.oldest.getOrElse(0L))),
         "latest_record" -> JInt(BigInt(b.latest.getOrElse(0L))),
@@ -808,11 +805,10 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   private def bucketInfo(ex: HttpExchange, bucket: String): Unit = {
     if (!bucketExists(bucket)) throw notFound(s"Bucket '$bucket' is not found")
     val b = store.entryCatalog().getOrElse(bucket, BucketStore.BucketEntries.Empty)
-    val stats = store.entryStats(bucket)
     json(ex, 200, JObject(
       "info" -> JObject(
         "name" -> JString(bucket),
-        "size" -> JInt(BigInt(store.bucketSizeBytes(bucket))),
+        "size" -> JInt(BigInt(b.bytes)),
         "entry_count" -> JInt(b.entryCount),
         "record_count" -> JInt(BigInt(b.visible.map(_._2.records).sum)),
         "oldest_record" -> JInt(BigInt(b.oldest.getOrElse(0L))),
@@ -825,7 +821,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
       "settings" -> settingsJson(store.bucketSettings(bucket)
         .getOrElse(defaultBucketSettings)),
       "entries" -> JArray((b.visible.map { case (name, e) =>
-        val (bytes, files) = stats.getOrElse(name, (0L, 0L))
+        val (bytes, files) = b.files.getOrElse(name, (0L, 0L))
         JObject("name" -> JString(name),
           "size" -> JInt(BigInt(bytes)),
           "record_count" -> JInt(BigInt(e.records)),
@@ -834,7 +830,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
           "latest_record" -> JInt(BigInt(e.latest)),
           "status" -> JString("READY")) // entry_api.rs:22-24
       } ++ b.emptyParents.map { name =>
-        val (bytes, files) = stats.getOrElse(name, (0L, 0L))
+        val (bytes, files) = b.files.getOrElse(name, (0L, 0L))
         JObject("name" -> JString(name),
           "size" -> JInt(BigInt(bytes)),
           "record_count" -> JInt(0),

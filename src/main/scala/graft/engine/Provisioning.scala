@@ -200,13 +200,25 @@ object Provisioning {
       },
       quotaSize = env.get("RS_SYSTEM_EVENTS_QUOTA_SIZE").flatMap(parseByteSize)
         .getOrElse(10000000000L), // DEFAULT_SYSTEM_EVENTS_QUOTA_SIZE (10 GB SI)
-      instance = env.get("RS_INSTANCE_NAME").map(_.trim).filter(_.nonEmpty)
+      instance = entrySegment(env.get("RS_INSTANCE_NAME").map(_.trim).filter(_.nonEmpty)
         .orElse(try Some(java.net.InetAddress.getLocalHost.getHostName)
           .filter(_.nonEmpty) catch { case _: Exception => None })
-        .getOrElse("unknown")) // cfg.rs resolve_instance_name
+        .getOrElse("unknown"), warn)) // cfg.rs resolve_instance_name
 
     Resources(bucketDefaults, buckets, tokens, replications, lifecycles,
       systemEvents, warnings.result())
+  }
+
+  /** The instance name as one `$system` entry segment
+    * (`usage/<instance>/total`): every character outside
+    * `[A-Za-z0-9_-]` becomes `_`, so a dotted host name does not fail
+    * the entry-name check of the primary it forwards to. */
+  private def entrySegment(instance: String, warn: String => Unit): String = {
+    val mapped = instance.map(c =>
+      if (c < 128 && (c.isLetterOrDigit || c == '_' || c == '-')) c else '_')
+    if (mapped != instance)
+      warn(s"Instance name '$instance' is not a valid entry name. Use '$mapped'.")
+    mapped
   }
 
   private def parseReplication(env: Map[String, String], id: String,

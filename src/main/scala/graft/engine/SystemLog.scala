@@ -113,11 +113,8 @@ final class SystemLog(store: BucketStore, instance: String,
             // byte count, not char count — CJK payloads are 3 bytes/char
             // and the quota/preflight admission must see the real size
             incomingBytes = recs.iterator.map(_._4.length.toLong).sum,
-            // touchedEntries declared: an undeclared write marks the
-            // WHOLE store dirty, so every 60 s usage flush and every
-            // captured log line would re-arm the full-walk compaction
-            // probe (ADVICE r19). Exact, with the clock strictly
-            // increasing: each flush lands past every declared entry's
+            // touchedEntries declared, exact: with the clock strictly
+            // increasing each flush lands past every declared entry's
             // latest record, so Skip plans no stored-key anti-join
             touchedEntries = Some(recs.map(r => ("$system", r._1)).distinct),
             // ts are assigned serially above — min is the first, max the

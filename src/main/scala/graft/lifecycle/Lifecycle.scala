@@ -94,8 +94,8 @@ object Lifecycle {
           "parquet.compression.codec.zstd.level" -> level.toString),
           extraSwapActions = () => store.purgeOverlayDirs(affectedList))
         // block analog: every parquet file in an affected partition was
-        // rewritten; entryStats would re-list post-swap, the partition
-        // count is the stable pre/post-invariant figure
+        // rewritten; the partition count is the stable pre/post-invariant
+        // figure (a file count would need the post-swap listing)
         Result(n, applied = true, processedBlocks = affectedList.length.toLong)
       }
     }
@@ -111,8 +111,8 @@ object Lifecycle {
     * entries written/read) come from the drained
     * [[graft.engine.UsageCounters]]; the storage fields (record_count,
     * entry_count, block_count, storage_bytes) are a point-in-time
-    * snapshot — the store's entry catalog plus a per-bucket
-    * file-listing, at flush cadence (default 60 s), never per record.
+    * snapshot — the store's entry catalog, at flush cadence (default
+    * 60 s), never per record.
     * `written_entries`, `read_entries` and `record_count` are also
     * pinned as queryable record labels. */
   def flushUsage(store: BucketStore, syslog: graft.engine.SystemLog,
@@ -133,10 +133,9 @@ object Lifecycle {
     val catalog = store.entryCatalog()
     val names = (catalog.keySet ++ store.usage.buckets).toSeq.sorted
     val snapshot = names.map { name =>
-      val entries = catalog.getOrElse(name, BucketStore.BucketEntries.Empty).all
-      (name, entries.valuesIterator.map(_.records).sum, entries.size.toLong,
-        store.entryStats(name).valuesIterator.map(_._2).sum,
-        store.bucketSizeBytes(name))
+      val b = catalog.getOrElse(name, BucketStore.BucketEntries.Empty)
+      (name, b.all.valuesIterator.map(_.records).sum, b.all.size.toLong,
+        b.blocks, b.bytes)
     }
     // a bucket whose first traffic lands after `names` was taken keeps
     // its counters for the next tick

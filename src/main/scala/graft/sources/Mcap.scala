@@ -265,6 +265,9 @@ object Mcap {
 
     private def getString(buf: ByteBuffer): String = {
       val n = buf.getInt
+      // a forged length must not allocate past the record's own bytes
+      require(n >= 0 && n <= buf.remaining(),
+        s"string length $n > ${buf.remaining()} available")
       val b = new Array[Byte](n)
       buf.get(b)
       new String(b, StandardCharsets.UTF_8)

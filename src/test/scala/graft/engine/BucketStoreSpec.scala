@@ -387,23 +387,23 @@ class BucketStoreSpec extends AnyFunSuite with SparkTestBase {
       "(verdict r12 #6)") {
     val store = newStore()
     store.write(recordsDf(Seq(("e", 1L, Map()), ("e", day + 1L, Map()))))
-    val w0 = store.sizeWalks.get()
+    val w0 = store.catalogBuilds.get()
     val s1 = store.storeSizeBytes
     val b1 = store.bucketSizeBytes("b")
     assert(s1 > 0L && b1 > 0L)
-    val afterFirst = store.sizeWalks.get()
-    assert(afterFirst == w0 + 2, "one walk per distinct figure")
-    // idle store: repeat /info- and /list-shaped calls never re-walk
+    val afterFirst = store.catalogBuilds.get()
+    assert(afterFirst == w0 + 1, "one catalog build serves every figure of a version")
+    // idle store: repeat /info- and /list-shaped calls never rebuild
     for (_ <- 1 to 5) {
       assert(store.storeSizeBytes == s1)
       assert(store.bucketSizeBytes("b") == b1)
     }
-    assert(store.sizeWalks.get() == afterFirst,
+    assert(store.catalogBuilds.get() == afterFirst,
       "serving cost must be independent of file count between mutations")
-    // a mutation invalidates: exactly one fresh walk per figure, new value
+    // a mutation invalidates: exactly one fresh build, new value
     store.write(recordsDf(Seq(("e", 5L, Map()))))
     assert(store.storeSizeBytes > s1)
-    assert(store.sizeWalks.get() == afterFirst + 1)
+    assert(store.catalogBuilds.get() == afterFirst + 1)
   }
 
   test("FIFO quota never evicts system $meta entries (ADVICE r1)") {

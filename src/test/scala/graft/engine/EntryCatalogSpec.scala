@@ -13,8 +13,9 @@ import java.nio.file.Files
 
 /** The entry catalog folded from Parquet footers, checked against the
   * Spark aggregate it replaced (kept here as the oracle) after every step
-  * of seeded random mutation sequences, plus the Spark job counts the
-  * footer catalog buys on the serving write path. */
+  * of seeded random mutation sequences — its size figures against the
+  * tree walk they replaced — plus the Spark job counts the footer
+  * catalog buys on the serving write path. */
 class EntryCatalogSpec extends AnyFunSuite with SparkJobs
     with AdaptiveSparkPlanHelper {
 
@@ -29,6 +30,29 @@ class EntryCatalogSpec extends AnyFunSuite with SparkJobs
       .map(r => (r.getString(0), r.getString(1)) ->
         BucketStore.EntryRecords(r.getLong(2), r.getLong(3), r.getLong(4)))
       .toMap
+
+  /** (bytes, files) per entry of every bucket, walked over each entry's
+    * `dt=` data files: the per-entry walk the catalog's size figures
+    * replaced, kept as their oracle. */
+  private def walkedSizes(store: BucketStore): Map[String, Map[String, (Long, Long)]] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val root = new Path(store.root)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dirs(p: Path, prefix: String): Seq[FileStatus] =
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.filter(st =>
+        st.isDirectory && st.getPath.getName.startsWith(prefix))
+    def name(st: FileStatus, prefix: String) =
+      BucketStore.unescapePartition(st.getPath.getName.stripPrefix(prefix))
+    dirs(root, "bucket=").map { b =>
+      name(b, "bucket=") -> dirs(b.getPath, "entry=").map { e =>
+        val files = dirs(e.getPath, "dt=").flatMap(d => fs.listStatus(d.getPath).toSeq)
+          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+            !st.getPath.getName.startsWith("."))
+        name(e, "entry=") -> ((files.map(_.getLen).sum, files.size.toLong))
+      }.filter(_._2._2 > 0).toMap
+    }.toMap
+  }
 
   private def folded(store: BucketStore): Catalog =
     store.entryCatalog().toSeq.flatMap { case (b, es) =>
@@ -59,6 +83,16 @@ class EntryCatalogSpec extends AnyFunSuite with SparkJobs
       val got = folded(s)
       assert(got == want, s"seed $seed after ${log.mkString(" > ")}:\n" +
         s"catalog $got\noracle  $want")
+      val walked = walkedSizes(s)
+      for (b <- (walked.keySet ++ s.entryCatalog().keySet ++ buckets).toSeq.sorted) {
+        val sizes = walked.getOrElse(b, Map.empty)
+        assert(s.entryStats(b) == sizes, s"seed $seed after ${log.mkString(" > ")}: " +
+          s"entryStats($b) ${s.entryStats(b)}, walk $sizes")
+        assert(s.bucketSizeBytes(b) == sizes.valuesIterator.map(_._1).sum,
+          s"seed $seed after ${log.mkString(" > ")}: bucketSizeBytes($b)")
+      }
+      assert(s.storeSizeBytes == walked.valuesIterator.flatMap(_.valuesIterator).map(_._1).sum,
+        s"seed $seed after ${log.mkString(" > ")}: storeSizeBytes")
     }
     /** An entry that holds records, if any. */
     def stored(): Option[(String, String)] = {
@@ -122,8 +156,8 @@ class EntryCatalogSpec extends AnyFunSuite with SparkJobs
       "patch+fold" -> (() => stored() match {
         case Some((b, e)) =>
           val have = keysOf(store, b, e)
-          store.updateLabelsBatch(b, Seq((e, have(rng.nextInt(have.size)),
-            Map("patched" -> seed.toString), Set("k")))): Unit
+          store.updateLabelsMatched(b, Seq((e, have(rng.nextInt(have.size)),
+            Map("patched" -> seed.toString), Set("k")))).size.toLong: Unit
           check(store, "patch")
           store.foldLabelOverlay(): Unit
         case None => append("a", "e0")

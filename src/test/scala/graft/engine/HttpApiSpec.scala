@@ -717,7 +717,7 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
         v0 == v1 && {
           // <= 1: the first call in the window may legitimately recompute
           // if a racing mutation voided the previous fill (same contract
-          // as the sizeWalks pin above); a broken cache would show 5
+          // as the /info pin below); a broken cache would show 5
           assert(a1 - a0 <= 1,
             s"/list x3, /info and GET /b/big in a version-stable window " +
               s"built the catalog ${a1 - a0}x")
@@ -770,23 +770,28 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
       assert((j \ "oldest_record").extract[Long] == 5L)
       assert((j \ "latest_record").extract[Long] == 304L,
         "meta-only records must not stretch the history")
-      // /info's usage figure: at most ONE subtree walk (a cache refill)
+      // /info's usage figure: at most ONE catalog build (a cache refill)
       // across repeated calls within a version-stable window — serving
       // cost independent of file count between mutations (verdict r12
       // #6). The 60 s usage-flush timer legitimately mutates the store,
       // so retry until a window isn't raced by it.
-      def info() = client.send(HttpRequest.newBuilder(
-          URI.create(s"http://127.0.0.1:${manyApi.boundPort}/api/v1/info"))
+      def get(path: String) = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${manyApi.boundPort}/api/v1$path"))
           .header("Authorization", "Bearer root-token").GET().build(),
         HttpResponse.BodyHandlers.ofByteArray())
       val stable = (1 to 3).exists { _ =>
-        val (v0, w0) = (manyStore.dataVersion, manyStore.sizeWalks.get())
-        for (_ <- 1 to 4) assert(info().statusCode() == 200)
-        val (v1, w1) = (manyStore.dataVersion, manyStore.sizeWalks.get())
+        val (v0, w0) = (manyStore.dataVersion, manyStore.catalogBuilds.get())
+        for (_ <- 1 to 4) assert(get("/info").statusCode() == 200)
+        val usage = (jsonOf(get("/info")) \ "usage").extract[Long]
+        val sizes = (jsonOf(get("/list")) \ "buckets").children
+          .map(b => (b \ "size").extract[Long]).sum
+        val (v1, w1) = (manyStore.dataVersion, manyStore.catalogBuilds.get())
         v0 == v1 && {
           assert(w1 - w0 <= 1,
-            s"4 /info calls in a version-stable window walked ${w1 - w0}x " +
-              "— the 300-bucket tree must be served from the version cache")
+            s"4 /info calls in a version-stable window built the catalog " +
+              s"${w1 - w0}x — the 300-bucket tree must be served from the version cache")
+          assert(usage == sizes && usage > 0L,
+            s"/info usage $usage must equal the sum of the /list sizes $sizes")
           true
         }
       }

@@ -159,9 +159,9 @@ class LabelOverlaySpec extends AnyFunSuite with SparkTestBase {
     store.write(recordsDf(Seq(
       ("e", 1L, Map("a" -> "1", "x" -> "1")), ("e", 2L, Map("a" -> "2")))))
     val before = baseFileFingerprints(store)
-    val n = store.updateLabelsBatch("b", Seq(
+    val n = store.updateLabelsMatched("b", Seq(
       ("e", 1L, Map("b" -> "10"), Set("x")),
-      ("e", 2L, Map("b" -> "20"), Set.empty[String])))
+      ("e", 2L, Map("b" -> "20"), Set.empty[String]))).size.toLong
     assert(n == 2)
     assert(baseFileFingerprints(store) == before)
     val ls = labelsOf(store)
@@ -174,10 +174,10 @@ class LabelOverlaySpec extends AnyFunSuite with SparkTestBase {
     store.write(recordsDf(Seq(("e", 1L, Map("a" -> "0", "x" -> "1")))))
     // three deltas to the SAME record: later sets win, a later remove
     // drops an earlier set, a later set resurrects an earlier remove
-    val n = store.updateLabelsBatch("b", Seq(
+    val n = store.updateLabelsMatched("b", Seq(
       ("e", 1L, Map("k" -> "first", "gone" -> "soon"), Set("x")),
       ("e", 1L, Map("k" -> "second"), Set("gone")),
-      ("e", 1L, Map("x" -> "back"), Set.empty[String])))
+      ("e", 1L, Map("x" -> "back"), Set.empty[String]))).size.toLong
     assert(n == 1, s"one record patched, not one per delta: $n")
     assert(labelsOf(store)(1L) ==
       Map("a" -> "0", "k" -> "second", "x" -> "back"))

@@ -52,7 +52,7 @@ class OverlayScopeSpec extends AnyFunSuite with SparkTestBase {
   test("a query on an unpatched entry plans no join while another entry is patched") {
     val store = newStore()
     store.write(recordsDf(Seq(("a", 1L, Map("v" -> "0")), ("b", 2L, Map("v" -> "0")))))
-    store.updateLabelsBatch("b", Seq(("a", 1L, Map("v" -> "1"), Set.empty[String])))
+    store.updateLabelsMatched("b", Seq(("a", 1L, Map("v" -> "1"), Set.empty[String]))).size.toLong
     assert(store.overlayScope().map(s => (s._1, s._2)) == Set(("b", "a")))
     val onB = QuerySpec(entries = Some(Seq("b")), bucket = Some("b"))
     val plainB = QueryEngine.query(store.table(onB), onB)
@@ -75,7 +75,7 @@ class OverlayScopeSpec extends AnyFunSuite with SparkTestBase {
     val store = newStore()
     store.write(recordsDf(Seq(("a", 1L, Map("v" -> "0")),
       ("b", 1L, Map("v" -> "0")), ("b", 2L, Map("v" -> "0")))))
-    store.updateLabelsBatch("b", Seq(("a", 1L, Map("v" -> "1"), Set.empty[String])))
+    store.updateLabelsMatched("b", Seq(("a", 1L, Map("v" -> "1"), Set.empty[String]))).size.toLong
     store.table().count(): Unit // builds the agg for this overlay state
     val builds = store.overlayAggBuilds.get()
     assert(store.overlayRowsKnown)
@@ -97,8 +97,8 @@ class OverlayScopeSpec extends AnyFunSuite with SparkTestBase {
     store.write(recordsDf(Seq(("a", 1L, Map.empty), ("a", day + 1L, Map.empty),
       ("c", 5L, Map.empty))))
     def fresh() = new BucketStore(spark, store.root).overlayScope()
-    store.updateLabelsBatch("b", Seq(("a", 1L, Map("x" -> "1"), Set.empty[String]),
-      ("a", day + 1L, Map("x" -> "1"), Set.empty[String])))
+    store.updateLabelsMatched("b", Seq(("a", 1L, Map("x" -> "1"), Set.empty[String]),
+      ("a", day + 1L, Map("x" -> "1"), Set.empty[String]))).size.toLong
     store.updateLabels(QuerySpec(entries = Some(Seq("c"))), Map("y" -> "2")): Unit
     assert(store.overlayScope() == fresh() && store.overlayScope().size == 3)
     assert(store.removeQuery(QuerySpec(stop = Some(2L), entries = Some(Seq("a")))) == 1L)
@@ -130,7 +130,7 @@ class OverlayScopeSpec extends AnyFunSuite with SparkTestBase {
     primary.write(recordsDf(Seq(("e", 1L, Map("v" -> "0")))))
     val replica = new BucketStore(spark, root, readOnly = true)
     for (v <- Seq("1", "2")) {
-      primary.updateLabelsBatch("b", Seq(("e", 1L, Map("v" -> v), Set.empty[String])))
+      primary.updateLabelsMatched("b", Seq(("e", 1L, Map("v" -> v), Set.empty[String]))).size.toLong
       replica.refreshReplica()
       assert(labelsOf(replica.table()) == Map(("e", 1L) -> Map("v" -> v)))
     }

@@ -231,6 +231,18 @@ class ProvisioningSpec extends AnyFunSuite with SparkTestBase {
       .systemEvents.instance == "n7")
   }
 
+  test("an instance name outside [A-Za-z0-9_-] maps to one entry segment, " +
+      "with a warning") {
+    val r = Provisioning.parse(Map("RS_INSTANCE_NAME" -> "node.a"))
+    assert(r.systemEvents.instance == "node_a")
+    assert(r.warnings.exists(w => w.contains("'node.a'") && w.contains("'node_a'")),
+      r.warnings.toString)
+    val plain = Provisioning.parse(Map("RS_INSTANCE_NAME" -> "node-1_b"))
+    assert(plain.systemEvents.instance == "node-1_b" && plain.warnings.isEmpty)
+    assert(Provisioning.parse(Map("RS_INSTANCE_NAME" -> "a/b c\u00e9"))
+      .systemEvents.instance == "a_b_c_")
+  }
+
   test("$system is provisioned: un-removable, settings-protected, env quota") {
     implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
     port // force server construction (provisioning applies $system settings)

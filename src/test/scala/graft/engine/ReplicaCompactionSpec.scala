@@ -30,7 +30,7 @@ class ReplicaCompactionSpec extends AnyFunSuite with SparkTestBase {
       store.writeBatch("b", "e", Seq((i.toLong, Map("i" -> i.toString),
         s"p$i".getBytes("UTF-8"))))
     // an outstanding label patch must fold into the rewrite
-    store.updateLabelsBatch("b", Seq(("e", 3L, Map("patched" -> "yes"), Set.empty)))
+    store.updateLabelsMatched("b", Seq(("e", 3L, Map("patched" -> "yes"), Set.empty))).size.toLong
     assert(fileCount(store, "b", "e") >= 24)
     val before = store.table().orderBy("ts")
       .collect().map(r => (r.getAs[Long]("ts"),
@@ -225,6 +225,35 @@ class ReplicaCompactionSpec extends AnyFunSuite with SparkTestBase {
     } finally { api.stop(); primaryApi.stop(); primary.close() }
   }
 
+  test("a replica named by a dotted host name forwards its usage flush " +
+      "under the mapped entry segment") {
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("graft-fwd-name").toString
+    val primary = new BucketStore(spark, root)
+    val primaryApi = new HttpApi(primary, apiToken = "shared")
+    val pPort = primaryApi.start()
+    val replica = new BucketStore(spark, root, readOnly = true)
+    val api = new HttpApi(replica, apiToken = "shared",
+      env = Map("RS_INSTANCE_ROLE" -> "REPLICA",
+        "RS_INSTANCE_NAME" -> "node.a",
+        "RS_PRIMARY_URL" -> s"http://127.0.0.1:$pPort",
+        "RS_SYSTEM_EVENTS_REMOTE_TIMEOUT" -> "10"))
+    api.start()
+    try {
+      replica.usage.countRead("b", "e", 3L, 42L)
+      api.flushTelemetryNow()
+      // "node.a" fails the primary's entry-name check (422): only the
+      // mapped segment lands
+      val landed = primary.readConsistent {
+        primary.table()
+          .filter(col("bucket") === "$system" && col("entry").startsWith("usage/"))
+          .select("entry").collect().map(_.getString(0)).toSet
+      }
+      assert(landed == Set("usage/node_a/total", "usage/node_a/b"),
+        s"forwarded usage entries: $landed")
+    } finally { api.stop(); primaryApi.stop(); primary.close() }
+  }
+
   test("a replica flush past the primary's 200-header cap forwards every " +
       "usage event (chunked io-v2 batches)") {
     import org.apache.spark.sql.functions.col
@@ -262,42 +291,39 @@ class ReplicaCompactionSpec extends AnyFunSuite with SparkTestBase {
       "a touched tick lists only the touched entries' dirs") {
     val root = Files.createTempDirectory("graft-compact-inc").toString
     val store = new BucketStore(spark, root)
-    // 8 quiet entries, one record each — the standing tree the old
-    // full-walk probe would re-list every tick
+    // 8 quiet entries, one record each — the standing tree an idle tick
+    // must not re-list
     for (i <- 0 until 8)
       store.writeBatch("b", s"quiet$i", Seq((1L, Map.empty[String, String],
         "q".getBytes("UTF-8"))))
-    // first tick carries the accumulated dirtiness (incl. boot debt in
-    // general); nothing overcrowded
+    // first tick builds the base file index; nothing overcrowded
     assert(store.compact(maxFilesPerPartition = 16) == 0)
-    // idle tick: the dirty set is drained — ZERO FS listings
+    // idle tick: the cached index serves the probe — ZERO listings
+    val idle = store.baseTableBuilds.get
     assert(store.compact(maxFilesPerPartition = 16) == 0)
-    assert(store.lastProbeListings.get == 0L,
-      "idle tick must cost zero FS listings")
-    // fragment ONE entry; the tick must probe only that entry's dirs,
-    // not the 8 quiet ones (full walk here = root + bucket + 9 entry
-    // dirs + 9 dt dirs = 20 listings; scoped ~4 incl. the under-lock
-    // re-probe)
+    assert(store.baseTableBuilds.get == idle,
+      "idle tick must build no base file index")
+    // fragment ONE entry: the tick finds its overcrowded partition
     for (i <- 0 until 20)
       store.writeBatch("b", "hot", Seq((i.toLong, Map.empty[String, String],
         s"h$i".getBytes("UTF-8"))))
     assert(store.compact(maxFilesPerPartition = 16) == 1, "hot compacts")
-    val listings = store.lastProbeListings.get
-    assert(listings > 0 && listings <= 8,
-      s"scoped tick must list only the touched entry's dirs, got $listings")
     // the rewrite is invisible to readers: every record byte-identical
     val rows = store.table().orderBy("entry", "ts").collect()
     assert(rows.length == 28)
-    // a generic write(records) without declared entries falls back to
-    // the full walk ONCE, then the set is incremental again
+    // after a write — a generic write(records) included — the tick and
+    // the next read share ONE listing of the tree
     store.write(graft.core.Records.fromEvents(spark.range(1).selectExpr(
       "id as event_id", "timestamp_micros(1000000) as ts", "id as user_id",
       "'t' as event_type", "cast(1.0 as double) as value", "'{}' as props")))
+    val afterWrite = store.baseTableBuilds.get
     assert(store.compact(maxFilesPerPartition = 16) == 0)
-    assert(store.lastProbeListings.get > 8,
-      "undeclared bulk write must re-arm the full walk")
+    assert(store.table().count() == 29)
+    assert(store.baseTableBuilds.get - afterWrite <= 1,
+      s"a tick plus the next read built ${store.baseTableBuilds.get - afterWrite} indexes")
+    val again = store.baseTableBuilds.get
     assert(store.compact(maxFilesPerPartition = 16) == 0)
-    assert(store.lastProbeListings.get == 0L, "then incremental again")
+    assert(store.baseTableBuilds.get == again, "then idle again")
     store.close()
   }
 
@@ -370,8 +396,8 @@ class ReplicaCompactionSpec extends AnyFunSuite with SparkTestBase {
             Seq((ts, Map("i" -> i.toString), s"c$i".getBytes("UTF-8"))))
           primary.writeBatch("b", "churn",
             Seq((ts + 100000, Map.empty[String, String], "x".getBytes("UTF-8"))))
-          primary.updateLabelsBatch("b",
-            Seq(("churn", ts, Map("patched" -> "y"), Set.empty[String])))
+          primary.updateLabelsMatched("b",
+            Seq(("churn", ts, Map("patched" -> "y"), Set.empty[String]))).size.toLong
           primary.compact(maxFilesPerPartition = 1): Unit
           primary.removeRecords("b", Seq(("churn", ts + 100000))): Unit
           i += 1
@@ -405,22 +431,23 @@ class ReplicaCompactionSpec extends AnyFunSuite with SparkTestBase {
       "(escapePartition matches the partition writer's %2F dirs)") {
     val root = Files.createTempDirectory("graft-compact-slash").toString
     val store = new BucketStore(spark, root)
-    // the dir on disk is entry=events%2Fpurchase — the scoped probe must
-    // construct exactly that path, or the dirty mark drains into nothing
-    // and the partition is never compacted again (ADVICE r19)
+    // the dir on disk is entry=events%2Fpurchase — the probe must count
+    // it under the decoded entry name the rewrite scans (ADVICE r19)
     for (i <- 0 until 20)
       store.writeBatch("b", "events/purchase",
         Seq((i.toLong, Map.empty[String, String], s"p$i".getBytes("UTF-8"))))
     assert(store.compact(maxFilesPerPartition = 16) == 1,
-      "slash-entry partitions must be visible to the scoped probe")
+      "slash-entry partitions must be visible to the probe")
     val rows = store.table().orderBy("ts").collect()
     assert(rows.length == 20 &&
       rows.forall(_.getAs[String]("entry") == "events/purchase"),
       "compaction must preserve every slash-entry record")
-    // the dirty mark was consumed by a PROBE THAT SAW THE DIRS — the
-    // next tick is idle, not a silent-debt-loss retry loop
+    // the compacted partition is no longer a candidate, and the tick
+    // after that is idle: it builds no index
     assert(store.compact(maxFilesPerPartition = 16) == 0)
-    assert(store.lastProbeListings.get == 0L)
+    val idle = store.baseTableBuilds.get
+    assert(store.compact(maxFilesPerPartition = 16) == 0)
+    assert(store.baseTableBuilds.get == idle)
     store.close()
   }
 
@@ -428,24 +455,22 @@ class ReplicaCompactionSpec extends AnyFunSuite with SparkTestBase {
       "capture doesn't re-arm the full-walk probe (ADVICE r19)") {
     val root = Files.createTempDirectory("graft-sys-dirty").toString
     val store = new BucketStore(spark, root)
-    // 8 quiet entries — what an undeclared $system write would force the
-    // probe to re-list every tick
+    // 8 quiet entries beside the $system tree
     for (i <- 0 until 8)
       store.writeBatch("b", s"quiet$i",
         Seq((1L, Map.empty[String, String], "q".getBytes("UTF-8"))))
-    assert(store.compact(maxFilesPerPartition = 16) == 0) // drain boot debt
+    assert(store.compact(maxFilesPerPartition = 16) == 0)
     val syslog = new SystemLog(store, "srv", Some("INFO"))
     assert(syslog.log("ERROR", "t", "boom"))
     assert(syslog.events(Seq(
       SystemLog.Event("usage", "total", 200, "{}"),
       SystemLog.Event("usage", "b", 200, "{}"))))
+    // the tick after the flush and the next read share one listing
+    val builds = store.baseTableBuilds.get
     assert(store.compact(maxFilesPerPartition = 16) == 0)
-    val listings = store.lastProbeListings.get
-    // scoped to the 3 distinct $system entries (one listing each + their
-    // dt dirs) — a full walk here would be root + 2 bucket dirs + 11
-    // entry dirs + 11 dt dirs
-    assert(listings > 0 && listings <= 7,
-      s"a $$system flush must probe only its own entries, got $listings")
+    assert(store.entryCatalog()("$system").all.size == 3)
+    assert(store.baseTableBuilds.get - builds <= 1,
+      s"a $$system flush's tick and read built ${store.baseTableBuilds.get - builds} indexes")
     store.close()
   }
 

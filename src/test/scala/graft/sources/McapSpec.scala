@@ -62,6 +62,26 @@ class McapSpec extends AnyFunSuite with SparkTestBase {
     assert(n >= 1 && n < 3)
   }
 
+  test("a forged string length keeps the parsed prefix without allocating it") {
+    // the data section up to its closing records (data end 13 B, footer
+    // 29 B, magic 8 B), then a schema record whose name length reads
+    // Int.MaxValue over 4 bytes that are really there
+    val prefix = Mcap.synthMcap(messages).dropRight(13 + 29 + 8)
+    val forged = new java.io.ByteArrayOutputStream()
+    forged.write(prefix)
+    val content = java.nio.ByteBuffer.allocate(10).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putShort(9.toShort).putInt(Int.MaxValue).putInt(0).array()
+    val header = java.nio.ByteBuffer.allocate(9).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .put(0x03.toByte).putLong(content.length.toLong).array()
+    forged.write(header)
+    forged.write(content)
+    val t0 = System.nanoTime()
+    val rows = Mcap.parseBytes("forged", forged.toByteArray)
+    assert(rows.map(_.getLong(4)) == // log_time_ns
+      Seq(1_000_000_000L, 2_000_000_000L, 1_500_000_000L))
+    assert((System.nanoTime() - t0) / 1000000L < 5000L, "the parse must return at once")
+  }
+
   test("non-mcap bytes yield zero rows rather than a job failure") {
     val path = writeMcap("not.mcap", "hello world".getBytes)
     assert(Mcap.read(spark, path).count() == 0)
