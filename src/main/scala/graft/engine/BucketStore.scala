@@ -294,6 +294,21 @@ final class BucketStore(val spark: SparkSession, val root: String,
     try table()
     catch { case NonFatal(_) => emptyRecords(spark) }
 
+  /** This store as a query source ([[QueryRegistry.Source]]): the scan
+    * estimate [[scanBound]], the Spark table [[table(spec)*]] and the
+    * driver-side reader [[readSmall]]. With `orEmpty`, a store with no
+    * base tree yet answers no rows, as [[tableOrEmpty]] does. The
+    * version is the data version; a read-only replica reports none,
+    * since its counter cannot see the primary's writes. */
+  def querySource(orEmpty: Boolean = false): QueryRegistry.Source = new QueryRegistry.Source {
+    def bound(spec: QuerySpec): Long = scanBound(spec, orEmpty)
+    def table(spec: QuerySpec): DataFrame =
+      try BucketStore.this.table(spec)
+      catch { case NonFatal(_) if orEmpty => emptyRecords(spark) }
+    def read(spec: QuerySpec): Seq[org.apache.spark.sql.Row] = readSmall(spec, orEmpty)
+    def version: Option[Long] = if (readOnly) None else Some(dataVersion)
+  }
+
   /** Resolved base-tree plan (schema-pinned scan over `root`) cached per
     * (dataVersion, rewriteEpoch). Building it costs a FULL tree listing —
     * InMemoryFileIndex walks every bucket/entry/dt dir — plus analysis;
@@ -1082,8 +1097,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
     *   - per-record conflict admission sees the store plus every record
     *     claimed by an earlier request in the fold (keep-first); keys
     *     above their entry's latest record are admitted from the entry
-    *     catalog ([[mayBeStored]]), and one [[existingKeys]] scan per
-    *     bucket admits the belated rest (none: no job);
+    *     catalog ([[mayBeStored]]), and one [[existingKeys]] lookup per
+    *     bucket admits the belated rest, on the driver;
     *   - HARD quota / global storage cap / free-disk admission run per
     *     request with cumulative accounting, so a request that would
     *     have been rejected serially is rejected here (and only it);
@@ -1430,8 +1445,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * all. Returns the (entry, ts) keys found and patched — the folded
     * variant attributes matches back to each folded request. The keys
     * come from HTTP headers, so the batch is driver-sized: the current
-    * labels of the requested keys are collected in one job
-    * ([[storedLabels]]), merged here, and the merged rows appended. */
+    * labels of the requested keys are read on the driver
+    * ([[storedLabels]]), merged here, and the merged rows appended: the
+    * append is the one job. */
   def updateLabelsMatched(bucket: String,
       updates0: Seq[(String, Long, Map[String, String], Set[String])])
       : Set[(String, Long)] = mutating {
@@ -1469,47 +1485,92 @@ final class BucketStore(val spark: SparkSession, val root: String,
       col("ts").between(tss.min, tss.max) && col("ts").isin(tss: _*)
   }
 
-  /** Effective labels of the stored records among `keys` of `bucket`, in
-    * one Spark job: the base rows, plus the raw rows of the overlay
-    * partitions in scope that hold these keys' days, the highest seq
-    * winning on the driver. No overlay aggregate is built or broadcast. */
+  /** Effective labels of the stored records among `keys` of `bucket`:
+    * the base rows, plus the raw rows of the overlay partitions in scope
+    * that hold these keys' days, the highest seq winning. Read on the
+    * driver ([[keyRead]]) with no job; candidate files past the cap take
+    * one Spark job. No overlay aggregate is built or broadcast. */
   private def storedLabels(bucket: String, keys: Seq[(String, Long)])
-      : Map[(String, Long), Map[String, String]] = {
-    val BaseSeq = Long.MinValue
-    val base = baseTableOrEmpty().filter(keysIn(bucket, keys))
-      .select(col("entry"), col("ts"), col("labels"), lit(BaseSeq).as("seq"))
-    val scope = overlayScope()
-    val overlayDirs = keys.map { case (e, ts) => (bucket, e, dtOf(ts)) }.distinct
-      .filter(scope).map { case (b, e, d) =>
-        s"$overlayRootPath/bucket=${escapePartition(b)}/entry=${escapePartition(e)}/dt=$d" }
-    val rows =
-      if (overlayDirs.isEmpty) base
-      else base.unionByName(spark.read.schema(overlayStoredSchema)
-        .option("basePath", overlayRootPath.toString).parquet(overlayDirs: _*)
-        .filter(keysIn(bucket, keys)).select("entry", "ts", "labels", "seq"))
-    val wanted = keys.toSet
-    rows.collect().groupBy(r => (r.getString(0), r.getLong(1))).collect {
-      case (k, rs) if wanted(k) && rs.exists(_.getLong(3) == BaseSeq) =>
-        val latest = rs.maxBy(_.getLong(3))
-        k -> Option(latest.getMap[String, String](2)).fold(Map.empty[String, String])(_.toMap)
+      : Map[(String, Long), Map[String, String]] =
+    keyRead(bucket, keys, labels = true).getOrElse {
+      val BaseSeq = Long.MinValue
+      val base = baseTableOrEmpty().filter(keysIn(bucket, keys))
+        .select(col("entry"), col("ts"), col("labels"), lit(BaseSeq).as("seq"))
+      val scope = overlayScope()
+      val overlayDirs = keys.map { case (e, ts) => (bucket, e, dtOf(ts)) }.distinct
+        .filter(scope).map { case (b, e, d) =>
+          s"$overlayRootPath/bucket=${escapePartition(b)}/entry=${escapePartition(e)}/dt=$d" }
+      val rows =
+        if (overlayDirs.isEmpty) base
+        else base.unionByName(spark.read.schema(overlayStoredSchema)
+          .option("basePath", overlayRootPath.toString).parquet(overlayDirs: _*)
+          .filter(keysIn(bucket, keys)).select("entry", "ts", "labels", "seq"))
+      val wanted = keys.toSet
+      rows.collect().groupBy(r => (r.getString(0), r.getLong(1))).collect {
+        case (k, rs) if wanted(k) && rs.exists(_.getLong(3) == BaseSeq) =>
+          val latest = rs.maxBy(_.getLong(3))
+          k -> Option(latest.getMap[String, String](2)).fold(Map.empty[String, String])(_.toMap)
+      }
     }
-  }
 
   /** Which (entry, ts) keys of `bucket` are already stored — the
     * driver-side admission behind every serving write (the coalesced
     * [[writeFolded]] and the spooled [[writeStagedSlices]]) and their
     * per-record 409 error maps (write_batched.rs / io/write.rs report per
-    * record instead of failing the batch). ONE scan admits a whole batch
-    * or fold; no keys, no job. Bounded: keys come from HTTP headers, so
-    * the isin lists and the collect stay small (entry partition pruning
-    * + ts dictionary filter). */
+    * record instead of failing the batch). Keys come from HTTP headers,
+    * so the lookup is driver-sized: it reads on the driver
+    * ([[keyRead]]) with no job; candidate files past the cap take one
+    * Spark scan (entry partition pruning + ts dictionary filter). */
   def existingKeys(bucket: String,
       keys: Seq[(String, Long)]): Set[(String, Long)] = {
     if (keys.isEmpty) return Set.empty
-    val hits = baseTableOrEmpty().filter(keysIn(bucket, keys))
-      .select("entry", "ts").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    hits.intersect(keys.toSet)
+    keyRead(bucket, keys, labels = false).fold {
+      val hits = baseTableOrEmpty().filter(keysIn(bucket, keys))
+        .select("entry", "ts").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSet
+      hits.intersect(keys.toSet)
+    }(_.keySet)
+  }
+
+  /** The stored records among `keys` of `bucket`, read on the driver
+    * ([[SmallRead]]): the base files of the keys' (entry, day)
+    * partitions whose footer `ts` bounds hold one of their keys, only
+    * the row groups whose statistics do, and the `ts` column — plus
+    * `labels` and the in-scope overlay rows (the highest `seq` winning;
+    * a null map reads empty) with `labels`, else empty maps. None when
+    * the candidate files hold more than [[QueryRegistry.MaxBoundedBytes]]
+    * uncompressed: the caller scans with Spark. Callers run inside the
+    * mutation section, so no swap races the read. */
+  private def keyRead(bucket: String, keys: Seq[(String, Long)], labels: Boolean)
+      : Option[Map[(String, Long), Map[String, String]]] = {
+    val wanted = keys.groupBy { case (e, ts) => (e, dtOf(ts)) }
+      .map { case (k, ks) => k -> ks.map(_._2).toSet }
+    val byEntry = keys.groupBy(_._1).map { case (e, ks) => e -> ks.map(_._2).toSet }
+    def holdsKey(tss: Set[Long])(lo: Long, hi: Long): Boolean = tss.exists(ts => ts >= lo && ts <= hi)
+    val partFiles = baseFiles(baseTableOrEmpty(), pruning(Some(bucket), Some(byEntry.keySet)))
+      .filter(f => f._1 == bucket && wanted.contains((f._2, f._3)))
+    val (figures, _) = footerFigures(partFiles.map(_._4))
+    val files = partFiles.filter { f =>
+      val fig = figures(f._4.getPath.toString)
+      fig.rows > 0 && holdsKey(wanted((f._2, f._3)))(fig.minTs, fig.maxTs)
+    }
+    if (files.iterator.map(f => figures(f._4.getPath.toString).bytes).sum >
+        QueryRegistry.MaxBoundedBytes) return None
+    val decoded = decodeFiles(files.map(_._4), if (labels) Seq("ts", "labels") else Seq("ts"),
+      i => holdsKey(wanted((files(i)._2, files(i)._3))))
+    val found = for {
+      (f, values) <- files.zip(decoded)
+      v <- values
+      ts = v(0).asInstanceOf[Long]
+      if wanted((f._2, f._3))(ts)
+    } yield (f._2, ts) -> (if (labels) v(1).asInstanceOf[Map[String, String]] else Map.empty[String, String])
+    val patched =
+      if (!labels) Map.empty[(String, String, Long), Map[String, String]]
+      else overlayLabels(found.map { case ((e, ts), _) => (bucket, e, dtOf(ts)) },
+        (_, e) => holdsKey(byEntry(e)))
+    Some(found.iterator.map { case (k @ (e, ts), base) =>
+      k -> Option(patched.getOrElse((bucket, e, ts), base)).getOrElse(Map.empty[String, String])
+    }.toMap)
   }
 
   /** The keys among `keys` of `bucket` that could already be stored:
@@ -1527,10 +1588,10 @@ final class BucketStore(val spark: SparkSession, val root: String,
 
   /** Remove records by explicit (entry, ts) keys (remove_records.rs:34-60,
     * the ts-list form); returns per-key found/not-found. Planned from the
-    * keys on the driver: [[existingKeys]] is the only job before the
-    * rewrite, the affected partitions follow from the found keys' days,
-    * and the survivors filter is a literal per-entry ts list (keys come
-    * from HTTP headers, so the lists stay small). */
+    * keys on the driver: [[existingKeys]] reads them there, so the
+    * rewrite is the one job; the affected partitions follow from the
+    * found keys' days, and the survivors filter is a literal per-entry
+    * ts list (keys come from HTTP headers, so the lists stay small). */
   def removeRecords(bucket: String,
       keys: Seq[(String, Long)]): Map[(String, Long), Boolean] = mutating {
     if (keys.isEmpty) return Map.empty
@@ -1812,43 +1873,130 @@ final class BucketStore(val spark: SparkSession, val root: String,
     (figures.asScala.toMap, unread.size)
   }
 
-  /** [[table(spec)*]] with an estimate of what its scan reads: the
-    * uncompressed bytes of the base files in the spec's bucket whose
-    * entry resolves under its patterns ([[EntryPattern.resolve]], the
-    * query's `$meta` rule) and whose footer `[minTs, maxTs]` meets
-    * `[start, stop)`. No Spark job: the file index [[baseTable]] holds,
-    * pruned to the spec's bucket (and entry names, when no include is a
-    * glob), and the footer figures, read for the files the catalog fold
-    * has not cached. Table and estimate come from one base-table value,
-    * so a write landing in between cannot make the estimate understate
-    * the table, and a compaction swap racing the footer reads retries
-    * ([[readConsistent]]). [[QueryRegistry]] plans a query whose
-    * estimate is small on one partition. */
-  def scanBound(spec: QuerySpec): (DataFrame, Long) =
-    readConsistent(scanBoundOf(baseTable(), spec))
-
-  /** [[scanBound]] for readers that answer a store with no base tree yet
-    * with no rows, as [[tableOrEmpty]] does. Only the listing's failure
-    * maps to the empty table; a failing footer read surfaces. */
-  def scanBoundOrEmpty(spec: QuerySpec): (DataFrame, Long) =
-    readConsistent(scanBoundOf(baseTableOrEmpty(), spec))
-
-  private def scanBoundOf(base: DataFrame, spec: QuerySpec): (DataFrame, Long) = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, In, Literal}
-    import org.apache.spark.sql.types.StringType
-    val pruning = spec.bucket.map(b =>
-      EqualTo(AttributeReference("bucket", StringType)(), Literal(b))).toSeq ++
-      EntryPattern.literalNames(spec.entries).map(names =>
-        In(AttributeReference("entry", StringType)(), names.toSeq.map(Literal(_))))
-    val files = baseFiles(base, pruning).filter(f => spec.bucket.forall(_ == f._1))
-    val entries = EntryPattern.resolve(files.map(_._2).distinct, spec.entries).toSet
+  /** An estimate of what `spec`'s scan reads: the uncompressed bytes
+    * of the base files it can read ([[specFiles]]) whose footer
+    * `[minTs, maxTs]` meets `[start, stop)`. No Spark job: the file index
+    * [[baseTable]] holds and the footer figures, read for the files the
+    * catalog fold has not cached; a compaction swap racing the footer
+    * reads retries ([[readConsistent]]). [[QueryRegistry]] reads a query
+    * whose estimate is small on the driver ([[readSmall]]). With
+    * `orEmpty`, a store with no base tree yet reads nothing, as
+    * [[tableOrEmpty]] does; a failing footer read surfaces either way. */
+  def scanBound(spec: QuerySpec, orEmpty: Boolean = false): Long = readConsistent {
+    val files = specFiles(if (orEmpty) baseTableOrEmpty() else baseTable(), spec)
     // only the catalog fold installs figures: it sees the whole listing,
     // so a file a racing fold dropped is never put back
-    val (figures, _) = footerFigures(files.collect { case (_, e, _, st) if entries(e) => st })
-    val bytes = figures.valuesIterator.filter { f =>
-      f.rows > 0 && spec.start.forall(f.maxTs >= _) && spec.stop.forall(f.minTs < _)
-    }.map(_.bytes).sum
-    (overlaid(base, overlayMeets(spec)), bytes)
+    val (figures, _) = footerFigures(files.map(_._4))
+    figures.valuesIterator.filter(f => f.rows > 0 && meets(spec, f.minTs, f.maxTs))
+      .map(_.bytes).sum
+  }
+
+  /** Whether `[lo, hi]` meets `spec`'s `[start, stop)`. */
+  private def meets(spec: QuerySpec, lo: Long, hi: Long): Boolean =
+    spec.start.forall(hi >= _) && spec.stop.forall(lo < _)
+
+  /** `spec`'s answer read on the driver, with no Spark job: the rows the
+    * Spark plan of [[QueryEngine.query]] over [[table(spec)*]] returns,
+    * in its order and schema ([[SmallRead]]). For answers known to be
+    * small ([[scanBound]]): the whole answer is held. Reads the files of
+    * [[specFiles]] whose footer meets the range, only their row groups
+    * whose `ts` statistics do, and only `Finished` rows; labels are the
+    * highest-`seq` rows of the in-scope overlay partitions, so no
+    * overlay aggregate is built or broadcast. The listing is taken
+    * inside [[readConsistent]]: a compaction swap or overlay fold racing
+    * the read retries against the settled tree. `orEmpty` as for
+    * [[scanBound]]. */
+  def readSmall(spec: QuerySpec, orEmpty: Boolean = false): Seq[org.apache.spark.sql.Row] =
+    readConsistent {
+      val candidates = specFiles(if (orEmpty) baseTableOrEmpty() else baseTable(), spec)
+      val (figures, _) = footerFigures(candidates.map(_._4))
+      val files = candidates.filter { f =>
+        val fig = figures(f._4.getPath.toString)
+        fig.rows > 0 && meets(spec, fig.minTs, fig.maxTs)
+      }
+      val columns = Seq("ts", "labels", "computed_labels", "content_type", "state") ++
+        (if (spec.onlyMetadata) Nil else Seq("payload"))
+      val decoded = decodeFiles(files.map(_._4), columns, _ => meets(spec, _, _))
+      val labels = overlayLabels(files.map(f => (f._1, f._2, f._3)),
+        (_, _) => meets(spec, _, _))
+      val schema = SmallRead.answerSchema(spec.onlyMetadata)
+      val rows = for {
+        (f, values) <- files.zip(decoded)
+        v <- values
+        ts = v(0).asInstanceOf[Long]
+        if v(4) == Records.State.Finished && meets(spec, ts, ts)
+      } yield {
+        val lbl = labels.get((f._1, f._2, ts)).flatMap(Option(_)).getOrElse(v(1))
+        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+          Array[Any](f._1, f._2, ts, lbl, v(2), v(3), v(4)) ++ v.drop(5), schema)
+          : org.apache.spark.sql.Row
+      }
+      SmallRead.answer(rows, schema, spec)
+    }
+
+  /** The base files `spec` can read: `base`'s file index pruned to the
+    * spec's bucket (and entry names, when no include is a glob), then
+    * the entries resolved as the query resolves them
+    * ([[EntryPattern.resolve]], its `$meta` rule). */
+  private def specFiles(base: DataFrame, spec: QuerySpec)
+      : Seq[(String, String, String, org.apache.hadoop.fs.FileStatus)] = {
+    val files = baseFiles(base, pruning(spec.bucket, EntryPattern.literalNames(spec.entries)))
+      .filter(f => spec.bucket.forall(_ == f._1))
+    val entries = EntryPattern.resolve(files.map(_._2).distinct, spec.entries).toSet
+    files.filter(f => entries(f._2))
+  }
+
+  /** [[baseFiles]] partition filters: the bucket and the entry names. */
+  private def pruning(bucket: Option[String], entries: Option[Set[String]])
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, In, Literal}
+    import org.apache.spark.sql.types.StringType
+    bucket.map(b => EqualTo(AttributeReference("bucket", StringType)(), Literal(b))).toSeq ++
+      entries.map(names => In(AttributeReference("entry", StringType)(), names.toSeq.map(Literal(_))))
+  }
+
+  /** [[SmallRead.decode]] of each of `files` (the row groups
+    * `meets(i)` keeps of file `i`), on the [[parallelFs]] pool with one
+    * shared `HadoopReadOptions` per read; results align with `files`. */
+  private def decodeFiles(files: Seq[org.apache.hadoop.fs.FileStatus], columns: Seq[String],
+      meets: Int => (Long, Long) => Boolean)
+      : IndexedSeq[Vector[Array[Any]]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    val out = new Array[Vector[Array[Any]]](files.size)
+    parallelFs(files.indices) { i =>
+      out(i) = SmallRead.decode(files(i), columns, meets(i), conf, options)
+    }
+    out.toIndexedSeq
+  }
+
+  /** Labels of the overlay rows in the (bucket, entry, dt) `partitions`
+    * that lie in [[overlayScope]], by (bucket, entry, ts), the highest
+    * `seq` winning — the rule of [[overlayLatest]], read on the driver.
+    * `meets(bucket, entry)` keeps row groups by their `ts` bounds. */
+  private def overlayLabels(partitions: Seq[(String, String, String)],
+      meets: (String, String) => (Long, Long) => Boolean)
+      : Map[(String, String, Long), Map[String, String]] = {
+    val scope = overlayScope()
+    val fs = overlayRootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = partitions.distinct.filter(scope).flatMap { case k @ (b, e, d) =>
+      listQuiet(fs, new org.apache.hadoop.fs.Path(s"$overlayRootPath/bucket=" +
+        s"${escapePartition(b)}/entry=${escapePartition(e)}/dt=$d")).collect {
+        case st if st.isFile && !st.getPath.getName.startsWith("_") &&
+            !st.getPath.getName.startsWith(".") => (k, st)
+      }
+    }
+    if (files.isEmpty) return Map.empty
+    val decoded = decodeFiles(files.map(_._2), Seq("ts", "labels", "seq"),
+      i => meets(files(i)._1._1, files(i)._1._2))
+    val latest = scala.collection.mutable.HashMap.empty[(String, String, Long), (Long, Map[String, String])]
+    for ((((b, e, _), _), values) <- files.zip(decoded); v <- values) {
+      val key = (b, e, v(0).asInstanceOf[Long])
+      val seq = v(2).asInstanceOf[Long]
+      if (latest.get(key).forall(_._1 < seq))
+        latest(key) = (seq, v(1).asInstanceOf[Map[String, String]])
+    }
+    latest.iterator.map { case (k, (_, l)) => k -> l }.toMap
   }
 
   /** (bucket, entry, dt, file) for every file of `base`'s file index —
@@ -1900,12 +2048,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     var lo = Long.MaxValue
     var hi = Long.MinValue
     for (b <- blocks if b.getRowCount > 0) {
-      val (groupLo, groupHi) = b.getColumns.asScala.find(_.getPath.toDotString == "ts")
-        .map(_.getStatistics).collect {
-          case s: org.apache.parquet.column.statistics.LongStatistics
-              if s.hasNonNullValue => (s.getMin, s.getMax)
-        }.getOrElse(throw new IllegalStateException(
-          s"base file ${st.getPath} has a row group without ts statistics"))
+      val (groupLo, groupHi) = SmallRead.tsBounds(b, st)
       rows += b.getRowCount
       bytes += b.getTotalByteSize
       lo = math.min(lo, groupLo)

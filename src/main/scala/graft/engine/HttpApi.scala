@@ -66,6 +66,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
 
   val tokens = new TokenRepository(apiToken)
   private val registry = new QueryRegistry(queryTtlMs, maxCursors)
+  private val querySource = store.querySource()
   /** `RS_RATE_LIMIT_API/INGRESS/EGRESS` windowed limits (api/limits.rs,
     * PR-1255). Package-visible so specs can assert the parsed config. */
   private[engine] val limits = RateLimits.fromEnv(env)
@@ -508,6 +509,9 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
         errorResponse(ex, 429, e.getMessage)
       case e: IllegalArgumentException =>
         errorResponse(ex, 422, Option(e.getMessage).getOrElse("unprocessable"))
+      // a condition that does not parse, check or evaluate (strict)
+      case e: graft.cond.CondError =>
+        errorResponse(ex, 422, e.getMessage)
       case e: NoSuchElementException =>
         errorResponse(ex, 404, Option(e.getMessage).getOrElse("not found"))
       case e: Throwable =>
@@ -1005,7 +1009,9 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   // -------------------------------------------------------------- query
 
   private def parseQueryEntry(body: String): (QuerySpec, Long, Boolean) = {
-    val j = JsonMethods.parseOpt(body).getOrElse(JObject())
+    val j =
+      if (body.trim.isEmpty) JObject()
+      else JsonMethods.parseOpt(body).getOrElse(throw unprocessable("Invalid JSON in query body"))
     implicit val fmts: Formats = DefaultFormats
     // PR-1548: `limit` is REMOVED from QueryEntry upstream
     // (entry_api.rs current field set) — reject instead of ignoring
@@ -1053,7 +1059,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     val (spec0, ttlMs, continuous) = parseQueryEntry(body)
     val spec = spec0.copy(bucket = Some(bucket),
       entries = Some(spec0.entries.getOrElse(Seq(entry))))
-    val id = registry.open(spec, store.scanBound _, continuous, ttlMs)
+    val id = registry.open(spec, querySource, continuous, ttlMs)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
   }
 
@@ -1071,7 +1077,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     val continuous = params.get("continuous").exists(v =>
       v.toBooleanOption.getOrElse(
         throw unprocessable("'continue' must be a bool value")))
-    val id = registry.open(spec, store.scanBound _, continuous, ttlMs)
+    val id = registry.open(spec, querySource, continuous, ttlMs)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
   }
 
@@ -1598,14 +1604,17 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     val token = q.getOrElse("token", throw unprocessable("'token' is required"))
     val lp = QueryLinks.verify(token, linkSecret)
       .getOrElse(throw unauthorized("Invalid or expired query link"))
-    val row = store.readConsistent {
-      // a small answer resolves in one task (QueryRegistry's rule)
-      val (table, bytes) = store.scanBound(lp.spec)
-      QueryEngine.query(table, lp.spec,
-          onePartition = QueryRegistry.onePartition(lp.spec, bytes))
+    val s = lp.spec
+    // a small answer reads on the driver (QueryRegistry's rule)
+    val row = (if (QueryRegistry.bounded(s, store.scanBound(s))) {
+      QueryEngine.check(s)
+      store.readSmall(s).find(r =>
+        r.getAs[String]("entry") == lp.recordEntry && r.getAs[Long]("ts") == lp.recordTs)
+    } else store.readConsistent {
+      QueryEngine.query(store.table(s), s)
         .filter(col("entry") === lp.recordEntry && col("ts") === lp.recordTs)
         .limit(1).collect()
-    }.headOption.getOrElse(throw notFound(
+    }.headOption).getOrElse(throw notFound(
       s"Record '${lp.recordEntry}' @ ${lp.recordTs} not found in query link results"))
     serveRecordRanged(ex, row)
   }
@@ -1671,7 +1680,7 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   private def ioQuery(ex: HttpExchange, bucket: String): Unit = {
     val (spec0, ttlMs, continuous) = parseQueryEntry(new String(readBody(ex), UTF_8))
     val spec = spec0.copy(bucket = Some(bucket))
-    val id = registry.open(spec, store.scanBound _, continuous, ttlMs)
+    val id = registry.open(spec, querySource, continuous, ttlMs)
     json(ex, 200, JObject("id" -> JInt(BigInt(id))))
   }
 

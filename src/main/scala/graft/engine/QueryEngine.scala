@@ -40,25 +40,18 @@ object QueryEngine {
 
   /** Main read path: filtered records ordered by (ts, entry) — the
     * k-way-merge order of the reference's multi-entry aggregator
-    * (storage/bucket/query.rs:156-318, ties broken by entry name).
-    *
-    * `onePartition` plans a small answer in one task: see [[matching]].
-    * Off by default — the distributed plan is the analytics contract.
-    */
+    * (storage/bucket/query.rs:156-318, ties broken by entry name). */
   def query(records: DataFrame, spec: QuerySpec,
-      processors: Map[String, RecordProcessor] = Processors.registry,
-      onePartition: Boolean = false): DataFrame =
-    queryUnordered(records, spec, processors, onePartition)
-      .orderBy(col("ts"), col("entry"))
+      processors: Map[String, RecordProcessor] = Processors.registry): DataFrame =
+    queryUnordered(records, spec, processors).orderBy(col("ts"), col("entry"))
 
   /** [[query]] without the final total (ts, entry) sort — for consumers
     * that impose their own order-preserving exchange (bulk shard export
     * range-partitions on the same key, so a global sort underneath would
     * be a redundant second exchange). */
   def queryUnordered(records: DataFrame, spec: QuerySpec,
-      processors: Map[String, RecordProcessor] = Processors.registry,
-      onePartition: Boolean = false): DataFrame = {
-    val filtered = matching(records, spec, onePartition)
+      processors: Map[String, RecordProcessor] = Processors.registry): DataFrame = {
+    val filtered = matching(records, spec)
     val projected = spec.when match {
       case Some(w) =>
         val directives = Parser.parse(w).directives
@@ -74,24 +67,28 @@ object QueryEngine {
     if (spec.onlyMetadata) projected.drop("payload") else projected
   }
 
-  /** The matching record set (unordered) — shared by read/count/remove.
-    *
-    * `onePartition` coalesces the candidates to one partition after the
-    * range, state and entry filters: the read-side twin of the store's
-    * co-located small writes. Every later operator — the trailing-count
-    * and `#ctx` windows, the sequential kernel, a caller's (ts, entry)
-    * sort — then finds its distribution satisfied, so the plan runs as
-    * one task with no exchange. Only for answers known to be small
-    * (QueryRegistry's bound): one task holds the whole scan. */
-  def matching(records: DataFrame, spec: QuerySpec,
-      onePartition: Boolean = false): DataFrame = {
+  /** The matching record set (unordered) — shared by read/count/remove. */
+  def matching(records: DataFrame, spec: QuerySpec): DataFrame = {
     val scoped = spec.bucket.fold(records)(b => records.filter(col("bucket") === b))
     val candidates = applyEntries(applyRange(scoped, spec), spec.entries)
-    val base = if (onePartition) candidates.coalesce(1) else candidates
     spec.when match {
-      case None => base
-      case Some(whenJson) =>
-        applyWhen(base, Parser.parse(whenJson), spec.strict, onePartition)
+      case None => candidates
+      case Some(whenJson) => applyWhen(candidates, Parser.parse(whenJson), spec.strict)
+    }
+  }
+
+  /** The errors planning `spec` raises — parse and directive errors, a
+    * negative `#ctx` padding, `$each_n: 0` in a lowered conjunct and the
+    * compiler's own — raised without building a DataFrame: the
+    * predicate compiles to an unresolved Column, which runs no analysis.
+    * For readers that answer `spec` without a plan (the store's
+    * driver-side reader), so a query fails where its plan would. */
+  def check(spec: QuerySpec): Unit = spec.when.foreach { w =>
+    val parsed = Parser.parse(w)
+    paddings(parsed.directives)
+    lowering(parsed.root, spec.strict).foreach { case (pure, trailing) =>
+      trailingFlag(CondCompiler.compilePredicate(pure,
+        CondCompiler.Cols(col("ts"), col("labels"), col("computed_labels"))), trailing)
     }
   }
 
@@ -249,26 +246,27 @@ object QueryEngine {
       (lblCols ++ cmpCols).map(_._2))
   }
 
-  private def applyWhen(base: DataFrame, parsed: ParsedCondition, strict: Boolean,
-      onePartition: Boolean): DataFrame = {
-    val root = parsed.root
-    if (Node.isStateful(root)) {
-      if (strict) StatefulKernel.run(base, parsed, strict, onePartition)
-      else splitTrailingStateful(root) match {
-        case Some((pure, trailing)) =>
-          val (df, compile, helpers) = staged(base, pure)
-          ctxRewrite(df, trailingFlag(compile(pure), trailing), parsed.directives)
-            .drop(helpers: _*)
-        case None => StatefulKernel.run(base, parsed, strict, onePartition)
-      }
-    } else if (strict && mayError(root)) {
-      // strict mode must surface evaluation errors — interpret row-by-row
-      StatefulKernel.run(base, parsed, strict, onePartition)
-    } else {
-      val (df, compile, helpers) = staged(base, root)
-      ctxRewrite(df, compile(root), parsed.directives).drop(helpers: _*)
+  private def applyWhen(base: DataFrame, parsed: ParsedCondition,
+      strict: Boolean): DataFrame = {
+    paddings(parsed.directives)
+    lowering(parsed.root, strict) match {
+      case None => StatefulKernel.run(base, parsed, strict)
+      case Some((pure, trailing)) =>
+        val (df, compile, helpers) = staged(base, pure)
+        ctxRewrite(df, trailingFlag(compile(pure), trailing), parsed.directives)
+          .drop(helpers: _*)
     }
   }
+
+  /** How a `when` tree plans: the compiled pure part and its trailing
+    * `$each_n`/`$limit` conjuncts, or None for the sequential kernel —
+    * stateful trees that do not lower, and strict trees that can raise
+    * (strict mode must surface evaluation errors, so they interpret
+    * row by row). */
+  private def lowering(root: Node, strict: Boolean): Option[(Node, List[Node.Op])] =
+    if (Node.isStateful(root)) { if (strict) None else splitTrailingStateful(root) }
+    else if (strict && mayError(root)) None
+    else Some((root, Nil))
 
   /** Can evaluation raise (missing label, bad cast, ÷0 …)? Pure trees of
     * constants/logic can't; anything touching labels or arithmetic can. */
@@ -324,6 +322,10 @@ object QueryEngine {
   sealed trait Padding
   final case class PadRecords(n: Int) extends Padding
   final case class PadDuration(us: Long) extends Padding
+
+  /** Both `#ctx` paddings, checked. */
+  private def paddings(d: Directives): Unit =
+    Seq("#ctx_before", "#ctx_after").foreach(padding(d, _))
 
   def padding(d: Directives, name: String): Option[Padding] =
     d.single(name).map { v =>

@@ -16,32 +16,42 @@ import scala.util.control.NonFatal
   * 16-84). `query links` serialize a QuerySpec with an HMAC signature and
   * expiry (reduct_base/src/msg/query_link_api.rs:10-35).
   *
-  * BOUNDED CURSORS: the reference orders an answer by k-way-merging
-  * per-entry readers that already yield ts order
-  * (storage/bucket/query.rs:156-318); the distributed plan needs a global
-  * (ts, entry) sort instead — a range-sample job, a shuffle-map job and
-  * a result job per drain. A cursor's table source returns the table
-  * and an estimate of the bytes its scan reads
+  * BOUNDED CURSORS: the reference answers a query by reading each
+  * entry's blocks in ts order and k-way-merging the entries
+  * (storage/bucket/query.rs:156-318); it starts no distributed job for
+  * a small answer. A cursor's [[QueryRegistry.Source]] gives an
+  * estimate of the bytes the query's scan reads
   * (`BucketStore.scanBound`: the uncompressed size of the base files it
-  * can read). When the estimate is ≤ [[QueryRegistry.MaxBoundedBytes]],
-  * the query plans on one partition ([[QueryEngine.matching]]): windows,
-  * kernel and sort run in one task and the drain is one job. `#ext`
-  * queries always stream (processors may split rows past any bound),
-  * and a continuous cursor bounds again at each re-arm. A source with
-  * no estimate (`open(records, spec)`) always streams.
+  * can read). When the estimate is ≤ [[QueryRegistry.MaxBoundedBytes]]
+  * and the query has no `#ext` directive, the cursor reads its answer
+  * on the driver (`BucketStore.readSmall`) and drains in no Spark job.
+  * Everything else streams through Spark ([[QueryEngine.query]]):
+  * `#ext` processors may split rows past any bound. Either way open
+  * only plans or checks the query — parse, directive and compile errors
+  * surface there ([[QueryEngine.check]] for the driver reader) — and
+  * the rows are read at the first fetch. A source with no estimate
+  * (`open(records, spec)`) always streams. Errors a drain raises reach
+  * the caller as the condition's own error on both paths
+  * ([[QueryRegistry.surfaced]]).
+  *
+  * CONTINUOUS CURSORS re-arm only when the source's version moved since
+  * the last arm: an exhausted cursor over an unchanged store polls with
+  * no read and no job, as a Structured Streaming trigger with no new
+  * data runs no batch. A source with no version (a read-only replica)
+  * re-arms on every poll. Each re-arm bounds again.
   *
   * MEMORY BOUND: a streaming cursor holds its spec + a lazy local
   * iterator (at most ONE partition's fetched rows once draining starts
   * — Spark's toLocalIterator pulls partitions on demand). A bounded
-  * cursor's one partition is its whole answer, so once draining starts
-  * it holds the whole answer. The per-cursor cap and the registry-wide
-  * [[QueryRegistry.BoundedBudgetBytes]] limit that answer by its scan
-  * estimate, not by measured heap: the estimate counts encoded page
-  * bytes (dictionary and run-length encoded labels can decode larger)
-  * and not the overlay labels a patched entry joins in. An open whose
-  * estimate would pass the budget streams instead, with the same
+  * cursor holds its whole answer from the first fetch. The per-cursor
+  * cap and the registry-wide [[QueryRegistry.BoundedBudgetBytes]] limit
+  * that answer by its scan estimate, not by measured heap: the estimate
+  * counts encoded page bytes (dictionary and run-length encoded labels
+  * can decode larger), not the overlay labels of a patched entry, and
+  * not rows a write lands between open and the first fetch. An open
+  * whose estimate would pass the budget streams instead, with the same
   * answer. A reservation is returned when the cursor drains to its end
-  * (an exhausted cursor also drops its iterator), is closed, or
+  * (an exhausted cursor also drops its rows), is closed, or
   * expires. The registry never exceeds `maxCursors` entries (default
   * 8192): expired cursors are
   * swept on every open/fetch, and an open at the cap is REJECTED with
@@ -61,7 +71,7 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
 
   final class Cursor(
       val id: Long,
-      scan: QuerySpec => (DataFrame, Long),
+      source: Source,
       val spec: QuerySpec,
       continuous: Boolean,
       ttlMs: Long) {
@@ -73,24 +83,31 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
     private val reservation = new Object
     private var held = 0L
     private var retired = false
-    // Compiled at OPEN (parse/plan errors surface there → HTTP 422; no
-    // Spark jobs run — the flood spec pins ~10 ms opens), but the
-    // iterator is materialized on FIRST FETCH: toLocalIterator under
-    // AQE eagerly runs the plan's upstream shuffle stages, so eager
-    // init made open() pay the query's first shuffle (measured: a
-    // gated 4-row sort blocked open for the full stage time; the
-    // reference registers instantly and pays on read, query.rs:33-36).
-    private var compiled: DataFrame = plan(spec)
+    // the source's version when the query was last planned
+    private var armedAt: Option[Long] = None
+    // Planned at OPEN (parse/plan errors surface there → HTTP 422; no
+    // Spark jobs run — the flood spec pins ~10 ms opens), but the rows
+    // are read on FIRST FETCH: toLocalIterator under AQE eagerly runs
+    // the plan's upstream shuffle stages, so eager init made open() pay
+    // the query's first shuffle (measured: a gated 4-row sort blocked
+    // open for the full stage time; the reference registers instantly
+    // and pays on read, query.rs:33-36).
+    private var pending: () => Iterator[Row] = plan(spec)
     private var iter: Iterator[Row] = null
 
-    /** The query's plan: on one partition when the scan estimate is
-      * under the cap and the budget takes it, else streaming. */
-    private def plan(s: QuerySpec): DataFrame = {
-      val (table, bytes) = scan(s)
-      if (onePartition(s, bytes) && reserve(bytes))
-        try QueryEngine.query(table, s, onePartition = true)
+    /** The query's read: on the driver when the scan estimate is under
+      * the cap and the budget takes it, else a streaming drain. */
+    private def plan(s: QuerySpec): () => Iterator[Row] = {
+      armedAt = source.version
+      val bytes = source.bound(s)
+      if (bounded(s, bytes) && reserve(bytes)) {
+        try QueryEngine.check(s)
         catch { case NonFatal(e) => release(); throw e }
-      else QueryEngine.query(table, s)
+        () => source.read(s).iterator
+      } else {
+        val df = QueryEngine.query(source.table(s), s)
+        () => drain(df)
+      }
     }
 
     private def reserve(bytes: Long): Boolean = reservation.synchronized {
@@ -121,8 +138,8 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
       * cursor only (the iterator is stateful) — the registry's expiry
       * sweep and other cursors' fetches never contend it. Time bound:
       * one fetch pulls at most one result partition through
-      * toLocalIterator plus local iteration of ≤ maxRecords rows; it
-      * never scans the full result set. A cursor expiring (or being
+      * toLocalIterator (or, bounded, reads the answer once) plus local
+      * iteration of ≤ maxRecords rows. A cursor expiring (or being
       * closed) while a fetch is in flight is benign: the in-flight fetch
       * completes against its own iterator, the NEXT registry.fetch
       * returns None. */
@@ -141,18 +158,21 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
 
     private def ensureNext(): Boolean = {
       if (iter == null) {
-        iter = drain(compiled)
-        compiled = null // the iterator owns the execution from here
+        iter = surfaced(pending())
+        pending = null // the iterator owns the read from here
       }
-      if (iter.hasNext) return true
+      if (surfaced(iter.hasNext)) return true
       release()
       if (!continuous) {
         iter = Iterator.empty // drained rows are not held until the TTL
         return false
       }
+      // nothing to re-arm for while the source reports the version the
+      // last arm saw
+      if (armedAt.isDefined && source.version == armedAt) return false
       // re-arm a fresh historical query from last emitted ts + 1
-      iter = drain(plan(spec.copy(start = lastTs.map(_ + 1).orElse(spec.start))))
-      iter.hasNext || { release(); false }
+      iter = surfaced(plan(spec.copy(start = lastTs.map(_ + 1).orElse(spec.start)))())
+      surfaced(iter.hasNext) || { release(); false }
     }
   }
 
@@ -175,25 +195,31 @@ final class QueryRegistry(defaultTtlMs: Long = 60000L,
   private def unreserve(bytes: Long): Unit =
     if (bytes != 0L) reservedBytes.addAndGet(-bytes): Unit
 
-  /** Register a query over a table source without a scan estimate:
-    * the cursor streams. `records` is called again at each continuous
-    * re-arm. */
+  /** Register a query over a table source without a scan estimate or
+    * a version: the cursor streams, and `records` is called again at
+    * each continuous re-arm. */
   def open(records: () => DataFrame, spec: QuerySpec,
       continuous: Boolean = false, ttlMs: Long = defaultTtlMs): Long =
-    open(spec, (_: QuerySpec) => (records(), Long.MaxValue), continuous, ttlMs)
+    open(spec, new Source {
+      def bound(s: QuerySpec): Long = Long.MaxValue
+      def table(s: QuerySpec): DataFrame = records()
+      def read(s: QuerySpec): Seq[Row] =
+        throw new UnsupportedOperationException("a table source has no driver-side reader")
+      def version: Option[Long] = None
+    }, continuous, ttlMs)
 
   /** Register a query; returns its process-global id (query.rs:33-36).
-    * `scan` gives the table to query and an estimate of the bytes its
-    * scan reads (`BucketStore.scanBound`), which picks the plan (class
-    * doc); it is called at open and at each continuous re-arm.
+    * `source` gives the estimate that picks the read (class doc), the
+    * table and reader, and the version that gates continuous re-arms;
+    * it is asked at open and at each continuous re-arm.
     * @throws QueryRegistry.TooManyQueriesException when the registry is
     *         at `maxCursors` live (unexpired) cursors — the caller maps
     *         this to HTTP 429; existing cursors are never evicted. */
-  def open(spec: QuerySpec, scan: QuerySpec => (DataFrame, Long),
+  def open(spec: QuerySpec, source: Source,
       continuous: Boolean, ttlMs: Long): Long = {
     evictExpired()
     val id = nextId.getAndIncrement()
-    val cursor = new Cursor(id, scan, spec, continuous, ttlMs)
+    val cursor = new Cursor(id, source, spec, continuous, ttlMs)
     // cap enforcement under a lock: a check-then-put race would let N
     // concurrent opens overshoot the documented bound. The check is
     // O(1); fetch/close stay lock-free on the ConcurrentHashMap.
@@ -245,10 +271,21 @@ object QueryRegistry {
     * evicts live cursors to make room (see class doc). */
   final class TooManyQueriesException(msg: String) extends RuntimeException(msg)
 
-  /** A cursor whose scan estimate is this many bytes or fewer plans on
-    * one partition. Set to about the default page body cap
+  /** Where a query's rows come from: an estimate of the bytes its scan
+    * reads, the Spark table it streams from, a driver-side reader for
+    * small answers, and a version that moves whenever the data may have
+    * (None: unknown). `BucketStore.querySource` is the store's. */
+  trait Source {
+    def bound(spec: QuerySpec): Long
+    def table(spec: QuerySpec): DataFrame
+    def read(spec: QuerySpec): Seq[Row]
+    def version: Option[Long]
+  }
+
+  /** A query whose scan estimate is this many bytes or fewer reads on
+    * the driver. Set to about the default page body cap
     * (`RS_IO_BATCH_MAX_SIZE`, 8 MB), so a bounded answer is about one
-    * page; not tuned by measurement. */
+    * page; not tuned by measurement. Key lookups take the same cap. */
   val MaxBoundedBytes: Long = 8L << 20
 
   /** Across the registry, bounded cursors reserve at most this many
@@ -260,16 +297,43 @@ object QueryRegistry {
   private def hasExt(spec: QuerySpec): Boolean =
     spec.when.exists(w => Parser.parse(w).directives.get("#ext").isDefined)
 
-  /** Whether a one-shot drain of `spec`, whose scan estimate is
-    * `bytes`, plans on one partition: the cursors' per-cursor rule. Such
-    * a drain holds its answer only while it runs, so it takes no budget. */
-  def onePartition(spec: QuerySpec, bytes: Long): Boolean =
+  /** The one rule: `spec`, whose scan estimate is `bytes`, reads on the
+    * driver when the estimate is ≤ [[MaxBoundedBytes]] and it has no
+    * `#ext`; else it streams through Spark. */
+  def bounded(spec: QuerySpec, bytes: Long): Boolean =
     bytes <= MaxBoundedBytes && !hasExt(spec)
+
+  /** A one-shot answer of `spec` by the cursors' rule, for readers that
+    * hold no cursor (the Zenoh queryable). A driver-side answer takes no
+    * budget: it is held only while its caller drains it. */
+  def answer(source: Source, spec: QuerySpec): Iterator[Row] =
+    if (bounded(spec, source.bound(spec))) {
+      QueryEngine.check(spec)
+      source.read(spec).iterator
+    } else {
+      val it = drain(QueryEngine.query(source.table(spec), spec))
+      new Iterator[Row] {
+        def hasNext: Boolean = surfaced(it.hasNext)
+        def next(): Row = surfaced(it.next())
+      }
+    }
 
   private def drain(df: DataFrame): Iterator[Row] = {
     import scala.jdk.CollectionConverters._
     df.toLocalIterator().asScala
   }
+
+  /** `f`, with a condition error raised inside a Spark task rethrown as
+    * itself: the driver reader raises it directly, so both reads of a
+    * query fail with one error (a strict query's missing label is the
+    * same 422 on either path). */
+  private[engine] def surfaced[T](f: => T): T =
+    try f
+    catch {
+      case NonFatal(e) =>
+        throw Iterator.iterate(e: Throwable)(_.getCause).take(12).takeWhile(_ != null)
+          .collectFirst { case c: graft.cond.CondError => c }.getOrElse(e)
+    }
 }
 
 /** Shareable signed query links (query_link_api.rs:10-35): a serialized

@@ -3,6 +3,7 @@ package graft.engine
 import graft.cond._
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import scala.collection.mutable
 
 /** Sequential-state execution of a `when` tree: `$each_t`, `$gate`, and
@@ -21,12 +22,21 @@ import scala.collection.mutable
   */
 object StatefulKernel {
 
-  /** `onePartition`: `base` already sits in one partition (a bounded
-    * cursor, [[QueryEngine.matching]]), so the entry exchange is skipped
-    * and the one task sorts by (entry, ts). */
-  def run(base: DataFrame, parsed: ParsedCondition, strict: Boolean,
-      onePartition: Boolean = false): DataFrame = {
+  def run(base: DataFrame, parsed: ParsedCondition, strict: Boolean): DataFrame = {
     val schema = base.schema
+    graft.core.Partitioning.pinned(base, col("entry"))
+      .sortWithinPartitions(col("entry"), col("ts"))
+      .mapPartitions(rows => byEntry(rows, schema, parsed, strict))(Encoders.row(schema))
+  }
+
+  /** The per-entry filter loop: `rows`, sorted by (entry, ts), each
+    * entry through a fresh [[WhenFilter]] + [[Interp]] chain — the
+    * `#ctx_before`/`#ctx_after` padding, the `$limit` interrupt that
+    * ends its entry, and `strict` errors. Shared by [[run]]'s
+    * partitions and the store's driver-side reader
+    * ([[SmallRead.answer]]). */
+  def byEntry(rows: Iterator[Row], schema: StructType, parsed: ParsedCondition,
+      strict: Boolean): Iterator[Row] = {
     val tsIdx = schema.fieldIndex("ts")
     val entryIdx = schema.fieldIndex("entry")
     val labelsIdx = schema.fieldIndex("labels")
@@ -34,50 +44,44 @@ object StatefulKernel {
     val root = parsed.root
     val before = QueryEngine.padding(parsed.directives, "#ctx_before")
     val after = QueryEngine.padding(parsed.directives, "#ctx_after")
+    new Iterator[Row] {
+      private var currentEntry: String = null
+      private var filter: WhenFilter = null
+      private var interrupted = false
+      private val out = mutable.Queue.empty[Row]
 
-    val byEntry = if (onePartition) base else graft.core.Partitioning.pinned(base, col("entry"))
-    val sorted = byEntry.sortWithinPartitions(col("entry"), col("ts"))
-
-    sorted.mapPartitions { rows =>
-      new Iterator[Row] {
-        private var currentEntry: String = null
-        private var filter: WhenFilter = null
-        private var interrupted = false
-        private val out = mutable.Queue.empty[Row]
-
-        @annotation.tailrec
-        private def fill(): Unit =
-          if (out.isEmpty && rows.hasNext) {
-            val row = rows.next()
-            val entry = row.getString(entryIdx)
-            if (entry != currentEntry) { // fresh per-entry filter chain
-              currentEntry = entry
-              interrupted = false
-              filter = new WhenFilter(new Interp(root), before, after, strict, tsIdx)
-            }
-            if (!interrupted) {
-              filter.filter(row, mkCtx(row)) match {
-                case None          => interrupted = true
-                case Some(emitted) => out ++= emitted
-              }
-            }
-            fill()
+      @annotation.tailrec
+      private def fill(): Unit =
+        if (out.isEmpty && rows.hasNext) {
+          val row = rows.next()
+          val entry = row.getString(entryIdx)
+          if (entry != currentEntry) { // fresh per-entry filter chain
+            currentEntry = entry
+            interrupted = false
+            filter = new WhenFilter(new Interp(root), before, after, strict, tsIdx)
           }
-
-        private def mkCtx(row: Row): Ctx = {
-          val labels =
-            if (row.isNullAt(labelsIdx)) Map.empty[String, String]
-            else row.getMap[String, String](labelsIdx)
-          val computed =
-            if (row.isNullAt(computedIdx)) Map.empty[String, String]
-            else row.getMap[String, String](computedIdx)
-          Ctx(row.getLong(tsIdx), labels, computed)
+          if (!interrupted) {
+            filter.filter(row, mkCtx(row)) match {
+              case None          => interrupted = true
+              case Some(emitted) => out ++= emitted
+            }
+          }
+          fill()
         }
 
-        def hasNext: Boolean = { fill(); out.nonEmpty }
-        def next(): Row = { fill(); out.dequeue() }
+      private def mkCtx(row: Row): Ctx = {
+        val labels =
+          if (row.isNullAt(labelsIdx)) Map.empty[String, String]
+          else row.getMap[String, String](labelsIdx)
+        val computed =
+          if (row.isNullAt(computedIdx)) Map.empty[String, String]
+          else row.getMap[String, String](computedIdx)
+        Ctx(row.getLong(tsIdx), labels, computed)
       }
-    }(Encoders.row(schema))
+
+      def hasNext: Boolean = { fill(); out.nonEmpty }
+      def next(): Row = { fill(); out.dequeue() }
+    }
   }
 
   /** Port of `WhenFilter` (filters/when.rs:60-105) with the ctx_before ring

@@ -250,9 +250,9 @@ final class ZenohBridge(
     * an unbounded selector over a large entry holds at most one
     * partition driver-side — the same paging discipline the HTTP
     * cursors get from [[graft.engine.QueryRegistry]], whose rule also
-    * applies: a query whose scan estimate is under the cap plans on one
-    * partition, so the drain is one job with no exchange, and the rows
-    * arrive in one pull. An empty store answers no rows; a failing
+    * applies: a query whose scan estimate is under the cap is read on
+    * the driver with no Spark job, and its rows arrive in one read. An
+    * empty store answers no rows; a failing
     * footer read is an error reply, not an empty answer. Each reply pays
     * its egress bytes as it ships (session.rs:597,672); a mid-stream
     * 429 aborts the remaining replies, which the transport surfaces as
@@ -302,13 +302,8 @@ final class ZenohBridge(
       when = when,
       strict = q.params.get("strict").exists(_.toBoolean),
       bucket = Some(config.bucket))
-    // a small answer plans on one partition (QueryRegistry's rule)
-    val (table, bytes) = store.scanBoundOrEmpty(spec)
-    val rows = QueryEngine.query(table, spec,
-      onePartition = QueryRegistry.onePartition(spec, bytes))
-    val limited = q.params.get("limit").map(_.toInt)
-      .fold(rows)(n => rows.limit(n))
-    import scala.jdk.CollectionConverters._
-    limited.toLocalIterator().asScala.map(reply)
+    // a small answer reads on the driver (QueryRegistry's rule)
+    val rows = QueryRegistry.answer(store.querySource(orEmpty = true), spec)
+    q.params.get("limit").map(_.toInt).fold(rows)(rows.take).map(reply)
   }
 }

@@ -7,11 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Bounded cursors: a cursor whose scan estimate is under
-  * [[QueryRegistry.MaxBoundedBytes]] plans on one partition. Pinned
-  * here: the one-partition and streaming plans return identical row
-  * sequences, (ts, entry) tie order included; a bounded drain is one
-  * Spark job with no exchange; `#ext` and over-cap queries stream; and
-  * the registry's byte budget holds and is returned. */
+  * [[QueryRegistry.MaxBoundedBytes]] reads its answer on the driver
+  * ([[BucketStore.readSmall]]). Pinned here: the driver reader and the
+  * streaming plan return identical row sequences, (ts, entry) tie order
+  * and overlapping files of one entry included; a bounded drain runs no
+  * Spark job; `#ext` and over-cap queries stream; the registry's byte
+  * budget holds and is returned; continuous cursors re-arm only when the
+  * data moved; a read racing a compaction or fold retries; a broken file
+  * is an error; and both paths answer a failing query with one status
+  * and message over HTTP. */
 class BoundedCursorSpec extends AnyFunSuite with SparkJobs
     with AdaptiveSparkPlanHelper {
 
@@ -27,7 +31,7 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
   private lazy val store: BucketStore = {
     val s = new BucketStore(spark, Files.createTempDirectory("graft-bounded").toString)
     val rng = new scala.util.Random(811)
-    s.writeFolded(Seq(BucketStore.FoldReq("b", for (e <- Entries; i <- 0 until 40) yield {
+    def rec(e: String, i: Int) = {
       val ts = T0 + i * Step
       BucketStore.FoldRec(e, ts, Map(
         "n" -> rng.nextInt(100).toString,
@@ -35,9 +39,14 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
         "ok" -> rng.nextBoolean().toString,
         "kind" -> Kinds(rng.nextInt(Kinds.size))),
         "application/octet-stream", s"$e@$ts".getBytes("UTF-8"))
-    })))
+    }
+    s.writeFolded(Seq(BucketStore.FoldReq("b", for (e <- Entries; i <- 0 until 40) yield rec(e, i))))
     s.updateLabelsMatched("b", (0 until 40 by 3).map(i =>
       ("e001", T0 + i * Step, Map("n" -> "5", "kind" -> "z"), Set("ok"))))
+    // "late": a belated write lands a second file whose ts range
+    // overlaps the first's
+    for (parity <- Seq(0, 1))
+      s.writeFolded(Seq(BucketStore.FoldReq("b", (parity until 40 by 2).map(rec("late", _)))))
     s
   }
 
@@ -66,8 +75,8 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
       Some("""{"&n":{"$lt":20},"#ctx_before":1,"#ctx_after":2}""")))
 
   private def boundedOpen(reg: QueryRegistry, s: QuerySpec, continuous: Boolean = false,
-      ttlMs: Long = 60000L): Long =
-    reg.open(s, store.scanBound _, continuous, ttlMs)
+      ttlMs: Long = 60000L, st: BucketStore = store): Long =
+    reg.open(s, st.querySource(), continuous, ttlMs)
 
   private def drain(reg: QueryRegistry, id: Long): Seq[Row] =
     Iterator.continually(reg.fetch(id, 7).getOrElse(fail(s"cursor $id vanished")))
@@ -83,24 +92,27 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
       else None)
 
   /** Drains `s` bounded and streaming; the bounded open must reserve
-    * (it took the one-partition plan) and both must return the same
+    * (it took the driver reader) and both must return the same
     * sequence, in (ts, entry) order. */
-  private def sameAnswer(name: String, s: QuerySpec): Seq[(Long, String)] = {
+  private def sameAnswer(name: String, s: QuerySpec,
+      st: BucketStore = store): Seq[(Long, String)] = {
     val reg = new QueryRegistry()
-    val bounded = boundedOpen(reg, s)
+    val bounded = boundedOpen(reg, s, st = st)
     assert(reg.reserved > 0, s"$name: the bounded open took no reservation")
-    val one = drain(reg, bounded).map(key)
-    val streaming = reg.open(() => store.table(s), s)
+    val local = drain(reg, bounded).map(key)
+    val streaming = reg.open(() => st.table(s), s)
     assert(reg.reserved == 0L, s"$name: a source without an estimate must stream")
     val streamed = drain(reg, streaming).map(key)
-    assert(one == streamed, s"$name: one-partition and streaming answers differ")
-    val order = one.map(k => (k._1, k._2))
+    assert(local == streamed, s"$name: driver-read and streaming answers differ")
+    val order = local.map(k => (k._1, k._2))
     assert(order == order.sorted, s"$name: not in (ts, entry) order")
     order
   }
 
-  test("one-partition and streaming cursors return identical sequences") {
-    val answers = (Seq("e000", "e001")
+  test("driver-read and streaming cursors return identical sequences") {
+    val (_, lateFiles) = store.entryStats("b")("late")
+    assert(lateFiles == 2L, "the belated write must land a second file")
+    val answers = (Seq("e000", "e001", "late")
       .flatMap(e => classes(e).map { case (n, s) => s"$n on $e" -> s }) ++ Seq(
       "strict" -> spec(Seq("e000", "e002"), Some("""{"&n":{"$gt":40}}"""), strict = true),
       "only_metadata" -> spec(Seq("e000"), onlyMetadata = true),
@@ -108,11 +120,13 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
         Some("""{"&n":{"$gte":0},"#select_labels":["kind","n"]}""")),
       // a leading $limit runs the kernel, whose interrupt ends each entry
       "$limit interrupt" -> spec(Seq("e000", "e001"), Some("""{"$limit":7,"&n":{"$gte":10}}""")),
-      "patched labels" -> spec(Seq("e001"), Some("""{"&kind":{"$eq":"z"}}"""), from = 0, until = 40)))
+      "patched labels" -> spec(Seq("e001"), Some("""{"&kind":{"$eq":"z"}}"""), from = 0, until = 40),
+      "belated overlap" -> spec(Seq("late"), from = 0, until = 40)))
       .map { case (n, s) => n -> sameAnswer(n, s) }
     for ((n, a) <- answers if !n.startsWith("stateful gate"))
       assert(a.nonEmpty, s"$n: empty answer pins nothing")
     assert(answers.toMap.apply("patched labels").size == 14)
+    assert(answers.toMap.apply("belated overlap").map(_._1) == (0 until 40).map(T0 + _ * Step))
   }
 
   test("a multi-entry glob with equal ts across entries keeps (ts, entry) " +
@@ -130,19 +144,13 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
     }
   }
 
-  test("a bounded cursor on an un-patched entry drains in 1 Spark job, " +
-      "with no exchange") {
-    for ((n, s) <- classes("e000")) {
+  test("a bounded cursor drains in 0 Spark jobs, patched entries included") {
+    for ((n, s) <- classes("e000") ++ classes("e001").map { case (n, s) => s"$n, patched" -> s }) {
       val reg = new QueryRegistry()
       store.scanBound(s) // the listing and footers: not the cursor's work
       var rows = Seq.empty[Row]
-      val plans = plansOf("toLocalIterator") {
-        val jobs = jobsOf { rows = drain(reg, boundedOpen(reg, s)) }
-        assert(jobs == 1, s"$n: the bounded cursor ran $jobs jobs")
-      }
-      assert(plans.size == 1, s"$n: ${plans.size} drains")
-      assert(collect(plans.head) { case e: Exchange => e }.isEmpty,
-        s"$n: a bounded cursor must plan no exchange:\n${plans.head}")
+      val jobs = jobsOf { rows = drain(reg, boundedOpen(reg, s)) }
+      assert(jobs == 0, s"$n: the bounded cursor ran $jobs jobs")
       assert(n.startsWith("stateful gate") || rows.nonEmpty)
     }
   }
@@ -167,7 +175,7 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
     var jobs = 0
     val plans = plansOf("toLocalIterator") {
       jobs = jobsOf {
-        val id = reg.open(s, st.scanBound _, continuous = false, ttlMs = 60000L)
+        val id = reg.open(s, st.querySource(), continuous = false, ttlMs = 60000L)
         assert(reg.reserved == 0L, s"$name: a streaming cursor reserved ${reg.reserved}")
         rows = drain(reg, id)
       }
@@ -180,39 +188,39 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
 
   test("#ext and over-cap queries keep the streaming plan") {
     val ext = spec(Seq("e000"), Some("""{"#ext": {"split_lines": {}}}"""))
-    assert(store.scanBound(ext)._2 <= QueryRegistry.MaxBoundedBytes)
+    assert(store.scanBound(ext) <= QueryRegistry.MaxBoundedBytes)
     assert(streams("#ext", store, ext).nonEmpty)
     withBigEntry(9) { (big, s) =>
-      assert(big.scanBound(s)._2 > QueryRegistry.MaxBoundedBytes)
+      assert(big.scanBound(s) > QueryRegistry.MaxBoundedBytes)
       assert(streams("over cap", big, s).map(_.getAs[Long]("ts")) ==
         (0 until 9).map(T0 + _ * Step))
     }
   }
 
   test("the bound counts only files of the spec's bucket, entries and range") {
-    val all = store.scanBound(spec(Seq("e*"), from = 0, until = 40))._2
-    val one = store.scanBound(spec(Seq("e000"), from = 0, until = 40))._2
+    val all = store.scanBound(spec(Seq("e*"), from = 0, until = 40))
+    val one = store.scanBound(spec(Seq("e000"), from = 0, until = 40))
     assert(one > 0 && one < all)
-    assert(store.scanBound(spec(Seq("e000"), from = 40, until = 80))._2 == 0L)
+    assert(store.scanBound(spec(Seq("e000"), from = 40, until = 80)) == 0L)
     // literal names prune the listing; a leading `/` and an exclude
     // resolve as the query resolves them
     assert(graft.core.EntryPattern.literalNames(Some(Seq("/e000", "!e001"))) == Some(Set("/e000", "e000")))
     assert(graft.core.EntryPattern.literalNames(Some(Seq("e*"))).isEmpty)
-    assert(store.scanBound(spec(Seq("/e000"), from = 0, until = 40))._2 == one)
-    assert(store.scanBound(spec(Seq("e000", "e001", "!e001"), from = 0, until = 40))._2 == one)
-    assert(store.scanBound(spec(Seq("e*", "!e000"), from = 0, until = 40))._2 == all - one)
-    assert(store.scanBound(spec(Seq("nope")))._2 == 0L)
-    assert(store.scanBound(spec(Seq("e000")).copy(bucket = Some("other")))._2 == 0L)
+    assert(store.scanBound(spec(Seq("/e000"), from = 0, until = 40)) == one)
+    assert(store.scanBound(spec(Seq("e000", "e001", "!e001"), from = 0, until = 40)) == one)
+    assert(store.scanBound(spec(Seq("e*", "!e000"), from = 0, until = 40)) == all - one)
+    assert(store.scanBound(spec(Seq("nope"))) == 0L)
+    assert(store.scanBound(spec(Seq("e000")).copy(bucket = Some("other"))) == 0L)
   }
 
   test("bounded cursors stay within the registry budget and return it") {
     withBigEntry(6) { (big, s) =>
-      val bound = big.scanBound(s)._2
+      val bound = big.scanBound(s)
       assert(bound <= QueryRegistry.MaxBoundedBytes)
       val fits = (QueryRegistry.BoundedBudgetBytes / bound).toInt
       val reg = new QueryRegistry()
       def open(ttlMs: Long = 60000L) =
-        reg.open(s, big.scanBound _, continuous = false, ttlMs = ttlMs)
+        reg.open(s, big.querySource(), continuous = false, ttlMs = ttlMs)
       val held = (0 until fits).map(_ => open())
       assert(reg.reserved == fits * bound && reg.reserved <= QueryRegistry.BoundedBudgetBytes)
       // past the budget the next cursor streams, with the same answer
@@ -251,5 +259,145 @@ class BoundedCursorSpec extends AnyFunSuite with SparkJobs
     assert(reg.reserved == 0L)
     reg.close(id)
     store.removeRecords("b", Seq(("e002", late)))
+  }
+
+  /** `src` counting the calls that plan or read a query. */
+  private final class Counting(src: QueryRegistry.Source) extends QueryRegistry.Source {
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    def bound(s: QuerySpec): Long = { calls.incrementAndGet(); src.bound(s) }
+    def table(s: QuerySpec): org.apache.spark.sql.DataFrame = { calls.incrementAndGet(); src.table(s) }
+    def read(s: QuerySpec): Seq[Row] = { calls.incrementAndGet(); src.read(s) }
+    def version: Option[Long] = src.version
+  }
+
+  test("a continuous cursor re-arms only when the data moved; a replica " +
+      "re-arms on every poll") {
+    val s = spec(Seq("e003"), from = 35, until = 1000)
+    val reg = new QueryRegistry()
+    val source = new Counting(store.querySource())
+    val id = reg.open(s, source, continuous = true, ttlMs = 60000L)
+    assert(drain(reg, id).map(_.getAs[Long]("ts")) == (35 until 40).map(T0 + _ * Step))
+    val armed = source.calls.get
+    for (_ <- 0 until 20) assert(reg.fetch(id, 7).contains(Nil))
+    assert(source.calls.get == armed, "empty polls over an unchanged store planned a query")
+    val late = T0 + 42 * Step
+    store.writeFolded(Seq(BucketStore.FoldReq("b", Seq(
+      BucketStore.FoldRec("e003", late, Map("n" -> "1"), "x", Array[Byte](1))))))
+    assert(reg.fetch(id, 7).map(_.map(_.getAs[Long]("ts"))).contains(Seq(late)),
+      "the first poll after a write returns it")
+    reg.close(id)
+    // a replica's version cannot see the primary's writes: it re-arms
+    val replica = new BucketStore(spark, store.root, readOnly = true)
+    try {
+      val rsource = new Counting(replica.querySource())
+      val rid = reg.open(s, rsource, continuous = true, ttlMs = 60000L)
+      assert(drain(reg, rid).map(_.getAs[Long]("ts")).last == late)
+      val before = rsource.calls.get
+      assert(reg.fetch(rid, 7).contains(Nil))
+      assert(rsource.calls.get > before, "a replica cursor must re-arm on each poll")
+      val later = T0 + 43 * Step
+      store.writeFolded(Seq(BucketStore.FoldReq("b", Seq(
+        BucketStore.FoldRec("e003", later, Map("n" -> "1"), "x", Array[Byte](1))))))
+      replica.refreshReplica()
+      assert(reg.fetch(rid, 7).map(_.map(_.getAs[Long]("ts"))).contains(Seq(later)))
+      reg.close(rid)
+    } finally replica.close()
+    store.removeRecords("b", Seq(("e003", late), ("e003", T0 + 43 * Step)))
+  }
+
+  /** A store of its own with entry "frag" written one record per write:
+    * 20 files in one partition, so a compaction tick rewrites it. */
+  private def withFragmented(f: BucketStore => Unit): Unit = {
+    val st = new BucketStore(spark, Files.createTempDirectory("graft-bounded-race").toString)
+    try {
+      for (i <- 0 until 20)
+        st.writeFolded(Seq(BucketStore.FoldReq("b", Seq(BucketStore.FoldRec("frag", T0 + i * Step,
+          Map("n" -> i.toString), "x", s"frag@$i".getBytes("UTF-8"))))))
+      f(st)
+    } finally st.close()
+  }
+
+  test("a compaction swap or an overlay fold between open and the first " +
+      "fetch: the read retries and equals a fresh streaming answer") {
+    val s = QuerySpec(entries = Some(Seq("frag")), when = Some("""{"&n":{"$gte":3}}"""),
+      bucket = Some("b"))
+    withFragmented { st =>
+      val reg = new QueryRegistry()
+      val id = boundedOpen(reg, s, st = st)
+      assert(st.compact(maxFilesPerPartition = 16) == 1, "the partition compacts")
+      val local = drain(reg, id).map(key)
+      assert(local == drain(reg, reg.open(() => st.table(s), s)).map(key))
+      assert(local.size == 17)
+      // patched labels, folded into the base between open and fetch
+      st.updateLabelsMatched("b", (0 until 20 by 2).map(i =>
+        ("frag", T0 + i * Step, Map("n" -> "0"), Set.empty[String])))
+      val folded = boundedOpen(reg, s, st = st)
+      assert(st.foldLabelOverlay() > 0, "the overlay folds")
+      val afterFold = drain(reg, folded).map(key)
+      assert(afterFold == drain(reg, reg.open(() => st.table(s), s)).map(key))
+      assert(afterFold.map(_._1) == (3 until 20 by 2).map(T0 + _ * Step))
+    }
+  }
+
+  test("a broken part file in a queried entry is an error, not an empty answer") {
+    withFragmented { st =>
+      val s = QuerySpec(entries = Some(Seq("frag")), bucket = Some("b"))
+      val reg = new QueryRegistry()
+      val id = boundedOpen(reg, s, st = st)
+      import scala.jdk.CollectionConverters._
+      val dir = Files.walk(java.nio.file.Paths.get(st.root)).iterator().asScala
+        .find(f => f.toString.endsWith(".parquet") && f.toString.contains("entry=frag"))
+        .getOrElse(fail("no base file written")).getParent
+      Files.write(dir.resolve("part-99999-broken.parquet"), "not parquet".getBytes)
+      st.invalidateBaseTable()
+      intercept[Exception](reg.fetch(id, 7))
+      intercept[Exception](drain(reg, boundedOpen(reg, s, st = st)))
+    }
+  }
+
+  test("over HTTP, a failing query answers one status and message on a " +
+      "bounded and on a streaming open") {
+    val st = new BucketStore(spark, Files.createTempDirectory("graft-bounded-http").toString)
+    val api = new HttpApi(st, apiToken = "t")
+    api.start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def req(method: String, path: String, body: String = "") = {
+      val r = client.send(java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://127.0.0.1:${api.boundPort}/api/v1$path"))
+        .method(method, java.net.http.HttpRequest.BodyPublishers.ofString(body))
+        .header("Authorization", "Bearer t").build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      (r.statusCode(), r.headers().firstValue("x-reduct-error").orElse(""), r.body())
+    }
+    try {
+      assert(req("POST", "/b/p")._1 == 200)
+      st.writeFolded(Seq(BucketStore.FoldReq("p",
+        (0 until 4).map(i => BucketStore.FoldRec("small", T0 + i * Step, Map("x" -> "1"), "x",
+          Array[Byte](1))) ++
+        (0 until 9).map(i => BucketStore.FoldRec("big", T0 + i * Step, Map("x" -> "1"), "x",
+          Array.fill[Byte](MiB)(1))))))
+      def bytes(e: String) = st.scanBound(QuerySpec(entries = Some(Seq(e)), bucket = Some("p")))
+      assert(bytes("small") <= QueryRegistry.MaxBoundedBytes)
+      assert(bytes("big") > QueryRegistry.MaxBoundedBytes)
+      for (body <- Seq("""{"when": {"&x": {"$eq": 1}""",
+          """{"when": {"$bogus": [1, 2]}}""",
+          """{"when": {"&x": {"$eq": 1}, "$each_n": 0}}""",
+          """{"when": {"&x": {"$eq": 1}, "#ctx_before": -1}}""")) {
+        val (small, big) = (req("POST", "/b/p/small/q", body), req("POST", "/b/p/big/q", body))
+        assert(small._1 == 422 && small._2.nonEmpty, s"$body: $small")
+        assert(small == big, s"$body: bounded $small, streaming $big")
+      }
+      implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+      val strict = """{"strict": true, "when": {"&missing": {"$eq": 1}}}"""
+      val fetched = Seq("small", "big").map { e =>
+        val (status, _, body) = req("POST", s"/b/p/$e/q", strict)
+        assert(status == 200, s"$e: a strict query opens")
+        val id = (org.json4s.jackson.JsonMethods.parse(body) \ "id").extract[Long]
+        val r = req("GET", s"/b/p/$e/batch?q=$id")
+        (r._1, r._2)
+      }
+      assert(fetched.head == ((422, "Reference 'missing' not found")), fetched.head.toString)
+      assert(fetched.head == fetched(1), s"bounded ${fetched.head}, streaming ${fetched(1)}")
+    } finally { api.stop(); st.close() }
   }
 }

@@ -245,8 +245,8 @@ class EntryCatalogSpec extends AnyFunSuite with SparkJobs
       // a new entry of a stored bucket is an append too
       val fresh = jobsOf(store.writeFolded(Seq(BucketStore.FoldReq("b", recs("g", 1L)))))
       assert(fresh == 1, s"a new entry's first write ran $fresh jobs")
-      // a spooled upload takes the same rule: its belated write runs one
-      // job more than its append, the admission scan
+      // a spooled upload takes the same rule; its belated write's
+      // admission reads on the driver, so it runs no more jobs
       def spooled(ts: Long): Int = {
         val staged = store.stageUploadPath()
         val out = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -256,7 +256,7 @@ class EntryCatalogSpec extends AnyFunSuite with SparkJobs
           BucketStore.StagedSlice("e", ts, Map.empty, "x", 0L, 4L))).isEmpty))
       }
       val (spooledAppend, spooledBelated) = (spooled(1000L), spooled(999L))
-      assert(spooledBelated - spooledAppend == 1,
+      assert(spooledBelated - spooledAppend == 0,
         s"spooled append ran $spooledAppend jobs, belated $spooledBelated")
     }
   }
@@ -264,18 +264,41 @@ class EntryCatalogSpec extends AnyFunSuite with SparkJobs
   test("a belated write keeps its admission job, and a re-sent key is " +
       "rejected by it") {
     withJobStore { store =>
-      // below the latest record: the admission scan, then the write
+      // below the latest record: the admission lookup (on the driver),
+      // then the write
       val belated = jobsOf {
         assert(store.writeFolded(Seq(BucketStore.FoldReq("b", recs("e", 150L)))) ==
           Seq(Right(Set.empty)))
       }
-      assert(belated == 2, s"a belated write ran $belated jobs (admission + write)")
-      // the entry's latest key again: the scan finds it, nothing is written
+      assert(belated == 1, s"a belated write ran $belated jobs (the write)")
+      // the entry's latest key again: the lookup finds it, nothing is written
       val resent = jobsOf {
         assert(store.writeFolded(Seq(BucketStore.FoldReq("b", recs("e", 200L)))) ==
           Seq(Right(Set(("e", 200L)))))
       }
-      assert(resent == 1, s"a re-sent key ran $resent jobs (admission only)")
+      assert(resent == 0, s"a re-sent key ran $resent jobs")
+    }
+  }
+
+  test("a key-addressed label update and a key remove of 8 keys each run " +
+      "1 job: the write") {
+    withJobStore { store =>
+      val keys = (1L to 8L).map(_ * 1000L)
+      store.writeFolded(Seq(BucketStore.FoldReq("b", recs("k", keys: _*) ++ recs("r", keys: _*))))
+      // the first patch of a store instance seeds its overlay counters
+      store.updateLabelsFolded(Seq(("b", Seq(("k", keys.head, Map("w" -> "0"), Set.empty[String])))))
+      val update = jobsOf {
+        assert(store.updateLabelsFolded(Seq(("b", keys.map(ts =>
+          ("k", ts, Map("w" -> ts.toString), Set.empty[String]))))) == Seq(Right(keys.map(("k", _)).toSet)))
+      }
+      assert(update == 1, s"a key-addressed update ran $update jobs")
+      // an entry without patches: the rewrite plans no overlay join
+      val remove = jobsOf {
+        assert(store.removeFolded(Seq(("b", keys.map(("r", _))))) ==
+          Seq(Right(keys.map(k => ("r", k) -> true).toMap)))
+      }
+      assert(remove == 1, s"a key remove ran $remove jobs")
+      assert(store.entryCatalog()("b").all.get("r").isEmpty)
     }
   }
 

@@ -287,8 +287,8 @@ class ReplicaCompactionSpec extends AnyFunSuite with SparkTestBase {
     } finally { api.stop(); primaryApi.stop(); primary.close() }
   }
 
-  test("compaction candidates are incremental: idle tick lists nothing, " +
-      "a touched tick lists only the touched entries' dirs") {
+  test("the compaction probe reads the cached file index: an idle tick " +
+      "lists nothing, and after a write the tick and the next read share one listing") {
     val root = Files.createTempDirectory("graft-compact-inc").toString
     val store = new BucketStore(spark, root)
     // 8 quiet entries, one record each — the standing tree an idle tick

@@ -177,20 +177,30 @@ class WorkloadPlanSweepSpec extends AnyFunSuite with SparkJobs
       val specs = for (e <- Seq("a", "c"); w <- whens)
         yield QuerySpec(entries = Some(Seq(e)), when = w, bucket = Some("b"))
       val registry = new QueryRegistry()
-      val plans = plansOf("toLocalIterator") {
+      def drainAll(open: QuerySpec => Long): Unit =
         for (spec <- specs) {
-          val id = registry.open(spec, store.scanBound _,
-            continuous = false, ttlMs = 60000L)
-          assert(registry.reserved > 0, s"$spec did not plan bounded")
+          val id = open(spec)
           while (registry.fetch(id, 85).exists(_.nonEmpty)) ()
         }
+      // bounded: read on the driver, no plan runs
+      val bounded = plansOf("toLocalIterator") {
+        drainAll { spec =>
+          val id = registry.open(spec, store.querySource(), continuous = false, ttlMs = 60000L)
+          assert(registry.reserved > 0, s"$spec did not open bounded")
+          id
+        }
+      }
+      assert(bounded.isEmpty, s"bounded cursors planned ${bounded.size} drains")
+      // the same specs streaming through Spark
+      val plans = plansOf("toLocalIterator") {
+        drainAll(spec => registry.open(() => store.table(spec), spec))
       }
       assert(plans.size == specs.size, s"captured ${plans.size} cursor drains")
       val offending = plans.flatMap(p => collect(p) {
         case j: CartesianProductExec => j.nodeName
         case j: BroadcastNestedLoopJoinExec => j.nodeName
       })
-      assert(offending.isEmpty, s"bounded cursor plans must stay equi-keyed: $offending")
+      assert(offending.isEmpty, s"cursor plans must stay equi-keyed: $offending")
     } finally store.close()
   }
 }
