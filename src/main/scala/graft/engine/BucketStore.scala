@@ -226,8 +226,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
   }
 
   /** Test-only fault injection, invoked at named crash seams inside the
-    * mutation machinery: `append:<tree>:staged` (hidden-tree append —
-    * staged files written, NOTHING renamed in yet), `overwrite:staged`
+    * mutation machinery: `append:<tree>:staged` (an append to `base`,
+    * the base tree, or to a hidden tree such as `_labels` — staged files
+    * written, NOTHING renamed in yet), `overwrite:staged`
     * (partition rewrite — staged tree written, live tree untouched),
     * `overwrite:swapped` (renames + drops landed, extraSwapActions —
     * e.g. the fold's overlay purge — NOT yet run). A hook that throws
@@ -701,17 +702,16 @@ final class BucketStore(val spark: SparkSession, val root: String,
   }
 
   /** Overlay append that ALSO feeds the `_updates` log from the same
-    * staged job: the two trees receive identical rows, and a second
-    * Spark write would double the per-patch fixed cost (measured ~2x at
+    * staged tree: the two trees receive identical rows, and a second
+    * write would double the per-patch fixed cost (measured ~2x at
     * sf0.01) — copying the staged label-only files is bytes-proportional
     * and cheap. The scope grows by the landed partitions inside the
     * landing window; a rename that failed part-way retires the cached
     * agg and scope instead, since some files may have landed. */
-  private def appendOverlay(rows: DataFrame, onePartition: Boolean): Unit = {
+  private def appendOverlay(stageWith: org.apache.hadoop.fs.Path => Unit): Unit = {
     val before = overlayScope()
-    appendHiddenTree(rows, LabelsDir,
+    appendTree(stageWith, Some(LabelsDir),
       alsoCopyTo = if (updateLogEnabled) Some(UpdatesDir) else None,
-      onePartition = onePartition,
       landed = {
         case Some(keys) => overlayChanged(before ++ keys)
         case None => invalidateOverlayAgg()
@@ -729,62 +729,104 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * creation). */
   @volatile var updateLogEnabled: Boolean = false
 
-  /** Stage + rename-in append of (key, labels, seq) rows under a hidden
-    * partitioned tree — shared by the label overlay and the update log.
-    * `alsoCopyTo` duplicates each staged file into a second tree before
-    * the rename (same swap window — a reader sees both or neither).
-    * Parquet job outside the epoch window, only the renames inside it —
-    * same discipline as [[overwritePartitions]], but files ADD to live
-    * dirs instead of swapping them (readers dedup by seq). `landed` runs
-    * inside the window with the (bucket, entry, dt) partitions that
-    * received files, or None when the rename-in failed part-way. */
-  private def appendHiddenTree(rows: DataFrame, dirName: String,
-      alsoCopyTo: Option[String] = None, onePartition: Boolean = false,
-      landed: Option[Seq[(String, String, String)]] => Unit = _ => ()): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(
-      s"$root/$RewriteDir/${java.util.UUID.randomUUID}")
+  /** A fresh staging dir under the store's hidden `_rewrite` root. */
+  private def newStage(): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(s"$root/$RewriteDir/${java.util.UUID.randomUUID}")
+
+  /** Stage `rows` with a partitioned Spark write (one job): the stager
+    * for rows that are not on the driver, or too many to write there. */
+  private def stageFrame(rows: DataFrame, onePartition: Boolean,
+      options: Map[String, String] = Map.empty)(stage: org.apache.hadoop.fs.Path): Unit =
     colocated(rows, onePartition)
       .write.partitionBy("bucket", "entry", "dt")
+      .options(options)
       .mode(SaveMode.Overwrite)
       .parquet(stage.toString)
-    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    crashSeamForTest(s"append:$dirName:staged")
-    rewriteEpochCounter.incrementAndGet() // odd: files landing
-    var keys: Option[Seq[(String, String, String)]] = None
-    try {
-      val treeRoot = new org.apache.hadoop.fs.Path(s"$root/$dirName")
-      val dirs = partitionDirs(fs, stage)
-      // per-dir ops are independent (distinct paths; mkdirs of a shared
-      // entry parent is idempotent) — issue them in parallel so the
-      // landing window doesn't grow with the touched-partition count
-      parallelFs(dirs) { case (d, rel) =>
-        val live = new org.apache.hadoop.fs.Path(treeRoot, rel)
-        fs.mkdirs(live)
-        val copyLive = alsoCopyTo.map { t =>
-          val p = new org.apache.hadoop.fs.Path(s"$root/$t/$rel")
-          fs.mkdirs(p); p
-        }
-        for (f <- fs.listStatus(d) if f.isFile &&
-            !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")) {
-          copyLive.foreach { p =>
-            org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
-              new org.apache.hadoop.fs.Path(p, f.getPath.getName),
-              false, spark.sparkContext.hadoopConfiguration): Unit
-          }
-          fs.rename(f.getPath, new org.apache.hadoop.fs.Path(live, f.getPath.getName))
-        }
-      }
-      keys = Some(dirs.map { case (_, rel) => partitionKey(rel) })
-    } finally {
-      try landed(keys)
-      finally {
-        rewriteEpochCounter.incrementAndGet() // even: settled
-        try fs.delete(stage, true)
-        catch { case NonFatal(e) =>
-          System.err.println(s"[store] $dirName stage GC failed, leaking $stage: $e") }
-      }
+
+  /** Stage `rows` (in `schema`) on the driver with no Spark job
+    * ([[SmallWrite]]): one writer per call, its files written in
+    * parallel on the [[parallelFs]] pool. */
+  private def stageRows(rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType, maxRecordsPerFile: Long = 0L)(
+      stage: org.apache.hadoop.fs.Path): Unit = {
+    val writer = new SmallWrite(spark, schema)
+    parallelFs(SmallWrite.files(rows, schema, dtOf, maxRecordsPerFile).zipWithIndex) {
+      case ((rel, group), n) => writer.write(new org.apache.hadoop.fs.Path(stage, rel), n, group)
     }
   }
+
+  /** About the bytes of overlay rows ([[overlayRowSchema]]): the key
+    * and seq, and the label strings. */
+  private def overlayBytes(rows: Seq[org.apache.spark.sql.Row]): Long =
+    rows.iterator.map { r =>
+      32L + (if (r.isNullAt(3)) 0L else r.getMap[String, String](3).iterator
+        .map { case (k, v) => k.length + (if (v == null) 0L else v.length) }.sum)
+    }.sum
+
+  /** Whether a mutation's rows of about `bytes` stage on the driver
+    * ([[stageRows]]) rather than in a Spark job: the cap the driver-side
+    * reads use ([[QueryRegistry.MaxBoundedBytes]]). */
+  private[graft] def fitsDriver(bytes: Long): Boolean = bytes <= QueryRegistry.MaxBoundedBytes
+
+  /** Stage + rename-in append: `stageWith` writes a partitioned tree
+    * into a fresh staging dir, whose files then land in `tree` (a hidden
+    * tree — the label overlay, the update log — or, with None, the base
+    * tree). `alsoCopyTo` duplicates each staged file into a second tree
+    * before the rename (same swap window — a reader sees both or
+    * neither). The staging write runs outside the epoch window, only the
+    * renames inside it — same discipline as [[swapPartitions]], but files
+    * ADD to live dirs instead of swapping them (overlay readers dedup by
+    * seq; base appends were admitted before staging). `landed` runs
+    * inside the window with the (bucket, entry, dt) partitions that
+    * received files, or None when the rename-in failed part-way. */
+  private def appendTree(stageWith: org.apache.hadoop.fs.Path => Unit, tree: Option[String],
+      alsoCopyTo: Option[String] = None,
+      landed: Option[Seq[(String, String, String)]] => Unit = _ => ()): Unit = {
+    val stage = newStage()
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      stageWith(stage)
+      crashSeamForTest(s"append:${tree.getOrElse("base")}:staged")
+      rewriteEpochCounter.incrementAndGet() // odd: files landing
+      var keys: Option[Seq[(String, String, String)]] = None
+      try {
+        val treeRoot = new org.apache.hadoop.fs.Path(tree.fold(root)(t => s"$root/$t"))
+        val dirs = partitionDirs(fs, stage)
+        // per-dir ops are independent (distinct paths; mkdirs of a shared
+        // entry parent is idempotent) — issue them in parallel so the
+        // landing window doesn't grow with the touched-partition count
+        parallelFs(dirs) { case (d, rel) =>
+          val live = new org.apache.hadoop.fs.Path(treeRoot, rel)
+          fs.mkdirs(live)
+          val copyLive = alsoCopyTo.map { t =>
+            val p = new org.apache.hadoop.fs.Path(s"$root/$t/$rel")
+            fs.mkdirs(p); p
+          }
+          for (f <- fs.listStatus(d) if f.isFile &&
+              !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")) {
+            copyLive.foreach { p =>
+              org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
+                new org.apache.hadoop.fs.Path(p, f.getPath.getName),
+                false, spark.sparkContext.hadoopConfiguration): Unit
+            }
+            fs.rename(f.getPath, new org.apache.hadoop.fs.Path(live, f.getPath.getName))
+          }
+        }
+        keys = Some(dirs.map { case (_, rel) => partitionKey(rel) })
+      } finally {
+        try landed(keys)
+        finally rewriteEpochCounter.incrementAndGet() // even: settled
+      }
+    } finally gcStage(fs, stage)
+  }
+
+  /** Delete a staging dir, outside any swap window. A failed delete
+    * leaks a hidden temp dir, not consistency; it never masks the
+    * mutation's own outcome. */
+  private def gcStage(fs: org.apache.hadoop.fs.FileSystem, stage: org.apache.hadoop.fs.Path): Unit =
+    try fs.delete(stage, true): Unit
+    catch { case NonFatal(e) =>
+      System.err.println(s"[store] stage GC failed, leaking $stage: $e") }
 
   /** Walk a partitioned tree: every `bucket=/entry=/dt=` leaf dir with
     * its tree-relative path. One serial listing pass — the listing is
@@ -820,14 +862,17 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * partitions that were never patched deletes nothing, keeps the agg
     * cached and the row count known. */
   private[graft] def purgeOverlayDirs(
-      affected: Iterable[(String, String, String)]): Unit = {
+      affected: Iterable[(String, String, String)],
+      /** the overlay rows those partitions hold, when the caller read
+        * them in this mutation section: the row count stays known */
+      overlayRows: Option[Long] = None): Unit = {
     val scope = overlayScope()
     val doomed = affected.iterator.filter(scope).toSeq.distinct
     if (doomed.isEmpty) return
     val fs = overlayRootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dtDir(b: String, e: String, d: String) = new org.apache.hadoop.fs.Path(
       s"$root/$LabelsDir/bucket=${escapePartition(b)}/entry=${escapePartition(e)}/dt=$d")
-    overlayRowsApprox.set(-1L) // rows deleted: count unknown until re-seeded
+    val rowsBefore = overlayRowsApprox.getAndSet(-1L) // unknown until the deletes land
     var deleted = false
     try {
       parallelFs(doomed) { case (b, e, d) => fs.delete(dtDir(b, e, d), true): Unit }
@@ -839,7 +884,10 @@ final class BucketStore(val spark: SparkSession, val root: String,
     } finally {
       // the overlay changed mid-mutation; after a failed delete the
       // scope is re-listed rather than guessed
-      if (deleted) overlayChanged(scope -- doomed) else invalidateOverlayAgg()
+      if (deleted) {
+        overlayChanged(scope -- doomed)
+        for (n <- overlayRows if rowsBefore >= 0L) overlayRowsApprox.set(rowsBefore - n)
+      } else invalidateOverlayAgg()
     }
   }
 
@@ -1086,12 +1134,15 @@ final class BucketStore(val spark: SparkSession, val root: String,
   }
 
   /** Coalesced serving write: many HTTP write requests folded into ONE
-    * store mutation — one Spark job per touched bucket instead of one
-    * per request. This is the per-mutation-job amortization lever for
-    * the serving path (SCALE.md r17: every HTTP mutation is one
-    * serialized ~0.5-0.8 s Spark job on the store lock; the reference's
-    * analog batches writers behind its single-owner engine too,
-    * storage/engine.rs).
+    * store mutation — one write per touched bucket instead of one per
+    * request (SCALE.md r17: every HTTP mutation was one serialized
+    * ~0.5-0.8 s Spark job on the store lock; the reference's analog
+    * batches writers behind its single-owner engine too,
+    * storage/engine.rs). A bucket's admitted rows under the driver cap
+    * ([[fitsDriver]]) are written on the driver ([[SmallWrite]]) and
+    * renamed into the base tree, with no Spark job — the reference
+    * appends to its entry's block file (storage/entry/write_record.rs);
+    * larger batches run one Spark write.
     *
     * Semantics are EXACTLY serial execution in `reqs` order:
     *   - per-record conflict admission sees the store plus every record
@@ -1110,7 +1161,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * Returns one result per request, positionally: the set of rejected
     * (already-existing) record keys, or the admission/write failure.
     * Read-your-write visibility holds — the method returns only after
-    * the shared job commits. */
+    * the shared write lands. */
   def writeFolded(reqs: Seq[BucketStore.FoldReq])
       : Seq[Either[Throwable, Set[(String, Long)]]] = mutating {
     import scala.util.control.NonFatal
@@ -1162,14 +1213,21 @@ final class BucketStore(val spark: SparkSession, val root: String,
       val bucketRows = rows.result()
       if (bucketRows.nonEmpty) {
         try {
-          import scala.jdk.CollectionConverters._
-          write(spark.createDataFrame(bucketRows.asJava, Records.schema),
-            BucketStore.Conflict.Preadmitted, // admitted above, same section
-            maxRecordsPerFile = s.maxBlockRecords.filter(_ > 0).getOrElse(1000000L),
-            incomingBytes = admittedBytes,
-            touchedEntries = Some(admitted.result()
-              .flatMap(_._3.iterator.map(rec => (bucket, rec.entry))).distinct),
-            knownTsBounds = tsBounds(admitted.result().flatMap(_._3.map(_.ts))))
+          val maxRecords = s.maxBlockRecords.filter(_ > 0).getOrElse(1000000L)
+          // admitted above, same section: a small batch stages on the
+          // driver and lands by renames, a large one is a Spark write
+          if (fitsDriver(admittedBytes))
+            appendTree(stageRows(bucketRows, Records.schema, maxRecords), None)
+          else {
+            import scala.jdk.CollectionConverters._
+            write(spark.createDataFrame(bucketRows.asJava, Records.schema),
+              BucketStore.Conflict.Preadmitted,
+              maxRecordsPerFile = maxRecords,
+              incomingBytes = admittedBytes,
+              touchedEntries = Some(admitted.result()
+                .flatMap(_._3.iterator.map(rec => (bucket, rec.entry))).distinct),
+              knownTsBounds = tsBounds(admitted.result().flatMap(_._3.map(_.ts))))
+          }
           if (s.quotaType.contains("FIFO") && quota > 0)
             enforceFifoQuota(bucket, quota)
           for ((_, _, survivors) <- admitted.result();
@@ -1177,7 +1235,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
             usage.countWrite(bucket, entry, es.size.toLong,
               es.iterator.map(_.payload.length.toLong).sum)
         } catch { case NonFatal(e) =>
-          // the shared job failed: every admitted request in this bucket
+          // the shared write failed: every admitted request in this bucket
           // shares the failure (none of their rows landed)
           for ((idx, _, _) <- admitted.result()) results(idx) = Left(e)
         }
@@ -1187,16 +1245,17 @@ final class BucketStore(val spark: SparkSession, val root: String,
   }
 
   /** Coalesced label updates: concurrent batched PATCHes fold into one
-    * overlay-append job per bucket ([[writeFolded]]'s amortization for
-    * the update path). Each request is (bucket, updates); its result is
-    * the set of ITS (entry, ts) keys that matched a record — attribution
-    * via [[updateLabelsMatched]]'s key set, so the HTTP layer derives
+    * overlay append per bucket ([[writeFolded]]'s amortization for the
+    * update path; staged on the driver under the cap, see
+    * [[updateLabelsMatched]]). Each request is (bucket, updates); its
+    * result is the set of ITS (entry, ts) keys that matched a record —
+    * attribution via [[updateLabelsMatched]]'s key set, so the HTTP layer derives
     * BOTH the updated count and the per-record 404 map from the SAME
     * mutation (no separate existence pre-scan, no check-then-apply
     * race). Cross-request deltas on the same (entry, ts) compose in
     * queue order inside updateLabelsMatched, exactly the serial
-    * outcome. A failed bucket job fails every request that touched that
-    * bucket (infrastructure failure, not per-request admission —
+    * outcome. A failed bucket append fails every request that touched
+    * that bucket (infrastructure failure, not per-request admission —
     * serially each would have hit it too). */
   def updateLabelsFolded(
       reqs: Seq[(String, Seq[(String, Long, Map[String, String], Set[String])])])
@@ -1218,8 +1277,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
   }
 
   /** Coalesced record removes: concurrent batched DELETEs fold into one
-    * remove job per bucket. Each request is (bucket, keys); its result
-    * maps each of ITS keys to removed-or-missing. A key removed by an
+    * [[removeRecords]] per bucket (no Spark job under the cap). Each
+    * request is (bucket, keys); its result maps each of ITS keys to
+    * removed-or-missing. A key removed by an
     * EARLIER request in the fold reports false to later ones —
     * keep-first, exactly the serial outcome. */
   def removeFolded(reqs: Seq[(String, Seq[(String, Long)])])
@@ -1286,7 +1346,10 @@ final class BucketStore(val spark: SparkSession, val root: String,
   private def applyPatch(patched: DataFrame, n: Long,
       /** the patch's (bucket, entry, dt) partitions, when the caller
         * holds them on the driver */
-      known: Option[Array[(String, String, String)]] = None): Unit = {
+      known: Option[Array[(String, String, String)]] = None,
+      /** the patch's rows ([[overlayRowSchema]]), when the caller holds
+        * them on the driver: a small overlay append stages them there */
+      rows: Option[Seq[org.apache.spark.sql.Row]] = None): Unit = {
     val onePartition = known.exists(_.length == 1)
     // the UPDATE transaction log (the reference's replication analog of
     // Transaction::UpdateRecord, replication.rs:27): BOTH patch paths
@@ -1299,7 +1362,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
     // path runs the one extra small job.
     if (n <= overlayFoldThreshold) {
       val before = knownOverlayRows() // O(1) once seeded
-      try appendOverlay(patched, onePartition) // also feeds _updates/
+      val stageWith = rows.filter(rs => fitsDriver(overlayBytes(rs)))
+        .fold(stageFrame(patched, onePartition) _)(rs => stageRows(rs, overlayRowSchema) _)
+      try appendOverlay(stageWith) // also feeds _updates/
       catch { case NonFatal(e) =>
         overlayRowsApprox.set(-1L) // partial landing: count unknown
         throw e
@@ -1308,7 +1373,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
       if (before + n > overlayFoldThreshold) foldOverlayLocked(): Unit
     } else {
       if (updateLogEnabled)
-        appendHiddenTree(patched, UpdatesDir, onePartition = onePartition) // log only
+        appendTree(stageFrame(patched, onePartition), Some(UpdatesDir)) // log only
       val affected = known.getOrElse(collectAffected(patched.select("bucket", "entry", "ts")))
       val rewritten = prunedPartitionScan(affected)
         .join(patched.drop("seq").withColumnRenamed("labels", "__new_labels"),
@@ -1446,8 +1511,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * variant attributes matches back to each folded request. The keys
     * come from HTTP headers, so the batch is driver-sized: the current
     * labels of the requested keys are read on the driver
-    * ([[storedLabels]]), merged here, and the merged rows appended: the
-    * append is the one job. */
+    * ([[storedLabels]]), merged here, and the merged rows appended.
+    * Under the driver cap ([[fitsDriver]]) the append stages on the
+    * driver, so a patch runs no Spark job. */
   def updateLabelsMatched(bucket: String,
       updates0: Seq[(String, Long, Map[String, String], Set[String])])
       : Set[(String, Long)] = mutating {
@@ -1473,7 +1539,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
     import scala.jdk.CollectionConverters._
     applyPatch(spark.createDataFrame(rows.asJava, overlayRowSchema), rows.size.toLong,
       known = Some(current.keysIterator.map { case (e, ts) => (bucket, e, dtOf(ts)) }
-        .toArray.distinct))
+        .toArray.distinct),
+      rows = Some(rows))
     current.keySet
   }
 
@@ -1567,7 +1634,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     val patched =
       if (!labels) Map.empty[(String, String, Long), Map[String, String]]
       else overlayLabels(found.map { case ((e, ts), _) => (bucket, e, dtOf(ts)) },
-        (_, e) => holdsKey(byEntry(e)))
+        (_, e) => holdsKey(byEntry(e)))._1
     Some(found.iterator.map { case (k @ (e, ts), base) =>
       k -> Option(patched.getOrElse((bucket, e, ts), base)).getOrElse(Map.empty[String, String])
     }.toMap)
@@ -1588,10 +1655,14 @@ final class BucketStore(val spark: SparkSession, val root: String,
 
   /** Remove records by explicit (entry, ts) keys (remove_records.rs:34-60,
     * the ts-list form); returns per-key found/not-found. Planned from the
-    * keys on the driver: [[existingKeys]] reads them there, so the
-    * rewrite is the one job; the affected partitions follow from the
-    * found keys' days, and the survivors filter is a literal per-entry
-    * ts list (keys come from HTTP headers, so the lists stay small). */
+    * keys on the driver: [[existingKeys]] reads them there, and the
+    * affected partitions follow from the found keys' days. When those
+    * partitions' files fit the driver cap ([[fitsDriver]]) the survivors
+    * are read ([[rowsOnDriver]]) and staged on the driver, so the remove
+    * runs no Spark job; otherwise the rewrite is one Spark job whose
+    * survivors filter is a literal per-entry ts list (keys come from
+    * HTTP headers, so the lists stay small). Either staged tree lands
+    * through the one partition swap ([[swapPartitions]]). */
   def removeRecords(bucket: String,
       keys: Seq[(String, Long)]): Map[(String, Long), Boolean] = mutating {
     if (keys.isEmpty) return Map.empty
@@ -1599,16 +1670,54 @@ final class BucketStore(val spark: SparkSession, val root: String,
     if (found.nonEmpty) {
       val affected = found.iterator.map { case (e, ts) => (bucket, e, dtOf(ts)) }
         .toArray.distinct
-      val doomed = found.groupBy(_._1).map { case (e, ks) =>
-        col("entry") === e && col("ts").isin(ks.iterator.map(_._2).toSeq: _*)
-      }.reduce(_ || _)
-      // one action (the staged write) — no localCheckpoint, see
-      // removeQuery; fully-emptied partitions drop via dropMissingFrom
-      overwritePartitions(prunedPartitionScan(affected).filter(!doomed),
-        dropMissingFrom = affected,
-        extraSwapActions = () => purgeOverlayDirs(affected))
+      val files = baseFiles(baseTableOrEmpty(), pruning(Some(bucket), Some(found.map(_._1))))
+        .filter(f => affected.contains((f._1, f._2, f._3)))
+      val (figures, _) = footerFigures(files.map(_._4))
+      val (stageWith, overlayRows): (org.apache.hadoop.fs.Path => Unit, Option[Long]) =
+        if (fitsDriver(files.iterator.map(f => figures(f._4.getPath.toString).bytes).sum)) {
+          val (rows, overlayRead) = rowsOnDriver(files)
+          (stageRows(rows.filterNot(r => found((r.getString(1), r.getLong(2)))),
+            rewriteSchema) _, Some(overlayRead))
+        } else {
+          val doomed = found.groupBy(_._1).map { case (e, ks) =>
+            col("entry") === e && col("ts").isin(ks.iterator.map(_._2).toSeq: _*)
+          }.reduce(_ || _)
+          // one action (the staged write) — no localCheckpoint, see
+          // removeQuery
+          (stageFrame(prunedPartitionScan(affected).filter(!doomed),
+            onePartition = affected.length == 1) _, None)
+        }
+      // fully-emptied partitions drop via dropMissingFrom
+      swapPartitions(stageWith, Nil, dropMissingFrom = affected,
+        extraSwapActions = () => purgeOverlayDirs(affected, overlayRows))
     }
     keys.map(k => k -> found(k)).toMap
+  }
+
+  /** The record columns a partition rewrite reads, in [[Records.schema]]
+    * order after `bucket` and `entry`. */
+  private val RecordColumns = Seq("ts", "labels", "computed_labels", "content_type", "state", "payload")
+
+  /** The schema of rewritten partitions' rows: [[Records.schema]] with
+    * every column nullable, as the Spark rewrite's scan reads it. */
+  private val rewriteSchema = org.apache.spark.sql.types.StructType(
+    Records.schema.map(_.copy(nullable = true)))
+
+  /** Every row of the base `files` — every column, every state — with
+    * its effective labels (the in-scope overlay rows, highest `seq`
+    * winning, as [[prunedPartitionScan]] joins them), read on the
+    * driver, and the number of overlay rows read. */
+  private def rowsOnDriver(files: Seq[(String, String, String, org.apache.hadoop.fs.FileStatus)])
+      : (Seq[org.apache.spark.sql.Row], Long) = {
+    val decoded = decodeFiles(files.map(_._4), RecordColumns, _ => (_, _) => true)
+    val (labels, overlayRows) = overlayLabels(files.map(f => (f._1, f._2, f._3)),
+      (_, _) => (_, _) => true)
+    val rows = for ((f, values) <- files.zip(decoded); v <- values) yield {
+      val ts = v(0).asInstanceOf[Long]
+      v(1) = labels.get((f._1, f._2, ts)).flatMap(Option(_)).getOrElse(v(1))
+      org.apache.spark.sql.Row.fromSeq(Seq(f._1, f._2) ++ v)
+    }
+    (rows, overlayRows)
   }
 
   private def collectAffected(matched: DataFrame): Array[(String, String, String)] =
@@ -1706,66 +1815,70 @@ final class BucketStore(val spark: SparkSession, val root: String,
       dropAfter: Iterable[(String, String, String)] = Nil,
       dropMissingFrom: Iterable[(String, String, String)] = Nil,
       writerOptions: Map[String, String] = Map.empty,
-      extraSwapActions: () => Unit = () => ()): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(
-      s"$root/$RewriteDir/${java.util.UUID.randomUUID}")
-    colocated(records, onePartition = dropMissingFrom.size == 1)
-      .write.partitionBy("bucket", "entry", "dt")
-      .options(writerOptions)
-      .mode(SaveMode.Overwrite)
-      .parquet(stage.toString)
+      extraSwapActions: () => Unit = () => ()): Unit =
+    swapPartitions(stageFrame(records, onePartition = dropMissingFrom.size == 1, writerOptions),
+      dropAfter, dropMissingFrom, extraSwapActions)
+
+  /** The swap of [[overwritePartitions]]: `stageWith` writes the
+    * rewritten partitions into a fresh staging dir — a Spark job
+    * ([[stageFrame]]) or the driver ([[stageRows]]) — and each staged
+    * partition dir then replaces its live one inside one odd-epoch
+    * window. */
+  private def swapPartitions(stageWith: org.apache.hadoop.fs.Path => Unit,
+      dropAfter: Iterable[(String, String, String)],
+      dropMissingFrom: Iterable[(String, String, String)],
+      extraSwapActions: () => Unit): Unit = {
+    val stage = newStage()
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    crashSeamForTest("overwrite:staged")
-    // every reader-visible change of the mutation — partition renames
-    // AND the fully-emptied-dir deletes — lands inside ONE odd-epoch
-    // window, so [[readConsistent]] callers see the whole mutation or
-    // none of it, never a mix. The staged write job above ran outside
-    // the window: the window holds only renames/deletes (milliseconds).
-    rewriteEpochCounter.incrementAndGet() // odd: swap in flight
     try {
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val parked = new java.util.concurrent.atomic.AtomicInteger(0)
-      val dirs = partitionDirs(fs, stage)
-      // touched partitions the staged tree does NOT recreate were fully
-      // emptied by the mutation — drop them in the same window
-      val stagedRels = dirs.map(_._2).toSet
-      val emptied = dropMissingFrom.filterNot { case (b, e, d) =>
-        stagedRels(s"bucket=${escapePartition(b)}/entry=${escapePartition(e)}/dt=$d") }
-      // independent per-dir swaps issued in parallel: the odd-epoch
-      // window readers retry on now lasts O(dirs / parallelism) fs ops
-      // instead of O(dirs) (each swap stays atomic per dir; the park
-      // names are unique via the atomic counter)
-      parallelFs(dirs) { case (d, rel) =>
-        val live = new org.apache.hadoop.fs.Path(rootPath, rel)
-        fs.mkdirs(live.getParent)
-        if (fs.exists(live))
-          fs.rename(live, new org.apache.hadoop.fs.Path(
-            stage, s"old-${parked.incrementAndGet()}"))
-        fs.rename(d, live)
+      stageWith(stage)
+      crashSeamForTest("overwrite:staged")
+      // every reader-visible change of the mutation — partition renames
+      // AND the fully-emptied-dir deletes — lands inside ONE odd-epoch
+      // window, so [[readConsistent]] callers see the whole mutation or
+      // none of it, never a mix. The staging write above ran outside
+      // the window: the window holds only renames/deletes (milliseconds).
+      rewriteEpochCounter.incrementAndGet() // odd: swap in flight
+      try {
+        val rootPath = new org.apache.hadoop.fs.Path(root)
+        val parked = new java.util.concurrent.atomic.AtomicInteger(0)
+        val dirs = partitionDirs(fs, stage)
+        // touched partitions the staged tree does NOT recreate were fully
+        // emptied by the mutation — drop them in the same window
+        val stagedRels = dirs.map(_._2).toSet
+        val emptied = dropMissingFrom.filterNot { case (b, e, d) =>
+          stagedRels(s"bucket=${escapePartition(b)}/entry=${escapePartition(e)}/dt=$d") }
+        // independent per-dir swaps issued in parallel: the odd-epoch
+        // window readers retry on now lasts O(dirs / parallelism) fs ops
+        // instead of O(dirs) (each swap stays atomic per dir; the park
+        // names are unique via the atomic counter)
+        parallelFs(dirs) { case (d, rel) =>
+          val live = new org.apache.hadoop.fs.Path(rootPath, rel)
+          fs.mkdirs(live.getParent)
+          if (fs.exists(live))
+            fs.rename(live, new org.apache.hadoop.fs.Path(
+              stage, s"old-${parked.incrementAndGet()}"))
+          fs.rename(d, live)
+        }
+        val drops = (dropAfter ++ emptied).toSeq
+        parallelFs(drops) { case (db, de, ddt) =>
+          deletePartitionDir(db, de, ddt) }
+        // GC empty entry/bucket skeleton dirs left by the drops —
+        // remove-heavy stores would otherwise accumulate dead entry dirs
+        // that every partition-discovery listing walks
+        gcEmptyParents(fs, drops.map(d => (d._1, d._2)).toSet[(String, String)]
+          .map { case (db, de) => new org.apache.hadoop.fs.Path(
+            s"$root/bucket=${escapePartition(db)}/entry=${escapePartition(de)}") })
+        crashSeamForTest("overwrite:swapped")
+        extraSwapActions() // e.g. overlay-dir purge — same swap window
+      } finally {
+        // settle FIRST, unconditionally: a failed stage-dir GC must never
+        // leave the epoch odd (readers would spin on a consistent tree)
+        rewriteEpochCounter.incrementAndGet() // even: settled
       }
-      val drops = (dropAfter ++ emptied).toSeq
-      parallelFs(drops) { case (db, de, ddt) =>
-        deletePartitionDir(db, de, ddt) }
-      // GC empty entry/bucket skeleton dirs left by the drops —
-      // remove-heavy stores would otherwise accumulate dead entry dirs
-      // that every partition-discovery listing walks
-      gcEmptyParents(fs, drops.map(d => (d._1, d._2)).toSet[(String, String)]
-        .map { case (db, de) => new org.apache.hadoop.fs.Path(
-          s"$root/bucket=${escapePartition(db)}/entry=${escapePartition(de)}") })
-      crashSeamForTest("overwrite:swapped")
-      extraSwapActions() // e.g. overlay-dir purge — same swap window
-    } finally {
-      // settle FIRST, unconditionally: a failed stage-dir GC must never
-      // leave the epoch odd (readers would spin on a consistent tree)
-      rewriteEpochCounter.incrementAndGet() // even: settled
-      // GC outside the window — the stage dir (incl. parked old dirs
-      // renamed into it mid-swap) is invisible to the live tree. A
-      // failed delete leaks a temp dir, not consistency; don't let it
-      // mask the mutation's own outcome.
-      try fs.delete(stage, true)
-      catch { case NonFatal(e) =>
-        System.err.println(s"[store] stage GC failed, leaking $stage: $e") }
-    }
+      // the stage dir (incl. parked old dirs renamed into it mid-swap) is
+      // invisible to the live tree: its GC runs outside the window
+    } finally gcStage(fs, stage)
   }
 
   /** Entry catalog: record count and oldest/latest ts per (bucket,
@@ -1863,12 +1976,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
       }
     }
     val conf = spark.sparkContext.hadoopConfiguration
-    // one options object per call: parquet's no-argument options
-    // build a fresh Hadoop Configuration per file (measured 9.8 ms a
-    // footer against 0.16 ms shared, local fs)
-    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     parallelFs(unread) { st =>
-      figures.put(st.getPath.toString, readFooter(st, conf, options)): Unit
+      figures.put(st.getPath.toString, readFooter(st, conf)): Unit
     }
     (figures.asScala.toMap, unread.size)
   }
@@ -1917,7 +2026,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
       val columns = Seq("ts", "labels", "computed_labels", "content_type", "state") ++
         (if (spec.onlyMetadata) Nil else Seq("payload"))
       val decoded = decodeFiles(files.map(_._4), columns, _ => meets(spec, _, _))
-      val labels = overlayLabels(files.map(f => (f._1, f._2, f._3)),
+      val (labels, _) = overlayLabels(files.map(f => (f._1, f._2, f._3)),
         (_, _) => meets(spec, _, _))
       val schema = SmallRead.answerSchema(spec.onlyMetadata)
       val rows = for {
@@ -1956,27 +2065,27 @@ final class BucketStore(val spark: SparkSession, val root: String,
   }
 
   /** [[SmallRead.decode]] of each of `files` (the row groups
-    * `meets(i)` keeps of file `i`), on the [[parallelFs]] pool with one
-    * shared `HadoopReadOptions` per read; results align with `files`. */
+    * `meets(i)` keeps of file `i`), on the [[parallelFs]] pool over the
+    * shared Hadoop configuration; results align with `files`. */
   private def decodeFiles(files: Seq[org.apache.hadoop.fs.FileStatus], columns: Seq[String],
       meets: Int => (Long, Long) => Boolean)
       : IndexedSeq[Vector[Array[Any]]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     val out = new Array[Vector[Array[Any]]](files.size)
     parallelFs(files.indices) { i =>
-      out(i) = SmallRead.decode(files(i), columns, meets(i), conf, options)
+      out(i) = SmallRead.decode(files(i), columns, meets(i), conf)
     }
     out.toIndexedSeq
   }
 
   /** Labels of the overlay rows in the (bucket, entry, dt) `partitions`
     * that lie in [[overlayScope]], by (bucket, entry, ts), the highest
-    * `seq` winning — the rule of [[overlayLatest]], read on the driver.
-    * `meets(bucket, entry)` keeps row groups by their `ts` bounds. */
+    * `seq` winning — the rule of [[overlayLatest]], read on the driver —
+    * and the number of overlay rows read. `meets(bucket, entry)` keeps
+    * row groups by their `ts` bounds. */
   private def overlayLabels(partitions: Seq[(String, String, String)],
       meets: (String, String) => (Long, Long) => Boolean)
-      : Map[(String, String, Long), Map[String, String]] = {
+      : (Map[(String, String, Long), Map[String, String]], Long) = {
     val scope = overlayScope()
     val fs = overlayRootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = partitions.distinct.filter(scope).flatMap { case k @ (b, e, d) =>
@@ -1986,7 +2095,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
             !st.getPath.getName.startsWith(".") => (k, st)
       }
     }
-    if (files.isEmpty) return Map.empty
+    if (files.isEmpty) return (Map.empty, 0L)
     val decoded = decodeFiles(files.map(_._2), Seq("ts", "labels", "seq"),
       i => meets(files(i)._1._1, files(i)._1._2))
     val latest = scala.collection.mutable.HashMap.empty[(String, String, Long), (Long, Map[String, String])]
@@ -1996,7 +2105,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
       if (latest.get(key).forall(_._1 < seq))
         latest(key) = (seq, v(1).asInstanceOf[Map[String, String]])
     }
-    latest.iterator.map { case (k, (_, l)) => k -> l }.toMap
+    (latest.iterator.map { case (k, (_, l)) => k -> l }.toMap, decoded.iterator.map(_.size.toLong).sum)
   }
 
   /** (bucket, entry, dt, file) for every file of `base`'s file index —
@@ -2037,11 +2146,11 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * store's parquet writer), so it fails the build by name instead of
     * reading the rows. */
   private def readFooter(st: org.apache.hadoop.fs.FileStatus,
-      conf: org.apache.hadoop.conf.Configuration,
-      options: org.apache.parquet.ParquetReadOptions): BucketStore.FileFigures = {
+      conf: org.apache.hadoop.conf.Configuration): BucketStore.FileFigures = {
     import scala.jdk.CollectionConverters._
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf), options)
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+      SmallRead.readOptions(conf))
     val blocks = try reader.getFooter.getBlocks.asScala finally reader.close()
     var rows = 0L
     var bytes = 0L

@@ -1151,7 +1151,10 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
   private type PageRecord = (String, Long, BatchWire.RecordHeader)
 
   private def pageRecord(r: Row): (PageRecord, Array[Byte]) = {
-    val payload = Option(r.getAs[Array[Byte]]("payload")).getOrElse(Array.empty[Byte])
+    // an `only_metadata` answer has no payload column: its records ship
+    // their headers, with content length 0, and no body
+    val payload = Option(r.schema).filter(_.exists(_.name == "payload"))
+      .flatMap(_ => Option(r.getAs[Array[Byte]]("payload"))).getOrElse(Array.empty[Byte])
     val labels = Option(r.getAs[collection.Map[String, String]]("labels"))
       .getOrElse(Map.empty[String, String])
     val ct = Option(r.getAs[String]("content_type"))

@@ -447,6 +447,69 @@ class HttpApiSpec extends AnyFunSuite with SparkTestBase {
     assert(req("POST", "/tokens/nosuch/rotate").statusCode() == 404)
   }
 
+  test("only_metadata cursors answer record headers with an empty body on " +
+      "v1 /batch and v2 /io, bounded and streaming; each header reports " +
+      "content length 0") {
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    import scala.jdk.CollectionConverters._
+    assert(req("POST", "/b/meta").statusCode() == 200)
+    for (i <- 1 to 4)
+      assert(req("POST", s"/b/meta/small?ts=${i * 10}", s"p$i".getBytes,
+        headers = Seq("x-reduct-label-i" -> i.toString)).statusCode() == 200)
+    // 9 MB: over the 8 MiB driver-read cap, so its cursors stream
+    val big = Array.fill[Byte](1000000)(7)
+    for (i <- 1 to 9)
+      assert(req("POST", s"/b/meta/big?ts=${i * 10}", big,
+        headers = Seq("x-reduct-label-i" -> i.toString)).statusCode() == 200)
+    def headersOf(r: HttpResponse[Array[Byte]]): Seq[(String, String)] =
+      r.headers().map().asScala.toSeq.flatMap { case (k, vs) => vs.asScala.map(v => (k.toLowerCase, v)) }
+    def isLast(r: HttpResponse[Array[Byte]]) =
+      r.statusCode() == 204 || r.headers().firstValue("x-reduct-last").orElse("") == "true"
+    /** Every page of a cursor: (ts → header) and the body bytes. */
+    def drain(open: => HttpResponse[Array[Byte]])(page: Long => HttpResponse[Array[Byte]])(
+        records: HttpResponse[Array[Byte]] => Seq[(Long, BatchWire.RecordHeader)])
+        : (Map[Long, BatchWire.RecordHeader], Long) = {
+      val o = open
+      assert(o.statusCode() == 200, new String(o.body()))
+      val qid = (jsonOf(o) \ "id").extract[Long]
+      var out = Map.empty[Long, BatchWire.RecordHeader]
+      var bytes = 0L
+      var done = false
+      while (!done) {
+        val p = page(qid)
+        assert(p.statusCode() == 200 || p.statusCode() == 204, new String(p.body()))
+        if (p.statusCode() == 200) { out ++= records(p); bytes += p.body().length }
+        done = isLast(p)
+      }
+      (out, bytes)
+    }
+    def v1(entry: String, meta: Boolean) =
+      drain(req("POST", s"/b/meta/$entry/q", s"""{"only_metadata": $meta}""".getBytes))(
+        qid => req("GET", s"/b/meta/$entry/batch?q=$qid")) { p =>
+        headersOf(p).collect { case (k, v) if k.startsWith(BatchWire.TimeHeaderPrefix) =>
+          k.stripPrefix(BatchWire.TimeHeaderPrefix).toLong -> BatchWire.parseBatchedHeader(v) }
+      }
+    def v2(entry: String, meta: Boolean) =
+      drain(req("POST", "/io/meta/q",
+        s"""{"entries": ["$entry"], "only_metadata": $meta}""".getBytes))(
+        qid => req("GET", "/io/meta/read", headers = Seq(BatchWire.QueryIdHeader -> qid.toString))) { p =>
+        BatchWire.decodeBatchV2(headersOf(p)).map(r => r.timestamp -> r.header)
+      }
+    for ((entry, n, size) <- Seq(("small", 4, 2L), ("big", 9, big.length.toLong));
+        (wire, read) <- Seq[(String, (String, Boolean) => (Map[Long, BatchWire.RecordHeader], Long))](
+          "v1" -> (v1 _), "v2" -> (v2 _))) {
+      val (full, fullBytes) = read(entry, false)
+      val (meta, metaBytes) = read(entry, true)
+      assert(full.keySet == (1 to n).map(_ * 10L).toSet, s"$wire $entry full cursor: ${full.keySet}")
+      assert(meta.keySet == full.keySet, s"$wire $entry: only_metadata timestamps ${meta.keySet}")
+      assert(meta.map { case (ts, h) => ts -> h.labels } == full.map { case (ts, h) => ts -> h.labels })
+      assert(full.values.forall(_.contentLength == size) && fullBytes == n * size)
+      assert(meta.values.forall(_.contentLength == 0L),
+        s"$wire $entry: only_metadata headers report content length 0: $meta")
+      assert(metaBytes == 0L, s"$wire $entry: an only_metadata page carries no payload bytes")
+    }
+  }
+
   test("io API v2: batch write, multi-entry query/read, remove, update") {
     implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
     // encode a multi-entry batch with BatchWire and ship it over the wire

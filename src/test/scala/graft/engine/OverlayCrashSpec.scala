@@ -135,4 +135,60 @@ class OverlayCrashSpec extends AnyFunSuite with SparkTestBase {
     assert(s2.removeQuery(QuerySpec(start = Some(1L), stop = Some(4L))) == 3L)
     assert(labelsOf(s2).keySet == Set(4L, 5L, 6L))
   }
+
+  private def foldRecs(entry: String, tss: Seq[Long]): Seq[BucketStore.FoldRec] =
+    tss.map(ts => BucketStore.FoldRec(entry, ts, Map("v" -> "x"), "",
+      s"payload-$ts".getBytes))
+
+  /** The `_rewrite` staging root holds no file once a mutation ended. */
+  private def stagingFiles(store: BucketStore): Long = {
+    val p = new org.apache.hadoop.fs.Path(s"${store.root}/${BucketStore.RewriteDir}")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) 0L else fs.getContentSummary(p).getFileCount
+  }
+
+  test("crash between a driver-staged append and its landing: nothing visible, retry lands it") {
+    val root = Files.createTempDirectory("graft-crash").toString
+    val s1 = new BucketStore(spark, root)
+    assert(s1.writeFolded(Seq(BucketStore.FoldReq("b", foldRecs("e", 1L to 4L)))) ==
+      Seq(Right(Set.empty)))
+    val md5Before = baseMd5(s1)
+    crashAt(s1, "append:base:staged") {
+      s1.writeFolded(Seq(BucketStore.FoldReq("b", foldRecs("e", 5L to 8L)))) match {
+        case Seq(Left(e)) => throw e
+        case other => fail(s"the crashed append answered $other")
+      }
+    }
+    assert(stagingFiles(s1) == 0L, "the staged files are dropped with their stage")
+    val s2 = new BucketStore(spark, root)
+    assert(baseMd5(s2) == md5Before, "no staged file may land before the landing window")
+    assert(labelsOf(s2).keySet == (1L to 4L).toSet, "the crashed append must be fully absent")
+    assert(s2.entryCatalog()("b").all("e") == BucketStore.EntryRecords(4L, 1L, 4L))
+    // the client's retry: every key is new, so all of them land
+    assert(s2.writeFolded(Seq(BucketStore.FoldReq("b", foldRecs("e", 5L to 8L)))) ==
+      Seq(Right(Set.empty)))
+    assert(labelsOf(s2).keySet == (1L to 8L).toSet)
+  }
+
+  test("crash between a driver-staged key-remove rewrite and its swap: nothing removed, retry removes") {
+    val root = Files.createTempDirectory("graft-crash").toString
+    val s1 = new BucketStore(spark, root)
+    s1.writeFolded(Seq(BucketStore.FoldReq("b", foldRecs("e", 1L to 6L))))
+    assert(s1.updateLabelsMatched("b", Seq(("e", 2L, Map("v" -> "patched"), Set.empty[String]))) ==
+      Set(("e", 2L)))
+    val md5Before = baseMd5(s1)
+    crashAt(s1, "overwrite:staged") {
+      s1.removeRecords("b", Seq(("e", 1L), ("e", 3L))): Unit
+    }
+    val s2 = new BucketStore(spark, root)
+    assert(baseMd5(s2) == md5Before, "base untouched: the crash hit before any rename")
+    assert(labelsOf(s2).keySet == (1L to 6L).toSet,
+      "a key remove crashed before its swap must remove NOTHING")
+    assert(labelsOf(s2)(2L) == Map("v" -> "patched"), "the overlay survives the crashed rewrite")
+    assert(s2.removeRecords("b", Seq(("e", 1L), ("e", 3L))) ==
+      Map(("e", 1L) -> true, ("e", 3L) -> true))
+    assert(labelsOf(s2).keySet == Set(2L, 4L, 5L, 6L))
+    assert(labelsOf(s2)(2L) == Map("v" -> "patched"), "the retry folds the patch into the rewrite")
+    assert(s2.overlayRowCount() == 0L)
+  }
 }

@@ -86,9 +86,10 @@ class OverlayScopeSpec extends AnyFunSuite with SparkTestBase {
     assert(store.overlayAggBuilds.get() == builds,
       "nothing was purged: the next read must reuse the agg")
     assert(store.overlayRowsKnown, "nothing was purged: no recount owed")
-    // removing the patched record does purge: both are retired
+    // removing the patched record does purge; the remove read the
+    // overlay rows it purged on the driver, so the count stays known
     assert(store.removeRecords("b", Seq(("a", 1L))) == Map(("a", 1L) -> true))
-    assert(!store.overlayRowsKnown && store.overlayScope().isEmpty)
+    assert(store.overlayRowsKnown && store.overlayScope().isEmpty)
     assert(store.overlayRowCount() == 0L)
   }
 
