@@ -755,18 +755,11 @@ final class BucketStore(val spark: SparkSession, val root: String,
     }
   }
 
-  /** About the bytes of overlay rows ([[overlayRowSchema]]): the key
-    * and seq, and the label strings. */
-  private def overlayBytes(rows: Seq[org.apache.spark.sql.Row]): Long =
-    rows.iterator.map { r =>
-      32L + (if (r.isNullAt(3)) 0L else r.getMap[String, String](3).iterator
-        .map { case (k, v) => k.length + (if (v == null) 0L else v.length) }.sum)
-    }.sum
-
-  /** Whether a mutation's rows of about `bytes` stage on the driver
-    * ([[stageRows]]) rather than in a Spark job: the cap the driver-side
-    * reads use ([[QueryRegistry.MaxBoundedBytes]]). */
-  private[graft] def fitsDriver(bytes: Long): Boolean = bytes <= QueryRegistry.MaxBoundedBytes
+  /** Whether a key remove's partitions, of about `bytes`, are read onto
+    * the driver and restaged there ([[stageRows]]) rather than rewritten
+    * by a Spark job: the cap the driver-side reads use
+    * ([[QueryRegistry.MaxBoundedBytes]]). */
+  private def fitsDriver(bytes: Long): Boolean = bytes <= QueryRegistry.MaxBoundedBytes
 
   /** Stage + rename-in append: `stageWith` writes a partitioned tree
     * into a fresh staging dir, whose files then land in `tree` (a hidden
@@ -815,7 +808,13 @@ final class BucketStore(val spark: SparkSession, val root: String,
         keys = Some(dirs.map { case (_, rel) => partitionKey(rel) })
       } finally {
         try landed(keys)
-        finally rewriteEpochCounter.incrementAndGet() // even: settled
+        finally {
+          rewriteEpochCounter.incrementAndGet() // even: settled
+          // base rows landed: move the data version now, not at the
+          // enclosing mutator's exit, so a later admission in the same
+          // mutation (the next bucket of a fold) sizes the store with them
+          if (tree.isEmpty) dataVersionCounter.incrementAndGet()
+        }
       }
     } finally gcStage(fs, stage)
   }
@@ -1138,11 +1137,10 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * request (SCALE.md r17: every HTTP mutation was one serialized
     * ~0.5-0.8 s Spark job on the store lock; the reference's analog
     * batches writers behind its single-owner engine too,
-    * storage/engine.rs). A bucket's admitted rows under the driver cap
-    * ([[fitsDriver]]) are written on the driver ([[SmallWrite]]) and
+    * storage/engine.rs). A bucket's admitted rows are written on the
+    * driver ([[SmallWrite]]), where the requests already hold them, and
     * renamed into the base tree, with no Spark job — the reference
-    * appends to its entry's block file (storage/entry/write_record.rs);
-    * larger batches run one Spark write.
+    * appends to its entry's block file (storage/entry/write_record.rs).
     *
     * Semantics are EXACTLY serial execution in `reqs` order:
     *   - per-record conflict admission sees the store plus every record
@@ -1214,20 +1212,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
       if (bucketRows.nonEmpty) {
         try {
           val maxRecords = s.maxBlockRecords.filter(_ > 0).getOrElse(1000000L)
-          // admitted above, same section: a small batch stages on the
-          // driver and lands by renames, a large one is a Spark write
-          if (fitsDriver(admittedBytes))
-            appendTree(stageRows(bucketRows, Records.schema, maxRecords), None)
-          else {
-            import scala.jdk.CollectionConverters._
-            write(spark.createDataFrame(bucketRows.asJava, Records.schema),
-              BucketStore.Conflict.Preadmitted,
-              maxRecordsPerFile = maxRecords,
-              incomingBytes = admittedBytes,
-              touchedEntries = Some(admitted.result()
-                .flatMap(_._3.iterator.map(rec => (bucket, rec.entry))).distinct),
-              knownTsBounds = tsBounds(admitted.result().flatMap(_._3.map(_.ts))))
-          }
+          // admitted above, same section: the rows are already on the
+          // driver, so they stage there and land by renames
+          appendTree(stageRows(bucketRows, Records.schema, maxRecords), None)
           if (s.quotaType.contains("FIFO") && quota > 0)
             enforceFifoQuota(bucket, quota)
           for ((_, _, survivors) <- admitted.result();
@@ -1246,8 +1233,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
 
   /** Coalesced label updates: concurrent batched PATCHes fold into one
     * overlay append per bucket ([[writeFolded]]'s amortization for the
-    * update path; staged on the driver under the cap, see
-    * [[updateLabelsMatched]]). Each request is (bucket, updates); its
+    * update path; staged on the driver, see [[updateLabelsMatched]]). Each request is (bucket, updates); its
     * result is the set of ITS (entry, ts) keys that matched a record —
     * attribution via [[updateLabelsMatched]]'s key set, so the HTTP layer derives
     * BOTH the updated count and the per-record 404 map from the SAME
@@ -1362,8 +1348,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
     // path runs the one extra small job.
     if (n <= overlayFoldThreshold) {
       val before = knownOverlayRows() // O(1) once seeded
-      val stageWith = rows.filter(rs => fitsDriver(overlayBytes(rs)))
-        .fold(stageFrame(patched, onePartition) _)(rs => stageRows(rs, overlayRowSchema) _)
+      val stageWith = rows.fold(stageFrame(patched, onePartition) _)(
+        rs => stageRows(rs, overlayRowSchema) _)
       try appendOverlay(stageWith) // also feeds _updates/
       catch { case NonFatal(e) =>
         overlayRowsApprox.set(-1L) // partial landing: count unknown
@@ -1512,8 +1498,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     * come from HTTP headers, so the batch is driver-sized: the current
     * labels of the requested keys are read on the driver
     * ([[storedLabels]]), merged here, and the merged rows appended.
-    * Under the driver cap ([[fitsDriver]]) the append stages on the
-    * driver, so a patch runs no Spark job. */
+    * The append stages on the driver too, so a patch runs no Spark job. */
   def updateLabelsMatched(bucket: String,
       updates0: Seq[(String, Long, Map[String, String], Set[String])])
       : Set[(String, Long)] = mutating {

@@ -9,9 +9,9 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, Parqu
 import org.apache.spark.sql.types.StructType
 
 /** Small writes on the driver, with no Spark job: the store's serving
-  * appends, label patches and key removes stage their rows with it
-  * when the rows are already on the driver and small
-  * ([[BucketStore.fitsDriver]]). The reference appends a record to its
+  * appends and label patches stage the rows their requests hold with
+  * it, and a key remove stages the survivors of partitions small enough
+  * to read on the driver ([[BucketStore.fitsDriver]]). The reference appends a record to its
   * entry's current block file and rewrites a block descriptor for a
   * label patch (storage/entry/write_record.rs, update_labels.rs:14-36)
   * — no distributed job for a small write; a Spark job costs

@@ -248,6 +248,23 @@ class BucketStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(store.table().count() == 2)
   }
 
+  test("global cap across a coalesced fold: a bucket's landed rows count " +
+      "against the next bucket's admission") {
+    // writeFolded admits bucket by bucket; the second bucket's size check
+    // must see the rows the first one just landed, as a serial run would
+    val store = newStore()
+    store.writeFolded(Seq(BucketStore.FoldReq("seed",
+      Seq(BucketStore.FoldRec("e", 1L, Map.empty, "x", Array[Byte](1))))))
+    store.maxStorageSize = Some(store.storeSizeBytes + 1000L)
+    val rnd = new scala.util.Random(7)
+    def req(bucket: String) = BucketStore.FoldReq(bucket,
+      Seq(BucketStore.FoldRec("e", 2L, Map.empty, "x", Array.fill[Byte](600)(rnd.nextInt().toByte))))
+    val out = store.writeFolded(Seq(req("a"), req("b")))
+    // buckets fold in no fixed order: exactly one fits
+    assert(out.count(_ == Right(Set.empty)) == 1, out)
+    assert(out.collect { case Left(e) => e.getMessage } == Seq("storage limit exceeded"), out)
+  }
+
   test("concurrent writers serialize on the store lock; no lost records") {
     // Without the writeLock this races: Spark jobs appending one root
     // share _temporary/0, so a finishing job can delete a concurrent

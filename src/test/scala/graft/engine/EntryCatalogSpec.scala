@@ -408,20 +408,6 @@ class EntryCatalogSpec extends AnyFunSuite with SparkJobs
     }
   }
 
-  test("a writeFolded batch over the 8 MiB driver cap still runs its " +
-      "Spark write (1 job)") {
-    withJobStore { store =>
-      val MiB = 1 << 20
-      val big = (1 to 9).map(i => BucketStore.FoldRec("big", i.toLong, Map("i" -> i.toString),
-        "x", Array.fill[Byte](MiB)(i.toByte)))
-      assert(!store.fitsDriver(big.map(_.payload.length.toLong).sum))
-      val jobs = jobsOf(assert(store.writeFolded(Seq(BucketStore.FoldReq("b", big))) ==
-        Seq(Right(Set.empty))))
-      assert(jobs == 1, s"an over-cap batch ran $jobs jobs")
-      assert(store.entryCatalog()("b").all("big") == BucketStore.EntryRecords(9L, 1L, 9L))
-    }
-  }
-
   test("entryCatalog() after a write runs no job") {
     withJobStore { store =>
       store.writeFolded(Seq(BucketStore.FoldReq("b", recs("f", 500L))))
