@@ -246,11 +246,13 @@ final class BucketStore(val spark: SparkSession, val root: String,
     try f finally rewriteEpochCounter.incrementAndGet()
   }
 
-  /** Interval usage-traffic counters incremented at the serving-layer
-    * choke points (wire writes/reads); drained by
-    * [[graft.lifecycle.Lifecycle.flushUsage]] (PR-1474). Internal
-    * engine writes (replication sink, `$system` telemetry) are not
-    * counted — no telemetry on telemetry. */
+  /** Interval usage-traffic counters (PR-1474), drained by
+    * [[graft.lifecycle.Lifecycle.flushUsage]]. Counted at three sites:
+    * the HTTP write body (`HttpApi.writeRecords`, the records that
+    * landed), the HTTP reads, and the replication sink (writes into the
+    * destination store). The store itself counts nothing, so `$system`
+    * telemetry (no telemetry on telemetry) and Zenoh ingest stay
+    * uncounted. */
   val usage = new UsageCounters
 
   private def dtCol = to_date(timestamp_micros(col("ts")))
@@ -978,8 +980,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
     n
   }
 
-  /** Append a batch of records. Keys are admitted before any byte is
-    * written, one rule per mode:
+  /** Append a batch of records held in a DataFrame (streaming ingest,
+    * the replication sink, entry renames). Keys are admitted before any
+    * byte is written, one rule per mode:
     * @param onConflict Error → reject the batch if any (bucket,entry,ts)
     *        repeats within it or already exists (the reference's 409,
     *        entry.rs conflict): a key-only stats aggregate, then a clash
@@ -987,34 +990,18 @@ final class BucketStore(val spark: SparkSession, val root: String,
     *        Skip → drop conflicting rows (keep-first dedup + anti-join);
     *        Overwrite is intentionally not offered (records are
     *        immutable, only labels update).
+    * Rows already on the driver take [[writeFolded]] instead.
     */
   def write(records: DataFrame, onConflict: Conflict = Conflict.Error,
       maxRecordsPerFile: Long = 1000000L,
       codec: Option[String] = None,
-      incomingBytes: Long = -1L,
-      /** (bucket, entry) pairs this batch writes into, when the caller
-        * knows them (every wire path does). The declaration must be
-        * exact: every row's (bucket, entry) is in it. Conflict.Skip
-        * trusts it to skip the anti-join for an append past every
-        * declared entry's latest record, so a row of an undeclared entry
-        * would be admitted unchecked; one declared entry within one day
-        * is written without an exchange. */
-      touchedEntries: Option[Seq[(String, String)]] = None,
-      /** (min, max) record ts of the batch when the caller knows them
-        * (driver-assembled batches — the `$system` flushes assign every
-        * ts serially). Skips the bounds-aggregation Spark job the
-        * Conflict.Skip admission otherwise runs before the write: one
-        * whole job per telemetry flush for a value already in hand.
-        * With one touched entry and both bounds on one day, the batch
-        * is one partition and is written without an exchange. */
-      knownTsBounds: Option[(Long, Long)] = None): Unit = mutating {
-    // the global storage cap guards the COMMON mutator, not just the
-    // settings-aware wire path — the reference enforces it in
-    // engine::begin_write (engine.rs:226), which the zenoh subscriber
-    // and streaming ingest also pass through. incomingBytes < 0 means
-    // the caller doesn't know the payload size; with a cap set (rare —
-    // default unlimited) it is computed with one agg over the batch,
-    // with no cap this costs nothing.
+      incomingBytes: Long = -1L): Unit = mutating {
+    // the global storage cap guards this mutator too — the reference
+    // enforces it in engine::begin_write (engine.rs:226), which streaming
+    // ingest also passes through. incomingBytes < 0 means the caller
+    // doesn't know the payload size; with a cap set (rare — default
+    // unlimited) it is computed with one agg over the batch, with no cap
+    // this costs nothing.
     if (maxStorageSize.isDefined) {
       val bytes =
         if (incomingBytes >= 0L) incomingBytes
@@ -1026,17 +1013,8 @@ final class BucketStore(val spark: SparkSession, val root: String,
     // batch-internal duplicate ts: reject (Error) or keep-first (Skip —
     // idempotent replay, e.g. re-delivered streaming micro-batches)
     val deduped = onConflict match {
-      case Conflict.Preadmitted =>
-        // the serving writers (writeFolded, writeStagedSlices) admitted
-        // every key INSIDE this mutation section (mayBeStored, then
-        // existingKeys for the belated keys).
-        // Skipping the stats-agg and clash-join jobs here saves ~2 Spark
-        // jobs per serving-layer write — the per-mutation job cost is the
-        // measured serving bottleneck (SCALE.md r17).
-        batch0
       case Conflict.Skip =>
-        antiExisting(batch0.dropDuplicates("bucket", "entry", "ts"),
-          knownTsBounds, touchedEntries)
+        antiExisting(batch0.dropDuplicates("bucket", "entry", "ts"))
       case Conflict.Error =>
         // one aggregation pass yields BOTH the in-batch-duplicate flag and
         // the ts bounds for the overlap check (was two scans)
@@ -1059,12 +1037,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
           }
         batch0
     }
-    // one task per output partition; a batch the caller declared as one
-    // entry within one day needs no exchange. `maxRecordsPerFile` still
-    // splits a genuinely hot (entry, day).
-    val onePartition = touchedEntries.exists(_.size == 1) &&
-      knownTsBounds.exists { case (lo, hi) => dtOf(lo) == dtOf(hi) }
-    val writer = colocated(deduped, onePartition)
+    // one task per output partition; `maxRecordsPerFile` still splits a
+    // genuinely hot (entry, day)
+    val writer = colocated(deduped, onePartition = false)
       .write
       .partitionBy("bucket", "entry", "dt")
       .option("maxRecordsPerFile", maxRecordsPerFile)
@@ -1074,29 +1049,13 @@ final class BucketStore(val spark: SparkSession, val root: String,
     codec.fold(writer)(c => writer.option("compression", c)).parquet(root)
   }
 
-  /** `batch` without the keys already stored (Conflict.Skip). With the
-    * batch's entries declared, an append — every declared entry absent
-    * from the catalog or latest below the batch's first ts — cannot
-    * clash, and no join is planned: the `$system` flushes, whose clock
-    * is strictly increasing, always qualify. */
-  private def antiExisting(batch: DataFrame,
-      knownTsBounds: Option[(Long, Long)],
-      touchedEntries: Option[Seq[(String, String)]]): DataFrame = {
-    val bounds = knownTsBounds.getOrElse {
-      val r = batch.agg(min("ts"), max("ts")).collect()(0)
-      if (r.isNullAt(0)) return batch
-      (r.getLong(0), r.getLong(1))
-    }
-    existingInRange(bounds._1, bounds._2).fold(batch) { existing =>
-      val appends = touchedEntries.exists { pairs =>
-        val catalog = entryCatalog()
-        pairs.forall { case (b, e) =>
-          catalog.get(b).flatMap(_.all.get(e)).forall(_.latest < bounds._1)
-        }
-      }
-      if (appends) batch
-      else batch.join(existing, Seq("bucket", "entry", "ts"), "left_anti")
-    }
+  /** `batch` without the keys already stored (Conflict.Skip): one bounds
+    * aggregate, then an anti-join against the stored keys in range. */
+  private def antiExisting(batch: DataFrame): DataFrame = {
+    val r = batch.agg(min("ts"), max("ts")).collect()(0)
+    if (r.isNullAt(0)) batch
+    else existingInRange(r.getLong(0), r.getLong(1)).fold(batch)(
+      batch.join(_, Seq("bucket", "entry", "ts"), "left_anti"))
   }
 
   /** Stored (bucket, entry, ts) keys with ts in [lo, hi] — the store side
@@ -1109,123 +1068,124 @@ final class BucketStore(val spark: SparkSession, val root: String,
       .filter(col("ts").between(lo, hi))
       .select("bucket", "entry", "ts"))
 
-  private def tsBounds(tss: Seq[Long]): Option[(Long, Long)] =
-    if (tss.isEmpty) None else Some((tss.min, tss.max))
-
   /** Batch-write convenience (the wire batch-protocol analog,
     * reduct_base/src/batch/v1.rs): records as (ts, labels, payload)
-    * triples for one bucket/entry. This is the wire path, so it honors
-    * the bucket's persisted settings (quota type/size, block rotation)
-    * via [[writeWithSettings]]. */
+    * triples for one bucket/entry, written as one [[writeFolded]]
+    * request. Like the wire batch, a clash is reported, not thrown: the
+    * already-stored (and in-batch repeated) keys come back and the rest
+    * lands. An admission failure (quota, storage cap, free disk) throws. */
   def writeBatch(bucket: String, entry: String,
       records: Seq[(Long, Map[String, String], Array[Byte])],
-      contentType: String = "application/octet-stream"): Unit = {
-    import scala.jdk.CollectionConverters._
-    val rows = records.map { case (ts, labels, payload) =>
-      org.apache.spark.sql.Row(bucket, entry, ts, labels,
-        Map.empty[String, String], contentType, Records.State.Finished, payload)
-    }.asJava
-    val bytes = records.map(_._3.length.toLong).sum
-    writeWithSettings(bucket, spark.createDataFrame(rows, Records.schema),
-      incomingBytes = bytes, touchedEntries = Some(Seq((bucket, entry))),
-      knownTsBounds = tsBounds(records.map(_._1)))
-    usage.countWrite(bucket, entry, records.size.toLong, bytes)
-  }
+      contentType: String = "application/octet-stream"): Set[(String, Long)] =
+    writeFolded(Seq(FoldReq(bucket, records.map { case (ts, labels, payload) =>
+      FoldRec(entry, ts, labels, contentType, payload)
+    }))).head.fold(throw _, identity)
 
-  /** Coalesced serving write: many HTTP write requests folded into ONE
-    * store mutation — one write per touched bucket instead of one per
-    * request (SCALE.md r17: every HTTP mutation was one serialized
-    * ~0.5-0.8 s Spark job on the store lock; the reference's analog
-    * batches writers behind its single-owner engine too,
-    * storage/engine.rs). A bucket's admitted rows are written on the
-    * driver ([[SmallWrite]]), where the requests already hold them, and
-    * renamed into the base tree, with no Spark job — the reference
-    * appends to its entry's block file (storage/entry/write_record.rs).
+  /** Coalesced serving write, and the store's one append for rows held
+    * in driver memory (HTTP writes, `$system` flushes, Zenoh flushes,
+    * [[writeBatch]]): many write requests folded into ONE store
+    * mutation — one write per touched bucket instead of one per request
+    * (SCALE.md r17: every HTTP mutation was one serialized ~0.5-0.8 s
+    * Spark job on the store lock; the reference's analog batches writers
+    * behind its single-owner engine too, storage/engine.rs). A bucket's
+    * admitted rows are written on the driver ([[SmallWrite]]), where the
+    * requests already hold them, and renamed into the base tree, with no
+    * Spark job — the reference appends to its entry's block file
+    * (storage/entry/write_record.rs).
     *
-    * Semantics are EXACTLY serial execution in `reqs` order:
-    *   - per-record conflict admission sees the store plus every record
-    *     claimed by an earlier request in the fold (keep-first); keys
-    *     above their entry's latest record are admitted from the entry
-    *     catalog ([[mayBeStored]]), and one [[existingKeys]] lookup per
-    *     bucket admits the belated rest, on the driver;
-    *   - HARD quota / global storage cap / free-disk admission run per
-    *     request with cumulative accounting, so a request that would
-    *     have been rejected serially is rejected here (and only it);
-    *   - a failed request never poisons its fold-mates: its slice is
-    *     excluded and its error returned in its slot;
-    *   - FIFO quota enforcement and usage counting happen per bucket /
-    *     per request exactly as the un-folded path did.
-    *
-    * Returns one result per request, positionally: the set of rejected
-    * (already-existing) record keys, or the admission/write failure.
+    * Semantics are EXACTLY serial execution in `reqs` order; admission
+    * and landing are [[appendAdmitted]]'s. Returns one result per
+    * request, positionally: the set of rejected (already-existing or
+    * in-request repeated) record keys, or the admission/write failure.
     * Read-your-write visibility holds — the method returns only after
     * the shared write lands. */
   def writeFolded(reqs: Seq[BucketStore.FoldReq])
       : Seq[Either[Throwable, Set[(String, Long)]]] = mutating {
-    import scala.util.control.NonFatal
     val results = new Array[Either[Throwable, Set[(String, Long)]]](reqs.size)
     // group by bucket, preserving queue order within each group
-    val byBucket = reqs.zipWithIndex.groupBy(_._1.bucket)
-    for ((bucket, group) <- byBucket) {
-      val s = bucketSettings(bucket).getOrElse(BucketSettings.defaults)
-      val quota = s.quotaSize.getOrElse(0L)
-      val hard = s.quotaType.contains("HARD")
-      var curBucketSize =
-        if (hard && quota > 0) bucketSizeBytes(bucket) else 0L
-      val existing = existingKeys(bucket, mayBeStored(bucket,
-        group.flatMap { case (r, _) => r.recs.map(rec => (rec.entry, rec.ts)) }))
-      var claimed = Set.empty[(String, Long)]
-      var admittedBytes = 0L
-      val rows = Vector.newBuilder[org.apache.spark.sql.Row]
-      val admitted = Vector.newBuilder[(Int, BucketStore.FoldReq, Seq[BucketStore.FoldRec])]
-      for ((req, idx) <- group) {
-        try {
-          val rejected = req.recs.iterator
-            .filter(rec => existing((rec.entry, rec.ts)) ||
-              claimed((rec.entry, rec.ts)))
-            .map(rec => (rec.entry, rec.ts)).toSet
-          val survivors = req.recs.filterNot(rec => rejected((rec.entry, rec.ts)))
-          val bytes = survivors.iterator.map(_.payload.length.toLong).sum
-          if (hard && quota > 0 && curBucketSize + bytes > quota)
-            throw new IllegalArgumentException(s"Quota of '$bucket' exceeded")
-          maxStorageSize.foreach { limit =>
-            if (storeSizeBytes + admittedBytes + bytes > limit)
-              throw new IllegalStateException("storage limit exceeded")
-          }
-          checkFreeDiskSpace(admittedBytes + bytes)
-          curBucketSize += bytes
-          admittedBytes += bytes
-          claimed ++= survivors.iterator.map(rec => (rec.entry, rec.ts))
-          rows ++= survivors.map(rec => org.apache.spark.sql.Row(
-            bucket, rec.entry, rec.ts, rec.labels,
-            Map.empty[String, String], rec.contentType,
-            Records.State.Finished, rec.payload))
-          // a request whose records ALL conflicted is a committed no-op
-          // (serially it would succeed with its 409 map regardless of any
-          // later write) — keep it out of `admitted` so a shared-job
-          // failure can't overwrite its Right(rejected) with Left(e)
-          if (survivors.nonEmpty) admitted += ((idx, req, survivors))
-          results(idx) = Right(rejected)
-        } catch { case NonFatal(e) => results(idx) = Left(e) }
+    for ((bucket, group) <- reqs.zipWithIndex.groupBy(_._1.bucket)) {
+      val out = appendAdmitted[BucketStore.FoldRec](bucket, group.map(_._1.recs),
+          rec => (rec.entry, rec.ts), _.payload.length.toLong) { (recs, maxRecords, stage) =>
+        // the rows are already on the driver, so they stage there
+        stageRows(recs.map(rec => org.apache.spark.sql.Row(bucket, rec.entry, rec.ts,
+          rec.labels, Map.empty[String, String], rec.contentType,
+          Records.State.Finished, rec.payload)), Records.schema, maxRecords)(stage)
       }
-      val bucketRows = rows.result()
-      if (bucketRows.nonEmpty) {
-        try {
-          val maxRecords = s.maxBlockRecords.filter(_ > 0).getOrElse(1000000L)
-          // admitted above, same section: the rows are already on the
-          // driver, so they stage there and land by renames
-          appendTree(stageRows(bucketRows, Records.schema, maxRecords), None)
-          if (s.quotaType.contains("FIFO") && quota > 0)
-            enforceFifoQuota(bucket, quota)
-          for ((_, _, survivors) <- admitted.result();
-              (entry, es) <- survivors.groupBy(_.entry))
-            usage.countWrite(bucket, entry, es.size.toLong,
-              es.iterator.map(_.payload.length.toLong).sum)
-        } catch { case NonFatal(e) =>
-          // the shared write failed: every admitted request in this bucket
-          // shares the failure (none of their rows landed)
-          for ((idx, _, _) <- admitted.result()) results(idx) = Left(e)
+      for (((_, idx), r) <- group.zip(out)) results(idx) = r
+    }
+    results.toSeq
+  }
+
+  /** The one append admission and landing, for one bucket's requests in
+    * queue order (each a record sequence; `key` and `bytes` read a
+    * record's (entry, ts) and payload size):
+    *   - per-record conflict admission sees the store plus every record
+    *     claimed by an earlier request or earlier in the same request
+    *     (keep-first); keys above their entry's latest record are
+    *     admitted from the entry catalog ([[mayBeStored]]), and one
+    *     [[existingKeys]] lookup admits the belated rest, on the driver;
+    *   - HARD quota / global storage cap / free-disk admission run per
+    *     request with cumulative accounting, so a request that would
+    *     have been rejected serially is rejected here (and only it);
+    *   - a failed request never poisons its fold-mates: its records are
+    *     excluded and its error returned in its slot;
+    *   - the survivors of every admitted request are staged by
+    *     `stager(survivors, maxRecordsPerFile, stageDir)` (the bucket's
+    *     `max_block_records`) and land through [[appendTree]]; a FIFO
+    *     quota then evicts. A failure there fails every admitted request.
+    * Called inside the caller's mutation section. */
+  private def appendAdmitted[R](bucket: String, reqs: Seq[Seq[R]],
+      key: R => (String, Long), bytes: R => Long)(
+      stager: (Seq[R], Long, org.apache.hadoop.fs.Path) => Unit)
+      : Seq[Either[Throwable, Set[(String, Long)]]] = {
+    val s = bucketSettings(bucket).getOrElse(BucketSettings.defaults)
+    val quota = s.quotaSize.getOrElse(0L)
+    val hard = s.quotaType.contains("HARD")
+    var curBucketSize = if (hard && quota > 0) bucketSizeBytes(bucket) else 0L
+    val existing = existingKeys(bucket, mayBeStored(bucket, reqs.flatMap(_.map(key))))
+    var claimed = Set.empty[(String, Long)]
+    var admittedBytes = 0L
+    val results = Array.fill[Either[Throwable, Set[(String, Long)]]](reqs.size)(Right(Set.empty))
+    val survivors = Vector.newBuilder[R]
+    val admitted = Vector.newBuilder[Int]
+    for ((recs, idx) <- reqs.zipWithIndex) {
+      try {
+        val seen = scala.collection.mutable.HashSet.empty[(String, Long)]
+        val (kept, clashed) = recs.partition { rec =>
+          val k = key(rec)
+          !existing(k) && !claimed(k) && seen.add(k)
         }
+        val size = kept.iterator.map(bytes).sum
+        if (hard && quota > 0 && curBucketSize + size > quota)
+          throw new IllegalArgumentException(s"Quota of '$bucket' exceeded")
+        maxStorageSize.foreach { limit =>
+          if (storeSizeBytes + admittedBytes + size > limit)
+            throw new IllegalStateException("storage limit exceeded")
+        }
+        checkFreeDiskSpace(admittedBytes + size)
+        curBucketSize += size
+        admittedBytes += size
+        claimed ++= seen
+        survivors ++= kept
+        // a request whose records ALL conflicted is a committed no-op
+        // (serially it would succeed with its 409 map regardless of any
+        // later write) — keep it out of `admitted` so a shared-write
+        // failure can't overwrite its Right(rejected) with Left(e)
+        if (kept.nonEmpty) admitted += idx
+        results(idx) = Right(clashed.iterator.map(key).toSet)
+      } catch { case NonFatal(e) => results(idx) = Left(e) }
+    }
+    val rows = survivors.result()
+    if (rows.nonEmpty) {
+      try {
+        val maxRecords = s.maxBlockRecords.filter(_ > 0).getOrElse(1000000L)
+        appendTree(stager(rows, maxRecords, _), None)
+        if (s.quotaType.contains("FIFO") && quota > 0)
+          enforceFifoQuota(bucket, quota)
+      } catch { case NonFatal(e) =>
+        // the shared write failed: every admitted request in this bucket
+        // shares the failure (none of their rows landed)
+        for (idx <- admitted.result()) results(idx) = Left(e)
       }
     }
     results.toSeq
@@ -2142,7 +2102,7 @@ final class BucketStore(val spark: SparkSession, val root: String,
     var lo = Long.MaxValue
     var hi = Long.MinValue
     for (b <- blocks if b.getRowCount > 0) {
-      val (groupLo, groupHi) = SmallRead.tsBounds(b, st)
+      val (groupLo, groupHi) = SmallRead.tsRange(b, st)
       rows += b.getRowCount
       bytes += b.getTotalByteSize
       lo = math.min(lo, groupLo)
@@ -2382,37 +2342,36 @@ final class BucketStore(val spark: SparkSession, val root: String,
   /** Write records whose payloads were spooled to one staging file —
     * every spooled HTTP upload (a single-record POST is one slice at
     * offset 0; v1 `/batch` and v2 `/io/write` bodies are the payloads
-    * concatenated). Admission is per record inside this call's own
-    * mutation section — [[mayBeStored]], then [[existingKeys]] for the
-    * belated keys: a stored key is rejected and its bytes are never
-    * read, the survivors are written, and the rejected keys are
-    * returned for the caller's 409s (write_batched.rs error map). Slice
-    * keys must be unique — callers drop in-request repeats into their
-    * own error maps first.
+    * concatenated). Admission and landing are [[writeFolded]]'s
+    * ([[appendAdmitted]]), inside this call's own mutation section: a
+    * stored or repeated key is rejected and its bytes are never read,
+    * the survivors are written, and the rejected keys are returned for
+    * the caller's 409s (write_batched.rs error map). An admission or
+    * write failure throws.
     *
-    * Each survivor's bytes are sliced out executor-side with positioned
-    * reads — one payload in memory per task at a time, nothing buffered
-    * by the serving layer — through the session's Hadoop configuration
-    * (broadcast once per write), so `spark.hadoop.*` filesystem settings
-    * reach the readers. Slices are keyed by entry so the read parallelism
-    * follows the write partitioning. The staging file is deleted whether
-    * the write succeeds or not. */
+    * Spooled bodies are unbounded, so the survivors stage with a Spark
+    * write ([[stageFrame]]), not on the driver: each survivor's bytes are
+    * sliced out executor-side with positioned reads — one payload in
+    * memory per task at a time, nothing buffered by the serving layer —
+    * through the session's Hadoop configuration (broadcast once per
+    * write), so `spark.hadoop.*` filesystem settings reach the readers.
+    * Survivors of one (entry, day) are read and written by one task with
+    * no exchange; otherwise slices are keyed by entry so the read
+    * parallelism follows the write partitioning. The staging file is
+    * deleted whether the write succeeds or not. */
   def writeStagedSlices(bucket: String, staged: org.apache.hadoop.fs.Path,
       slices: Seq[BucketStore.StagedSlice]): Set[(String, Long)] = {
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     try mutating {
-      val keys = slices.map(s => (s.entry, s.ts))
-      require(keys.distinct.size == keys.size,
-        s"duplicate (entry, ts) within staged batch for '$bucket'")
-      val rejected = existingKeys(bucket, mayBeStored(bucket, keys))
-      val survivors = slices.filterNot(s => rejected((s.entry, s.ts)))
-      if (survivors.nonEmpty) {
+      appendAdmitted[BucketStore.StagedSlice](bucket, Seq(slices),
+          s => (s.entry, s.ts), _.len) { (survivors, maxRecords, stage) =>
+        val onePartition = survivors.map(s => (s.entry, dtOf(s.ts))).distinct.size == 1
         val pathStr = staged.toString
         val conf = spark.sparkContext.broadcast(
           new org.apache.spark.util.SerializableConfiguration(hadoopConf))
         import spark.implicits._
-        val df = graft.core.Partitioning.pinned(
-            spark.createDataset(survivors), col("entry"))
+        val ds = spark.createDataset(survivors)
+        val df = (if (onePartition) ds else graft.core.Partitioning.pinned(ds, col("entry")))
           .mapPartitions { it =>
             if (!it.hasNext) Iterator.empty[Records.Record]
             else {
@@ -2429,15 +2388,9 @@ final class BucketStore(val spark: SparkSession, val root: String,
               }
             }
           }.toDF()
-        try writeWithSettings(bucket, df, Conflict.Preadmitted,
-          incomingBytes = survivors.map(_.len).sum,
-          touchedEntries = Some(survivors.map(s => (bucket, s.entry)).distinct),
-          knownTsBounds = tsBounds(survivors.map(_.ts)))
+        try stageFrame(df, onePartition, Map("maxRecordsPerFile" -> maxRecords.toString))(stage)
         finally conf.destroy()
-        for ((entry, es) <- survivors.groupBy(_.entry))
-          usage.countWrite(bucket, entry, es.size.toLong, es.map(_.len).sum)
-      }
-      rejected
+      }.head.fold(throw _, identity)
     } finally staged.getFileSystem(hadoopConf).delete(staged, false)
   }
 
@@ -2479,45 +2432,14 @@ final class BucketStore(val spark: SparkSession, val root: String,
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Write honoring the bucket's persisted settings (keep_quota_for,
-    * bucket/quotas.rs:44-66): NONE → plain append; HARD → reject when
-    * current size + incoming would exceed quota_size ("Quota of 'b'
-    * exceeded", the reference's bad_request); FIFO → append, then evict
-    * oldest day-partitions until back under quota. `max_block_records`
-    * maps to the parquet writer's file rotation (maxRecordsPerFile —
-    * the analog of block rotation, storage.proto:47-63); max_block_size
-    * is stored for API parity (parquet files rotate on records, and a
-    * day-partition bounds them physically).
-    *
-    * @param incomingBytes payload size of the batch when the caller knows
-    *        it (the HTTP body length) — counted against a HARD quota
-    *        without a pre-write scan. */
-  def writeWithSettings(bucket: String, records: DataFrame,
-      onConflict: Conflict = Conflict.Error, incomingBytes: Long = 0L,
-      touchedEntries: Option[Seq[(String, String)]] = None,
-      knownTsBounds: Option[(Long, Long)] = None): Unit = mutating {
-    val s = bucketSettings(bucket).getOrElse(BucketSettings.defaults)
-    val quota = s.quotaSize.getOrElse(0L)
-    if (s.quotaType.contains("HARD") && quota > 0 &&
-        bucketSizeBytes(bucket) + incomingBytes > quota)
-      throw new IllegalArgumentException(s"Quota of '$bucket' exceeded")
-    checkFreeDiskSpace(incomingBytes)
-    write(records, onConflict,
-      maxRecordsPerFile = s.maxBlockRecords.filter(_ > 0).getOrElse(1000000L),
-      incomingBytes = incomingBytes, // cap enforced in write (begin_write analog)
-      touchedEntries = touchedEntries,
-      knownTsBounds = knownTsBounds)
-    if (s.quotaType.contains("FIFO") && quota > 0)
-      enforceFifoQuota(bucket, quota)
-  }
-
   /** Global storage cap across ALL buckets —
     * `RS_ENGINE_MAX_STORAGE_SIZE` (PR-1263, cfg/storage_engine.rs:45-47,
     * engine.rs:301-315). None (default) = unlimited; the server sets it
-    * from env, library callers directly. Enforced in [[write]] — the
-    * common mutator every path (wire, zenoh ingest, streaming ingest,
-    * replication) funnels through, mirroring engine::begin_write — plus
-    * a declared-size preflight on the HTTP write admissions; uses the
+    * from env, library callers directly. Enforced by both appends — the
+    * driver-held one every serving path (wire, zenoh ingest, `$system`)
+    * funnels through ([[appendAdmitted]]) and [[write]] (streaming
+    * ingest, replication), mirroring engine::begin_write — plus a
+    * declared-size preflight on the HTTP write admissions; uses the
     * entry catalog's whole-store size, so an unset cap costs nothing and
     * a set one reads the catalog cached per data version. */
   @volatile var maxStorageSize: Option[Long] = None
@@ -2589,13 +2511,6 @@ object BucketStore {
   object Conflict {
     case object Error extends Conflict
     case object Skip extends Conflict
-    /** Admission already happened: a BucketStore serving writer
-      * ([[BucketStore.writeFolded]], [[BucketStore.writeStagedSlices]])
-      * verified in-batch key uniqueness and absence-from-store inside the
-      * SAME [[mutating]] section this write runs in, so the write skips
-      * its own dedup and clash jobs. Engine-private: an unchecked
-      * duplicate key would land two records on one (bucket, entry, ts). */
-    private[engine] case object Preadmitted extends Conflict
   }
 
   /** Settings JSON file inside the bucket's partition directory — the

@@ -879,8 +879,9 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
     * one streams to a staging file in 64 KiB chunks and is sliced
     * executor-side ([[BucketStore.writeStagedSlices]]). Either way the
     * store admits each record inside its mutation section: a stored key
-    * is a clash, the rest is written. A batch wire answers each clash in
-    * its error map on a 200; the single-record route answers 409. */
+    * is a clash, the rest is written and counted as usage traffic. A
+    * batch wire answers each clash in its error map on a 200; the
+    * single-record route answers 409. */
   private def writeRecords(ex: HttpExchange, bucket: String,
       req: BatchWire.WriteRequest): Unit = {
     req.records.map(_.entry).distinct.foreach(checkEntryName)
@@ -915,6 +916,11 @@ final class HttpApi(store: BucketStore, apiToken: String = "",
         })
       }
     }
+    // write traffic counts once, here, for the records that landed
+    for ((entry, landed) <- kept.map(_._1).filterNot(r => rejected((r.entry, r.timestamp)))
+        .groupBy(_.entry))
+      store.usage.countWrite(bucket, entry, landed.size.toLong,
+        landed.iterator.map(_.header.contentLength).sum)
     val clashes = rejected ++ keys.diff(keys.distinct)
     req.wire match {
       case wire: BatchWire.Batch =>

@@ -47,7 +47,7 @@ private[engine] object SmallRead {
   /** `ts` bounds of a row group from its column statistics. Every base
     * and overlay file is written by the store's parquet writer, so a row
     * group without them breaks the store contract and fails by name. */
-  def tsBounds(block: BlockMetaData, file: FileStatus): (Long, Long) =
+  def tsRange(block: BlockMetaData, file: FileStatus): (Long, Long) =
     block.getColumns.asScala.find(_.getPath.toDotString == "ts")
       .map(_.getStatistics).collect {
         case s: org.apache.parquet.column.statistics.LongStatistics
@@ -77,7 +77,7 @@ private[engine] object SmallRead {
       val decoders = columns.map(decoder).toArray
       val out = Vector.newBuilder[Array[Any]]
       for (block <- reader.getRowGroups.asScala) {
-        if (block.getRowCount > 0 && (meets.tupled)(tsBounds(block, file))) {
+        if (block.getRowCount > 0 && (meets.tupled)(tsRange(block, file))) {
           val pages = reader.readNextRowGroup()
           val records = io.getRecordReader(pages, new GroupRecordConverter(projection))
           var i = 0L

@@ -1,7 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.Row
-
 /** Captures the engine's own log messages as records in
   * `$system/logs/<instance>/messages` (syslog/capture/logs.rs, payload/
   * log.rs): each persisted message becomes a record carrying the
@@ -13,9 +11,11 @@ import org.apache.spark.sql.Row
   * enqueue): messages less severe than `persistLevel` — or all messages
   * when `persistLevel` is None (RS_SYSTEM_EVENTS_LOG_LEVEL=OFF or
   * invalid) — are dropped. An empty instance name falls back to
-  * `unknown` (path.rs entry_path). Writes use Conflict.Skip so a
-  * same-microsecond duplicate never turns logging into a failure —
-  * logging must not take the server down.
+  * `unknown` (path.rs entry_path). A flush is one
+  * [[BucketStore.writeFolded]] request, so a clashing key is rejected
+  * rather than failing the burst, and a failed write is caught —
+  * logging must not take the server down. Either loss is counted
+  * ([[dropped]]).
   *
   * This is the ONE `$system` writer (syslog.rs): log capture, usage,
   * audit ([[AuditLog]] only buffers), replication and lifecycle rows all
@@ -41,6 +41,10 @@ final class SystemLog(store: BucketStore, instance: String,
     * messages inside one millisecond (a startup warning burst) would
     * otherwise collide and the second would be silently skipped. */
   private val lastUs = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Events lost by local flushes: a failed write loses its burst, a
+    * rejected key its event. Forwarded bursts are not counted here. */
+  private[graft] val dropped = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Persist one log message; returns true when it was written (at or
     * above the persist level), false when dropped by the gate. */
@@ -71,10 +75,11 @@ final class SystemLog(store: BucketStore, instance: String,
       extraLabels)))
 
   /** Persist a BURST of events as ONE `$system` write. A per-event
-    * write is one full Spark job each — the usage snapshot emits one
+    * write is one store mutation each — the usage snapshot emits one
     * event per bucket, so flushing a many-bucket instance event-by-event
-    * costs minutes (measured: 300 buckets ≈ 7.5 min) and the 60-second
-    * usage flusher could never drain a 10k-bucket instance. Sequence
+    * cost minutes while each mutation was a Spark job (measured: 300
+    * buckets ≈ 7.5 min), and the 60-second usage flusher could never
+    * drain a 10k-bucket instance. Sequence
     * order fixes the ts order: each event takes the next strictly-
     * increasing microsecond, so `usage/total` emitted first still sorts
     * before the per-bucket events it summarizes. */
@@ -84,47 +89,36 @@ final class SystemLog(store: BucketStore, instance: String,
   /** The one `$system` write behind [[log]] and [[events]]: stamps each
     * event from the shared clock in sequence order, then either forwards
     * the burst to the primary (replica, see [[SystemEventForwarder]]) or
-    * lands it as one local store write. Never throws — telemetry must
-    * not take the serving path down. */
+    * lands it as one [[BucketStore.writeFolded]] request, which applies
+    * `$system`'s provisioned FIFO quota and the free-disk preflight like
+    * any other write. Never throws — telemetry must not take the serving
+    * path down (a full disk would otherwise abort server startup, whose
+    * ctor logs provisioning warnings, or turn an already-completed
+    * operation into an error response). True when every event landed. */
   private def write(items: Seq[Event]): Boolean = {
     val recs = items.map { e =>
       val ts = lastUs.updateAndGet(prev => math.max(prev + 1, e.nowUs))
-      (s"${e.entryPrefix}/$inst/${e.name}", ts,
+      BucketStore.FoldRec(s"${e.entryPrefix}/$inst/${e.name}", ts,
         Map("status" -> e.status.toString) ++ e.extraLabels,
-        e.payloadJson.getBytes("UTF-8"))
+        "application/json", e.payloadJson.getBytes("UTF-8"))
     }
     forwarder match {
-      case Some(fwd) => fwd.sendBatch(recs)
+      case Some(fwd) => fwd.sendBatch(recs.map(r => (r.entry, r.ts, r.labels, r.payload)))
       case None =>
-        import scala.jdk.CollectionConverters._
-        val rows = recs.map { case (entry, ts, labels, payload) =>
-          Row("$system", entry, ts, labels, Map.empty[String, String],
-            "application/json", graft.core.Records.State.Finished, payload)
-        }
-        // writeWithSettings so $system's provisioned FIFO quota and the
-        // free-disk preflight apply like any other write. GUARDED: a full
-        // disk (507 preflight) would otherwise abort server startup (the
-        // ctor logs provisioning warnings) or turn an already-completed
-        // operation into an error response.
-        try {
-          store.writeWithSettings("$system", store.spark.createDataFrame(
-            rows.asJava, graft.core.Records.schema),
-            BucketStore.Conflict.Skip,
-            // byte count, not char count — CJK payloads are 3 bytes/char
-            // and the quota/preflight admission must see the real size
-            incomingBytes = recs.iterator.map(_._4.length.toLong).sum,
-            // touchedEntries declared, exact: with the clock strictly
-            // increasing each flush lands past every declared entry's
-            // latest record, so Skip plans no stored-key anti-join
-            touchedEntries = Some(recs.map(r => ("$system", r._1)).distinct),
-            // ts are assigned serially above — min is the first, max the
-            // last
-            knownTsBounds = Some((recs.head._2, recs.last._2)))
-          true
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[system-log] dropped ${items.size}-event write: $e")
-          false
+        val result =
+          try store.writeFolded(Seq(BucketStore.FoldReq("$system", recs))).head
+          catch { case scala.util.control.NonFatal(e) => Left(e) }
+        result match {
+          case Right(rejected) if rejected.isEmpty => true
+          case Right(rejected) =>
+            dropped.addAndGet(rejected.size.toLong)
+            System.err.println(s"[system-log] dropped ${rejected.size} of ${items.size} " +
+              s"events: their keys are stored")
+            false
+          case Left(e) =>
+            dropped.addAndGet(items.size.toLong)
+            System.err.println(s"[system-log] dropped ${items.size}-event write: $e")
+            false
         }
     }
   }

@@ -1,9 +1,11 @@
 package graft.engine
 
 /** Interval usage-traffic counters (storage/usage.rs, PR-1474):
-  * incremented at the serving-layer IO choke points — single/batch/staged
-  * writes and single/batched reads — and drained by the periodic usage
-  * flush ([[graft.lifecycle.Lifecycle.flushUsage]]).
+  * incremented at three sites — the HTTP write body (every wire's
+  * landed records, counted once after the store returns), the HTTP
+  * single/batched reads, and the replication sink's destination writes
+  * — and drained by the periodic usage flush
+  * ([[graft.lifecycle.Lifecycle.flushUsage]]).
   *
   * Per-bucket traffic tracks the set of DISTINCT entries written to /
   * read from this interval (the reference's `written_entries` /

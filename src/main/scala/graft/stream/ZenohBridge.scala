@@ -144,9 +144,10 @@ object Zenoh {
 }
 
 /** Bridges a [[Zenoh.Transport]] into a [[BucketStore]]: the write path
-  * buffers samples into micro-batches (one partitioned parquet write per
-  * flush — a per-sample write would be a small-files disaster at any
-  * scale), the read path resolves selectors through the query engine.
+  * buffers samples into micro-batches (one [[BucketStore.writeFolded]]
+  * request per flush — a per-sample write would be a small-files
+  * disaster at any scale), the read path resolves selectors through the
+  * query engine.
   */
 final class ZenohBridge(
     store: BucketStore,
@@ -165,7 +166,7 @@ final class ZenohBridge(
 
   import Zenoh._
 
-  private val buffer = mutable.ArrayBuffer.empty[Row]
+  private val buffer = mutable.ArrayBuffer.empty[BucketStore.FoldRec]
 
   /** Start the configured pipelines. Disabled config → None, like the
     * reference's spawn_runtime (api/zenoh.rs:24-31). */
@@ -213,31 +214,26 @@ final class ZenohBridge(
     val labels = attachmentLabels ++ s.sourceLabels // source wins (subscriber.rs:62-64)
     val ts = s.timestampUs.getOrElse(nowUs())
     buffer.synchronized {
-      buffer += Row(config.bucket, entry, ts, labels,
-        Map.empty[String, String], s.contentType,
-        graft.core.Records.State.Finished, s.payload)
+      buffer += BucketStore.FoldRec(entry, ts, labels, s.contentType, s.payload)
       if (buffer.size >= flushEvery) flushLocked()
     }
   }
 
-  /** Flush buffered samples as ONE batch write. Duplicate (entry, ts)
-    * replays skip rather than fail the batch — the reference logs the
-    * conflict and keeps consuming (session keeps the subscriber alive). */
+  /** Flush buffered samples as ONE store write request, admitted like
+    * any other write (begin_write, engine.rs:226, which subscriber.rs:86
+    * also passes through): the bucket's settings apply — its
+    * `max_block_records` rotation and HARD/FIFO quota — and the global
+    * storage cap and free-disk preflight. Duplicate (entry, ts) replays
+    * are rejected and dropped rather than failing the batch — the
+    * reference logs the conflict and keeps consuming (session keeps the
+    * subscriber alive). A refused or failed write throws and keeps the
+    * buffer for the next flush. */
   def flush(): Unit = buffer.synchronized(flushLocked())
 
   private def flushLocked(): Unit = {
     if (buffer.isEmpty) return
-    import scala.jdk.CollectionConverters._
-    val df = store.spark.createDataFrame(
-      buffer.toList.asJava, graft.core.Records.schema)
-    // payload bytes are known driver-side — hand them to the write so the
-    // global storage cap (RS_ENGINE_MAX_STORAGE_SIZE, engine.rs:226 in
-    // begin_write, which subscriber.rs:86 also passes through) admits
-    // zenoh-sourced batches without an extra agg job
-    val bytes = buffer.iterator
-      .map(_.getAs[Array[Byte]](7).length.toLong).sum
-    store.write(df, BucketStore.Conflict.Skip, incomingBytes = bytes)
-    buffer.clear()
+    store.writeFolded(Seq(BucketStore.FoldReq(config.bucket, buffer.toList))).head
+      .fold(throw _, _ => buffer.clear())
   }
 
   /** queryable.rs:71-117: `ts` → that record, `last` → the latest record,

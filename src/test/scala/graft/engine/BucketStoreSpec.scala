@@ -1,6 +1,5 @@
 package graft.engine
 
-import graft.SparkTestBase
 import graft.core.Records
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -10,7 +9,7 @@ import java.nio.file.Files
 /** Storage round-trips replaying the reference's entry/bucket semantics
   * (write conflict on duplicate ts, belated writes, label PATCH, query
   * remove, FIFO quota, rename). */
-class BucketStoreSpec extends AnyFunSuite with SparkTestBase {
+class BucketStoreSpec extends AnyFunSuite with SparkJobs {
 
   private def newStore(): BucketStore =
     new BucketStore(spark, Files.createTempDirectory("graft-store").toString)
@@ -161,17 +160,23 @@ class BucketStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("writeBatch convenience (wire batch-protocol analog)") {
     val store = newStore()
-    store.writeBatch("b", "sensor/x", Seq(
+    val jobs = jobsOf(assert(store.writeBatch("b", "sensor/x", Seq(
       (1L, Map("k" -> "v", "index" -> "0"), "p0".getBytes),
-      (2L, Map("k" -> "v", "index" -> "1"), "p1".getBytes)))
+      (2L, Map("k" -> "v", "index" -> "1"), "p1".getBytes))).isEmpty))
+    assert(jobs == 0, s"a writeBatch ran $jobs Spark jobs")
     val rows = store.table().orderBy("ts").collect()
     assert(rows.length == 2)
     assert(rows(0).getString(rows(0).fieldIndex("content_type")) ==
       "application/octet-stream")
     assert(new String(rows(1).getAs[Array[Byte]]("payload")) == "p1")
-    intercept[IllegalArgumentException] {
-      store.writeBatch("b", "sensor/x", Seq((2L, Map(), "dup".getBytes)))
-    }
+    // a stored key is reported as a clash, like the wire batch's 409
+    // entry, and the rest lands; the stored record is untouched
+    assert(store.writeBatch("b", "sensor/x", Seq((2L, Map(), "dup".getBytes),
+      (3L, Map(), "p3".getBytes))) == Set(("sensor/x", 2L)))
+    val after = store.table().orderBy("ts").collect()
+    assert(after.map(_.getAs[Long]("ts")).toSeq == Seq(1L, 2L, 3L))
+    assert(new String(after(1).getAs[Array[Byte]]("payload")) == "p1")
+    assert(after(1).getAs[scala.collection.Map[String, String]]("labels")("index") == "1")
   }
 
   test("rename and remove entry") {
@@ -196,9 +201,10 @@ class BucketStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(minTs > 0L, "oldest day evicted first")
     store.putBucketSettings("b", BucketStore.BucketSettings(
       quotaType = Some("HARD"), quotaSize = Some(1L)))
-    intercept[IllegalArgumentException] {
-      store.writeWithSettings("b", recordsDf(Seq(("e", 100L, Map()))))
+    val e = intercept[IllegalArgumentException] {
+      store.writeBatch("b", "e", Seq((100L, Map(), "payload-100".getBytes)))
     }
+    assert(e.getMessage == "Quota of 'b' exceeded")
     assert(store.table().filter(col("ts") === 100L).count() == 0)
   }
 
@@ -211,16 +217,13 @@ class BucketStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(used > 0)
     store.maxStorageSize = Some(used + 5) // room for ~nothing
     val e = intercept[IllegalStateException] {
-      store.writeWithSettings("other",
-        recordsDf(Seq(("e2", 2000L, Map())), bucket = "other"),
-        incomingBytes = 100L)
+      store.writeBatch("other", "e2", Seq((2000L, Map(), new Array[Byte](100))))
     }
     assert(e.getMessage.contains("storage limit exceeded"))
+    assert(store.table().count() == 1, "nothing written on rejection")
     // raising the cap admits again; unset = unlimited
     store.maxStorageSize = None
-    store.writeWithSettings("other",
-      recordsDf(Seq(("e2", 2000L, Map())), bucket = "other"),
-      incomingBytes = 100L)
+    store.writeBatch("other", "e2", Seq((2000L, Map(), new Array[Byte](100))))
     assert(store.table().count() == 2)
   }
 
@@ -382,15 +385,13 @@ class BucketStoreSpec extends AnyFunSuite with SparkTestBase {
     val store = newStore()
     store.freeSpaceFn = () => 10L // injected: volume "has" 10 bytes
     val err = intercept[BucketStore.InsufficientStorageException] {
-      store.writeWithSettings("b",
-        recordsDf(Seq(("e", 100L, Map()))), incomingBytes = 11L)
+      store.writeBatch("b", "e", Seq((100L, Map(), new Array[Byte](11))))
     }
     assert(err.getMessage.contains("11 bytes") &&
       err.getMessage.contains("10 bytes available"))
     assert(store.tableOrEmpty().count() == 0, "nothing written on rejection")
     // exactly-fits is admitted; and the real provider reports a sane value
-    store.writeWithSettings("b",
-      recordsDf(Seq(("e", 100L, Map()))), incomingBytes = 10L)
+    store.writeBatch("b", "e", Seq((100L, Map(), new Array[Byte](10))))
     assert(store.tableOrEmpty().count() == 1)
     store.freeSpaceFn = () => {
       val p = new org.apache.hadoop.fs.Path(store.root)

@@ -140,9 +140,10 @@ class OverlayCrashSpec extends AnyFunSuite with SparkTestBase {
     tss.map(ts => BucketStore.FoldRec(entry, ts, Map("v" -> "x"), "",
       s"payload-$ts".getBytes))
 
-  /** The `_rewrite` staging root holds no file once a mutation ended. */
-  private def stagingFiles(store: BucketStore): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"${store.root}/${BucketStore.RewriteDir}")
+  /** Files left under a hidden staging root (`_rewrite` by default):
+    * none once a mutation ended. */
+  private def stagingFiles(store: BucketStore, dir: String = BucketStore.RewriteDir): Long = {
+    val p = new org.apache.hadoop.fs.Path(s"${store.root}/$dir")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) 0L else fs.getContentSummary(p).getFileCount
   }
@@ -168,6 +169,38 @@ class OverlayCrashSpec extends AnyFunSuite with SparkTestBase {
     assert(s2.writeFolded(Seq(BucketStore.FoldReq("b", foldRecs("e", 5L to 8L)))) ==
       Seq(Right(Set.empty)))
     assert(labelsOf(s2).keySet == (1L to 8L).toSet)
+  }
+
+  /** A spooled upload of `tss` into b/e: the payloads concatenated in one
+    * staging file, written by [[BucketStore.writeStagedSlices]]. */
+  private def spooled(store: BucketStore, tss: Seq[Long]): Set[(String, Long)] = {
+    val payloads = tss.map(ts => s"payload-$ts".getBytes)
+    val staged = store.stageUploadPath()
+    val out = staged.getFileSystem(spark.sparkContext.hadoopConfiguration).create(staged, true)
+    try payloads.foreach(out.write(_)) finally out.close()
+    val offsets = payloads.scanLeft(0L)(_ + _.length)
+    store.writeStagedSlices("b", staged, tss.indices.map(i =>
+      BucketStore.StagedSlice("e", tss(i), Map("v" -> "x"), "", offsets(i), payloads(i).length.toLong)))
+  }
+
+  test("crash between a spooled upload's staged write and its landing: nothing visible, retry lands it") {
+    val root = Files.createTempDirectory("graft-crash").toString
+    val s1 = new BucketStore(spark, root)
+    assert(s1.writeFolded(Seq(BucketStore.FoldReq("b", foldRecs("e", 1L to 4L)))) ==
+      Seq(Right(Set.empty)))
+    val md5Before = baseMd5(s1)
+    crashAt(s1, "append:base:staged")(spooled(s1, 5L to 8L): Unit)
+    assert(stagingFiles(s1) == 0L, "the Spark-staged files are dropped with their stage")
+    assert(stagingFiles(s1, BucketStore.StagingDir) == 0L, "the spooled body is deleted")
+    val s2 = new BucketStore(spark, root)
+    assert(baseMd5(s2) == md5Before, "no staged file may land before the landing window")
+    assert(labelsOf(s2).keySet == (1L to 4L).toSet, "the crashed upload must be fully absent")
+    assert(s2.entryCatalog()("b").all("e") == BucketStore.EntryRecords(4L, 1L, 4L))
+    // the client's retry: every key is new, so all of them land
+    assert(spooled(s2, 5L to 8L).isEmpty)
+    assert(labelsOf(s2).keySet == (1L to 8L).toSet)
+    assert(s2.table().filter("ts = 6").select("payload").collect()
+      .map(r => new String(r.getAs[Array[Byte]](0))).toSeq == Seq("payload-6"))
   }
 
   test("crash between a driver-staged key-remove rewrite and its swap: nothing removed, retry removes") {

@@ -451,8 +451,7 @@ class ReplicaCompactionSpec extends AnyFunSuite with SparkTestBase {
     store.close()
   }
 
-  test("$system writes declare their touched entries: a usage flush / log " +
-      "capture doesn't re-arm the full-walk probe (ADVICE r19)") {
+  test("a $system flush's tick and next read share one listing") {
     val root = Files.createTempDirectory("graft-sys-dirty").toString
     val store = new BucketStore(spark, root)
     // 8 quiet entries beside the $system tree

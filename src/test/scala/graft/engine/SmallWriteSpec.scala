@@ -1,6 +1,5 @@
 package graft.engine
 
-import graft.core.Records
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -11,8 +10,8 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 /** Writer parity: the same rows written on the driver ([[SmallWrite]],
-  * through [[BucketStore.writeFolded]]) and by the Spark write the
-  * store runs for large batches ([[BucketStore.write]]) give files of
+  * through [[BucketStore.writeFolded]]) and by the Spark write a spooled
+  * upload stages ([[BucketStore.writeStagedSlices]]) give files of
   * one Parquet schema, footer metadata keys and codec, with `ts`
   * statistics on every row group and page checksums, that read back as
   * identical rows through the Spark table and the driver reader; a
@@ -103,12 +102,17 @@ class SmallWriteSpec extends AnyFunSuite with SparkJobs {
       val jobs = jobsOf(assert(driver.writeFolded(Seq(BucketStore.FoldReq("b", batch))) ==
         Seq(Right(Set.empty))))
       assert(jobs == 0, s"the driver-side append ran $jobs Spark jobs")
-      // the Spark write the store runs for batches over the driver cap
-      spark0.write(spark.createDataFrame(batch.map(r => Row("b", r.entry, r.ts, r.labels,
-          Map.empty[String, String], r.contentType, Records.State.Finished, r.payload)).asJava,
-          Records.schema),
-        BucketStore.Conflict.Preadmitted, maxRecordsPerFile = 5L,
-        touchedEntries = Some(Seq(("b", "e"))), knownTsBounds = Some((T0, T0 + 15000L)))
+      // the Spark write a spooled upload stages: the payloads
+      // concatenated in one staging file, sliced back out executor-side
+      val staged = spark0.stageUploadPath()
+      val out = staged.getFileSystem(spark.sparkContext.hadoopConfiguration).create(staged, true)
+      try batch.foreach(r => out.write(r.payload)) finally out.close()
+      val offsets = batch.scanLeft(0L)(_ + _.payload.length)
+      val sparkJobs = jobsOf(assert(spark0.writeStagedSlices("b", staged, batch.zip(offsets).map {
+        case (r, at) => BucketStore.StagedSlice(r.entry, r.ts, r.labels, r.contentType, at,
+          r.payload.length.toLong)
+      }).isEmpty))
+      assert(sparkJobs == 1, s"the spooled one-partition write ran $sparkJobs Spark jobs")
       val (dFiles, sFiles) = (dataFiles(driver), dataFiles(spark0))
       assert(dFiles.size == 4 && sFiles.size == 4,
         s"16 records at 5 per file: driver ${dFiles.size} files, Spark ${sFiles.size}")
@@ -127,7 +131,7 @@ class SmallWriteSpec extends AnyFunSuite with SparkJobs {
       assert(codecs == Seq("ZSTD"), s"codecs: $codecs")
       for ((st, f) <- (dFiles ++ sFiles).zip(dFooters ++ sFooters);
           b <- f.getBlocks.asScala)
-        SmallRead.tsBounds(b, st) // fails by name without ts statistics
+        SmallRead.tsRange(b, st) // fails by name without ts statistics
       assert(dFooters.map(_.getBlocks.asScala.map(_.getRowCount).sum).sorted ==
         sFooters.map(_.getBlocks.asScala.map(_.getRowCount).sum).sorted)
       for (st <- dFiles ++ sFiles) {

@@ -1,6 +1,5 @@
 package graft.engine
 
-import graft.SparkTestBase
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,9 +8,11 @@ import java.nio.file.Files
 /** `$system` diagnostics writer: the batched `events()` path must stay
   * ONE store write regardless of batch size — the usage family emits one
   * event per bucket, so a per-event write makes the 60-second flusher
-  * O(buckets) Spark jobs (measured ~1.5 s each: a 300-bucket instance
-  * took 7.5 min to flush and a 10k-bucket one could never drain). */
-class SystemLogSpec extends AnyFunSuite with SparkTestBase {
+  * O(buckets) store mutations (measured ~1.5 s each while every write
+  * was a Spark job: a 300-bucket instance took 7.5 min to flush and a
+  * 10k-bucket one could never drain). A flush is a driver-side append
+  * with no Spark job, and the events a refused flush loses are counted. */
+class SystemLogSpec extends AnyFunSuite with SparkJobs {
 
   /** Spark jobs started while `f` runs (listener-bus flushed before
     * counting). */
@@ -38,7 +39,7 @@ class SystemLogSpec extends AnyFunSuite with SparkTestBase {
       SystemLog.Event("usage", if (i == 0) "total" else s"b$i", 200,
         s"""{"event_type":"usage_stats","i":$i}""", base)
     }
-    val jobs = countJobs { assert(syslog.events(batch)) }
+    val jobs = jobsOf(assert(syslog.events(batch)))
     val rows = store.table()
       .filter(col("bucket") === "$system" && col("entry").startsWith("usage/"))
       .select("entry", "ts").collect()
@@ -50,9 +51,28 @@ class SystemLogSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.map(_._2).toSeq == (base until base + 50))
     assert(rows.map(_._1).drop(1).toSeq ==
       (1 until 50).map(i => s"usage/srv/b$i"))
-    // one writeWithSettings = a handful of jobs (commit/read-back), not
-    // one-plus per event; the per-event shape needs >= 50
-    assert(jobs <= 15, s"batched events() started $jobs jobs")
+    // one driver-side append: no Spark job at all
+    assert(jobs == 0, s"batched events() started $jobs jobs")
+  }
+
+  test("a refused $system flush counts its dropped events") {
+    val store = new BucketStore(spark,
+      Files.createTempDirectory("graft-syslog-drop").toString)
+    try {
+      val syslog = new SystemLog(store, "srv", None)
+      def burst(tag: String, n: Int) =
+        (0 until n).map(i => SystemLog.Event("usage", s"$tag$i", 200, "{}"))
+      val provider = store.freeSpaceFn
+      store.freeSpaceFn = () => 0L // the free-disk preflight refuses
+      assert(!syslog.events(burst("lost", 3)))
+      assert(syslog.dropped.get == 3L)
+      store.freeSpaceFn = provider
+      assert(syslog.events(burst("kept", 2)))
+      assert(syslog.dropped.get == 3L, "a landed flush drops nothing")
+      assert(store.table().filter(col("bucket") === "$system")
+        .select("entry").collect().map(_.getString(0)).sorted.toSeq ==
+        Seq("usage/srv/kept0", "usage/srv/kept1"))
+    } finally store.close()
   }
 
   test("flushUsage job count is bounded, not O(buckets)") {

@@ -143,21 +143,25 @@ class WorkloadPlanSweepSpec extends AnyFunSuite with SparkJobs
       store.writeFolded(Seq(BucketStore.FoldReq("b", recs("a", 3L, 4L))))
       store.updateLabelsMatched("b", Seq(("a", 3L, Map("k" -> "w"), Set.empty[String])))
       store.removeRecords("b", Seq(("a", 1L)))
+      store.writeBatch("b", "d", Seq((1L, Map("k" -> "v"), Array[Byte](1))))
       drainBus()
       assert(writes.isEmpty, s"serving mutations ran ${writes.size} Spark writes")
-      // the Spark-staged writes: one entry on one day (a wire batch) and
-      // a rewrite of one partition take no exchange (a many-entry write's
-      // one exchange is pinned above)
-      store.writeBatch("b", "d", Seq((1L, Map("k" -> "v"), Array[Byte](1))))
-      store.writeBatch("b", "a", Seq((5L, Map("k" -> "v"), Array[Byte](1)),
-        (6L, Map("k" -> "v"), Array[Byte](1))))
+      // the Spark-staged writes: a spooled upload of one entry on one day
+      // and a rewrite of one partition take no exchange (a many-entry
+      // write's one exchange is pinned above)
+      val staged = store.stageUploadPath()
+      val out = staged.getFileSystem(spark.sparkContext.hadoopConfiguration).create(staged, true)
+      try out.write(Array[Byte](1, 1)) finally out.close()
+      assert(store.writeStagedSlices("b", staged, Seq(5L, 6L).zipWithIndex.map { case (ts, i) =>
+        BucketStore.StagedSlice("a", ts, Map("k" -> "v"), "x", i.toLong, 1L)
+      }).isEmpty)
       store.removeQuery(QuerySpec(entries = Some(Seq("d")), bucket = Some("b"))): Unit
-      drained(3)
+      drained(2)
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
     val exchanges = writes.asScala.toSeq.map(qe =>
       collect(qe.executedPlan) { case e: ShuffleExchangeExec => e }.size)
-    assert(exchanges == Seq(0, 0, 0), s"exchanges per staged write: $exchanges")
+    assert(exchanges == Seq(0, 0), s"exchanges per staged write: $exchanges")
     val rows = store.table().select("entry", "ts", "labels").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getMap[String, String](2).toMap)).toSet
     assert(rows == Set(("a", 2L, Map("k" -> "v")), ("c", 1L, Map("k" -> "v")),

@@ -1,7 +1,6 @@
 package graft.stream
 
-import graft.SparkTestBase
-import graft.engine.BucketStore
+import graft.engine.{BucketStore, SparkJobs}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +11,7 @@ import java.nio.file.Files
   * transport trait is the only unimplementable piece in this build; every
   * mapping rule it feeds is exercised here.
   */
-class ZenohBridgeSpec extends AnyFunSuite with SparkTestBase {
+class ZenohBridgeSpec extends AnyFunSuite with SparkJobs {
 
   import Zenoh._
 
@@ -116,6 +115,46 @@ class ZenohBridgeSpec extends AnyFunSuite with SparkTestBase {
     val rows = store.table().orderBy("ts").collect()
       .map(r => (r.getLong(r.fieldIndex("ts")), new String(r.getAs[Array[Byte]]("payload"))))
     assert(rows.toSeq == Seq((5L, "v1"), (6L, "v3")))
+  }
+
+  /** Data files under the store's `bucket=<bucket>` tree. */
+  private def dataFiles(store: BucketStore, bucket: String): Int = {
+    import scala.jdk.CollectionConverters._
+    val it = Files.walk(java.nio.file.Paths.get(store.root, s"bucket=$bucket"))
+    try it.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+    finally it.close()
+  }
+
+  test("a flush takes the bucket's max_block_records rotation, with no Spark job") {
+    val store = newStore()
+    store.putBucketSettings("zenoh", BucketStore.BucketSettings(maxBlockRecords = Some(2L)))
+    val t = new InMemoryTransport
+    val b = bridge(store, t)
+    b.start()
+    for (i <- 1 to 5) t.publish(Sample("cam", s"f$i".getBytes, timestampUs = Some(i.toLong)))
+    val jobs = jobsOf(b.flush())
+    assert(jobs == 0, s"a Zenoh flush ran $jobs Spark jobs")
+    assert(dataFiles(store, "zenoh") == 3, "5 samples at 2 per file")
+    assert(store.table().select("ts").collect().map(_.getLong(0)).sorted.toSeq == (1L to 5L))
+  }
+
+  test("a HARD-quota refusal throws and keeps the buffer; a later flush lands it") {
+    val store = newStore()
+    store.putBucketSettings("zenoh", BucketStore.BucketSettings(
+      quotaType = Some("HARD"), quotaSize = Some(4L)))
+    val t = new InMemoryTransport
+    val b = bridge(store, t)
+    b.start()
+    t.publish(Sample("e", "12345".getBytes, timestampUs = Some(1L)))
+    val e = intercept[IllegalArgumentException](b.flush())
+    assert(e.getMessage == "Quota of 'zenoh' exceeded")
+    assert(store.tableOrEmpty().count() == 0)
+    store.putBucketSettings("zenoh", BucketStore.BucketSettings(
+      quotaType = Some("HARD"), quotaSize = Some(64L)))
+    t.publish(Sample("e", "67".getBytes, timestampUs = Some(2L)))
+    b.flush()
+    assert(store.table().orderBy("ts").select("payload").collect()
+      .map(r => new String(r.getAs[Array[Byte]](0))).toSeq == Seq("12345", "67"))
   }
 
   test("queryable: ts param, last param, and when-attachment query") {
