@@ -1133,7 +1133,11 @@ final class BucketStore(val spark: SparkSession, val root: String,
     *     `stager(survivors, maxRecordsPerFile, stageDir)` (the bucket's
     *     `max_block_records`) and land through [[appendTree]]; a FIFO
     *     quota then evicts. A failure there fails every admitted request.
-    * Called inside the caller's mutation section. */
+    * The settings map as keep_quota_for does (bucket/quotas.rs:44-66):
+    * HARD refuses with the reference's bad_request message, FIFO evicts
+    * the oldest day partitions; `max_block_records` is the file rotation
+    * (block rotation, storage.proto:47-63) and `max_block_size` is kept
+    * for API parity only. Called inside the caller's mutation section. */
   private def appendAdmitted[R](bucket: String, reqs: Seq[Seq[R]],
       key: R => (String, Long), bytes: R => Long)(
       stager: (Seq[R], Long, org.apache.hadoop.fs.Path) => Unit)
